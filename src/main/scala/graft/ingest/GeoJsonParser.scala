@@ -34,8 +34,8 @@ object GeoJsonParser {
       from_json($"body", EventSchema.featureCollection).as("fc")))
   }
 
-  /** Parse a single in-memory FeatureCollection body (driver-side fetch path,
-    * reference S1-S3). Stays lazy: one row → explode fan-out on executors. */
+  /** Parse a single in-memory FeatureCollection body (one page). Stays lazy:
+    * one row → explode fan-out on executors. */
   def parseBody(spark: SparkSession, body: String): DataFrame = {
     import spark.implicits._
     parse(spark, spark.createDataset(Seq(body)))

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.schema.EventSchema
 import scala.util.{Failure, Success, Try}
 
 /** Paginated USGS FDSN event source (reference S1-S3), network-injectable.
@@ -13,12 +12,12 @@ import scala.util.{Failure, Success, Try}
   * month-sized windows and week-sized retry windows (`:288-322`).
   *
   * Here the fetch function is injected (no network in tests — SURVEY.md §7.4);
-  * each fetched page becomes a lazily-parsed DataFrame and pages are
-  * accumulated with `unionByName` so the whole post-fetch pipeline is one
-  * Catalyst plan. On a real cluster the per-page fetch would move into a
-  * DataSource V2 `Batch` with one `InputPartition` per (window, page) so
-  * executors fetch in parallel; the planning math is identical
-  * ([[PagePlanner]]).
+  * a run's page bodies are collected in window order into one
+  * `Dataset[String]` and parsed by a single [[GeoJsonParser.parse]] plan, so
+  * the whole post-fetch pipeline is one Catalyst plan over one relation. On a
+  * real cluster the per-page fetch would move into a DataSource V2 `Batch`
+  * with one `InputPartition` per (window, page) so executors fetch in
+  * parallel; the planning math is identical ([[PagePlanner]]).
   */
 final class UsgsSource(
     fetch: UsgsSource.Request => Try[String],
@@ -26,37 +25,33 @@ final class UsgsSource(
     maxPagesPerWindow: Int = 1000) {
   import UsgsSource._
 
-  /** All pages of one window, stopping at the first short page (the
+  /** Page bodies of one window, stopping at the first short page (the
     * reference's `len(features) < limit` termination, dynamic.py:435-437).
-    * A fetch failure throws, so [[backfill]] can retry the window weekly.
-    * Page bodies are pulled eagerly (the network part); parsing stays lazy. */
-  def fetchWindow(spark: SparkSession, w: PagePlanner.Window): Seq[DataFrame] = {
+    * A fetch failure throws, so [[backfill]] can retry the window weekly. */
+  def fetchWindow(w: PagePlanner.Window): Seq[String] = {
     val bodies = new scala.collection.mutable.ArrayBuffer[String]
     var offset = 1L
     var done = false
-    var pages = 0
-    while (!done && pages < maxPagesPerWindow) {
+    while (!done && bodies.size < maxPagesPerWindow) {
       val body = fetch(Request(w.startParam, w.endParam, limit, offset)).get
       bodies += body
-      if (UsgsSource.countFeatures(body) < limit) done = true
+      done = countFeatures(body) < limit
       offset += limit
-      pages += 1
     }
-    bodies.toSeq.map(GeoJsonParser.parseBody(spark, _))
+    bodies.toSeq
   }
 
   /** Year-range backfill: month windows, week-window retry on failure
-    * (dynamic.py:288-322), all pages unioned into one DataFrame. */
+    * (dynamic.py:288-322); every page body is parsed by one plan. */
   def backfill(spark: SparkSession, startYear: Int, endYear: Int): DataFrame = {
-    val frames = PagePlanner.monthWindows(startYear, endYear).flatMap { m =>
-      Try(fetchWindow(spark, m)) match {
-        case Success(dfs) => dfs
-        case Failure(_) => PagePlanner.weekWindows(m).flatMap(fetchWindow(spark, _))
+    import spark.implicits._
+    val bodies = PagePlanner.monthWindows(startYear, endYear).flatMap { m =>
+      Try(fetchWindow(m)) match {
+        case Success(pages) => pages
+        case Failure(_) => PagePlanner.weekWindows(m).flatMap(fetchWindow)
       }
     }
-    frames.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], EventSchema.event))
+    GeoJsonParser.parse(spark, spark.createDataset(bodies))
   }
 }
 
@@ -65,16 +60,20 @@ object UsgsSource {
     * the FDSN query endpoint (dynamic.py:96-128). */
   final case class Request(start: String, end: String, limit: Int, offset: Long)
 
+  private val TypeKey = "\"type\""
+  private val FeatureValue = "\"Feature\""
+
   /** Cheap driver-side feature count to detect the terminal short page
     * without parsing the full document (the reference checks
-    * `len(data["features"])`). Counts `"type":"Feature"` occurrences. */
+    * `len(data["features"])`). Counts `"type"` keys whose value, after any
+    * spaces and colons, is `"Feature"`. One pass, no allocation. */
   private[ingest] def countFeatures(body: String): Int = {
     var i = 0; var n = 0
-    val needle = "\"type\""
-    while ({ i = body.indexOf(needle, i); i >= 0 }) {
-      val rest = body.substring(i + needle.length).dropWhile(c => c == ' ' || c == ':')
-      if (rest.startsWith("\"Feature\"")) n += 1
-      i += needle.length
+    while ({ i = body.indexOf(TypeKey, i); i >= 0 }) {
+      i += TypeKey.length
+      var j = i
+      while (j < body.length && (body.charAt(j) == ' ' || body.charAt(j) == ':')) j += 1
+      if (body.startsWith(FeatureValue, j)) n += 1
     }
     n
   }

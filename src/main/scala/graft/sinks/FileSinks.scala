@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
@@ -10,18 +11,25 @@ import java.time.format.DateTimeFormatter
   * The reference writes one local file per page; Spark writes a directory of
   * part-files per sink call — the distributed-correct equivalent (a single
   * file would force `coalesce(1)` through the driver, an anti-pattern at
-  * scale). Timestamped directory naming is preserved (`:179,191`).
+  * scale). Timestamped directory naming is preserved (`:179,191`); a second
+  * write within the same second takes the next free `-1`, `-2`, … suffix
+  * instead of failing on the existing directory.
   */
 object FileSinks {
   private val fmt = DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
 
-  private def stamped(dir: String, prefix: String, ext: String, now: LocalDateTime): String =
-    s"$dir/${prefix}_${now.format(fmt)}.$ext"
+  private def stamped(df: DataFrame, dir: String, prefix: String, ext: String,
+      now: LocalDateTime): String = {
+    val base = s"$dir/${prefix}_${now.format(fmt)}"
+    val fs = new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    Iterator.from(0).map(i => if (i == 0) s"$base.$ext" else s"$base-$i.$ext")
+      .find(p => !fs.exists(new Path(p))).get
+  }
 
   def saveCsv(df: DataFrame, dir: String, prefix: String = "earthquake_data",
       now: LocalDateTime = LocalDateTime.now()): Option[String] =
     if (df.isEmpty) None else {
-      val path = stamped(dir, prefix, "csv", now)
+      val path = stamped(df, dir, prefix, "csv", now)
       df.write.option("header", "true").csv(path)
       Some(path)
     }
@@ -29,7 +37,7 @@ object FileSinks {
   def saveJson(df: DataFrame, dir: String, prefix: String = "earthquake_data",
       now: LocalDateTime = LocalDateTime.now()): Option[String] =
     if (df.isEmpty) None else {
-      val path = stamped(dir, prefix, "json", now)
+      val path = stamped(df, dir, prefix, "json", now)
       df.write.json(path)
       Some(path)
     }

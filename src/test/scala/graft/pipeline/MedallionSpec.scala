@@ -62,6 +62,20 @@ class MedallionSpec extends SparkSpec {
     assert(FileSinks.saveJson(events.limit(0), dir) === None)
   }
 
+  test("file sinks: two writes stamped in the same second keep both outputs") {
+    val dir = tmpDir("sinks_same_second")
+    val now = java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5)
+    val one = events.limit(1)
+    val csv = Seq(FileSinks.saveCsv(events, dir, now = now), FileSinks.saveCsv(one, dir, now = now))
+    val json = Seq(FileSinks.saveJson(events, dir, now = now), FileSinks.saveJson(one, dir, now = now))
+    assert(csv.flatten === Seq(s"$dir/earthquake_data_20240102030405.csv",
+      s"$dir/earthquake_data_20240102030405-1.csv"))
+    assert(json.flatten === Seq(s"$dir/earthquake_data_20240102030405.json",
+      s"$dir/earthquake_data_20240102030405-1.json"))
+    assert(csv.flatten.map(spark.read.option("header", "true").csv(_).count()) === Seq(2L, 1L))
+    assert(json.flatten.map(spark.read.json(_).count()) === Seq(2L, 1L))
+  }
+
   test("schema evolution: appended batch with a new column merges on read") {
     import spark.implicits._
     val dir = tmpDir("evolve")
