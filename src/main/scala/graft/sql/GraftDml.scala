@@ -483,9 +483,10 @@ case class GraftUpdateCommand(table: String, condition: Column,
     set: Map[String, Column]) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftDml.versionOutput
   override def run(spark: SparkSession): Seq[Row] = {
+    val layout = GraftDml.layoutCols(table)
     val v =
-      if (GraftDml.useDv(spark)) CommitLog.updateDv(spark, table, condition, set)
-      else CommitLog.update(spark, table, condition, set, GraftDml.layoutCols(table))
+      if (GraftDml.useDv(spark)) CommitLog.updateDv(spark, table, condition, set, layout)
+      else CommitLog.update(spark, table, condition, set, layout)
     GraftCatalog.invalidateRelationCache(spark)
     Seq(Row(v))
   }

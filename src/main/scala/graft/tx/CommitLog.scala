@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException, StandardOp
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Minimal transactional commit log over parquet — the Delta-Lake-shaped
@@ -291,8 +292,7 @@ object CommitLog {
       expectPriorVersion.foreach { want =>
         val have = prev.map(_.version).getOrElse(0L)
         if (have != want) {
-          newFiles.map(commitDirOf).distinct
-            .foreach(d => deleteTree(tableDir.resolve(d)))
+          dropCommitDirs(tableDir, newFiles)
           throw new java.util.ConcurrentModificationException(
             s"$table advanced to v$have during a compare-and-set commit " +
               s"expecting to succeed v$want — a concurrent writer landed " +
@@ -327,8 +327,7 @@ object CommitLog {
         val fresh = freshPhys.select(df.schema.fieldNames.toIndexedSeq.map(n =>
           org.apache.spark.sql.functions.col(colMap0.getOrElse(n, n)).as(n)): _*)
         Constraints.firstViolation(fresh, missed).foreach { case (n, e) =>
-          newFiles.map(commitDirOf).distinct
-            .foreach(d => deleteTree(tableDir.resolve(d)))
+          dropCommitDirs(tableDir, newFiles)
           throw new IllegalStateException(
             s"commit to $table aborted: constraint '$n' CHECK ($e) was " +
               "registered concurrently and the written rows violate it")
@@ -339,8 +338,7 @@ object CommitLog {
       // pre-rename logical names as new columns — invalidate instead of
       // silently widening (the caller reruns over the new schema)
       if (mode == "append" && prev.map(_.colMap).getOrElse(Map.empty) != colMap0) {
-        newFiles.map(commitDirOf).distinct
-          .foreach(dd => deleteTree(tableDir.resolve(dd)))
+        dropCommitDirs(tableDir, newFiles)
         throw new IllegalStateException(
           s"$table's column mapping changed during the commit (concurrent " +
             "RENAME COLUMN); rerun the write against the new schema")
@@ -712,8 +710,7 @@ object CommitLog {
     * `commit(mirror = true)` appear — a reader can never observe an
     * uncommitted write. */
   def readStream(spark: SparkSession, table: String): DataFrame = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     // a table with no mirrored commit yet has no _stream/ dir; the file
     // source throws at query START on a missing path, so pre-create it
     Files.createDirectories(Paths.get(table).resolve(StreamDir))
@@ -739,8 +736,7 @@ object CommitLog {
     * file-source contract. */
   def changeFeedStream(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     Files.createDirectories(Paths.get(table).resolve(CdcDir))
     spark.readStream
       .schema(m.schema.add(ChangeTypeCol, org.apache.spark.sql.types.StringType))
@@ -803,8 +799,7 @@ object CommitLog {
   def registerCdcReader(spark: SparkSession, table: String, readerId: String,
       throughVersion: Long): Long = {
     require(readerId.nonEmpty, "readerId must be non-empty")
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     require(throughVersion <= m.version,
       s"cursor $throughVersion is ahead of $table's latest version ${m.version}")
     commit(
@@ -829,8 +824,7 @@ object CommitLog {
     * concurrent commit invalidates it — rerun). No-op returning the
     * current version when the reader is not registered. */
   def deregisterCdcReader(table: String, readerId: String): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val app = CdcReaderPrefix + readerId
     if (!m.txns.contains(app)) return m.version
     publishRewrite(table, m, m.files, mode = "append",
@@ -851,8 +845,7 @@ object CommitLog {
   def compact(spark: SparkSession, table: String,
       partitionBy: Seq[String] = Nil, targetBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Nil): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     // target output file count from the snapshot's ACTUAL on-disk bytes;
     // coalesce (no shuffle) merges the many small scan partitions down —
     // maxRecordsPerFile alone only ever splits, never merges
@@ -889,8 +882,7 @@ object CommitLog {
   def compactWhere(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column, partitionBy: Seq[String] = Nil,
       targetBytes: Long = 128L * 1024 * 1024, zorderBy: Seq[String] = Nil): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val filters = toFilters(spark, condition, m.schema)
     // an untranslatable predicate (function call, arithmetic, unknown
     // column) prunes NOTHING — proceeding would silently do the
@@ -943,8 +935,7 @@ object CommitLog {
   def compactIncremental(spark: SparkSession, table: String,
       partitionBy: Seq[String] = Nil, targetBytes: Long = 128L * 1024 * 1024,
       keepLargest: Int = 32): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val tableDir = Paths.get(table)
     val byDir = m.files.groupBy(commitDirOf).toSeq
       .map { case (dir, fs) =>
@@ -961,88 +952,244 @@ object CommitLog {
       freshFiles = newFiles, dvDirs = m.dvDirs)
   }
 
-  /** Copy-on-write DELETE (Delta `DELETE FROM t WHERE cond`): remove the
-    * rows matching `condition` from the latest snapshot by rewriting ONLY
-    * the data files that contain at least one matching row — every other
-    * file is carried into the new version by reference, untouched. At
-    * 100 TB a predicate that touches one partition's worth of files costs
-    * one scan (predicate pushed to parquet, so stats-pruned row groups are
-    * never read) plus a rewrite of just those files, never a table rewrite.
-    *
-    * SQL DELETE semantics: a row is removed iff `condition` evaluates TRUE;
-    * NULL keeps the row. Published like a compaction rewrite — single
-    * attempt, invalidated by any concurrent commit (the rewrite is only
-    * valid against the exact snapshot it read); mode `delete` in the
-    * manifest, so [[changesSince]] refuses to treat it as an append delta.
-    * Returns the new version, or the current one when nothing matched. */
-  def delete(spark: SparkSession, table: String, condition: org.apache.spark.sql.Column,
-      partitionBy: Seq[String] = Nil): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    val tableDir = Paths.get(table)
-    // stats sidecars pre-shrink the probe: files whose [min,max] exclude
-    // the predicate can't contain a match, so they're never even scanned
-    val candidates = m.copy(files = pruneFiles(table, m, toFilters(spark, condition, m.schema)))
-    val touched = touchedFiles(
-      readManifestWithFile(spark, table, candidates, "__graft_file").filter(condition),
-      "__graft_file", tableDir)
-    if (touched.isEmpty) return m.version // nothing matched; snapshot unchanged
-    import org.apache.spark.sql.functions.{coalesce => cz, lit, not}
-    val keepCond = not(cz(condition, lit(false)))
-    val touchedDf = readManifest(spark, table, m.copy(files = touched.toSeq.sorted))
-    val newFiles = writeDataDir(touchedDf.filter(keepCond), tableDir,
-      partitionBy, m.colMap)
-    // change feed: the deleted rows themselves (one extra pass over the
-    // touched files only — the same cost profile Delta's CDF pays)
-    val cdc = writeCdcTmp(
-      touchedDf.filter(cz(condition, lit(false)))
-        .withColumn(ChangeTypeCol, lit("delete")), tableDir)
-    publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles,
-      mode = "delete", cdcTmp = cdc, freshFiles = newFiles, dvDirs = m.dvDirs)
+  // ---- Row mutations ------------------------------------------------------
+  //
+  // Every row mutation is a PROBE (which rows it hits) plus one of two
+  // APPLIERS, both ending in [[publishRewrite]]: [[rewriteTouched]]
+  // (copy-on-write: rewrite the files holding a hit, carry every other file
+  // by reference) or [[retirePositions]] (merge-on-read, Delta's deletion
+  // vectors: retire the hits' positions, append the rows the mutation adds).
+  // The contracts they share hold once, here:
+  //  - a NULL condition keeps the row (SQL semantics, [[whereProbe]]);
+  //  - probes read through the DV filter, so dead rows never re-match;
+  //  - the change journal is written FIRST and the rows a mutation adds are
+  //    read back from it ([[journal]]): SET expressions and sources
+  //    evaluate exactly once;
+  //  - publishing is a compaction-style rewrite: single attempt,
+  //    invalidated by any concurrent commit, the attempt's fresh files
+  //    reclaimed on a lost race. Mode `delete`/`update`/`merge`/`replace`
+  //    in the manifest, so [[changesSince]] refuses to read one as an
+  //    append delta.
+
+  /** THE snapshot resolve of every row mutation: `body` runs against the
+    * latest manifest. A `txn` whose batch that snapshot already records is
+    * a replay — commit's per-writer idempotence, the primitive that makes a
+    * foreachBatch mutation sink exactly-once — so nothing applies and the
+    * current version returns. */
+  private def mutate(table: String, txn: Option[(String, Long)] = None)(
+      body: Manifest => Long): Long = {
+    val m = latestOrThrow(table)
+    if (txn.exists { case (app, batch) => m.txns.get(app).exists(_ >= batch) }) m.version
+    else body(m)
   }
 
-  /** Merge-on-read DELETE — Delta's deletion vectors (round-7 VERDICT
-    * item 3): instead of rewriting every file that contains a matching
-    * row ([[delete]]'s copy-on-write), publish the matching rows' POSITIONS
-    * as a deletion-vector dir and carry every data file by reference. A
-    * 1-row delete writes O(1 row) of DV bytes where copy-on-write rewrites
-    * the whole file — the steady-state CDC shape at 100 TB is a trickle of
-    * single-row retirements (the reference's upsert-by-PK serving
-    * semantics, `db-script.cql:37`), and paying a file rewrite per trickle
-    * row is the difference between O(rows) and O(rows × fileSize) write
-    * amplification.
-    *
-    * Readers pay the merge instead: every snapshot read anti-joins the
-    * (bounded, broadcast) DV rows away. [[compact]] folds DVs back to
-    * clean files — the explicit read-optimize step, exactly Delta's
-    * `OPTIMIZE` on a DV table. The change feed serves the SAME delete rows
-    * a copy-on-write delete would (journaled at commit). Already-dead rows
-    * never re-match: the probe itself reads through the DV filter.
-    *
-    * Returns the new version, or the current one when nothing matched.
-    * SQL DELETE semantics (NULL keeps the row). Like [[delete]], the
-    * condition must be deterministic. */
-  def deleteDv(spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column, foldAt: Int = DvFoldAt): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+  /** Which rows a mutation hits. `prune` keeps the snapshot files whose
+    * stats sidecars cannot rule out a hit; `hits` and `misses` split a
+    * frame of snapshot rows, keeping its column order. */
+  private final case class Probe(prune: Manifest => Seq[String],
+      hits: DataFrame => DataFrame, misses: DataFrame => DataFrame)
+
+  /** SQL WHERE: a row is hit iff `condition` is TRUE — NULL keeps it. The
+    * condition must be deterministic (probe and rewrite each evaluate it),
+    * as in Delta. */
+  private def whereProbe(spark: SparkSession, table: String, condition: Column): Probe = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    Probe(m => pruneFiles(table, m, toFilters(spark, condition, m.schema)),
+      _.filter(condition), _.filter(not(coalesce(condition, lit(false)))))
+  }
+
+  /** SQL IN over `keys`: a row is hit iff its key tuple is one of
+    * `srcKeys`' — NULL tuples match nothing. The per-file key bounds (and
+    * blooms) pre-shrink the probe, whatever the key count (round-5 VERDICT
+    * item 4). */
+  private def keyProbe(spark: SparkSession, table: String, keys: Seq[String],
+      srcKeys: DataFrame): Probe =
+    Probe(m => pruneFilesByKeys(spark, table, m, keys, srcKeys),
+      keyJoin(_, srcKeys, keys, "left_semi"), keyJoin(_, srcKeys, keys, "left_anti"))
+
+  /** `df` semi- or anti-joined to `other` on `keys`, in `df`'s column
+    * order: a USING join hoists the keys to the front, and the unions
+    * downstream resolve BY POSITION (a 2-key merge once wrote columns into
+    * each other's slots). */
+  private def keyJoin(df: DataFrame, other: DataFrame, keys: Seq[String],
+      how: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.join(other, keys, how).select(df.columns.toSeq.map(col): _*)
+  }
+
+  /** Apply a canonical SET map ([[canonicalSet]]): each target column
+    * takes its expression cast to the schema type, all in ONE projection,
+    * so every expression reads the row as it was before the update. */
+  private def applySet(df: DataFrame, schema: StructType,
+      set: Map[String, Column]): DataFrame =
+    df.withColumns(set.map { case (c, e) => c -> e.cast(schema(c).dataType) })
+
+  private def tagged(df: DataFrame, changeType: String): DataFrame =
+    df.withColumn(ChangeTypeCol, org.apache.spark.sql.functions.lit(changeType))
+
+  /** UPDATE's change rows: each hit row as its pre-image, then with `set`
+    * applied as its post-image, both projected to `schema`. The hit flag
+    * was decided on the ORIGINAL row, so a SET rewriting a column the
+    * condition reads never re-tests it. */
+  private def updateChanges(hits: DataFrame, schema: StructType,
+      set: Map[String, Column]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val ordered = schema.fieldNames.toSeq.map(col)
+    tagged(hits.select(ordered: _*), "update_preimage")
+      .union(tagged(applySet(hits, schema, set).select(ordered: _*), "update_postimage"))
+  }
+
+  /** UPDATE's SET map under `schema`'s canonical names (round-10 ADVICE:
+    * `SET Value = …` against column `value` must update, not refuse).
+    * UPDATE cannot add columns — that is merge's schema evolution. */
+  private def updateSet(schema: StructType, set0: Map[String, Column]): Map[String, Column] = {
+    require(set0.nonEmpty, "update requires at least one SET column")
+    canonicalSet(schema, set0, "UPDATE SET target",
+      k => throw new IllegalArgumentException(
+        s"UPDATE cannot add column '$k'; use merge for schema evolution"))
+  }
+
+  /** An upsert's change rows: the `matched` target rows as pre-images, the
+    * source rows whose key occurs in `target` as post-images, the rest of
+    * the source as inserts (a NULL source key matches nothing, so it
+    * inserts). `target` holds the matched rows and may hold more target
+    * rows (a key no source row carries joins nothing): copy-on-write passes
+    * the touched files' rows, which saves a join over the matched ones.
+    * All frames in the table schema's order. */
+  private def upsertChanges(matched: DataFrame, target: DataFrame, src: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val targetKeys = target.select(keys.map(col): _*)
+    tagged(matched, "update_preimage")
+      .union(tagged(keyJoin(src, targetKeys, keys, "left_semi"), "update_postimage"))
+      .union(tagged(keyJoin(src, targetKeys, keys, "left_anti"), "insert"))
+  }
+
+  /** Write `changes` to a fresh `_cdc/` attempt dir FIRST; when the
+    * mutation `adds` rows, read its `update_postimage`/`insert` rows back
+    * from that STORED journal in `schema` order. The parquet write is the
+    * single materialization of SET expressions and sources (round-5/6
+    * ADVICE): a persist() cannot promise it — an evicted block or lost
+    * executor recomputes, so rand()/current_timestamp() SETs could diverge
+    * between data files and post-images — immutable parquet can. */
+  private def journal(spark: SparkSession, tableDir: Path, changes: DataFrame,
+      schema: StructType, adds: Boolean): (Option[Path], Option[DataFrame]) = {
+    import org.apache.spark.sql.functions.col
+    val cdc = writeCdcTmp(changes, tableDir)
+    val added =
+      if (!adds) None
+      else Some(spark.read.schema(changes.schema).parquet(cdc.get.toString)
+        .filter(col(ChangeTypeCol).isin("update_postimage", "insert"))
+        .select(schema.fieldNames.toSeq.map(col): _*))
+    (cdc, added)
+  }
+
+  private def noRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** The snapshot files of `candidates` holding at least one probe hit. */
+  private def touchedBy(spark: SparkSession, table: String, candidates: Manifest,
+      probe: Probe): Set[String] =
+    touchedFiles(probe.hits(readManifestWithFile(spark, table, candidates, "__graft_file")),
+      "__graft_file", Paths.get(table))
+
+  /** Copy-on-write applier: the files holding a hit are read whole (aligned
+    * to `schema`, the merge's evolved one when given); `changes` gets their
+    * hits and all their rows, and their misses plus the rows the journal
+    * adds are written as fresh files that replace them. Every other file
+    * carries into the new version by reference, its DV deaths with it. At
+    * 100 TB a predicate touching one partition's worth of files costs one
+    * probe scan plus a rewrite of just those files, never a table rewrite.
+    * Nothing touched is a no-op unless the mutation `inserts` (its changes
+    * then see no hits). */
+  private def rewriteTouched(spark: SparkSession, table: String, m: Manifest,
+      probe: Probe, mode: String, partitionBy: Seq[String],
+      txn: Option[(String, Long)] = None, schema: Option[StructType] = None,
+      inserts: Boolean = false, adds: Boolean = false)(
+      changes: (DataFrame, DataFrame) => DataFrame): Long = {
     val tableDir = Paths.get(table)
-    import org.apache.spark.sql.functions.{coalesce => cz, col, lit}
-    val hit = cz(condition, lit(false))
-    val candidates = m.copy(files = pruneFiles(table, m, toFilters(spark, condition, m.schema)))
-    // dead rows with their (file, row_index) identity, read through the
-    // existing DV filter so a second deleteDv never re-journals old deaths
-    val dead = readManifestWithPos(spark, table, candidates).filter(hit)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (dead.isEmpty) return m.version
-      val cdc = writeCdcTmp(
-        dead.select(m.schema.fieldNames.toSeq.map(col): _*)
-          .withColumn(ChangeTypeCol, lit("delete")), tableDir)
-      val (dvRefs, dvFresh) = writeDvDeaths(spark, table, m, dead, foldAt)
-      publishRewrite(table, m, m.files, mode = "delete", cdcTmp = cdc,
-        dvDirs = dvRefs, freshFiles = dvFresh)
-    } finally dead.unpersist(blocking = false): Unit
+    val touched = touchedBy(spark, table, m.copy(files = probe.prune(m)), probe)
+    if (touched.isEmpty && !inserts) return m.version
+    val s = schema.getOrElse(m.schema)
+    val rows =
+      if (touched.isEmpty) noRows(spark, s)
+      else alignTo(readManifest(spark, table, m.copy(files = touched.toSeq.sorted)), s)
+    val (cdc, added) = journal(spark, tableDir, changes(probe.hits(rows), rows), s, adds)
+    val newFiles = writeDataDir(added.foldLeft(probe.misses(rows))(_ union _),
+      tableDir, partitionBy, m.colMap)
+    publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles, mode, schema,
+      txn, cdc, freshFiles = newFiles, dvDirs = m.dvDirs)
+  }
+
+  /** The merge-on-read probe: the hits of the DV-filtered snapshot with
+    * each row's (file, row_index) identity, pinned while `body` runs;
+    * None when nothing is hit. */
+  private def withHits(spark: SparkSession, table: String, m: Manifest, probe: Probe)(
+      body: Option[DataFrame] => Long): Long = {
+    val hits = probe.hits(readManifestWithPos(spark, table, m.copy(files = probe.prune(m))))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try body(Some(hits).filterNot(_.isEmpty))
+    finally hits.unpersist(blocking = false): Unit
+  }
+
+  /** Merge-on-read applier: journal `changes`, append the rows the journal
+    * adds (or the mutation's already written `source` files), retire the
+    * `dead` rows' positions as one DV dir ([[writeDvDeaths]]) and publish.
+    * No data file is rewritten: a 1-row delete writes O(1 row) of DV bytes
+    * where copy-on-write rewrites its file. Readers pay the DV anti-join
+    * until [[compact]] folds it, exactly Delta's `OPTIMIZE` on a DV table. */
+  private def retirePositions(spark: SparkSession, table: String, m: Manifest,
+      mode: String, partitionBy: Seq[String], foldAt: Int,
+      dead: Option[DataFrame], changes: DataFrame, adds: Boolean = false,
+      txn: Option[(String, Long)] = None, schema: Option[StructType] = None,
+      source: Seq[String] = Nil): Long = {
+    val tableDir = Paths.get(table)
+    val (cdc, added) = journal(spark, tableDir, changes, schema.getOrElse(m.schema), adds)
+    val newFiles = source ++ added.toSeq.flatMap(writeDataDir(_, tableDir, partitionBy, m.colMap))
+    val (dvRefs, dvFresh) =
+      dead.fold((m.dvDirs, Seq.empty[String]))(writeDvDeaths(spark, table, m, _, foldAt))
+    publishRewrite(table, m, m.files ++ newFiles, mode, schema, txn, cdc,
+      freshFiles = newFiles ++ dvFresh, dvDirs = dvRefs)
+  }
+
+  /** Write a mutation's `source` ONCE as fresh data files — the single
+    * materialization every later step reads back (round-7/8 findings: a
+    * source evaluated per consumer could pass a check on one evaluation
+    * and commit another, and re-runs an expensive caller plan each time) —
+    * and run `body` over them. A failure before publish drops them;
+    * [[publishRewrite]] reclaims them itself on a lost race (the
+    * IllegalStateException). */
+  private def withWrittenSource(tableDir: Path, source: DataFrame,
+      partitionBy: Seq[String], colMap: Map[String, String])(
+      body: Seq[String] => Long): Long = {
+    val files = writeDataDir(source, tableDir, partitionBy, colMap)
+    try body(files) catch {
+      case e: IllegalStateException => throw e
+      case e: Throwable => dropCommitDirs(tableDir, files); throw e
+    }
+  }
+
+  /** Copy-on-write DELETE (Delta `DELETE FROM t WHERE cond`): [[whereProbe]]
+    * plus [[rewriteTouched]]; the change feed serves the deleted rows.
+    * Returns the new version, or the current one when nothing matched. */
+  def delete(spark: SparkSession, table: String, condition: Column,
+      partitionBy: Seq[String] = Nil): Long = mutate(table) { m =>
+    rewriteTouched(spark, table, m, whereProbe(spark, table, condition), "delete",
+      partitionBy)((hits, _) => tagged(hits, "delete"))
+  }
+
+  /** Merge-on-read DELETE — [[delete]]'s twin through [[retirePositions]]
+    * (round-7 VERDICT item 3): the steady-state CDC shape at 100 TB is a
+    * trickle of single-row retirements (the reference's upsert-by-PK
+    * serving semantics, `db-script.cql:37`), and a file rewrite per trickle
+    * row is the difference between O(rows) and O(rows × fileSize) write
+    * amplification. Same change rows, same return as [[delete]]. */
+  def deleteDv(spark: SparkSession, table: String, condition: Column,
+      foldAt: Int = DvFoldAt): Long = mutate(table) { m =>
+    withHits(spark, table, m, whereProbe(spark, table, condition)) { hits =>
+      hits.fold(m.version)(h => retirePositions(spark, table, m, "delete", Nil, foldAt,
+        hits, tagged(alignTo(h, m.schema), "delete")))
+    }
   }
 
   /** DV dirs a snapshot may accumulate before the DV mutations fold them
@@ -1106,171 +1253,55 @@ object CommitLog {
   }
 
   /** Copy-on-write UPDATE (Delta `UPDATE t SET col = expr WHERE cond`):
-    * apply `set` to the rows matching `condition`, rewriting only the files
-    * that contain at least one such row — the same file-granular probe and
-    * carry-by-reference as [[delete]]. Set expressions may reference the
-    * row's existing columns; they may not add columns (Delta's UPDATE can't
-    * either — that's [[merge]]'s schema evolution). SQL semantics: NULL
-    * `condition` leaves the row unchanged. Returns the new version, or the
-    * current one when nothing matched. */
-  def update(spark: SparkSession, table: String, condition: org.apache.spark.sql.Column,
-      set0: Map[String, org.apache.spark.sql.Column],
-      partitionBy: Seq[String] = Nil): Long = {
-    require(set0.nonEmpty, "update requires at least one SET column")
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    // SET keys resolve case-insensitively to the schema's canonical names
-    // (round-10 ADVICE: the conditional-MERGE path resolved this way but
-    // UPDATE still refused `SET Value = …` against column `value`);
-    // collapsing and ambiguous keys refuse via [[canonicalSet]]
-    val set = canonicalSet(m.schema, set0, "UPDATE SET target",
-      k => throw new IllegalArgumentException(
-        s"UPDATE cannot add column '$k'; use merge for schema evolution"))
-    val tableDir = Paths.get(table)
-    val candidates = m.copy(files = pruneFiles(table, m, toFilters(spark, condition, m.schema)))
-    val touched = touchedFiles(
-      readManifestWithFile(spark, table, candidates, "__graft_file").filter(condition),
-      "__graft_file", tableDir)
-    if (touched.isEmpty) return m.version
-    import org.apache.spark.sql.functions.{coalesce => cz, lit, col, not}
-    val hit = cz(condition, lit(false))
-    val touchedDf = readManifest(spark, table, m.copy(files = touched.toSeq.sorted))
-    val ordered = m.schema.fieldNames.toSeq.map(col)
-    // SET is evaluated ONCE, on STORAGE (round-5 ADVICE low, hardened for
-    // round-6 ADVICE low): the hit flag is computed on the ORIGINAL row (a
-    // SET that rewrites a column the condition reads must not re-test the
-    // condition post-update), the post-images are written to the cdc
-    // attempt dir FIRST — that parquet write is the single materialization
-    // of the SET expressions — and the rewritten data files then derive
-    // from the STORED post-images plus the untouched rows. A persist()
-    // cannot give this guarantee (an evicted block or lost executor
-    // recomputes the partition, so rand()/current_timestamp() SETs could
-    // diverge between the data files and the post-images); immutable
-    // parquet can. The update CONDITION must itself be deterministic, as
-    // in Delta.
-    val updatedHit = m.schema.fieldNames.foldLeft(touchedDf.filter(hit)) {
-      (acc, name) =>
-        set.get(name) match {
-          case Some(expr) =>
-            acc.withColumn(name, expr.cast(m.schema(name).dataType))
-          case None => acc
-        }
+    * [[whereProbe]] plus [[rewriteTouched]]. Set expressions may reference
+    * the row's existing columns; they may not add columns. The change feed
+    * serves pre- and post-images. Returns the new version, or the current
+    * one when nothing matched. */
+  def update(spark: SparkSession, table: String, condition: Column,
+      set0: Map[String, Column], partitionBy: Seq[String] = Nil): Long =
+    mutate(table) { m =>
+      val set = updateSet(m.schema, set0)
+      rewriteTouched(spark, table, m, whereProbe(spark, table, condition), "update",
+        partitionBy, adds = true)((hits, _) => updateChanges(hits, m.schema, set))
     }
-    val pre = touchedDf.filter(hit).select(ordered: _*)
-      .withColumn(ChangeTypeCol, lit("update_preimage"))
-    val post = updatedHit.select(ordered: _*)
-      .withColumn(ChangeTypeCol, lit("update_postimage"))
-    val cdc = writeCdcTmp(pre.union(post), tableDir)
-    val postStored = spark.read.parquet(cdc.get.toString)
-      .filter(col(ChangeTypeCol) === "update_postimage")
-      .select(ordered: _*)
-    val newData = touchedDf.filter(not(hit)).select(ordered: _*).union(postStored)
-    val newFiles = writeDataDir(newData, tableDir, partitionBy, m.colMap)
-    publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles,
-      mode = "update", cdcTmp = cdc, freshFiles = newFiles, dvDirs = m.dvDirs)
-  }
 
-  /** Copy-on-write DELETE by KEY SET (`DELETE FROM t WHERE (k…) IN
-    * (SELECT k… FROM source)` — Delta expresses it as a MERGE WHEN MATCHED
-    * THEN DELETE): remove every row whose key tuple appears in `keys`,
-    * rewriting only the files that contain at least one matched key — the
-    * same per-file-bounds probe pre-shrink and carry-by-reference as
-    * [[merge]], so a CDC consumer retiring a trickle of keys from a 100 TB
-    * table pays O(touched files), never O(table). This is the APPLY shape
-    * for a change feed's `delete` rows, where [[delete]]'s Column
-    * predicate can't express the key set. SQL IN semantics: NULL key
-    * tuples match nothing (such rows survive). `txn` gives the mutation
-    * per-writer exactly-once, as in [[merge]]. Returns the new version, or
-    * the current one when nothing matched. */
+  /** Copy-on-write DELETE by KEY SET (`DELETE FROM t WHERE (k…) IN (SELECT
+    * k… FROM source)`, Delta's MERGE WHEN MATCHED THEN DELETE): [[keyProbe]]
+    * plus [[rewriteTouched]] — the APPLY shape for a change feed's `delete`
+    * rows, which a Column predicate can't express. NULL key tuples match
+    * nothing. Returns the new version, or the current one when nothing
+    * matched. */
   def deleteKeys(spark: SparkSession, table: String, keys: DataFrame,
       keyCols: Seq[String], partitionBy: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long = {
     require(keyCols.nonEmpty, "deleteKeys requires at least one key column")
     import org.apache.spark.sql.functions.col
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    txn.foreach { case (app, batch) =>
-      if (m.txns.get(app).exists(_ >= batch)) return m.version
+    mutate(table, txn) { m =>
+      // pinned: the key set is consulted by every pass (emptiness, bounds
+      // join, probe, rewrite, journal) — without it a caller's expensive
+      // keys plan re-runs each time, and a non-deterministic one could
+      // commit data files and change rows that DISAGREE
+      val srcKeys = keys.select(keyCols.map(col): _*).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (srcKeys.isEmpty) m.version
+        else rewriteTouched(spark, table, m, keyProbe(spark, table, keyCols, srcKeys),
+          "delete", partitionBy, txn)((hits, _) => tagged(hits, "delete"))
+      } finally srcKeys.unpersist(blocking = false): Unit
     }
-    val tableDir = Paths.get(table)
-    // pinned: the key set is consulted by FIVE passes (emptiness, bounds
-    // join, probe, kept anti-join, CDC semi-join) — without it a caller's
-    // expensive keys plan re-runs each time, and a non-deterministic one
-    // could even commit data files and change rows that DISAGREE
-    val srcKeys = keys.select(keyCols.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (srcKeys.isEmpty) return m.version
-      val candidates = m.copy(files = pruneFilesByKeys(spark, table, m, keyCols, srcKeys))
-      val touched = touchedFiles(
-        readManifestWithFile(spark, table, candidates, "__graft_file")
-          .join(srcKeys, keyCols, "left_semi"),
-        "__graft_file", tableDir)
-      if (touched.isEmpty) return m.version
-      def reorder(df: DataFrame): DataFrame =
-        df.select(m.schema.fieldNames.toSeq.map(col): _*)
-      val touchedDf = readManifest(spark, table, m.copy(files = touched.toSeq.sorted))
-      val kept = reorder(touchedDf.join(srcKeys, keyCols, "left_anti"))
-      val newFiles = writeDataDir(kept, tableDir, partitionBy, m.colMap)
-      val cdc = writeCdcTmp(reorder(touchedDf.join(srcKeys, keyCols, "left_semi"))
-        .withColumn(ChangeTypeCol, org.apache.spark.sql.functions.lit("delete")), tableDir)
-      publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles,
-        mode = "delete", addTxn = txn, cdcTmp = cdc, freshFiles = newFiles,
-        dvDirs = m.dvDirs)
-    } finally srcKeys.unpersist(blocking = false): Unit
   }
 
-  /** Merge-on-read UPDATE — [[deleteDv]]'s contract applied to `UPDATE t
-    * SET col = expr WHERE cond`: matched rows retire as deletion-vector
-    * positions and their post-images land in one fresh data dir; no file
-    * is rewritten. [[update]]'s single-evaluation contract holds
-    * verbatim: the hit flag is computed on the ORIGINAL row, post-images
-    * are written to the cdc attempt dir FIRST (that parquet write is the
-    * single materialization of the SET expressions — may be
-    * non-deterministic), and the appended data derives from the STORED
-    * post-images; the update CONDITION must be deterministic. SET cannot
-    * add columns. Returns the new version, or the current one when
-    * nothing matched. */
-  def updateDv(spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column,
-      set0: Map[String, org.apache.spark.sql.Column],
-      foldAt: Int = DvFoldAt): Long = {
-    require(set0.nonEmpty, "update requires at least one SET column")
-    import org.apache.spark.sql.functions.{coalesce => cz, col, lit}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    // same canonical SET resolution as [[update]] (round-10 ADVICE)
-    val set = canonicalSet(m.schema, set0, "UPDATE SET target",
-      k => throw new IllegalArgumentException(
-        s"UPDATE cannot add column '$k'; use merge for schema evolution"))
-    val tableDir = Paths.get(table)
-    val hit = cz(condition, lit(false))
-    val candidates = m.copy(files = pruneFiles(table, m, toFilters(spark, condition, m.schema)))
-    val matched = readManifestWithPos(spark, table, candidates).filter(hit)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (matched.isEmpty) return m.version
-      val ordered = m.schema.fieldNames.toSeq.map(col)
-      val updatedHit = m.schema.fieldNames.foldLeft(matched: DataFrame) {
-        (acc, name) =>
-          set.get(name) match {
-            case Some(expr) => acc.withColumn(name, expr.cast(m.schema(name).dataType))
-            case None => acc
-          }
-      }
-      val pre = matched.select(ordered: _*)
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-      val post = updatedHit.select(ordered: _*)
-        .withColumn(ChangeTypeCol, lit("update_postimage"))
-      val cdc = writeCdcTmp(pre.union(post), tableDir)
-      val postStored = spark.read.parquet(cdc.get.toString)
-        .filter(col(ChangeTypeCol) === "update_postimage")
-        .select(ordered: _*)
-      val newFiles = writeDataDir(postStored, tableDir, Nil, m.colMap)
-      val (dvRefs, dvFresh) = writeDvDeaths(spark, table, m, matched, foldAt)
-      publishRewrite(table, m, m.files ++ newFiles, mode = "update",
-        cdcTmp = cdc, dvDirs = dvRefs, freshFiles = newFiles ++ dvFresh)
-    } finally matched.unpersist(blocking = false): Unit
+  /** Merge-on-read UPDATE — [[update]]'s twin through [[retirePositions]]:
+    * matched rows retire as DV positions and their post-images, read back
+    * from the journal, land in one fresh data dir under `partitionBy`. */
+  def updateDv(spark: SparkSession, table: String, condition: Column,
+      set0: Map[String, Column], partitionBy: Seq[String] = Nil,
+      foldAt: Int = DvFoldAt): Long = mutate(table) { m =>
+    val set = updateSet(m.schema, set0)
+    withHits(spark, table, m, whereProbe(spark, table, condition)) { hits =>
+      hits.fold(m.version)(h => retirePositions(spark, table, m, "update", partitionBy,
+        foldAt, hits, updateChanges(alignTo(h, m.schema), m.schema, set), adds = true))
+    }
   }
 
   /** Case-insensitive resolution of a user-typed column name to its
@@ -1334,92 +1365,41 @@ object CommitLog {
           "deduplicate the source first (Delta's multiple-source-rows-matched error)")
   }
 
-  /** Merge-on-read MERGE / upsert — [[deleteDv]]'s contract applied to THE
-    * steady-state CDC shape (apply a trickle of upserts-by-PK, the
-    * reference's serving semantics `db-script.cql:37`): matched target
-    * rows are retired as deletion-vector POSITIONS, the whole source lands
-    * in one fresh data dir, and every existing data file carries by
-    * reference — O(source + probe) work with ZERO file rewrites, where
-    * copy-on-write [[merge]] rewrites every file a matched key lives in.
-    * Readers pay the DV anti-join until [[compact]] folds; the change feed
-    * serves the same typed rows (`update_preimage`/`update_postimage`/
-    * `insert`) a copy-on-write merge journals. Duplicate source keys
-    * rejected; additive schema evolution as in [[merge]]; `txn` gives the
-    * per-writer exactly-once contract (the foreachBatch CDC-apply sink's
-    * primitive). Returns the new version. */
+  /** Merge-on-read MERGE / upsert — [[merge]]'s twin through
+    * [[retirePositions]], THE steady-state CDC shape (a trickle of
+    * upserts-by-PK, `db-script.cql:37`): matched target rows retire as DV
+    * positions, the whole source lands in one fresh data dir, and every
+    * existing file carries by reference — O(source + probe) work with ZERO
+    * file rewrites. The source's data-dir write is its single evaluation
+    * ([[withWrittenSource]]); the uniqueness check, key probe and journal
+    * all read those stored rows. Duplicate source keys rejected; additive
+    * schema evolution and `txn` as in [[merge]]. Returns the new version. */
   def mergeDv(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], partitionBy: Seq[String] = Nil,
       txn: Option[(String, Long)] = None, foldAt: Int = DvFoldAt): Long = {
     require(keys.nonEmpty, "merge requires at least one key column")
-    import org.apache.spark.sql.functions.{col, lit}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    txn.foreach { case (app, batch) =>
-      if (m.txns.get(app).exists(_ >= batch)) return m.version
-    }
-    requireNoPhysicalGhost(m, source.schema, table)
-    val schema = mergeAdditive(Some(m.schema), source.schema)
-    val tableDir = Paths.get(table)
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toSeq.map { f =>
-        if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    def reorder(df: DataFrame): DataFrame =
-      df.select(schema.fieldNames.toSeq.map(col): _*)
-    // Single evaluation of the caller's source (round-8 review finding —
-    // the same contract replaceWhere holds): the data-dir write below IS
-    // the one materialization, and the uniqueness check, key probe, CDC
-    // journal, and committed data all derive from these STORED rows. A
-    // non-deterministic source evaluated independently per consumer could
-    // pass the uniqueness check yet commit duplicate keys, or journal
-    // change rows disagreeing with the data files; it would also re-run
-    // an arbitrarily expensive caller plan ~5 times.
-    val srcFiles = writeDataDir(aligned(source), tableDir, partitionBy, m.colMap)
-    def dropSrc(): Unit = srcFiles.map(commitDirOf).distinct
-      .foreach(d => deleteTree(tableDir.resolve(d)))
-    try {
-      val srcStored = readManifest(spark, table,
-        m.copy(schema = schema, files = srcFiles, dvDirs = Nil))
-      requireUniqueSourceKeys(srcStored, keys)
-      val srcKeys = srcStored.select(keys.map(col): _*).distinct()
-      if (srcKeys.isEmpty) { dropSrc(); return m.version }
-      // the probe reads through the DV filter (already-dead rows can't
-      // match) and keeps each matched row's (file, row_index) identity —
-      // pre-shrunk by the per-file key bounds like merge's probe
-      val candidates = m.copy(files = pruneFilesByKeys(spark, table, m, keys, srcKeys))
-      val matched = readManifestWithPos(spark, table, candidates)
-        .join(srcKeys, keys, "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val hasMatches = !matched.isEmpty
-        val cdcRows =
-          if (!hasMatches) srcStored.withColumn(ChangeTypeCol, lit("insert"))
+    import org.apache.spark.sql.functions.col
+    mutate(table, txn) { m =>
+      requireNoPhysicalGhost(m, source.schema, table)
+      val schema = mergeAdditive(Some(m.schema), source.schema)
+      withWrittenSource(Paths.get(table), alignTo(source, schema), partitionBy, m.colMap) {
+        srcFiles =>
+          if (srcFiles.isEmpty) m.version // empty source: nothing to merge
           else {
-            val matchedKeys = matched.select(keys.map(col): _*).distinct()
-            reorder(aligned(matched.drop("__dv_file", "__dv_row")))
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-              .union(reorder(srcStored.join(matchedKeys, keys, "left_semi"))
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .union(reorder(srcStored.join(matchedKeys, keys, "left_anti"))
-                .withColumn(ChangeTypeCol, lit("insert")))
+            // aligned: a hive-partitioned read surfaces its partition
+            // columns LAST, and the change-row unions are positional
+            val srcStored = alignTo(readManifest(spark, table,
+              m.copy(schema = schema, files = srcFiles, dvDirs = Nil)), schema)
+            requireUniqueSourceKeys(srcStored, keys)
+            val srcKeys = srcStored.select(keys.map(col): _*).distinct()
+            withHits(spark, table, m, keyProbe(spark, table, keys, srcKeys)) { hits =>
+              val matched = hits.fold(noRows(spark, schema))(alignTo(_, schema))
+              retirePositions(spark, table, m, "merge", partitionBy, foldAt, hits,
+                upsertChanges(matched, matched, srcStored, keys), txn = txn,
+                schema = Some(schema), source = srcFiles)
+            }
           }
-        val cdc = writeCdcTmp(cdcRows, tableDir)
-        val (dvRefs, dvFresh) =
-          if (!hasMatches) (m.dvDirs, Nil)
-          else writeDvDeaths(spark, table, m, matched, foldAt)
-        publishRewrite(table, m, m.files ++ srcFiles, mode = "merge",
-          schema = Some(schema), addTxn = txn, cdcTmp = cdc,
-          dvDirs = dvRefs, freshFiles = srcFiles ++ dvFresh)
-      } finally matched.unpersist(blocking = false): Unit
-    } catch {
-      // publishRewrite reclaims freshFiles itself on a lost race; anything
-      // failing BEFORE publish (uniqueness refusal, probe, cdc/dv writes)
-      // must not strand the already-written source dir
-      case e: IllegalStateException => throw e
-      case e: Throwable => dropSrc(); throw e
+      }
     }
   }
 
@@ -1457,16 +1437,14 @@ object CommitLog {
     * against the existing schema; evolution stays on the star-shaped
     * [[mergeDv]]/[[merge]]).
     *
-    * Same contracts as [[updateDv]]: single evaluation (post-images and
-    * inserts are journaled to the CDC attempt dir FIRST and the appended
-    * data derives from those STORED rows), duplicate source keys
-    * rejected, deaths published as DV positions (O(matched) write cost,
-    * zero file rewrites), `txn` idempotence. The matched probe pre-shrinks
-    * through the per-file key bounds; only a `bySource` clause pays a full
-    * snapshot pass (it must see every target row by definition). */
+    * Applied through [[retirePositions]]: post-images and inserts are
+    * read back from the journal, duplicate source keys rejected, `txn`
+    * idempotent. The matched probe pre-shrinks through the per-file key
+    * bounds; only a `bySource` clause pays a full snapshot pass (it must
+    * see every target row by definition). */
   def mergeConditionalDv(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], matched: Seq[MatchedClause],
-      insert: Option[Option[org.apache.spark.sql.Column]] = None,
+      insert: Option[Option[Column]] = None,
       bySource: Seq[MatchedClause] = Nil,
       partitionBy: Seq[String] = Nil, txn: Option[(String, Long)] = None,
       foldAt: Int = DvFoldAt): Long = {
@@ -1474,276 +1452,135 @@ object CommitLog {
     require(matched.nonEmpty || insert.nonEmpty || bySource.nonEmpty,
       "conditional merge needs at least one clause")
     import org.apache.spark.sql.functions.{coalesce => cz, col, lit, when}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    txn.foreach { case (app, batch) =>
-      if (m.txns.get(app).exists(_ >= batch)) return m.version
-    }
-    val schema = m.schema
-    // SET keys resolve to the schema's CANONICAL field names
-    // case-insensitively (round-9 ADVICE: the SQL path feeds user-typed
-    // identifiers through, and Spark resolves case-insensitively
-    // everywhere else — `SET Value = …` against column `value` must
-    // update, not refuse with a misleading "cannot add column"); the
-    // downstream set.get(name)/schema(name) lookups are case-sensitive,
-    // so canonicalization happens ONCE here and everything below sees
-    // schema-exact names. [[canonicalSet]] additionally refuses keys
-    // that COLLAPSE under canonicalization and case-ambiguous schemas
-    // (round-10 ADVICE, medium/low).
-    def canon(cl: MatchedClause): MatchedClause = cl.copy(set = cl.set.map(s =>
-      canonicalSet(schema, s, "MERGE SET target",
-        k => throw new IllegalArgumentException(
-          s"MERGE SET cannot add column '$k' in a conditional clause " +
-            "(schema evolution stays on the star-shaped merge)"))))
-    val matchedC = matched.map(canon)
-    val bySourceC = bySource.map(canon)
-    // merge keys resolve the same way (round-10 ADVICE, low: SET resolved
-    // case-insensitively but `ON t.Id = s.id` still refused — inconsistent
-    // resolution within one API surface). Each key carries its canonical
-    // TARGET name and its canonical SOURCE name separately; everything
-    // target-side below uses `keysC`, source-side accesses the source's
-    // own spelling.
-    val keyPairs = keys.map { k =>
-      val t = resolveField(schema.fieldNames.toSeq, k, "merge key").getOrElse(
-        throw new IllegalArgumentException(s"$table has no key column '$k'"))
-      val s = resolveField(source.columns.toSeq, k, "merge source key").getOrElse(
-        throw new IllegalArgumentException(s"merge source has no key column '$k'"))
-      (t, s)
-    }
-    val keysC = keyPairs.map(_._1)
-    val tableDir = Paths.get(table)
-    def hit(c: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
-      cz(c.getOrElse(lit(true)), lit(false))
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      requireUniqueSourceKeys(src, keyPairs.map(_._2))
-      // key set under canonical TARGET names — the spelling every
-      // table-side consumer (stats pruning, probe join, by-source
-      // anti-join) binds against
-      val srcKeys = src.select(keyPairs.map { case (t, s) => col(s).as(t) }: _*)
-        .distinct()
-      // combined probe: target rows (through the DV filter, with their
-      // (file, row_index) identity) × their matching source row; source
-      // columns ride under __src_ so same-named columns never collide
-      val candidates = m.copy(files = pruneFilesByKeys(spark, table, m, keysC, srcKeys))
-      val srcPrefixed = src.select(src.columns.toIndexedSeq.map(c =>
-        col(c).as(s"__src_$c")): _*)
-      val joinCond = keyPairs.map { case (t, s) =>
-        col(t) === col(s"__src_$s") }.reduce(_ && _)
-      val pairs = readManifestWithPos(spark, table, candidates)
-        .join(srcPrefixed, joinCond, "inner")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    mutate(table, txn) { m =>
+      val schema = m.schema
+      // SET keys resolve to the schema's CANONICAL field names once, here
+      // (round-9/10 ADVICE: the SQL path feeds user-typed identifiers
+      // through); [[canonicalSet]] refuses collapsing keys and
+      // case-ambiguous schemas
+      def canon(cl: MatchedClause): MatchedClause = cl.copy(set = cl.set.map(s =>
+        canonicalSet(schema, s, "MERGE SET target",
+          k => throw new IllegalArgumentException(
+            s"MERGE SET cannot add column '$k' in a conditional clause " +
+              "(schema evolution stays on the star-shaped merge)"))))
+      val matchedC = matched.map(canon)
+      val bySourceC = bySource.map(canon)
+      // merge keys resolve the same way (round-10 ADVICE): each key carries
+      // its canonical TARGET name and its canonical SOURCE name; table-side
+      // consumers use `keysC`, source-side ones the source's own spelling
+      val keyPairs = keys.map { k =>
+        val t = resolveField(schema.fieldNames.toSeq, k, "merge key").getOrElse(
+          throw new IllegalArgumentException(s"$table has no key column '$k'"))
+        val s = resolveField(source.columns.toSeq, k, "merge source key").getOrElse(
+          throw new IllegalArgumentException(s"merge source has no key column '$k'"))
+        (t, s)
+      }
+      val keysC = keyPairs.map(_._1)
+      def hit(c: Option[Column]): Column = cz(c.getOrElse(lit(true)), lit(false))
+      // first-match-wins routing: the clause INDEX each row falls to (-1 =
+      // no clause claims it, the row survives untouched)
+      def routed(rows: DataFrame, clauses: Seq[MatchedClause]): DataFrame =
+        rows.withColumn("__action", clauses.zipWithIndex.foldRight(lit(-1)) {
+          case ((cl, i), els) => when(hit(cl.condition), lit(i)).otherwise(els)
+        }).filter(col("__action") >= 0)
+      // per clause: an UPDATE journals its rows' pre- and post-images
+      // (unset columns keep the target's value — a partial update), a
+      // DELETE its rows' delete rows
+      def clauseChanges(acted: DataFrame, clauses: Seq[MatchedClause]): Seq[DataFrame] =
+        clauses.zipWithIndex.map { case (cl, i) =>
+          val rows = acted.filter(col("__action") === i)
+          cl.set.fold(tagged(rows.select(schema.fieldNames.toSeq.map(col): _*), "delete"))(
+            updateChanges(rows, schema, _))
+        }
+      val src = source.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        // first-match-wins routing: the clause INDEX each pair falls to
-        // (-1 = no clause claims it, the pair survives untouched)
-        val route = matchedC.zipWithIndex.foldRight(
-          lit(-1): org.apache.spark.sql.Column) { case ((cl, i), els) =>
-          when(hit(cl.condition), lit(i)).otherwise(els)
-        }
-        val acted = pairs.withColumn("__action", route).filter(col("__action") >= 0)
-        val ordered = schema.fieldNames.toSeq.map(col)
-        // per-UPDATE-clause post-images on the combined row; unset columns
-        // keep the target's value (partial update)
-        val postImages = matchedC.zipWithIndex.collect {
-          case (MatchedClause(_, Some(set)), i) =>
-            val rows = acted.filter(col("__action") === i)
-            schema.fieldNames.foldLeft(rows: DataFrame) { (acc, name) =>
-              set.get(name) match {
-                case Some(e) => acc.withColumn(name, e.cast(schema(name).dataType))
-                case None => acc
-              }
-            }.select(ordered: _*)
-        }
-        val preImages = matchedC.zipWithIndex.collect {
-          case (MatchedClause(_, Some(_)), i) =>
-            acted.filter(col("__action") === i).select(ordered: _*)
-        }
-        val deletedMatched = matchedC.zipWithIndex.collect {
-          case (MatchedClause(_, None), i) =>
-            acted.filter(col("__action") === i).select(ordered: _*)
-        }
-        // NOT MATCHED inserts: source rows whose key joins nothing, gated
-        // by the insert condition, star-aligned to the table schema
-        val inserts = insert.map { cond =>
-          val matchedKeys = pairs.select(keysC.map(col): _*).distinct()
-          // explicit equi-condition (not USING): the source may spell the
-          // key differently than the table; NULL source keys match
-          // nothing and insert, as with the USING anti-join
-          val anti = keyPairs.map { case (t, s) =>
-            src.col(s) === matchedKeys.col(t) }.reduce(_ && _)
-          alignTo(src.join(matchedKeys, anti, "left_anti").filter(hit(cond)), schema)
-        }
-        // NOT MATCHED BY SOURCE clauses: full-snapshot anti-join (every
-        // target row must be seen — no pruning can apply by definition),
-        // routed first-match-wins exactly like the matched side but over
-        // the TARGET row alone
-        val bySourceActed = if (bySourceC.isEmpty) None else Some {
-          val route = bySourceC.zipWithIndex.foldRight(
-            lit(-1): org.apache.spark.sql.Column) { case ((cl, i), els) =>
-            when(hit(cl.condition), lit(i)).otherwise(els)
-          }
-          readManifestWithPos(spark, table, m)
-            .join(srcKeys, keysC, "left_anti")
-            .withColumn("__action", route).filter(col("__action") >= 0)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
+        requireUniqueSourceKeys(src, keyPairs.map(_._2))
+        // key set under canonical TARGET names — the spelling every
+        // table-side consumer binds against
+        val srcKeys = src.select(keyPairs.map { case (t, s) => col(s).as(t) }: _*)
+          .distinct()
+        // combined probe: target rows (through the DV filter, with their
+        // identity) × their matching source row; source columns ride under
+        // __src_ so same-named columns never collide
+        val candidates = m.copy(files = pruneFilesByKeys(spark, table, m, keysC, srcKeys))
+        val srcPrefixed = src.select(src.columns.toIndexedSeq.map(c =>
+          col(c).as(s"__src_$c")): _*)
+        val joinCond = keyPairs.map { case (t, s) =>
+          col(t) === col(s"__src_$s") }.reduce(_ && _)
+        val pairs = readManifestWithPos(spark, table, candidates)
+          .join(srcPrefixed, joinCond, "inner")
+          .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val bySourcePost = bySourceC.zipWithIndex.collect {
-            case (MatchedClause(_, Some(set)), i) =>
-              val rows = bySourceActed.get.filter(col("__action") === i)
-              schema.fieldNames.foldLeft(rows: DataFrame) { (acc, name) =>
-                set.get(name) match {
-                  case Some(e) => acc.withColumn(name, e.cast(schema(name).dataType))
-                  case None => acc
-                }
-              }.select(ordered: _*)
+          val acted = routed(pairs, matchedC)
+          // NOT MATCHED inserts: source rows whose key joins nothing, gated
+          // by the insert condition, star-aligned to the table schema.
+          // Explicit equi-condition (not USING): the source may spell the
+          // key differently than the table; NULL source keys match nothing
+          // and insert
+          val inserts = insert.map { cond =>
+            val matchedKeys = pairs.select(keysC.map(col): _*).distinct()
+            val anti = keyPairs.map { case (t, s) =>
+              src.col(s) === matchedKeys.col(t) }.reduce(_ && _)
+            tagged(alignTo(src.join(matchedKeys, anti, "left_anti").filter(hit(cond)),
+              schema), "insert")
           }
-          val bySourcePre = bySourceC.zipWithIndex.collect {
-            case (MatchedClause(_, Some(_)), i) =>
-              bySourceActed.get.filter(col("__action") === i).select(ordered: _*)
-          }
-          val bySourceDeleted = bySourceC.zipWithIndex.collect {
-            case (MatchedClause(_, None), i) =>
-              bySourceActed.get.filter(col("__action") === i).select(ordered: _*)
-          }
-          val lit_ = (t: String) => org.apache.spark.sql.functions.lit(t)
-          val cdcRows = (
-            preImages.map(_.withColumn(ChangeTypeCol, lit_("update_preimage"))) ++
-            postImages.map(_.withColumn(ChangeTypeCol, lit_("update_postimage"))) ++
-            deletedMatched.map(_.withColumn(ChangeTypeCol, lit_("delete"))) ++
-            bySourcePre.map(_.withColumn(ChangeTypeCol, lit_("update_preimage"))) ++
-            bySourcePost.map(_.withColumn(ChangeTypeCol, lit_("update_postimage"))) ++
-            bySourceDeleted.map(_.withColumn(ChangeTypeCol, lit_("delete"))) ++
-            inserts.map(_.withColumn(ChangeTypeCol, lit_("insert"))).toSeq
-          ).reduceOption(_ union _)
-          val changed = cdcRows.exists(!_.isEmpty)
-          if (!changed) return m.version
-          // single materialization: journal first, derive the appended
-          // data from the STORED post-images/inserts (updateDv's contract
-          // — SET expressions and source plans evaluate exactly once)
-          val cdc = writeCdcTmp(cdcRows.get, tableDir)
-          val stored = spark.read.parquet(cdc.get.toString)
-          val newData = stored
-            .filter(col(ChangeTypeCol).isin("update_postimage", "insert"))
-            .select(ordered: _*)
-          val newFiles =
-            if (newData.isEmpty) Nil
-            else writeDataDir(newData, tableDir, partitionBy, m.colMap)
-          val deadPos = (Seq(acted) ++ bySourceActed.toSeq)
-            .map(_.select(col("__dv_file"), col("__dv_row")))
-            .reduce(_ union _)
-          val (dvRefs, dvFresh) =
-            if (deadPos.isEmpty) (m.dvDirs, Nil)
-            else writeDvDeaths(spark, table, m, deadPos, foldAt)
-          publishRewrite(table, m, m.files ++ newFiles, mode = "merge",
-            addTxn = txn, cdcTmp = cdc, dvDirs = dvRefs,
-            freshFiles = newFiles ++ dvFresh)
-        } finally bySourceActed.foreach(_.unpersist(blocking = false))
-      } finally pairs.unpersist(blocking = false): Unit
-    } finally src.unpersist(blocking = false): Unit
+          // NOT MATCHED BY SOURCE: a full-snapshot anti-join (every target
+          // row must be seen — no pruning applies by definition)
+          val bySourceActed = if (bySourceC.isEmpty) None else Some(
+            routed(readManifestWithPos(spark, table, m).join(srcKeys, keysC, "left_anti"),
+              bySourceC).persist(StorageLevel.MEMORY_AND_DISK))
+          try {
+            val changes = (clauseChanges(acted, matchedC) ++
+              bySourceActed.toSeq.flatMap(clauseChanges(_, bySourceC)) ++
+              inserts).reduceOption(_ union _)
+            if (!changes.exists(!_.isEmpty)) m.version
+            else {
+              val deadPos = (acted +: bySourceActed.toSeq)
+                .map(_.select(col("__dv_file"), col("__dv_row"))).reduce(_ union _)
+              retirePositions(spark, table, m, "merge", partitionBy, foldAt,
+                Some(deadPos).filterNot(_.isEmpty), changes.get, adds = true, txn = txn)
+            }
+          } finally bySourceActed.foreach(_.unpersist(blocking = false))
+        } finally pairs.unpersist(blocking = false): Unit
+      } finally src.unpersist(blocking = false): Unit
+    }
   }
 
   /** Copy-on-write MERGE / upsert (Delta `MERGE INTO … WHEN MATCHED UPDATE
     * SET * WHEN NOT MATCHED INSERT *`): rows of `source` whose `keys` match
-    * an existing row REPLACE it; the rest are inserted. File-granular like
-    * [[delete]]: only files containing a matched key are rewritten (their
-    * unmatched rows carried over), every untouched file moves to the new
-    * version by reference, and the whole source lands in the new data dir —
+    * an existing row REPLACE it; the rest are inserted. [[keyProbe]] plus
+    * [[rewriteTouched]]: only files holding a matched key are rewritten,
     * so a trickle of upserts against a 100 TB table rewrites the few files
-    * the keys live in, not the table. The matched-file probe is a semi-join
-    * against the source's distinct keys — AQE broadcasts it when small, the
-    * common CDC shape.
+    * the keys live in, not the table.
     *
     * Duplicate keys in `source` are rejected (Delta's multiple-source-rows-
     * match error): replacing one target row with two source rows is
     * non-deterministic. Additive schema evolution applies as in append:
     * `source` may add new columns (existing files read NULL), never change
-    * a type. Mode `merge` in the manifest; not expressible as an insertion
-    * delta, so merges never feed the `_stream/` mirror and [[changesSince]]
-    * refuses ranges containing one. Returns the new version. */
+    * a type. Not expressible as an insertion delta, so merges never feed
+    * the `_stream/` mirror. Returns the new version. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], partitionBy: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long = {
     require(keys.nonEmpty, "merge requires at least one key column")
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    // per-writer idempotence (same contract as commit's txn): a replayed
-    // CDC micro-batch whose batchId is already recorded re-applies nothing —
-    // the primitive that makes a foreachBatch MERGE sink exactly-once
-    txn.foreach { case (app, batch) =>
-      if (m.txns.get(app).exists(_ >= batch)) return m.version
+    import org.apache.spark.sql.functions.col
+    mutate(table, txn) { m =>
+      requireNoPhysicalGhost(m, source.schema, table)
+      val schema = mergeAdditive(Some(m.schema), source.schema)
+      // pinned: the source feeds the uniqueness probe, the key set, the
+      // bounds join, the touched probe and the journal — without it an
+      // expensive source plan (e.g. the dedup store's MinHash
+      // sign-and-band of the delta) re-runs per consumer
+      val pinned = source.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        requireUniqueSourceKeys(pinned, keys)
+        val srcKeys = pinned.select(keys.map(col): _*).distinct()
+        if (srcKeys.isEmpty) m.version // empty source: nothing to merge
+        else rewriteTouched(spark, table, m, keyProbe(spark, table, keys, srcKeys), "merge",
+          partitionBy, txn, Some(schema), inserts = true, adds = true)(
+          upsertChanges(_, _, alignTo(pinned, schema), keys))
+      } finally pinned.unpersist(blocking = false): Unit
     }
-    requireNoPhysicalGhost(m, source.schema, table)
-    val schema = mergeAdditive(Some(m.schema), source.schema)
-    val tableDir = Paths.get(table)
-    // pinned, same rationale as deleteKeys' srcKeys pin: the source is
-    // consulted by SIX consumers (uniqueness probe, key distinct +
-    // emptiness, bounds join, touched probe, the data write, the CDC
-    // journal) — without it an expensive source plan (e.g. the dedup
-    // store's MinHash sign-and-band of the delta) re-runs per consumer,
-    // and a NON-DETERMINISTIC source could even write data files and
-    // change rows that disagree (the exact hazard replaceWhere's
-    // single-materialization contract documents)
-    val source0 = source
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    requireUniqueSourceKeys(source0, keys)
-    val srcKeys = source0.select(keys.map(col): _*).distinct()
-    if (srcKeys.isEmpty) return m.version // empty source: nothing to merge
-    // pre-shrink the probe with PER-FILE key bounds (round-5 VERDICT item
-    // 4 — the old global min/max trick only composed for a single key and
-    // kept every file between two disjoint key clusters): join the source
-    // keys against each file's [min,max] from the stats sidecars, so the
-    // probe scans only files that can contain a matched key, whatever the
-    // key count. NULL-key source rows join no bounds row — correct, since
-    // they can MATCH no target row and insert as NOT MATCHED either way.
-    val candidates = m.copy(files = pruneFilesByKeys(spark, table, m, keys, srcKeys))
-    val touched = touchedFiles(
-      readManifestWithFile(spark, table, candidates, "__graft_file")
-        .join(srcKeys, keys, "left_semi"),
-      "__graft_file", tableDir)
-    // align both sides to the merged (additively evolved) schema
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toSeq.map { f =>
-        if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    val touchedAligned =
-      if (touched.isEmpty) None
-      else Some(aligned(readManifest(spark, table, m.copy(files = touched.toSeq.sorted))))
-    // a USING join on MULTIPLE keys hoists the key columns to the front of
-    // its output, and the unions below resolve BY POSITION — re-select the
-    // schema order after every keyed join or a 2-key merge writes columns
-    // into each other's slots (latent until round 6: single-key merges had
-    // their key first already)
-    def reorder(df: DataFrame): DataFrame =
-      df.select(schema.fieldNames.toSeq.map(col): _*)
-    val keptTouched = touchedAligned.map(t => reorder(t.join(srcKeys, keys, "left_anti")))
-    val srcAligned = aligned(source0)
-    val rewrite = keptTouched.foldLeft(srcAligned)(_ union _)
-    val newFiles = writeDataDir(rewrite, tableDir, partitionBy, m.colMap)
-    // change feed: matched target rows are update pre-images, matched
-    // source rows post-images, the rest of the source plain inserts
-    import org.apache.spark.sql.functions.{lit => clit}
-    val cdcRows = touchedAligned match {
-      case Some(t) =>
-        val matchedKeys = t.select(keys.map(col): _*).distinct()
-        reorder(t.join(srcKeys, keys, "left_semi"))
-          .withColumn(ChangeTypeCol, clit("update_preimage"))
-          .union(reorder(srcAligned.join(matchedKeys, keys, "left_semi"))
-            .withColumn(ChangeTypeCol, clit("update_postimage")))
-          .union(reorder(srcAligned.join(matchedKeys, keys, "left_anti"))
-            .withColumn(ChangeTypeCol, clit("insert")))
-      case None => srcAligned.withColumn(ChangeTypeCol, clit("insert"))
-    }
-    val cdc = writeCdcTmp(cdcRows, tableDir)
-    publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles,
-      mode = "merge", schema = Some(schema), addTxn = txn, cdcTmp = cdc,
-      freshFiles = newFiles, dvDirs = m.dvDirs)
-    } finally source0.unpersist(blocking = false): Unit
   }
 
   /** Predicate-scoped atomic overwrite (Delta's `replaceWhere` write
@@ -1755,15 +1592,16 @@ object CommitLog {
     * region, breaking re-run idempotence) — enforced distributed, surfaced
     * as one bounded `limit(1)` probe.
     *
-    * File-granular like [[delete]]: the stats-sidecar pre-shrink keeps
-    * untouched files moving by reference, so replacing one day of a
+    * File-granular like [[delete]] ([[whereProbe]], the touched files
+    * rewritten, the rest carried by reference), so replacing one day of a
     * time-clustered table rewrites O(that day's files) + O(source), never
-    * O(table). Mode `replace` in the manifest; the change feed serves the
-    * journaled rows (deleted rows + inserted rows) like any mutation's.
-    * Additive schema evolution as in append/merge. `txn` gives the
-    * per-writer exactly-once contract. Returns the new version. */
+    * O(table). The source is written once ([[withWrittenSource]]); the
+    * constraint probe, the committed data and the journal (deleted rows +
+    * inserted rows) all read it back. Additive schema evolution as in
+    * append/merge. `txn` gives the per-writer exactly-once contract.
+    * Returns the new version. */
   def replaceWhere(spark: SparkSession, table: String, source: DataFrame,
-      condition: org.apache.spark.sql.Column, partitionBy: Seq[String] = Nil,
+      condition: Column, partitionBy: Seq[String] = Nil,
       txn: Option[(String, Long)] = None,
       /** Compare-and-set like [[commit]]'s: publish ONLY as the immediate
         * successor of this version. For read-modify-write replacements
@@ -1783,13 +1621,8 @@ object CommitLog {
         * journaling would read every touched row and write a second copy
         * of the payload per fold — the dominant cost of the whole
         * operation. Leave `true` for any table with feed consumers. */
-      journalChanges: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{coalesce => cz, col, lit, not}
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    txn.foreach { case (app, batch) =>
-      if (m.txns.get(app).exists(_ >= batch)) return m.version
-    }
+      journalChanges: Boolean = true): Long = mutate(table, txn) { m =>
+    import org.apache.spark.sql.functions.col
     expectPriorVersion.foreach { want =>
       if (m.version != want)
         throw new java.util.ConcurrentModificationException(
@@ -1800,120 +1633,98 @@ object CommitLog {
     requireNoPhysicalGhost(m, source.schema, table)
     val schema = mergeAdditive(Some(m.schema), source.schema)
     val tableDir = Paths.get(table)
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toSeq.map { f =>
-        if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    }
-    // Single evaluation of the caller's source (round-7 ADVICE, low): the
-    // parquet write below IS the one materialization — the constraint
-    // probe, the committed data, and the CDC journal all derive from these
-    // STORED rows, so a non-deterministic source (uuid()/rand(), a source
-    // table mutated mid-call) cannot journal change rows that differ from
-    // the rows actually committed, and cannot sneak a violating row past a
-    // probe that ran over a different evaluation. The post-alignment casts
-    // still run before the write, so the probe sees the source exactly as
-    // written.
-    val srcFiles = writeDataDir(aligned(source), tableDir, partitionBy, m.colMap)
-    def dropSrc(): Unit = srcFiles.map(commitDirOf).distinct
-      .foreach(d => deleteTree(tableDir.resolve(d)))
-    val srcStored = readManifest(spark, table,
-      m.copy(schema = schema, files = srcFiles))
-    // PARTITION-ONLY fast path (round-16): when the condition references
-    // ONLY declared partition columns, every row of a hive-laid-out file
-    // shares the file's partition tuple, so the constraint probe, the
-    // touched-file discovery, and the survivor scan all collapse to
-    // DRIVER-side evaluation over the path segments — a sharded-store
-    // fold's replace then reads ZERO stored bytes and its cost is the
-    // source write alone. Files lacking a complete hive tuple (mixed
-    // layout after schema evolution) disable the fast path for the step
-    // that saw them — correctness never rides on an absent segment.
-    val layoutCols = m.partitionBy
-    def layoutType(c: String): Option[org.apache.spark.sql.types.DataType] =
-      schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-    // only types whose hive-segment string round-trips EXACTLY through a
-    // cast qualify (a float or timestamp rendering could drift and flip
-    // the predicate on a boundary value)
-    def fastSafe(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.BooleanType |
-           org.apache.spark.sql.types.DateType => true
-      case _ => false
-    }
-    val partitionOnly = layoutCols.nonEmpty &&
-      layoutCols.forall(c => layoutType(c).exists(fastSafe)) && {
-      val refs = org.apache.spark.sql.graftbridge.ColumnBridge
-        .expression(condition).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.name
-          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-            a.name
+    val probe = whereProbe(spark, table, condition)
+    withWrittenSource(tableDir, alignTo(source, schema), partitionBy, m.colMap) { srcFiles =>
+      // aligned: a hive-partitioned read surfaces its partition columns
+      // LAST, and the change-row union below is positional
+      val srcStored = alignTo(
+        readManifest(spark, table, m.copy(schema = schema, files = srcFiles)), schema)
+      // PARTITION-ONLY fast path (round-16): when the condition references
+      // ONLY declared partition columns, every row of a hive-laid-out file
+      // shares the file's partition tuple, so the constraint probe, the
+      // touched-file discovery, and the survivor scan all collapse to
+      // DRIVER-side evaluation over the path segments — a sharded-store
+      // fold's replace then reads ZERO stored bytes and its cost is the
+      // source write alone. Files lacking a complete hive tuple (mixed
+      // layout after schema evolution) disable the fast path for the step
+      // that saw them — correctness never rides on an absent segment.
+      val layoutCols = m.partitionBy
+      def layoutType(c: String): Option[org.apache.spark.sql.types.DataType] =
+        schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+      // only types whose hive-segment string round-trips EXACTLY through a
+      // cast qualify (a float or timestamp rendering could drift and flip
+      // the predicate on a boundary value)
+      def fastSafe(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+        case org.apache.spark.sql.types.IntegerType |
+             org.apache.spark.sql.types.LongType |
+             org.apache.spark.sql.types.ShortType |
+             org.apache.spark.sql.types.ByteType |
+             org.apache.spark.sql.types.StringType |
+             org.apache.spark.sql.types.BooleanType |
+             org.apache.spark.sql.types.DateType => true
+        case _ => false
+      }
+      val partitionOnly = layoutCols.nonEmpty &&
+        layoutCols.forall(c => layoutType(c).exists(fastSafe)) && {
+        val refs = org.apache.spark.sql.graftbridge.ColumnBridge
+          .expression(condition).collect {
+            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+              a.name
+            case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+              a.name
+          }
+        refs.nonEmpty &&
+          refs.forall(n => layoutCols.exists(_.equalsIgnoreCase(n)))
+      }
+      val escaper = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      def hiveTuple(f: String): Option[Seq[String]] = {
+        val kv = f.split('/').dropRight(1).filter(_.contains('='))
+          .map { s =>
+            val i = s.indexOf('=')
+            escaper.unescapePathName(s.take(i)).toLowerCase -> s.drop(i + 1)
+          }.toMap
+        val vals = layoutCols.map(c => kv.get(c.toLowerCase))
+        if (vals.exists(_.isEmpty)) None
+        else Some(vals.map(_.get).map(raw =>
+          if (raw == "__HIVE_DEFAULT_PARTITION__") null
+          else escaper.unescapePathName(raw)))
+      }
+      /** Which of `tuples` satisfy the condition — one driver-local job
+        * over O(distinct tuples) rows, zero file reads. */
+      def matchingTuples(tuples: Seq[Seq[String]]): Set[Seq[String]] = {
+        if (tuples.isEmpty) return Set.empty
+        val distinctT = tuples.distinct
+        val strSchema = StructType(
+          layoutCols.map(StructField(_, org.apache.spark.sql.types.StringType,
+            nullable = true)) :+
+            StructField("__graft_tuple_idx", org.apache.spark.sql.types.IntegerType))
+        val rows = distinctT.zipWithIndex.map { case (t, i) =>
+          org.apache.spark.sql.Row.fromSeq(t :+ i)
         }
-      refs.nonEmpty &&
-        refs.forall(n => layoutCols.exists(_.equalsIgnoreCase(n)))
-    }
-    val escaper = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    def hiveTuple(f: String): Option[Seq[String]] = {
-      val kv = f.split('/').dropRight(1).filter(_.contains('='))
-        .map { s =>
-          val i = s.indexOf('=')
-          escaper.unescapePathName(s.take(i)).toLowerCase -> s.drop(i + 1)
-        }.toMap
-      val vals = layoutCols.map(c => kv.get(c.toLowerCase))
-      if (vals.exists(_.isEmpty)) None
-      else Some(vals.map(_.get).map(raw =>
-        if (raw == "__HIVE_DEFAULT_PARTITION__") null
-        else escaper.unescapePathName(raw)))
-    }
-    /** Which of `tuples` satisfy the condition — one driver-local job
-      * over O(distinct tuples) rows, zero file reads. */
-    def matchingTuples(tuples: Seq[Seq[String]]): Set[Seq[String]] = {
-      if (tuples.isEmpty) return Set.empty
-      val distinctT = tuples.distinct
-      val strSchema = StructType(
-        layoutCols.map(StructField(_, org.apache.spark.sql.types.StringType,
-          nullable = true)) :+
-          StructField("__graft_tuple_idx", org.apache.spark.sql.types.IntegerType))
-      val rows = distinctT.zipWithIndex.map { case (t, i) =>
-        org.apache.spark.sql.Row.fromSeq(t :+ i)
+        import scala.jdk.CollectionConverters._
+        val typed = spark.createDataFrame(rows.asJava, strSchema)
+          .select(layoutCols.map(c =>
+            col(c).cast(layoutType(c).get).as(c)) :+ col("__graft_tuple_idx"): _*)
+        val ok = typed.filter(condition).select("__graft_tuple_idx")
+          .collect().map(_.getInt(0)).toSet
+        distinctT.zipWithIndex.collect { case (t, i) if ok(i) => t }.toSet
       }
-      import scala.jdk.CollectionConverters._
-      val typed = spark.createDataFrame(rows.asJava, strSchema)
-        .select(layoutCols.map(c =>
-          col(c).cast(layoutType(c).get).as(c)) :+ col("__graft_tuple_idx"): _*)
-      val ok = typed.filter(condition).select("__graft_tuple_idx")
-        .collect().map(_.getInt(0)).toSet
-      distinctT.zipWithIndex.collect { case (t, i) if ok(i) => t }.toSet
-    }
-    val srcTuples: Option[Seq[Seq[String]]] =
-      if (!partitionOnly) None
-      else {
-        val ts = srcFiles.map(hiveTuple)
-        if (ts.exists(_.isEmpty)) None else Some(ts.map(_.get))
+      val srcTuples: Option[Seq[Seq[String]]] =
+        if (!partitionOnly) None
+        else {
+          val ts = srcFiles.map(hiveTuple)
+          if (ts.exists(_.isEmpty)) None else Some(ts.map(_.get))
+        }
+      val violating = srcTuples match {
+        case Some(ts) => !ts.forall(matchingTuples(ts))
+        case None => probe.misses(srcStored).limit(1).count() > 0
       }
-    val violating =
-      try srcTuples match {
-        case Some(ts) =>
-          val ok = matchingTuples(ts)
-          if (ts.forall(ok)) 0L else 1L
-        case None =>
-          srcStored.filter(not(cz(condition, lit(false)))).limit(1).count()
-      } catch { case e: Throwable => dropSrc(); throw e }
-    if (violating > 0) {
-      dropSrc()
-      throw new IllegalArgumentException(
-        "replaceWhere source contains rows NOT matching the replace condition; " +
-          "writing them would corrupt the non-replaced region (Delta's " +
-          "replaceWhere constraint)")
-    }
-    try {
-      val candidates = m.copy(files = pruneFiles(table, m, toFilters(spark, condition, m.schema)))
+      if (violating)
+        throw new IllegalArgumentException(
+          "replaceWhere source contains rows NOT matching the replace condition; " +
+            "writing them would corrupt the non-replaced region (Delta's " +
+            "replaceWhere constraint)")
+      val candidates = m.copy(files = probe.prune(m))
       val fastTouched: Option[Set[String]] =
         if (!partitionOnly) None
         else {
@@ -1924,47 +1735,28 @@ object CommitLog {
             Some(ts.collect { case (f, Some(t)) if ok(t) => f }.toSet)
           }
         }
-      val touched = fastTouched.getOrElse(touchedFiles(
-        readManifestWithFile(spark, table, candidates, "__graft_file").filter(condition),
-        "__graft_file", tableDir))
-      val hit = cz(condition, lit(false))
-      // the touched rows are only READ when something needs them: the CDC
-      // journal always does; the survivor scan does not when the fast
-      // path PROVED every row of every touched file matches (whole-file
+      val touched = fastTouched.getOrElse(touchedBy(spark, table, candidates, probe))
+      // the touched rows are only READ when something needs them: the
+      // journal always does; the survivor scan does not when the fast path
+      // PROVED every row of every touched file matches (whole-file
       // replacement — survivors are empty by construction)
-      val needTouchedRead = touched.nonEmpty &&
-        (journalChanges || fastTouched.isEmpty)
-      val touchedAligned =
-        if (!needTouchedRead) None
-        else Some(aligned(readManifest(spark, table, m.copy(files = touched.toSeq.sorted))))
+      val touchedRows =
+        if (touched.isEmpty || (!journalChanges && fastTouched.isDefined)) None
+        else Some(alignTo(readManifest(spark, table, m.copy(files = touched.toSeq.sorted)), schema))
       // kept survivors of rewritten files land in a second fresh write
-      // (the source's files are already on disk and committed by
-      // reference — rewriting them into a combined dir would defeat the
-      // single-materialization contract above)
+      // (the source's files are already on disk and committed by reference)
       val survivorFiles =
         if (fastTouched.isDefined) Nil
-        else touchedAligned.map(_.filter(not(hit)))
-          .map(writeDataDir(_, tableDir, partitionBy, m.colMap)).getOrElse(Nil)
+        else touchedRows.toSeq.flatMap(r =>
+          writeDataDir(probe.misses(r), tableDir, partitionBy, m.colMap))
       val newFiles = srcFiles ++ survivorFiles
-      // align the source's stored read too: a hive-partitioned source
-      // surfaces its partition columns LAST on re-read, and this union is
-      // positional — without alignment the change rows would silently
-      // union mismatched columns (or fail analysis on type conflict)
       val cdc =
         if (!journalChanges) None
-        else writeCdcTmp(
-          touchedAligned.map(_.filter(hit).withColumn(ChangeTypeCol, lit("delete")))
-            .foldLeft(aligned(srcStored).withColumn(ChangeTypeCol, lit("insert")))(_ union _),
-          tableDir)
+        else writeCdcTmp(touchedRows.map(r => tagged(probe.hits(r), "delete"))
+          .foldLeft(tagged(srcStored, "insert"))(_ union _), tableDir)
       publishRewrite(table, m, m.files.filterNot(touched) ++ newFiles,
         mode = "replace", schema = Some(schema), addTxn = txn, cdcTmp = cdc,
         freshFiles = newFiles, dvDirs = m.dvDirs)
-    } catch {
-      // publishRewrite reclaims freshFiles itself on a lost race; anything
-      // failing BEFORE publish (probe scan, survivor write, cdc write)
-      // must not strand the already-written source commit dir
-      case e: IllegalStateException => throw e
-      case e: Throwable => dropSrc(); throw e
     }
   }
 
@@ -1992,8 +1784,7 @@ object CommitLog {
     * via `overwriteDiff` while the pre-restore manifest lives). */
   def restore(spark: SparkSession, table: String, toVersion: Long,
       cdc: Boolean = false): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     if (toVersion == m.version) return m.version // already there
     require(toVersion < m.version,
       s"cannot restore $table to v$toVersion: latest is v${m.version}")
@@ -2274,8 +2065,7 @@ object CommitLog {
     * `changeFeed(…, overwriteDiff = true)` while the old manifest
     * lives). */
   def truncate(spark: SparkSession, table: String): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     commit(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema),
       table, "overwrite")
@@ -2290,8 +2080,7 @@ object CommitLog {
     * case-insensitively, matching the resolver. O(1) driver work. */
   def addColumns(table: String, cols: StructType): Long = {
     require(cols.fields.nonEmpty, "ADD COLUMNS needs at least one column")
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     cols.fieldNames.foreach { c =>
       require(!m.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
         s"$table already has a column '$c'")
@@ -2329,8 +2118,7 @@ object CommitLog {
     * names. Time travel to pre-drop versions still reads the column. */
   def dropColumns(table: String, names: Seq[String]): Long = {
     require(names.nonEmpty, "DROP COLUMNS needs at least one column")
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val layout = (m.partitionBy ++
       m.files.flatMap(FileStats.partitionStats(_).keys)).distinct
     val constrained = Constraints.referencedColumns(table)
@@ -2375,8 +2163,7 @@ object CommitLog {
     * ingest renames the full USGS property set en masse
     * (`usgs-earthquake-data-ingest.py:125-168`, `mag→magnitude` etc.). */
   def renameColumn(table: String, oldName: String, newName: String): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val oldC = resolveField(m.schema.fieldNames.toSeq, oldName, "RENAME COLUMN")
       .getOrElse(throw new IllegalArgumentException(
         s"$table has no column '$oldName'"))
@@ -3408,8 +3195,7 @@ object CommitLog {
     // leaving orphan rewrite-sized garbage per retry for fsckClean's age
     // gate to find days later (a contended mutation retry loop would
     // otherwise strand one full rewrite of the touched files per loss)
-    def dropFresh(): Unit = freshFiles.map(commitDirOf).distinct
-      .foreach(d => deleteTree(Paths.get(table).resolve(d)))
+    def dropFresh(): Unit = dropCommitDirs(Paths.get(table), freshFiles)
     val prev = latestManifest(table).getOrElse(base)
     if (prev.version != base.version) {
       cdcTmp.foreach(deleteTree)
@@ -3489,6 +3275,11 @@ object CommitLog {
         .foreach(f => Files.deleteIfExists(f))
     else Files.deleteIfExists(p): Unit
   }
+
+  /** Delete the commit dirs holding `files` — an attempt reclaiming its
+    * own fresh, never-published writes. */
+  private def dropCommitDirs(tableDir: Path, files: Seq[String]): Unit =
+    files.map(commitDirOf).distinct.foreach(d => deleteTree(tableDir.resolve(d)))
 
   /** Change data feed (Delta CDF): every row-level change after
     * `fromVersion` (exclusive) up to `toVersion` (inclusive), typed by
@@ -3882,8 +3673,7 @@ object CommitLog {
     * still fails, as in Delta. No-op returning the current version when
     * the latest snapshot is whole. */
   def repairMissing(table: String): Long = {
-    val m = latestManifest(table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val m = latestOrThrow(table)
     val tableDir = Paths.get(table)
     val (present, gone) = m.files.partition(f => Files.exists(tableDir.resolve(f)))
     if (gone.isEmpty) m.version
@@ -4245,6 +4035,10 @@ object CommitLog {
 
   private def latestManifest(table: String): Option[Manifest] =
     latestVersion(table).map(manifest(table, _))
+
+  private def latestOrThrow(table: String): Manifest =
+    latestManifest(table).getOrElse(
+      throw new IllegalArgumentException(s"$table has no committed versions"))
 
   /** Resolved snapshot-read memo (optimization round 17, guide §5 driver —
     * same catalog rationale as [[graft.queries.Tables]]'s base-table memo):

@@ -189,30 +189,34 @@ class GraftSqlDmlSpec extends SparkSpec {
   }
 
   test("copy-on-write DML on a hive-partitioned table keeps the layout") {
-    val t = freshTable("sqldml_cowpart", partitionBy = Seq("typ"))
-    val v = view(t, "sqldml_cowpart_v")
-    spark.conf.set("spark.graft.dml.deletionVectors", "false")
-    try {
-      // the rewrite must land in the SAME hive layout (layoutCols derives
-      // it from the manifest) — and only 'a' partition files get touched
-      val before = CommitLog.manifest(t, 1L).files
-      spark.sql(s"UPDATE $v SET value = value * 10 WHERE typ = 'a'")
-      val after = CommitLog.manifest(t, 2L).files
-      val fresh = after.filterNot(before.toSet)
-      assert(fresh.nonEmpty && fresh.forall(_.contains("typ=a")))
-      assert(before.filter(_.contains("typ=b")).forall(after.contains))
-      assert(rows(t).filter(_._2 == "a").map(_._3).sorted === Seq(100.0, 200.0))
-      // merge (upsert) in CoW mode keeps the layout for its rewrite too
-      Seq((3L, "b", 999.0)).toDF("id", "typ", "value")
-        .createOrReplaceTempView("sqldml_cowpart_src")
-      spark.sql(
-        s"""MERGE INTO $v t USING sqldml_cowpart_src s ON t.id = s.id
-            WHEN MATCHED THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *""")
-      val m3 = CommitLog.manifest(t, 3L).files
-      assert(m3.forall(f => f.contains("typ=")), s"layout lost: $m3")
-      assert(rows(t).find(_._1 == 3L).get === ((3L, "b", 999.0)))
-    } finally spark.conf.unset("spark.graft.dml.deletionVectors")
+    // and so does the default merge-on-read mode: its post-images and
+    // merge source land in the table's layout like the rewrites do
+    for (dv <- Seq("false", "true")) {
+      val t = freshTable(s"sqldml_cowpart_$dv", partitionBy = Seq("typ"))
+      val v = view(t, s"sqldml_cowpart_${dv}_v")
+      spark.conf.set("spark.graft.dml.deletionVectors", dv)
+      try {
+        // the rewrite must land in the SAME hive layout (layoutCols derives
+        // it from the manifest) — and only 'a' partition files get touched
+        val before = CommitLog.manifest(t, 1L).files
+        spark.sql(s"UPDATE $v SET value = value * 10 WHERE typ = 'a'")
+        val after = CommitLog.manifest(t, 2L).files
+        val fresh = after.filterNot(before.toSet)
+        assert(fresh.nonEmpty && fresh.forall(_.contains("typ=a")), s"dv=$dv: $fresh")
+        assert(before.filter(_.contains("typ=b")).forall(after.contains))
+        assert(rows(t).filter(_._2 == "a").map(_._3).sorted === Seq(100.0, 200.0))
+        // merge (upsert) keeps the layout for its written files too
+        Seq((3L, "b", 999.0)).toDF("id", "typ", "value")
+          .createOrReplaceTempView("sqldml_cowpart_src")
+        spark.sql(
+          s"""MERGE INTO $v t USING sqldml_cowpart_src s ON t.id = s.id
+              WHEN MATCHED THEN UPDATE SET *
+              WHEN NOT MATCHED THEN INSERT *""")
+        val m3 = CommitLog.manifest(t, 3L).files
+        assert(m3.forall(f => f.contains("typ=")), s"dv=$dv: layout lost: $m3")
+        assert(rows(t).find(_._1 == 3L).get === ((3L, "b", 999.0)))
+      } finally spark.conf.unset("spark.graft.dml.deletionVectors")
+    }
   }
 
   test("DML works against the DV fallback relation too") {

@@ -12,7 +12,9 @@ import graft.SparkSpec
   * targets are checked against the recorded per-version model history.
   * This is where cross-op interactions live (a DV riding into a
   * compact, a restore over a truncate, a merge right after a restore) —
-  * the single-op specs can't see them. fsck must end clean. */
+  * the single-op specs can't see them. fsck must end clean. A second pass
+  * replays the same walk with every row mutation routed through its
+  * copy-on-write twin. */
 object TxModelSpec {
   case class R(id: Long, value: Double)
 }
@@ -22,6 +24,16 @@ class TxModelSpec extends SparkSpec {
   import TxModelSpec.R
 
   test("30 random ops x 3 seeds: snapshot == model after every op; fsck clean") {
+    walk(cow = false)
+  }
+
+  test("copy-on-write twins: 30 random ops x 3 seeds: snapshot == model after every op") {
+    walk(cow = true)
+  }
+
+  /** The seeded walk; `cow` routes deleteDv/updateDv/mergeDv through
+    * delete/update/merge and the one-key delete through deleteKeys. */
+  private def walk(cow: Boolean): Unit = {
     (1 to 3).foreach { seed =>
       val rnd = new scala.util.Random(seed * 104729)
       val t = tmpDir(s"txmodel_$seed"); new java.io.File(t).delete()
@@ -64,12 +76,14 @@ class TxModelSpec extends SparkSpec {
             model ++= rs.map(r => r.id -> r.value)
           case 1 => // merge-on-read delete by predicate
             val cut = rnd.nextInt(250).toDouble
-            CommitLog.deleteDv(spark, t, col("value") < cut)
+            if (cow) CommitLog.delete(spark, t, col("value") < cut)
+            else CommitLog.deleteDv(spark, t, col("value") < cut)
             model = model.filter { case (_, v) => !(v < cut) }
           case 2 => // merge-on-read update by predicate
             val cut = 750.0 + rnd.nextInt(250)
-            CommitLog.updateDv(spark, t, col("value") > cut,
-              Map("value" -> (col("value") - 500.0)))
+            val set = Map("value" -> (col("value") - 500.0))
+            if (cow) CommitLog.update(spark, t, col("value") > cut, set)
+            else CommitLog.updateDv(spark, t, col("value") > cut, set)
             model = model.map { case (k, v) =>
               k -> (if (v > cut) v - 500.0 else v) }
           case 3 => // star merge: update half the source keys, insert half
@@ -77,7 +91,8 @@ class TxModelSpec extends SparkSpec {
             val fresh = rows(5)
             val src = existing.map(k => R(k, math.floor(rnd.nextDouble() * 1000) / 4.0)) ++ fresh
             if (src.nonEmpty) {
-              CommitLog.mergeDv(spark, t, df(src), Seq("id"))
+              if (cow) CommitLog.merge(spark, t, df(src), Seq("id"))
+              else CommitLog.mergeDv(spark, t, df(src), Seq("id"))
               model ++= src.map(r => r.id -> r.value)
             }
           case 4 => // truncate (rare): empty snapshot, history intact
@@ -94,7 +109,8 @@ class TxModelSpec extends SparkSpec {
             model = history(target)
           case 7 => // copy-on-write delete of one key
             model.keys.toSeq.sorted.headOption.foreach { k =>
-              CommitLog.delete(spark, t, col("id") === k)
+              if (cow) CommitLog.deleteKeys(spark, t, Seq(k).toDF("id"), Seq("id"))
+              else CommitLog.delete(spark, t, col("id") === k)
               model -= k
             }
           case 8 => // replaceWhere: swap a value band atomically — every

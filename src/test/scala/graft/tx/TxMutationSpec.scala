@@ -662,6 +662,66 @@ class TxMutationSpec extends SparkSpec {
     assert(CommitLog.fsck(t).clean)
   }
 
+  test("copy-on-write and deletion-vector twins leave equal snapshots and change rows") {
+    // one seeded multi-file table, committed twice: `cow` takes delete,
+    // update and merge, `dv` their twins deleteDv, updateDv and mergeDv
+    val seeded = (0 until 120).map { i =>
+      val s = if (i % 7 == 0) None else if (i % 5 == 0) Some("x")
+        else if (i % 3 == 0) Some("y") else Some(s"s$i")
+      (i.toLong, i / 30, s, i * 1.5)
+    }.toDF("id", "grp", "s", "v")
+    val (cow, dv) = (freshTable(), freshTable())
+    Seq(cow, dv).foreach(t => CommitLog.commit(seeded.repartition(4, col("grp")), t, "append"))
+    assert(CommitLog.manifest(cow, 1L).files.size > 1)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def sameAfter(step: String): Seq[String] = {
+      val v = CommitLog.latestVersion(cow).get
+      assert(CommitLog.latestVersion(dv).get === v, step)
+      assert(sorted(CommitLog.read(spark, cow)) === sorted(CommitLog.read(spark, dv)), step)
+      val feed = sorted(CommitLog.changeFeed(spark, cow, v - 1, Some(v)))
+      assert(feed === sorted(CommitLog.changeFeed(spark, dv, v - 1, Some(v))), step)
+      feed
+    }
+
+    // NULL `s` makes the condition NULL below v = 170 (row kept) and TRUE
+    // above it (NULL OR TRUE)
+    val del = col("s") === "x" || col("v") > 170.0
+    CommitLog.delete(spark, cow, del)
+    CommitLog.deleteDv(spark, dv, del)
+    sameAfter("delete")
+    assert(CommitLog.read(spark, cow).filter(col("s").isNull).count() === 17L)
+
+    // SET reads the row as it was: s takes the OLD grp, grp the OLD s's length
+    val before = CommitLog.read(spark, cow).filter(col("s") === "y")
+      .select("id", "grp").as[(Long, Int)].collect().toMap
+    val set = Map("s" -> col("grp").cast("string"), "grp" -> length(col("s")),
+      "v" -> col("v") * 10)
+    CommitLog.update(spark, cow, col("s") === "y", set)
+    CommitLog.updateDv(spark, dv, col("s") === "y", set)
+    assert(sameAfter("update").count(_.contains("update_postimage")) === before.size)
+    val after = CommitLog.read(spark, cow).filter(col("id").isin(before.keys.toSeq: _*))
+      .select("id", "grp", "s").as[(Long, Int, String)].collect()
+    assert(after.toSet === before.map { case (id, g) => (id, 1, g.toString) }.toSet)
+
+    // 2-key merge whose source adds a column: 4 matched (id, grp) pairs, an
+    // existing id under another grp, a NULL grp and two new ids all insert
+    val live = CommitLog.read(spark, cow).orderBy("id").limit(5)
+      .select("id", "grp").as[(Long, Int)].collect()
+    val src = (live.take(4).map { case (id, g) => (id, Option(g), Option("upd"), -1.0, "e") } ++
+      Seq((live(4)._1, Option(live(4)._2 + 100), Option("other"), -2.0, "e"),
+        (live(4)._1, Option.empty[Int], Option("nullkey"), -3.0, "e"),
+        (500L, Option(9), Option("new"), -4.0, "e"), (501L, Option(9), None, -5.0, "e")))
+      .toSeq.toDF("id", "grp", "s", "v", "extra")
+    CommitLog.merge(spark, cow, src, Seq("id", "grp"))
+    CommitLog.mergeDv(spark, dv, src, Seq("id", "grp"))
+    val feed = sameAfter("merge")
+    assert(Seq("update_preimage", "update_postimage", "insert")
+      .map(c => feed.count(_.contains(c))) === Seq(4, 4, 4))
+    assert(CommitLog.read(spark, cow).filter(col("extra") === "e").count() === 8L)
+    Seq(cow, dv).foreach(t => assert(CommitLog.fsck(t).clean, CommitLog.fsck(t).toString))
+  }
+
   test("changesSince refuses ranges containing a delete or merge") {
     val t = freshTable()
     seedRanged(t)
