@@ -44,10 +44,11 @@ object BronzeWriter {
     * snapshot isolation, additive evolution, and time travel, i.e. the Delta
     * semantics of `save_to_raw_delta_dev.py:63-87` that plain-parquet writes
     * can't give. Returns the committed version; None on the empty-input
-    * guard (usgs-earthquake-data-ingest.py:175-177). */
+    * guard (usgs-earthquake-data-ingest.py:175-177), which the write
+    * itself decides: a frame with no rows writes no files and publishes no
+    * version, with no separate `isEmpty` pass over `df`. */
   def writeVersioned(df: DataFrame, path: String, mode: String): Option[Long] =
-    if (df.isEmpty) None
-    else Some(graft.tx.CommitLog.commit(df, path, mode, PartitionCols))
+    graft.tx.CommitLog.commitNonEmpty(df, path, mode, PartitionCols)
 
   /** Latest committed snapshot of a versioned bronze table. */
   def readSnapshot(spark: SparkSession, path: String): DataFrame =

@@ -400,8 +400,8 @@ object PqStore {
     val (codesV, books, cellsMeta) = loadMeta(spark, indexRoot)
     // lazy: only the UNGATED branch scans the full codes table — the gated
     // branch reads through readPruned instead, and constructing the full
-    // read costs one spark.read resolution per commit dir of driver work
-    // (measured ~10 ms/read, tools/ReadProbe) for a frame it never uses
+    // read costs driver work (a file index over every codes file) for a
+    // frame it never uses
     lazy val codes = CommitLog.readAt(spark, codesTable(indexRoot), codesV)
     // ONE queries scan per call (optimization round 17): the collected
     // rows feed the driver-side cell probe and the per-(query, cell) LUTs,

@@ -26,7 +26,8 @@ import graft.tx.CommitLog
   * correction, a partition-path column — returns None and the plan is
   * left untouched (the scan answers). The rewrite aggregates the
   * relation's PINNED snapshot version, so `versionAsOf` views answer for
-  * their own version.
+  * their own version; a file index over a SUBSET of its version's files
+  * (a change slice, a pruned read) is never answered from the manifest.
   *
   * Disable with `spark.graft.sql.metaAggregates=false`. */
 object MetaAggregateRewrite extends Rule[LogicalPlan] {
@@ -55,7 +56,7 @@ object MetaAggregateRewrite extends Rule[LogicalPlan] {
       target(p.child)
     case lr: LogicalRelation => lr.relation match {
       case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex => Some((g.tableRoot, Some(g.snapshotVersion)))
+        case g: GraftFileIndex => g.snapshotVersion.map(v => (g.tableRoot, Some(v)))
         case _ => None
       }
       case g: GraftDvRelation => Some((g.tableRoot, g.pinnedVersion))

@@ -317,26 +317,21 @@ final class GraftSourceProvider extends RelationProvider
           s"$table has no committed versions"))
     }
     val spark = sqlContext.sparkSession
-    // Deletion vectors are merge-on-read state a bare file scan cannot
-    // apply (the anti-join lives in CommitLog's read path) — serving the
-    // files raw would resurrect deleted rows. DV-carrying snapshots serve
-    // through a fallback relation that delegates to CommitLog's read
-    // plan: the INNER plan keeps its vectorized scans, death-scoped
-    // anti-join, and file pruning; only the row handoff at the relation
-    // boundary is generic. compact() folds the DVs and restores the
-    // direct HadoopFsRelation fast path.
-    if (m.dvDirs.nonEmpty || m.colMap.nonEmpty)
-      // pin the resolved version (review finding): an unpinned relation
-      // would re-resolve 'latest' per action — schema and data could
-      // straddle a concurrent commit, unlike the file-pinned fast path.
-      // COLUMN-MAPPED tables (post-RENAME, pre-OPTIMIZE) also serve here:
-      // the physical→logical aliasing lives in CommitLog's scan, which a
-      // raw HadoopFsRelation cannot express
-      return new GraftDvRelation(spark, sqlContext, table, Some(m.version))
-    val index = new GraftFileIndex(spark, table, m)
-    HadoopFsRelation(index, index.partitionSchema, index.dataSchema,
-      bucketSpec = None, new ParquetFileFormat, parameters)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    // the same one-relation scan CommitLog.read plans. Snapshots a bare
+    // file scan cannot express serve through a fallback relation that
+    // delegates to CommitLog's read plan: the INNER plan keeps its
+    // vectorized scans and file pruning; only the row handoff at the
+    // relation boundary is generic. That covers deletion vectors
+    // (merge-on-read state — serving the files raw would resurrect
+    // deleted rows; compact() folds them), column mapping (post-RENAME,
+    // pre-OPTIMIZE: the physical→logical aliasing lives in CommitLog's
+    // scan) and mixed hive layouts (one relation has one partition
+    // schema; CommitLog aligns each commit dir by name). The fallback
+    // pins the resolved version (review finding): an unpinned relation
+    // would re-resolve 'latest' per action — schema and data could
+    // straddle a concurrent commit, unlike the file-pinned fast path.
+    GraftFileIndex.relation(spark, table, m, parameters)
+      .getOrElse(new GraftDvRelation(spark, sqlContext, table, Some(m.version)))
   }
 }
 
@@ -612,7 +607,8 @@ private[graft] final class GraftCdfRelation(spark: SparkSession,
   * (never re-listed — [[refresh]] is a no-op because a commit-log snapshot
   * is immutable), stats-sidecar data skipping under pushed filters, and
   * hive partition-directory pruning. Driver work is O(files), the same
-  * bound as every other manifest consumer. */
+  * bound as every other manifest consumer. `m` may carry a file SUBSET of
+  * its version (a change slice, a pruned or mutation read). */
 final class GraftFileIndex(spark: SparkSession, table: String,
     m: CommitLog.Manifest) extends FileIndex {
 
@@ -622,19 +618,21 @@ final class GraftFileIndex(spark: SparkSession, table: String,
     * mutations at. */
   def tableRoot: String = table
 
-  /** The snapshot version this index serves, for the metadata-aggregate
-    * rewrite (a `versionAsOf` view must answer for ITS version). */
-  def snapshotVersion: Long = m.version
+  /** The published version this index serves IN FULL, for the
+    * metadata-aggregate rewrite (a `versionAsOf` view must answer for ITS
+    * version) and the DML rule. None when `m` is not that version's
+    * published manifest — a change slice or pruned read shares its
+    * version number but not its file list, and the sidecars would answer
+    * for the whole snapshot. */
+  lazy val snapshotVersion: Option[Long] =
+    Some(m.version).filter(v =>
+      scala.util.Try(CommitLog.manifest(table, v)).toOption.contains(m))
 
   /** Hive partition column names, from the first data file's path segments
-    * (`name=value`); every file of a table written with `partitionBy`
-    * shares the same segment sequence, and unpartitioned tables have
-    * none. */
+    * (`name=value`); [[GraftFileIndex.relation]] admits only snapshots
+    * whose files all share one segment sequence. */
   private val partitionCols: Seq[String] =
-    m.files.headOption.toSeq.flatMap(_.split("/").dropRight(1).toSeq
-      .filter(_.contains("="))
-      .map(_.takeWhile(_ != '=')))
-      .distinct
+    m.files.headOption.toSeq.flatMap(GraftFileIndex.layoutOf).distinct
 
   /** File-source schemas must be NULLABLE throughout, exactly as Spark's
     * own `spark.read.schema(...)` forces: a snapshot schema that recorded
@@ -667,10 +665,16 @@ final class GraftFileIndex(spark: SparkSession, table: String,
       partitionCols.contains(f.name)))).asInstanceOf[StructType]
 
   /** (relative path, partition values, status) per snapshot file — one
-    * driver-side stat each, computed once per relation. */
+    * driver-side stat each, computed once per relation. A missing file
+    * fails the read with `spark.read.parquet`'s `PATH_NOT_FOUND`: a
+    * zero-length stand-in would plan no split and drop its rows
+    * silently. */
   private val fileRows: Seq[(String, InternalRow, FileStatus)] = m.files.map { f =>
     val p = tableDir.resolve(f)
-    val len = try java.nio.file.Files.size(p) catch { case _: java.io.IOException => 0L }
+    val len = try java.nio.file.Files.size(p) catch {
+      case _: java.nio.file.NoSuchFileException =>
+        throw org.apache.spark.sql.graftbridge.ColumnBridge.pathNotFound(p.toString)
+    }
     val status = new FileStatus(len, false, 0, len, 0L,
       new Path(p.toAbsolutePath.toString))
     (f, partitionValuesOf(f), status)
@@ -743,4 +747,30 @@ final class GraftFileIndex(spark: SparkSession, table: String,
   override def refresh(): Unit = () // a snapshot is immutable
 
   override def sizeInBytes: Long = fileRows.map(_._3.getLen).sum
+}
+
+object GraftFileIndex {
+  /** Hive partition column names of one manifest file, from its path
+    * segments (`name=value`) below the commit dir. */
+  private def layoutOf(rel: String): Seq[String] =
+    rel.split("/").toSeq.dropRight(1).filter(_.contains("=")).map(_.takeWhile(_ != '='))
+
+  /** Snapshot `m` as ONE file relation over a [[GraftFileIndex]] — the scan
+    * both `format("graft")` and [[CommitLog.read]] plan. Its width is
+    * O(1) in commit dirs: Spark packs the small files of every commit into
+    * core-sized splits, and every pushed filter prunes through the stats
+    * sidecars. Columns come out as a hive file source's do: data columns
+    * in snapshot order, partition columns last. None when one file relation
+    * cannot express the snapshot: deletion vectors (merge-on-read),
+    * column mapping (physical→logical aliasing) and mixed hive layouts
+    * (one relation has one partition schema). */
+  def relation(spark: SparkSession, table: String, m: CommitLog.Manifest,
+      options: Map[String, String] = Map.empty): Option[HadoopFsRelation] = {
+    if (m.dvDirs.nonEmpty || m.colMap.nonEmpty ||
+        m.files.iterator.map(layoutOf).distinct.drop(1).hasNext) return None
+    val index = new GraftFileIndex(spark, table, m)
+    Some(HadoopFsRelation(index, index.partitionSchema, index.dataSchema,
+      bucketSpec = None, new ParquetFileFormat, options)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+  }
 }

@@ -104,7 +104,7 @@ private[graft] object GraftDml {
     case v: View => rootOf(v.child)
     case lr: LogicalRelation => lr.relation match {
       case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex => Some(g.tableRoot)
+        case g: GraftFileIndex if g.snapshotVersion.isDefined => Some(g.tableRoot)
         case _ => None
       }
       case g: GraftDvRelation => Some(g.tableRoot)

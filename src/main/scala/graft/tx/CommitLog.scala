@@ -147,10 +147,13 @@ object CommitLog {
   val DefaultVacuumRetentionMillis: Long = 168L * 60 * 60 * 1000
 
   /** Append versions accumulated since the last rewrite before [[commit]]
-    * triggers a best-effort auto-[[compact]] — the policy (round-3 VERDICT
-    * item 4) that bounds snapshot-read plan width: a snapshot unions one
-    * scan per surviving commit dir, so an uncompacted 10k-append table
-    * would otherwise pay a 10k-relation plan. */
+    * triggers a best-effort auto-[[compact]] (round-3 VERDICT item 4). A
+    * DV-free, single-layout snapshot reads as one file relation whatever
+    * its commit count; the policy bounds the plan width of the fallback
+    * reads ([[scanFiles]]: DV tables, the mutation probes, column mapping,
+    * mixed layouts), which union one scan per surviving commit dir — an
+    * uncompacted 10k-append table would pay a 10k-relation plan there —
+    * and the per-commit-dir sidecar and listing work of every read. */
   val AutoCompactEvery: Int = 64
 
   /** Version cadence of full-snapshot checkpoint manifests: at most this
@@ -208,7 +211,25 @@ object CommitLog {
         * SILENT DATA LOSS — the later overwrite drops the other's fold —
         * so the loser must fail loudly and re-read, not win the slot
         * race (round-14 ADVICE on [[graft.ext.DecontaminationStore]]). */
-      expectPriorVersion: Option[Long] = None): Long = {
+      expectPriorVersion: Option[Long] = None): Long =
+    commitWrite(df, table, mode, partitionBy, maxRetries, txn, mirror,
+      autoCompactEvery, cdc, expectPriorVersion, publishEmpty = true).get
+
+  /** [[commit]] with its defaults, except that a write of no rows
+    * publishes no version and returns None. The write itself decides
+    * emptiness ([[writeDataDir]] keeps no files for an empty frame), so
+    * the caller runs no separate probe of `df` — an `isEmpty` re-runs the
+    * frame's plan, shuffles included. */
+  def commitNonEmpty(df: DataFrame, table: String, mode: String,
+      partitionBy: Seq[String] = Nil): Option[Long] =
+    commitWrite(df, table, mode, partitionBy, maxRetries = 64, txn = None,
+      mirror = false, AutoCompactEvery, cdc = false, expectPriorVersion = None,
+      publishEmpty = false)
+
+  private def commitWrite(df: DataFrame, table: String, mode: String,
+      partitionBy: Seq[String], maxRetries: Int, txn: Option[(String, Long)],
+      mirror: Boolean, autoCompactEvery: Int, cdc: Boolean,
+      expectPriorVersion: Option[Long], publishEmpty: Boolean): Option[Long] = {
     if (mode != "append" && mode != "overwrite")
       throw new IllegalArgumentException(s"Invalid mode: $mode. Use 'append' or 'overwrite'.")
     require(!cdc || mode == "overwrite",
@@ -227,7 +248,7 @@ object CommitLog {
       latestManifest(table).foreach { m =>
         if (m.txns.get(app).exists(_ >= batch)) {
           if (mirror) repairMirror(tableDir, m)
-          return m.version
+          return Some(m.version)
         }
       }
     }
@@ -239,8 +260,9 @@ object CommitLog {
     // wrong-partitioning bug class); an overwrite's explicit layout wins
     // and re-declares. Inheritance is schema-gated: a df lacking a
     // declared column (additive evolution, schema-changing overwrite)
-    // writes unpartitioned rather than failing — per-commit-dir partition
-    // discovery reads mixed layouts fine.
+    // writes unpartitioned rather than failing — a mixed-layout snapshot
+    // reads through the per-commit-dir scan, which aligns each commit dir
+    // to the schema by name.
     def sameCols(a: Seq[String], b: Seq[String]): Boolean =
       a.length == b.length && a.zip(b).forall { case (x, y) => x.equalsIgnoreCase(y) }
     val prev0 = latestManifest(table)
@@ -274,6 +296,7 @@ object CommitLog {
     // caught by the re-validation inside the retry loop below
     var enforcedCs = Constraints.list(table)
     val newFiles = writeDataDir(df, tableDir, layout, colMap0)
+    if (newFiles.isEmpty && !publishEmpty) return None
 
     val logDir = tableDir.resolve(LogDir)
     Files.createDirectories(logDir)
@@ -283,7 +306,7 @@ object CommitLog {
       txn.foreach { case (app, batch) =>
         if (prev.exists(_.txns.get(app).exists(_ >= batch))) {
           if (mirror) repairMirror(tableDir, prev.get)
-          return prev.get.version // a concurrent duplicate of this txn won
+          return prev.map(_.version) // a concurrent duplicate of this txn won
         }
       }
       // compare-and-set: a table that advanced past the expected
@@ -441,7 +464,7 @@ object CommitLog {
             keepLargest = math.max(1, autoCompactEvery / 2))
           catch { case scala.util.control.NonFatal(_) => () }
         }
-        return version
+        return Some(version)
       } catch {
         case _: FileAlreadyExistsException =>
           Files.delete(tmp) // lost the race; re-merge against the winner
@@ -4079,9 +4102,11 @@ object CommitLog {
   private def buildManifestRead(spark: SparkSession, table: String, m: Manifest): DataFrame = {
     if (m.files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    import org.apache.spark.sql.functions.col
     if (m.dvDirs.isEmpty)
-      return scanFiles(spark, table, m, m.files, withIdentity = false).get
+      return graft.sources.GraftFileIndex.relation(spark, table, m)
+        .map(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .baseRelationToDataFrame(_))
+        .getOrElse(scanFiles(spark, table, m, m.files, withIdentity = false).get)
     // Merge-on-read, DEATH-SCOPED (round-8): only files that actually
     // carry deaths pay the anti-join; the clean majority — at 100 TB
     // under a trickle workload, almost every file — scans pure, inside
@@ -4089,30 +4114,28 @@ object CommitLog {
     // one driver-side distinct over the (bounded) DV rows.
     val dv = loadDvs(spark, table, m)
     val (deadFiles, cleanFiles) = m.files.partition(f => dv.deadNames(fileNameOf(f)))
-    // explicit schema order on BOTH branches before the positional union:
-    // a hive-partitioned scan surfaces its partition columns LAST
-    // (dataSchema ++ partitionSchema) regardless of the declared schema's
-    // order, so the clean side must be re-selected exactly like the
-    // DV-filtered side or a partitioned DV read writes columns into each
-    // other's slots (found live in round 9 by OPTIMIZE WHERE on a
-    // partitioned DV table; readManifestWithPos already did this)
-    val ordered = m.schema.fieldNames.toSeq.map(col)
+    // both branches come out in schema order: scanFiles aligns every
+    // commit dir by name, and the anti-join's hoisted identity columns drop
     val clean = scanFiles(spark, table, m, cleanFiles, withIdentity = false)
-      .map(_.select(ordered: _*))
     val dead = scanFiles(spark, table, m, deadFiles, withIdentity = true)
-      .map(df => applyDvs(dv, df).select(ordered: _*))
+      .map(applyDvs(dv, _))
     (clean.toSeq ++ dead.toSeq).reduce(_ union _)
   }
 
-  /** One scan per commit dir over `files`, unioned — the snapshot-read
-    * core. Explicit snapshot schema (not mergeSchema): files predating an
-    * added column read NULL for it. Hive partition dirs sit BELOW each
-    * commit's data/<uuid> root, so partition discovery runs per commit dir
-    * (its own basePath). Plan width is bounded by policy, not hope:
-    * commit() auto-compacts once a snapshot spans AutoCompactEvery commit
-    * dirs. `withIdentity` projects the (file name, `_metadata.row_index`)
-    * DV identity below the union (`_metadata` resolves only directly above
-    * a file relation). */
+  /** One scan per commit dir over `files`, unioned — the snapshot read for
+    * what one file relation ([[graft.sources.GraftFileIndex.relation]])
+    * cannot express: deletion vectors, the `withIdentity`/`input_file_name`
+    * probes, column mapping and mixed hive layouts. Explicit snapshot
+    * schema (not mergeSchema): files predating an added column read NULL
+    * for it. Hive partition dirs sit BELOW each commit's data/<uuid> root,
+    * so partition discovery runs per commit dir (its own basePath), and
+    * every dir projects to the snapshot's column order BY NAME before the
+    * positional union — a hive dir surfaces its partition columns last, an
+    * unpartitioned one in schema order. This plan's width grows with the
+    * commit dirs; commit() bounds it by auto-compacting once a snapshot
+    * spans AutoCompactEvery of them. `withIdentity` projects the (file
+    * name, `_metadata.row_index`) DV identity below the union
+    * (`_metadata` resolves only directly above a file relation). */
   private def scanFiles(spark: SparkSession, table: String, m: Manifest,
       files: Seq[String], withIdentity: Boolean,
       perDir: DataFrame => DataFrame = identity): Option[DataFrame] = {
@@ -4134,12 +4157,9 @@ object CommitLog {
           if (!withIdentity) s0
           else s0.withColumn("__dv_file", fileNameCol)
             .withColumn("__dv_row", col("_metadata.row_index"))
-        val s =
-          if (m.colMap.isEmpty) s1
-          else s1.select(m.schema.fields.toIndexedSeq.map(f =>
-            col(m.colMap.getOrElse(f.name, f.name)).as(f.name)) ++
-            (if (withIdentity) Seq(col("__dv_file"), col("__dv_row")) else Nil): _*)
-        perDir(s)
+        perDir(s1.select(m.schema.fields.toIndexedSeq.map(f =>
+          col(m.colMap.getOrElse(f.name, f.name)).as(f.name)) ++
+          (if (withIdentity) Seq(col("__dv_file"), col("__dv_row")) else Nil): _*))
       }
       .reduce(_ union _))
   }

@@ -82,6 +82,11 @@ object ColumnBridge {
       case _ => None
     }
 
+  /** The `PATH_NOT_FOUND` error `spark.read.parquet` raises for a missing
+    * input path (`QueryCompilationErrors` is `private[sql]`). */
+  def pathNotFound(path: String): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.dataPathNotExistError(path)
+
   /** Catalyst predicate → data-source [[org.apache.spark.sql.sources.Filter]],
     * when expressible — the same translation Spark runs before handing
     * pushed filters to a DSv2 source (`DataSourceStrategy.translateFilter`

@@ -35,6 +35,25 @@ class MedallionSpec extends SparkSpec {
     intercept[IllegalArgumentException](BronzeWriter.write(events, dir, "upsert"))
     BronzeWriter.write(events.limit(0), dir, "append")
     assert(!new java.io.File(dir).exists() || new java.io.File(dir).list().isEmpty)
+    // the transactional writer: an empty (clustered) frame publishes no
+    // version and leaves no data dir, on a fresh table and on a live one
+    val tx = s"$dir/tx"
+    def dataDirs: Seq[String] =
+      Option(new java.io.File(s"$tx/data").list()).map(_.toSeq.sorted).getOrElse(Nil)
+    val empty = graft.cluster.ClusterWrite.cluster(events.limit(0), Seq(col("tsunami")))
+    assert(BronzeWriter.writeVersioned(empty, tx, "append") === None)
+    assert(graft.tx.CommitLog.latestVersion(tx) === None)
+    assert(dataDirs.isEmpty)
+    assert(BronzeWriter.writeVersioned(events, tx, "append") === Some(1L))
+    val kept = dataDirs
+    assert(kept.size === 1)
+    Seq("append", "overwrite").foreach { mode =>
+      assert(BronzeWriter.writeVersioned(empty, tx, mode) === None, mode)
+      assert(BronzeWriter.writeVersioned(events.filter(col("id").isNull), tx, mode) === None, mode)
+    }
+    assert(graft.tx.CommitLog.versions(tx) === Seq(1L))
+    assert(dataDirs === kept)
+    assert(BronzeWriter.readSnapshot(spark, tx).count() === 2)
   }
 
   test("silver: golden fact values from the fixture") {

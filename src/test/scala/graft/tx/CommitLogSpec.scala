@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Transactional semantics of the mini commit log: snapshot isolation,
@@ -507,6 +508,56 @@ class CommitLogSpec extends SparkSpec {
     assert(drain() === Seq(1L, 2L, 3L))
     // the restart consumed v3, so a second pass reclaims it too
     assert(CommitLog.pruneMirrorConsumed(t, ck) === 1L)
+  }
+
+  test("a DV-free single-layout snapshot reads as one file relation, partition columns last") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val t = freshTable()
+    (0 until 3).foreach { i =>
+      CommitLog.commit(Seq((i.toLong, 2020 + i % 2, s"r$i")).toDF("id", "year", "s"),
+        t, "append", partitionBy = Seq("year"))
+    }
+    def relations(df: org.apache.spark.sql.DataFrame) = {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case u: Union => u }.isEmpty, plan.treeString)
+      plan.collect { case lr: LogicalRelation => lr.relation }
+    }
+    val rows = Seq(Row(0L, "r0", 2020), Row(1L, "r1", 2021), Row(2L, "r2", 2020))
+    Seq(CommitLog.read(spark, t), CommitLog.readAt(spark, t, 3L),
+        spark.read.format("graft").load(t)).foreach { df =>
+      val rels = relations(df)
+      assert(rels.size === 1)
+      assert(rels.head.asInstanceOf[HadoopFsRelation].location
+        .isInstanceOf[graft.sources.GraftFileIndex])
+      assert(df.columns.toSeq === Seq("id", "s", "year"))
+      assert(df.orderBy("id").collect().toSeq === rows)
+    }
+    val slice = CommitLog.changesSince(spark, t, fromVersion = 1L)
+    assert(relations(slice).size === 1)
+    assert(slice.orderBy("id").collect().toSeq === rows.drop(1))
+  }
+
+  test("mixed hive layouts read by name on both read paths") {
+    // A: an unpartitioned commit, then an append that adopts a layout
+    val a = freshTable()
+    CommitLog.commit(Seq((2020, 1L, "a")).toDF("year", "id", "s"), a, "append")
+    CommitLog.commit(Seq((2021, 2L, "b")).toDF("year", "id", "s"), a, "append",
+      partitionBy = Seq("year"))
+    // B: a declared layout, then an append without the partition column
+    val b = freshTable()
+    CommitLog.commit(Seq((2020, 1L, "a")).toDF("year", "id", "s"), b, "append",
+      partitionBy = Seq("year"))
+    CommitLog.commit(Seq((2L, "b")).toDF("id", "s"), b, "append")
+    assert(CommitLog.manifest(b, 2L).partitionBy === Seq("year"))
+    Seq(a -> Seq(Row(2020, 1L, "a"), Row(2021, 2L, "b")),
+        b -> Seq(Row(2020, 1L, "a"), Row(null, 2L, "b"))).foreach { case (t, want) =>
+      Seq(CommitLog.read(spark, t), spark.read.format("graft").load(t)).foreach { df =>
+        assert(df.columns.toSeq === Seq("year", "id", "s"))
+        assert(df.orderBy("id").collect().toSeq === want)
+        assert(df.filter(col("id") === 2L).collect().toSeq === want.drop(1))
+      }
+    }
   }
 
   test("changesSince feeds exact incremental silver maintenance") {

@@ -35,7 +35,17 @@ class FsckSpec extends SparkSpec {
     val report = CommitLog.fsck(t)
     assert(report.missingFiles.nonEmpty)
     assert(report.missingFiles.forall(_._2 == victim))
-    intercept[Exception] { CommitLog.read(spark, t).count() }
+    // every read path fails and names the file, filtered or not; none may
+    // drop the missing file's rows silently
+    val victimName = victim.substring(victim.lastIndexOf('/') + 1)
+    Seq[() => org.apache.spark.sql.DataFrame](
+      () => CommitLog.read(spark, t),
+      () => spark.read.format("graft").load(t),
+      () => spark.read.format("graft").load(t).filter(col("id") > 0L)
+    ).foreach { r =>
+      val e = intercept[Exception] { r().count() }
+      assert(e.getMessage.contains(victimName), e.getMessage)
+    }
     val v = CommitLog.repairMissing(t)
     assert(v === 3L)
     assert(CommitLog.fsck(t).missingFiles.forall(_._1 < v)) // history stays broken
