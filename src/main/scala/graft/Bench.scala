@@ -234,8 +234,7 @@ object Bench {
     graft.ext.Dedup.releaseCaches()
     graft.ext.IvfIndex.releaseCaches()
     graft.ext.PqIndex.releaseCaches()
-    graft.queries.DedupQueries.releaseCaches()
-    graft.queries.TextQueries.releaseCaches()
+    graft.queries.QueryMemo.release()
     // Cross-round comparability (round-5 VERDICT item 8): record this run
     // in the per-sf history and report per-query medians over every
     // recorded run — the drift-resistant number a judge should read.

@@ -46,8 +46,7 @@ object Verify {
     graft.ext.Dedup.releaseCaches()
     graft.ext.IvfIndex.releaseCaches()
     graft.ext.PqIndex.releaseCaches()
-    graft.queries.DedupQueries.releaseCaches()
-    graft.queries.TextQueries.releaseCaches()
+    graft.queries.QueryMemo.release()
     spark.stop()
   }
 }

@@ -18,22 +18,14 @@ object DedupQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Materialized-frame memo (see [[QueryMemo]]): MinHash-LSH candidates,
-    * Jaccard-verified pairs, and the segment-dedup table are each consumed
-    * by several queries — persist once per (session, sf dir), release via
-    * [[releaseCaches]] (Bench's explicit unpin step). */
-  private val memoized = new QueryMemo
-
-  /** Unpersist every frame this object cached; already-returned frames
-    * recompute from lineage if re-read. */
-  def releaseCaches(): Unit = memoized.release()
-
+  /** MinHash-LSH candidate pairs, persisted once: the input of the Jaccard
+    * verification below and of `dedup_minhash_lsh`. */
   private def cachedCandidates(s: SparkSession, d: String): DataFrame =
-    memoized("candidates", s, d) {
+    QueryMemo("candidates", s, d) {
       Dedup.minhashCandidates(documents(s, d), col("text"), col("doc_id"))
     }
 
-  /** Jaccard-verified candidate pairs, persisted once per session: the
+  /** Jaccard-verified candidate pairs, persisted once: the
     * (a, b, jaccard) survivors feed BOTH `dedup_ngram_jaccard` and
     * `dedup_fuzzy_keep`'s clustering stage, and the verification gate
     * (shingle explode + pair-driven intersection) is the single most
@@ -41,7 +33,7 @@ object DedupQueries {
     * round-12 perf flag on `dedup_fuzzy_keep` (VERDICT item 4; same reuse
     * pattern as [[cachedCandidates]]/[[cachedSegmentDedup]]). */
   private def cachedVerified(s: SparkSession, d: String): DataFrame =
-    memoized("verified", s, d) {
+    QueryMemo("verified", s, d) {
       Dedup.ngramJaccardPairs(documents(s, d), col("text"), col("doc_id"),
         candidates = Some(cachedCandidates(s, d)))
     }
@@ -52,24 +44,20 @@ object DedupQueries {
     * consumer reads the reassembled documents instead of recomputing every
     * segment fingerprint. */
   private[queries] def cachedSegmentDedup(s: SparkSession, d: String): DataFrame =
-    memoized("segments", s, d) {
+    QueryMemo("segments", s, d) {
       Dedup.dropDuplicateSegments(
         documents(s, d).select("doc_id", "text"),
         graft.ext.TextStats.chunkWindows(col("text"), window = 8, stride = 8),
         col("doc_id"), minDocs = 2)
     }
 
-  /** sf dir → index root of the persisted dedup band table, built once
-    * per session over a commit-log base: commit 90% of documents → build
-    * → append the held-out tenth → change-feed refresh (the same
-    * 90/10/refresh harness the persisted ANN indexes use). Pid-unique
-    * paths; cleaned on JVM exit. */
-  private val builtDedupStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Index root of the persisted dedup band table over a commit-log base:
+    * commit 90% of documents → build → append the held-out tenth →
+    * change-feed refresh (the same 90/10/refresh harness the persisted ANN
+    * indexes use). */
   private def ensureDedupStore(s: SparkSession, d: String): String =
-    builtDedupStore.computeIfAbsent(d, _ => {
-      val (base, index) = Tables.storeRoots(d, "dedupstore")
+    QueryMemo.scratch("dedupstore", s, d) { root =>
+      val (base, index) = (s"$root/base", s"$root/index")
       val docs = documents(s, d).select("doc_id", "text")
       graft.tx.CommitLog.commit(
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 7), base, "append")
@@ -78,7 +66,7 @@ object DedupQueries {
         docs.filter(pmod(col("doc_id"), lit(10)) === 7), base, "append")
       graft.ext.DedupStore.refresh(s, base, index)
       index
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // INCREMENTAL dedup through the persisted band table
@@ -175,12 +163,12 @@ object DedupQueries {
     "corpus_source_overlap" -> ((s, d) => {
       val docs = documents(s, d)
       Dedup.sourceOverlap(docs, col("text"), col("source"),
-          sigTable = Some(memoized("srcsig", s, d) {
+          sigTable = Some(QueryMemo("srcsig", s, d) {
             Dedup.sourceSignatures(docs, col("text"), col("source")) }),
           // memo at the GROUPED level (round 17): both exact-side
           // consumers (pair expansion, per-source sizes) read this frame,
           // so one persisted build serves both with no re-aggregation
-          groupsTable = Some(memoized("source_fp_groups", s, d) {
+          groupsTable = Some(QueryMemo("source_fp_groups", s, d) {
             Dedup.sourceFingerprintGroups(docs, col("text"), col("source")) }))
         .orderBy("src_a", "src_b")
     }),

@@ -17,22 +17,14 @@ object EventQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** (csvPath, jsonPath) of the K1/K2 sink outputs for `d` — written once
-    * per JVM (pid-unique dir, reaped at exit; fixed timestamp so the
-    * stamped names are deterministic) through the REAL FileSinks surface,
-    * then read back by the roundtrip queries. The projection includes a
-    * string with an embedded comma + quote (no trailing space — the CSV writer's
-    * default ignoreTrailingWhiteSpace would trim it), so the quoting
-    * path is genuinely exercised. */
-  private val builtSinks =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** (csvPath, jsonPath) of the K1/K2 sink outputs for `d` — written
+    * through the REAL FileSinks surface (fixed timestamp so the stamped
+    * names are deterministic), then read back by the roundtrip queries.
+    * The projection includes a string with an embedded comma + quote (no
+    * trailing space — the CSV writer's default ignoreTrailingWhiteSpace
+    * would trim it), so the quoting path is genuinely exercised. */
   private def sinkPaths(s: SparkSession, d: String): (String, String) =
-    builtSinks.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_sinks_${tag}_$pid"
-      Tables.deleteRecursively(new java.io.File(dir))
-      sys.addShutdownHook(Tables.deleteRecursively(new java.io.File(dir)))
+    QueryMemo.scratch("sinks", s, d) { dir =>
       val out = events(s, d).filter(pmod(col("event_id"), lit(7)) === 0)
         .select(col("event_id"), col("event_type"),
           concat(col("event_type"), lit(",\"q\"")).as("qtext"),
@@ -40,7 +32,7 @@ object EventQueries {
       val now = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
       (graft.sinks.FileSinks.saveCsv(out, dir, "k1", now).get,
         graft.sinks.FileSinks.saveJson(out, dir, "k2", now).get)
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // P1/P2 + F1-F3: flatten projection with renames + JSON field extraction

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,31 +27,20 @@ object StreamQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** sfDir → path of the streamed-silver parquet; the chain runs once per
-    * session. The work root carries a per-JVM pid discriminator so a bench
-    * and a verify JVM running concurrently never race each other's files. */
-  private val built = new ConcurrentHashMap[String, String]()
-
-  /** Resolved-read memo over the memoized chains' sink outputs (guide §5
-    * driver, same rationale as [[Tables.table]]'s catalog memo): each sink
-    * dir is written exactly once per session by its run* builder and read
-    * on every rep — a schema-less `spark.read.parquet` re-runs parquet
-    * schema inference (a footer-reading job) per rep for a path whose
-    * contents can no longer change. Holds only the lazy resolved frame;
-    * every action still recomputes from the sink files. */
-  private val sinkReads = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  /** Resolved read of a memoized chain's sink output (guide §5 driver,
+    * same rationale as [[Tables.table]]'s catalog read): each sink dir is
+    * written exactly once by its run* builder and read on every rep — a
+    * schema-less `spark.read.parquet` re-runs parquet schema inference (a
+    * footer-reading job) per rep for a path whose contents can no longer
+    * change. Holds only the lazy resolved frame; every action still
+    * recomputes from the sink files. */
   private def sinkRead(s: SparkSession, path: String): DataFrame =
-    sinkReads.computeIfAbsent((s, path), _ => s.read.parquet(path))
+    QueryMemo.value("sink_read", s, path)(s.read.parquet(path))
 
+  /** Path of the streamed-silver parquet. */
   private def runChain(s: SparkSession, d: String): String =
-    built.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_medallion_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      // pid-unique paths don't overwrite-clean across runs; reap on exit
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("medallion", s, d) { root =>
+      val tag = java.lang.Integer.toHexString(root.hashCode)
 
       // landing: the events table as many small files (≈ API pages), so the
       // 8-files-per-trigger source genuinely runs multiple micro-batches
@@ -74,7 +61,7 @@ object StreamQueries {
 
       // stage 2: an independent streaming job subscribes to the committed
       // insertions feed and maintains the silver aggregate
-      val silverName = s"med_silver_${tag}_$pid"
+      val silverName = s"med_silver_$tag"
       val out = CommitLog.readStream(s, table)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_stream"), dsum(col("value")).as("sum_stream"))
@@ -87,7 +74,7 @@ object StreamQueries {
       val silverPath = s"$root/silver"
       s.table(silverName).write.mode("overwrite").parquet(silverPath)
       silverPath
-    })
+    }
 
   /** Drain an AvailableNow query and FAIL LOUDLY if it didn't finish or
     * died (round-5 ADVICE, low): a swallowed timeout/failure here would
@@ -101,38 +88,22 @@ object StreamQueries {
     require(finished, s"streaming query ${q.name} did not finish within ${timeoutMs} ms")
   }
 
-  /** sfDir → path of the streamed-dedup output parquet. The landing is the
-    * events table written TWICE (every row a planted duplicate), streamed in
-    * several micro-batches; `dropDuplicates(event_id)` must emit each key
-    * exactly once no matter how the duplicates split across batches. Exact
-    * keyed state is the deterministic choice for the oracle gate; the
-    * bounded-state production variant (`dropDuplicatesWithinWatermark`) is
-    * spec'd in StreamingJobsSpec — its output depends on batch arrival
-    * order for late keys, which an engine-diff gate can't pin. */
-  private val builtDedup = new ConcurrentHashMap[String, String]()
-
-  /** sfDir → path of the STREAMED store-flagged test-doc ids. The eval
+  /** Path of the STREAMED store-flagged test-doc ids. The eval
     * docs land as several files and stream through in micro-batches; each
     * batch shingles its rows and filters through the persisted sketch's
     * memoized probe column ([[graft.ext.DecontaminationStore.flaggedDocs]]
     * works unchanged on a streaming frame: the probe is a stateless
     * codegen'd predicate, the trailing distinct a stateful streaming
     * dedup that emits each flagged id exactly once in append mode). */
-  private val builtDecon = new ConcurrentHashMap[String, String]()
-
   private def runDecon(s: SparkSession, d: String): String =
-    builtDecon.computeIfAbsent(d, _ => {
+    QueryMemo.scratch("sdecon", s, d) { root =>
       val index = TextQueries.ensureDeconStore(s, d)
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sdecon_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+      val tag = java.lang.Integer.toHexString(root.hashCode)
       val test = documents(s, d).filter(isTestSplit(col("doc_id")))
         .select("doc_id", "text")
       val landing = s"$root/landing"
       test.repartition(8).write.parquet(landing)
-      val outName = s"sdecon_${tag}_$pid"
+      val outName = s"sdecon_$tag"
       val q = graft.ext.DecontaminationStore.flaggedDocs(s, index,
         s.readStream.schema(test.schema)
           .option("maxFilesPerTrigger", "2").parquet(landing))
@@ -144,20 +115,24 @@ object StreamQueries {
       val outPath = s"$root/out"
       s.table(outName).write.mode("overwrite").parquet(outPath)
       outPath
-    })
+    }
 
+  /** Path of the streamed-dedup output parquet. The landing is the
+    * events table written TWICE (every row a planted duplicate), streamed in
+    * several micro-batches; `dropDuplicates(event_id)` must emit each key
+    * exactly once no matter how the duplicates split across batches. Exact
+    * keyed state is the deterministic choice for the oracle gate; the
+    * bounded-state production variant (`dropDuplicatesWithinWatermark`) is
+    * spec'd in StreamingJobsSpec — its output depends on batch arrival
+    * order for late keys, which an engine-diff gate can't pin. */
   private def runDedup(s: SparkSession, d: String): String =
-    builtDedup.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sdedup_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("sdedup", s, d) { root =>
+      val tag = java.lang.Integer.toHexString(root.hashCode)
       val ev = events(s, d).select("event_id", "event_type", "value")
       val landing = s"$root/landing"
       ev.repartition(8).write.parquet(s"$landing/a")
       ev.repartition(8).write.parquet(s"$landing/b")
-      val outName = s"sdedup_${tag}_$pid"
+      val outName = s"sdedup_$tag"
       val q = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "4")
         .parquet(s"$landing/*")
@@ -172,9 +147,9 @@ object StreamQueries {
       val outPath = s"$root/out"
       s.table(outName).write.mode("overwrite").parquet(outPath)
       outPath
-    })
+    }
 
-  /** sfDir → path of the streamed interval-join pairs. TWO live file
+  /** Path of the streamed interval-join pairs. TWO live file
     * streams — purchases and the clicks that preceded them within one
     * day — joined stream-stream on user with an event-time range
     * condition ([[StreamingJobs.intervalJoin]]): both sides watermarked,
@@ -183,15 +158,8 @@ object StreamQueries {
     * matches arrive (the watermark only GCs state), so an AvailableNow
     * drain yields exactly the batch join's pairs — which is what the
     * oracle pins. */
-  private val builtIJoin = new ConcurrentHashMap[String, String]()
-
   private def runIntervalJoin(s: SparkSession, d: String): String =
-    builtIJoin.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sijoin_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("sijoin", s, d) { root =>
       val ev = events(s, d)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ets").as("p_ts"),
@@ -214,7 +182,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow()).start()
       drain(q)
       outPath
-    })
+    }
 
   /** sfDir → parquet path of the unified-CDC rollup. The table lives one
     * full lifecycle — two mirrored appends, a mutation delete, a JOURNALED
@@ -224,15 +192,9 @@ object StreamQueries {
     * `_cdc` feed's typed rows. Counts per (version, change_type) are
     * arrival-order-invariant, which is what an engine-diff gate can pin
     * (cross-source ordering is explicitly not guaranteed). */
-  private val builtUnified = new ConcurrentHashMap[String, String]()
-
   private def runUnified(s: SparkSession, d: String): String =
-    builtUnified.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_scdcu_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("scdcu", s, d) { root =>
+      val tag = java.lang.Integer.toHexString(root.hashCode)
       val ev = events(s, d).select("event_id", "event_type", "value")
       val table = s"$root/bronze"
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -242,7 +204,7 @@ object StreamQueries {
       CommitLog.delete(s, table, col("event_type") === "error")          // v3
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(3)) === 0),
         table, "overwrite", cdc = true)                                  // v4
-      val outName = s"scdcu_${tag}_$pid"
+      val outName = s"scdcu_$tag"
       val q = CommitLog.changeStreamUnified(s, table)
         .groupBy(coalesce(col(CommitLog.CommitVersionCol), lit(0L)).as("v"),
           col(CommitLog.ChangeTypeCol).as("ct"))
@@ -255,7 +217,7 @@ object StreamQueries {
       val outPath = s"$root/out"
       s.table(outName).write.mode("overwrite").parquet(outPath)
       outPath
-    })
+    }
 
   /** Version-tailing CDF stream (`spark.readStream.format("graft")`,
     * round 8): a commit-log lifecycle — two appends, a DV delete, a DV
@@ -264,15 +226,9 @@ object StreamQueries {
     * rows arrive exactly once with a REAL `_commit_version` on every row
     * (appends included), so the gate pins (version, change_type) counts
     * for the entire history. */
-  private val builtTail = new ConcurrentHashMap[String, String]()
-
   private def runTail(s: SparkSession, d: String): String =
-    builtTail.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stail_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("stail", s, d) { root =>
+      val tag = java.lang.Integer.toHexString(root.hashCode)
       val ev = events(s, d).select("event_id", "event_type", "value")
       val table = s"$root/bronze"
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -284,7 +240,7 @@ object StreamQueries {
         ev.filter(pmod(col("event_id"), lit(7)) === 1)
           .withColumn("value", col("value") + lit(100.0)),
         Seq("event_id"))
-      val outName = s"stail_${tag}_$pid"
+      val outName = s"stail_$tag"
       val q = s.readStream.format("graft")
         .option("startingVersion", "earliest").load(table)
         .groupBy(col(CommitLog.CommitVersionCol).as("v"),
@@ -298,7 +254,7 @@ object StreamQueries {
       val outPath = s"$root/out"
       s.table(outName).write.mode("overwrite").parquet(outPath)
       outPath
-    })
+    }
 
   /** Full graft→graft streaming round-trip (round 8): the version-tailing
     * SOURCE feeds a stateful latest-per-key aggregation whose Update-mode
@@ -306,15 +262,8 @@ object StreamQueries {
     * out, both ends commit-log native. The source history carries appends
     * AND a DV merge, so insert and update_postimage rows must both fold
     * into the per-key latest before the sink applies them. */
-  private val builtRoundtrip = new ConcurrentHashMap[String, String]()
-
   private def runRoundtrip(s: SparkSession, d: String): String =
-    builtRoundtrip.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_srt_${tag}_$pid"
-      deleteRecursively(new java.io.File(root))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(root)))
+    QueryMemo.scratch("srt", s, d) { root =>
       val ev = events(s, d).select("event_id", "event_type", "value")
       val src = s"$root/src"
       val dst = s"$root/dst"
@@ -341,7 +290,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow()).start(dst)
       drain(q)
       dst
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // Graft→graft streaming round-trip: the replicated table's final state

@@ -8,23 +8,19 @@ import org.apache.spark.sql.types.DecimalType
   * oracle-determinism helpers. */
 object Tables {
 
-  /** Catalog-style base-table resolution memo (optimization round 17,
-    * guide §5 driver / §6 listing): a schema-less `spark.read.parquet`
-    * runs parquet schema INFERENCE on every call — a footer-reading Spark
-    * job plus a fresh source resolution, measured at 70-160 ms per call
+  /** Catalog-style base-table resolution (optimization round 17, guide §5
+    * driver / §6 listing): a schema-less `spark.read.parquet` runs parquet
+    * schema INFERENCE on every call — a footer-reading Spark job plus a
+    * fresh source resolution, measured at 70-160 ms per call
     * (tools/OverheadProbe) vs ~0 for reusing the resolved plan — and the
     * bench pays it once per table per rep across all 160 queries. A real
     * engine resolves `FROM events` through its catalog ONCE (schema +
-    * location are table metadata, not per-query work); this memo is that
-    * catalog. It holds only the LAZY resolved DataFrame — no rows, no
+    * location are table metadata, not per-query work); the memoized read is
+    * that catalog. It holds only the LAZY resolved DataFrame — no rows, no
     * results; every action on it still recomputes from the parquet files.
-    * The driver testdata dirs are immutable for a process lifetime, and
-    * the map is bounded by (session, dir, table-name) arity. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
+    * The driver testdata dirs are immutable for a process lifetime. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.computeIfAbsent((spark, dir, name), { _ =>
+    QueryMemo.value(s"table_$name", spark, dir) {
       if (name == "events") {
         // historical events.parquet generations carried INT64 TIMESTAMP(NANOS),
         // which Spark refuses to read natively; the conf lets those files read
@@ -32,7 +28,7 @@ object Tables {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       }
       spark.read.parquet(s"$dir/$name.parquet")
-    })
+    }
 
   /** Normalize the driver testdata's `ts` column to an `ets` TimestampType
     * (µs, session-UTC) column, across testdata generations: INT64
@@ -74,27 +70,6 @@ object Tables {
     * and a consumer's own derivation. */
   private[queries] def isTestSplit(id: Column): Column =
     substring(md5(id.cast("string")), 1, 1).isin("c", "d", "e", "f")
-
-  /** Pid-unique scratch roots for the persisted-index harnesses (the ANN
-    * stores and the dedup store): `<tmp>/graft_<flavor>_<sfhash>_<pid>/
-    * {base,index}`, wiped now and at JVM exit. ONE definition — the hash
-    * tag, recursive cleanup, and shutdown-hook semantics must not drift
-    * between the stores' build harnesses. */
-  private[queries] def storeRoots(d: String, flavor: String): (String, String) = {
-    val tag = java.lang.Integer.toHexString(d.hashCode)
-    val pid = ProcessHandle.current().pid()
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_${flavor}_${tag}_$pid"
-    deleteRecursively(new java.io.File(root))
-    sys.addShutdownHook(deleteRecursively(new java.io.File(root))): Unit
-    (s"$root/base", s"$root/index")
-  }
-
-  /** Recursive delete for the query-built scratch tables (one shared copy —
-    * three query objects used to carry private clones that could drift). */
-  private[queries] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   /** Order-independent money sum: casting each double to DECIMAL(18,2) before
     * summing makes the aggregate exact (no float accumulation order effects),

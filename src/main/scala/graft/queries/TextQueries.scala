@@ -13,31 +13,13 @@ object TextQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Materialized-frame memo (see [[QueryMemo]]): the split+shingle table
-    * and its distinct train-shingle set feed both decontamination queries;
-    * the unigram-scored corpus feeds three quality queries. Released by
-    * [[releaseCaches]] (Bench's explicit unpin step). */
-  private val memoized = new QueryMemo
-
-  /** Corpus text-byte totals per (session, dir) — the Bloom-sizing
-    * statistic of the immutable bench corpus (optimization round 17). */
-  private val corpusTextBytes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-
-  /** Unpersist every frame this object cached; already-returned frames
-    * recompute from lineage if re-read. */
-  def releaseCaches(): Unit = {
-    memoized.release()
-    corpusTextBytes.clear()
-  }
-
   /** (split, doc_id, __sh): deterministic md5 train/test tag + fused
     * 64-bit 8-token shingle hashes, exploded — the common scan of
     * `decontaminate` and `decontaminate_bloom` (which between them walk it
     * four times per session: bloom build, bloom probe, exact semi-join
     * sides). ~shingles ≈ tokens rows of three narrow columns. */
   private[queries] def cachedSplitShingles(s: SparkSession, d: String): DataFrame =
-    memoized("split_shingles", s, d) {
+    QueryMemo("split_shingles", s, d) {
       graft.ext.Spread.toCores(documents(s, d))
         .withColumn("split",
           when(isTestSplit(col("doc_id")), "test").otherwise("train"))
@@ -53,24 +35,21 @@ object TextQueries {
       .filter(col("split") === "train").select("__sh").distinct()
 
   private[queries] def cachedTrainShingles(s: SparkSession, d: String): DataFrame =
-    memoized("train_shingles", s, d)(trainShinglesBuild(s, d))
+    QueryMemo("train_shingles", s, d)(trainShinglesBuild(s, d))
 
   /** The memoized set's row count, recorded at its materialization — the
     * Bloom sizing input, no re-count job per query invocation
     * (optimization round 17). */
   private def cachedTrainShingleCount(s: SparkSession, d: String): Long =
-    memoized.countOf("train_shingles", s, d)(trainShinglesBuild(s, d))
+    QueryMemo.countOf("train_shingles", s, d)(trainShinglesBuild(s, d))
 
-  /** sf dir → index root of the persisted decontamination sketch, built
-    * once per session over a commit-log TRAIN table: commit 90% of the
-    * train docs → build → append the held-out tenth → change-feed refresh
-    * (the same 90/10/refresh harness the dedup/ANN stores use). */
-  private val builtDeconStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Index root of the persisted decontamination sketch over a commit-log
+    * TRAIN table: commit 90% of the train docs → build → append the
+    * held-out tenth → change-feed refresh (the same 90/10/refresh harness
+    * the dedup/ANN stores use). */
   private[queries] def ensureDeconStore(s: SparkSession, d: String): String =
-    builtDeconStore.computeIfAbsent(d, _ => {
-      val (base, index) = Tables.storeRoots(d, "deconstore")
+    QueryMemo.scratch("deconstore", s, d) { root =>
+      val (base, index) = (s"$root/base", s"$root/index")
       val train = documents(s, d).filter(!isTestSplit(col("doc_id")))
         .select("doc_id", "text")
       graft.tx.CommitLog.commit(
@@ -80,19 +59,16 @@ object TextQueries {
         train.filter(pmod(col("doc_id"), lit(10)) === 7), base, "append")
       graft.ext.DecontaminationStore.refresh(s, base, index)
       index
-    })
+    }
 
   /** [[ensureDeconStore]]'s PREFIX-SHARDED twin (round-15 VERDICT item 1):
     * the same 90/10/refresh harness with `nShards = 4`, so the oracle
     * exercises per-shard routing on build, the touched-shards-only
     * replaceWhere fold on refresh, and the per-shard broadcast probe —
     * against the identical exact-contamination oracle. */
-  private val builtDeconStoreSharded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def ensureDeconStoreSharded(s: SparkSession, d: String): String =
-    builtDeconStoreSharded.computeIfAbsent(d, _ => {
-      val (base, index) = Tables.storeRoots(d, "deconstore_shard")
+    QueryMemo.scratch("deconstore_shard", s, d) { root =>
+      val (base, index) = (s"$root/base", s"$root/index")
       val train = documents(s, d).filter(!isTestSplit(col("doc_id")))
         .select("doc_id", "text")
       graft.tx.CommitLog.commit(
@@ -102,14 +78,14 @@ object TextQueries {
         train.filter(pmod(col("doc_id"), lit(10)) === 7), base, "append")
       graft.ext.DecontaminationStore.refresh(s, base, index)
       index
-    })
+    }
 
   /** (doc_id, neg_logp, lang): the corpus-relative unigram-LM score joined
     * with the language column — consumed by `text_unigram_logprob`,
     * `quality_deciles`, and `quality_deciles_sketch`, each of which
     * otherwise re-runs the token explode + frequency join + per-doc agg. */
   private def cachedUnigramScored(s: SparkSession, d: String): DataFrame =
-    memoized("unigram_scored", s, d) {
+    QueryMemo("unigram_scored", s, d) {
       val docs = documents(s, d)
       TextStats.unigramLogProb(docs, col("text"), col("doc_id"))
         .select(col("__id").as("doc_id"), col("neg_logp"))
@@ -694,7 +670,7 @@ object TextQueries {
       val docs = documents(s, d)
       TextStats.dsirSelect(docs, col("text"), col("doc_id"),
         isTarget = col("lang") === "en",
-        counts = Some(memoized("dsir_counts", s, d) {
+        counts = Some(QueryMemo("dsir_counts", s, d) {
           TextStats.dsirCounts(docs, col("text"), col("lang") === "en") }))
     }),
 
@@ -805,9 +781,8 @@ object TextQueries {
       // the immutable corpus; the build it sizes still runs per rep
       // (optimization round 17)
       val expectedShingles = math.max(1000L,
-        corpusTextBytes.computeIfAbsent((s, d), _ =>
-          documents(s, d).agg(sum(length(col("text")))).first().getLong(0))
-          .longValue() / 4)
+        QueryMemo.value("corpus_text_bytes", s, d)(
+          documents(s, d).agg(sum(length(col("text")))).first().getLong(0)) / 4)
       val bf = graft.functions.BloomColumns.buildLong(
         sh.filter(col("split") === "train"), "__sh", expectedShingles, 1e-4,
         itemsHint = expectedShingles)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tx.CommitLog
@@ -18,21 +16,10 @@ object TxQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** (tablePath, v1, v2) per sf dir; built once per session, wiped first so
-    * reruns in a fresh JVM never double-append. The path carries a per-JVM
-    * pid discriminator (round-3 ADVICE): two JVMs running these queries
-    * concurrently (bench + verify in the same round) would otherwise race
-    * one JVM's deleteRecursively against the other's commits and reads. */
-  private val built = new ConcurrentHashMap[String, (String, Long, Long)]()
-
+  /** (tablePath, v1, v2): two committed appends of disjoint halves of
+    * `events`, the second adding a column. */
   private def ensureTable(s: SparkSession, d: String): (String, Long, Long) =
-    built.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val table = s"${System.getProperty("java.io.tmpdir")}/graft_txlog_${tag}_$pid"
-      deleteRecursively(new java.io.File(table))
-      // pid-unique paths don't overwrite-clean across runs; reap on exit
-      sys.addShutdownHook(deleteRecursively(new java.io.File(table)))
+    QueryMemo.scratch("txlog", s, d) { table =>
       val ev = events(s, d)
       val v1 = CommitLog.commit(
         ev.filter(pmod(col("event_id"), lit(2)) === 0), table, "append")
@@ -41,7 +28,7 @@ object TxQueries {
         ev.filter(pmod(col("event_id"), lit(2)) === 1)
           .withColumn("batch_tag", lit("late")), table, "append")
       (table, v1, v2)
-    })
+    }
 
   /** (tablePath, vMerge, vDelete, vUpdate) for the MUTATION queries — a
     * separate table from [[ensureTable]] (whose queries pin the append-only
@@ -53,64 +40,68 @@ object TxQueries {
     * re-derive each stage's final state from the source parquet, so a wrong
     * matched-set, a lost unmatched row in a rewritten file, or a dropped
     * untouched file flips the hash. */
-  private val builtMut = new ConcurrentHashMap[String, (String, Long, Long, Long)]()
-  private val builtIncrAgg = new ConcurrentHashMap[String, String]()
-  private val builtIncrSums = new ConcurrentHashMap[String, String]()
+  private def ensureMutTable(s: SparkSession, d: String): (String, Long, Long, Long) =
+    QueryMemo.scratch("txmut", s, d) { table =>
+      val ev = events(s, d)
+      // many small files so the copy-on-write probe has real granularity to
+      // preserve: most files contain no matched key and must survive by
+      // reference (TxMutationSpec asserts exactly that on the manifests)
+      CommitLog.commit(ev.repartition(8), table, "append")
+      val updates = ev.filter(pmod(col("event_id"), lit(10)) === 3)
+        .withColumn("value", col("value") * 2)
+      val inserts = ev.filter(pmod(col("event_id"), lit(10)) === 4)
+        .withColumn("event_id", col("event_id") + 100000000L)
+        .withColumn("value", col("value") + 1000)
+      val vMerge = CommitLog.merge(s, table, updates.union(inserts), Seq("event_id"))
+      val vDelete = CommitLog.delete(s, table, col("event_type") === "error")
+      val vUpdate = CommitLog.update(s, table, col("event_type") === "signup",
+        Map("value" -> (col("value") + 0.5)))
+      (table, vMerge, vDelete, vUpdate)
+    }
 
-  /** Shared bootstrap for the IVM rollup queries: wipe + reap-on-exit a
-    * scratch aggregate table beside `baseTable`, seed it empty with
-    * (event_type, aggCols…), and fold the base's full change feed in. */
-  private def ensureScratchAgg(s: SparkSession,
-      memo: ConcurrentHashMap[String, String], d: String, baseTable: String,
-      suffix: String,
+  /** Shared bootstrap for the IVM rollup queries: seed the aggregate table
+    * `agg` empty with (event_type, aggCols…) and fold `baseTable`'s full
+    * change feed in. */
+  private def foldedRollup(s: SparkSession, agg: String, baseTable: String,
       aggCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-      apply: (String, DataFrame) => Unit): String =
-    memo.computeIfAbsent(d, _ => {
-      val agg = baseTable + suffix
-      deleteRecursively(new java.io.File(agg))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(agg)))
-      import org.apache.spark.sql.types._
-      CommitLog.commit(
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(StructField("event_type", StringType) +:
-            aggCols.map { case (n, t) => StructField(n, t) })),
-        agg, "append")
-      apply(agg, CommitLog.changeFeed(s, baseTable, 0L))
-      agg
-    })
+      apply: (String, DataFrame) => Unit): String = {
+    import org.apache.spark.sql.types._
+    CommitLog.commit(
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(StructField("event_type", StringType) +:
+          aggCols.map { case (n, t) => StructField(n, t) })),
+      agg, "append")
+    apply(agg, CommitLog.changeFeed(s, baseTable, 0L))
+    agg
+  }
 
   /** Table whose history spans a PLAIN OVERWRITE (the reference's prod
     * bronze path, `save_to_raw_delta_prod.py:143`): v1 appends the even-id
     * slice, v2 overwrites with the %3==0 slice — ids divisible by 6 survive
     * identically across the overwrite and must emit NO change row. */
-  private val builtOvw = new ConcurrentHashMap[String, String]()
-  private val builtJrn = new ConcurrentHashMap[String, String]()
+  private def ensureOvwTable(s: SparkSession, d: String): String =
+    eventsTable(s, d, "txovw") { (table, ev) =>
+      CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0), table, "append")
+      CommitLog.commit(ev.filter(pmod(col("event_id"), lit(3)) === 0), table, "overwrite"): Unit
+    }
 
-  /** One scratch commit-log table per (sf dir, prefix): pid-unique path
-    * (two JVMs in one round never race each other's files), wiped before
-    * rebuild, reaped at JVM exit. `build` receives the path plus the
-    * 3-column events projection every mutation harness starts from — THE
-    * one copy of the lifecycle boilerplate (round-8 review finding). */
-  private def scratchTable(s: SparkSession, memo: ConcurrentHashMap[String, String],
-      d: String, prefix: String)(build: (String, DataFrame) => Unit): String =
-    memo.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val table = s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_${tag}_$pid"
-      deleteRecursively(new java.io.File(table))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(table)))
+  /** A commit-log table at `<scratch root>/table`: `build` receives the path
+    * plus the 3-column events projection every mutation harness starts
+    * from. */
+  private def eventsTable(s: SparkSession, d: String, name: String)(
+      build: (String, DataFrame) => Unit): String =
+    QueryMemo.scratch(name, s, d) { root =>
+      val table = s"$root/table"
       build(table, events(s, d).select("event_id", "event_type", "value"))
       table
-    })
+    }
 
   /** Table mutated by [[CommitLog.deleteDv]] — merge-on-read deletion
     * vectors (round-7 VERDICT item 3): commit all events, then retire the
     * ~1% trickle (event_id % 97 == 0) as dead POSITIONS. Every data file
     * carries by reference; readers anti-join the deaths away. */
-  private val builtDv = new ConcurrentHashMap[String, String]()
-
   private def ensureDvTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtDv, d, "txdv") { (table, ev) =>
+    eventsTable(s, d, "txdv") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       CommitLog.deleteDv(s, table, pmod(col("event_id"), lit(97)) === 0): Unit
     }
@@ -120,10 +111,8 @@ object TxQueries {
     * commit all events → deleteDv (% 97 == 0) → updateDv (+0.5 on every
     * surviving 'signup' row). Both mutations retire rows by POSITION;
     * nothing is ever rewritten. */
-  private val builtUpdateDv = new ConcurrentHashMap[String, String]()
-
   private def ensureUpdateDvTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtUpdateDv, d, "txudv") { (table, ev) =>
+    eventsTable(s, d, "txudv") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       CommitLog.deleteDv(s, table, pmod(col("event_id"), lit(97)) === 0)
       CommitLog.updateDv(s, table, col("event_type") === "signup",
@@ -134,10 +123,8 @@ object TxQueries {
     * shape: commit all events, then one trickle upsert (event_id % 103 == 5
     * rows re-valued +1000 = updates; % 103 == 6 rows re-keyed +300000000 =
     * inserts) that retires matched rows by POSITION and rewrites no file. */
-  private val builtMergeDv = new ConcurrentHashMap[String, String]()
-
   private def ensureMergeDvTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtMergeDv, d, "txmdv") { (table, ev) =>
+    eventsTable(s, d, "txmdv") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val src = ev.filter(pmod(col("event_id"), lit(103)) === 5)
           .withColumn("value", col("value") + lit(1000.0))
@@ -155,10 +142,8 @@ object TxQueries {
     * route through the commit log (a raw file write behind the manifest
     * would flip fsck AND the hash), the UPDATE/DELETE through the
     * merge-on-read DV path. */
-  private val builtSqlDml = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlDmlTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlDml, d, "txsqldml") { (table, ev) =>
+    eventsTable(s, d, "txsqldml") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val (v, src) = (s"txsqldml_v_$tag", s"txsqldml_src_$tag")
@@ -175,10 +160,8 @@ object TxQueries {
     * the upsert-by-PK serving shape issued from pure SQL; routes through
     * [[CommitLog.mergeDv]], so every pre-merge data file survives by
     * reference. */
-  private val builtSqlMerge = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlMergeTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlMerge, d, "txsqlmrg") { (table, ev) =>
+    eventsTable(s, d, "txsqlmrg") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val (v, src) = (s"txsqlmrg_v_$tag", s"txsqlmrg_src_$tag")
@@ -198,10 +181,8 @@ object TxQueries {
 
   /** Table mutated by SQL `MERGE ... WHEN MATCHED THEN DELETE` — the
     * key-set retirement shape ([[CommitLog.deleteKeys]] under the hood). */
-  private val builtSqlMergeDel = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlMergeDelTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlMergeDel, d, "txsqlmdel") { (table, ev) =>
+    eventsTable(s, d, "txsqlmdel") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val (v, src) = (s"txsqlmdel_v_$tag", s"txsqlmdel_src_$tag")
@@ -219,10 +200,8 @@ object TxQueries {
     * key domain — the exact layout where stats pruning is useless and only
     * the per-file Bloom sidecars can shrink a point lookup
     * ([[graft.tx.BloomIndex]]). */
-  private val builtBloom = new ConcurrentHashMap[String, String]()
-
   private def ensureBloomTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtBloom, d, "txbloom") { (table, ev) =>
+    eventsTable(s, d, "txbloom") { (table, ev) =>
       graft.tx.BloomIndex.setColumns(table, Seq("event_id"))
       CommitLog.commit(ev.repartition(16), table, "append"): Unit
     }
@@ -231,10 +210,8 @@ object TxQueries {
     * commit all events → DV-delete the 'error' rows → `OPTIMIZE` (folds
     * the DVs) → `VACUUM … KEEP 1 VERSIONS FORCE` (drops the pre-compact
     * history) — Delta's utility statements end-to-end. */
-  private val builtSqlMaint = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlMaintTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlMaint, d, "txsqlmnt") { (table, ev) =>
+    eventsTable(s, d, "txsqlmnt") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       CommitLog.deleteDv(s, table, col("event_type") === "error")
       s.sql(s"OPTIMIZE '$table'")
@@ -246,13 +223,11 @@ object TxQueries {
     * DELETE / MERGE addressed purely BY NAME — the reference's addressing
     * model (named tables: `db-script.cql:4`). The catalog name derives
     * from the path so bench and verify JVMs never collide. */
-  private val builtSqlCat = new ConcurrentHashMap[String, String]()
-
   private def catName(table: String): String =
     s"graft_cat_${java.lang.Integer.toHexString(table.hashCode)}"
 
   private def ensureSqlCatTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlCat, d, "txsqlcat") { (table, ev) =>
+    eventsTable(s, d, "txsqlcat") { (table, ev) =>
       val name = catName(table)
       val src = s"${name}_src"
       ev.createOrReplaceTempView(src)
@@ -279,10 +254,8 @@ object TxQueries {
     * must be RECORDED in the manifest and honored by the insert (hive
     * dirs + partition pruning), the silent-drop bug class of round-10
     * VERDICT item 1. */
-  private val builtSqlCreatePart = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlCreatePartTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlCreatePart, d, "txsqlcpart") { (table, ev) =>
+    eventsTable(s, d, "txsqlcpart") { (table, ev) =>
       val name = cpartName(table)
       val src = s"${name}_src"
       ev.createOrReplaceTempView(src)
@@ -304,20 +277,12 @@ object TxQueries {
     * where REPLACE TABLE is even expressible), and a name-addressed
     * INSERT appends through the V1Write commit path. Returns
     * (catalogTableName, tableRootDir). */
-  private val builtV2Cat = new ConcurrentHashMap[String, (String, String)]()
-
   private def ensureV2CatalogTable(s: SparkSession, d: String): (String, String) =
-    builtV2Cat.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      // catalog NAME and root are dataset-scoped: a shared root would be
-      // wiped by the next dataset's build (round-11 review finding), and
-      // a catalog instance caches its root at first use
+    QueryMemo.scratch("catroot", s, d) { rootDir =>
+      // the catalog NAME derives from the root: a catalog instance caches
+      // its root at first use, so a rebuild must register a fresh name
+      val tag = java.lang.Integer.toHexString(rootDir.hashCode)
       val cat = s"graftcat_$tag"
-      val rootDir =
-        s"${System.getProperty("java.io.tmpdir")}/graft_catroot_${tag}_$pid"
-      deleteRecursively(new java.io.File(rootDir))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(rootDir)))
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sql.GraftSpaceCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.root", rootDir)
@@ -335,16 +300,14 @@ object TxQueries {
                 SELECT event_id + 900000000, event_type, value + 5, true
                 FROM $src WHERE event_id % 131 = 7""")
       (name, s"$rootDir/lake/ev_$tag")
-    })
+    }
 
   /** Table driven through `ALTER TABLE … RENAME COLUMN value TO amount`
     * (column mapping — zero data rewrite) and then an INSERT under the
     * NEW name: reads alias the old bytes, new files store the physical
     * old name, and v1 time travel still serves the pre-rename schema. */
-  private val builtSqlRename = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlRenameTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlRename, d, "txsqlren") { (table, ev) =>
+    eventsTable(s, d, "txsqlren") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val (v, src) = (s"txsqlren_v_$tag", s"txsqlren_src_$tag")
@@ -361,10 +324,8 @@ object TxQueries {
     * first-match-wins NOT MATCHED BY SOURCE clauses (DELETE 'error'
     * targets, in-place UPDATE low-value ones) — all in one statement,
     * all merge-on-read. */
-  private val builtSqlMergeCond = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlMergeCondTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlMergeCond, d, "txsqlmcond") { (table, ev) =>
+    eventsTable(s, d, "txsqlmcond") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val (v, src) = (s"txsqlmcond_v_$tag", s"txsqlmcond_src_$tag")
@@ -391,10 +352,8 @@ object TxQueries {
     * SHALLOW CLONE that is TRUNCATEd — proving the clone is independent
     * and the truncate transactional. The final snapshot must equal the
     * raw events table, which is exactly what the DuckDB twin states. */
-  private val builtSqlLifecycle = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlLifecycleTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlLifecycle, d, "txsqllife") { (table, ev) =>
+    eventsTable(s, d, "txsqllife") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val tag = java.lang.Integer.toHexString(table.hashCode)
       val v = s"txsqllife_v_$tag"
@@ -404,7 +363,6 @@ object TxQueries {
         s"value, 1.0 FROM $v WHERE event_id % 127 = 13")
       s.sql(s"RESTORE TABLE '$table' TO VERSION AS OF 1")
       val clone = s"${table}_clone"
-      deleteRecursively(new java.io.File(clone))
       s.sql(s"CREATE TABLE '$clone' SHALLOW CLONE '$table'")
       s.sql(s"TRUNCATE TABLE '$clone'"): Unit
     }
@@ -413,10 +371,8 @@ object TxQueries {
     * trickle-mutated — proving the converted table is a full citizen:
     * DML routes through the commit log, time travel reads the pristine
     * v1, stats sidecars (built at convert from one footer pass) prune. */
-  private val builtConvert = new ConcurrentHashMap[String, String]()
-
   private def ensureConvertTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtConvert, d, "txconv") { (table, ev) =>
+    eventsTable(s, d, "txconv") { (table, ev) =>
       // a PLAIN parquet dataset (no commit log), id-range-clustered so
       // the convert-built footer stats genuinely prune …
       ev.repartitionByRange(8, col("event_id")).sortWithinPartitions("event_id")
@@ -432,10 +388,8 @@ object TxQueries {
     * every real event row, a violating INSERT is attempted and MUST
     * refuse without publishing, and the final snapshot equals the
     * original events plus one legal insert. */
-  private val builtConstraint = new ConcurrentHashMap[String, String]()
-
   private def ensureConstraintTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtConstraint, d, "txcheck") { (table, ev) =>
+    eventsTable(s, d, "txcheck") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       val v = s"txcheck_v_${java.lang.Integer.toHexString(table.hashCode)}"
       s.read.format("graft").load(table).createOrReplaceTempView(v)
@@ -463,10 +417,8 @@ object TxQueries {
     * commit all events (v1), DV-delete the 'error' rows (v2) — the query
     * joins `VERSION AS OF 1`, the latest snapshot, and a far-future
     * `TIMESTAMP AS OF` (≡ latest) in ONE statement. */
-  private val builtSqlTt = new ConcurrentHashMap[String, String]()
-
   private def ensureSqlTtTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtSqlTt, d, "txsqltt") { (table, ev) =>
+    eventsTable(s, d, "txsqltt") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       CommitLog.deleteDv(s, table, col("event_type") === "error"): Unit
     }
@@ -474,20 +426,12 @@ object TxQueries {
   /** Table mutated by [[CommitLog.deleteKeys]] — the CDC-apply delete shape
     * (`DELETE WHERE key IN (subquery)`): commit all events, then retire
     * every event_id divisible by 7 via a key-set frame. */
-  private val builtDelKeys = new ConcurrentHashMap[String, String]()
-
   private def ensureDelKeysTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtDelKeys, d, "txdelk") { (table, ev) =>
+    eventsTable(s, d, "txdelk") { (table, ev) =>
       CommitLog.commit(ev.repartition(8), table, "append")
       CommitLog.deleteKeys(s, table,
         ev.filter(pmod(col("event_id"), lit(7)) === 0).select("event_id"),
         Seq("event_id")): Unit
-    }
-
-  private def ensureOvwTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtOvw, d, "txovw") { (table, ev) =>
-      CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0), table, "append")
-      CommitLog.commit(ev.filter(pmod(col("event_id"), lit(3)) === 0), table, "overwrite"): Unit
     }
 
   /** Same append→overwrite history as [[ensureOvwTable]], but the
@@ -497,7 +441,7 @@ object TxQueries {
     * journal can serve the slice (round-7: write-time CDC decouples
     * overwrite feeds from predecessor retention). */
   private def ensureJournaledTable(s: SparkSession, d: String): String =
-    scratchTable(s, builtJrn, d, "txjrn") { (table, ev) =>
+    eventsTable(s, d, "txjrn") { (table, ev) =>
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0), table, "append")
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(3)) === 0), table,
         "overwrite", cdc = true)
@@ -508,35 +452,21 @@ object TxQueries {
     * undo story. The restore moves NO data (its manifest re-references
     * v1's files) and journals the row diff, so the feed shows exactly the
     * resurrected rows. */
-  private val builtRestore = new ConcurrentHashMap[String, String]()
-
   private def ensureRestoreTable(s: SparkSession, d: String): String =
-    builtRestore.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val table = s"${System.getProperty("java.io.tmpdir")}/graft_txrst_${tag}_$pid"
-      deleteRecursively(new java.io.File(table))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(table)))
+    QueryMemo.scratch("txrst", s, d) { table =>
       val ev = events(s, d).select("event_id", "event_type", "value")
       CommitLog.commit(ev.repartition(4), table, "append")
       CommitLog.delete(s, table, col("event_type") === "error")
       CommitLog.restore(s, table, 1L, cdc = true)
       table
-    })
+    }
 
   /** Table mutated by [[CommitLog.replaceWhere]] — the idempotent-backfill
     * shape: one predicate region (event_type = 'purchase') atomically
     * swapped for a recomputed slice (even ids only, value + 10000), every
     * other region's files carried by reference. */
-  private val builtRepl = new ConcurrentHashMap[String, String]()
-
   private def ensureReplTable(s: SparkSession, d: String): String =
-    builtRepl.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val table = s"${System.getProperty("java.io.tmpdir")}/graft_txrpl_${tag}_$pid"
-      deleteRecursively(new java.io.File(table))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(table)))
+    QueryMemo.scratch("txrpl", s, d) { table =>
       val ev = events(s, d).select("event_id", "event_type", "value")
       CommitLog.commit(ev.repartition(8), table, "append")
       val replacement = ev.filter(col("event_type") === "purchase" &&
@@ -544,55 +474,22 @@ object TxQueries {
         .withColumn("value", col("value") + 10000)
       CommitLog.replaceWhere(s, table, replacement, col("event_type") === "purchase")
       table
-    })
+    }
 
   /** (src, clone) pair for [[CommitLog.cloneTable]]: clone the committed
     * events, then mutate BOTH sides differently — the clone loses its
     * 'error' rows, the source its 'click' rows — so the query's per-side
     * counts certify full independence of the zero-copy clone. */
-  private val builtClone = new ConcurrentHashMap[String, (String, String)]()
-
   private def ensureCloneTables(s: SparkSession, d: String): (String, String) =
-    builtClone.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val src = s"${System.getProperty("java.io.tmpdir")}/graft_txcls_${tag}_$pid"
-      val dst = s"${System.getProperty("java.io.tmpdir")}/graft_txclc_${tag}_$pid"
-      Seq(src, dst).foreach { t =>
-        deleteRecursively(new java.io.File(t))
-        sys.addShutdownHook(deleteRecursively(new java.io.File(t)))
-      }
+    QueryMemo.scratch("txclone", s, d) { root =>
+      val (src, dst) = (s"$root/src", s"$root/dst")
       val ev = events(s, d).select("event_id", "event_type", "value")
       CommitLog.commit(ev.repartition(4), src, "append")
       CommitLog.cloneTable(src, dst)
       CommitLog.delete(s, dst, col("event_type") === "error")
       CommitLog.delete(s, src, col("event_type") === "click")
       (src, dst)
-    })
-
-  private def ensureMutTable(s: SparkSession, d: String): (String, Long, Long, Long) =
-    builtMut.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val table = s"${System.getProperty("java.io.tmpdir")}/graft_txmut_${tag}_$pid"
-      deleteRecursively(new java.io.File(table))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(table)))
-      val ev = events(s, d)
-      // many small files so the copy-on-write probe has real granularity to
-      // preserve: most files contain no matched key and must survive by
-      // reference (TxMutationSpec asserts exactly that on the manifests)
-      CommitLog.commit(ev.repartition(8), table, "append")
-      val updates = ev.filter(pmod(col("event_id"), lit(10)) === 3)
-        .withColumn("value", col("value") * 2)
-      val inserts = ev.filter(pmod(col("event_id"), lit(10)) === 4)
-        .withColumn("event_id", col("event_id") + 100000000L)
-        .withColumn("value", col("value") + 1000)
-      val vMerge = CommitLog.merge(s, table, updates.union(inserts), Seq("event_id"))
-      val vDelete = CommitLog.delete(s, table, col("event_type") === "error")
-      val vUpdate = CommitLog.update(s, table, col("event_type") === "signup",
-        Map("value" -> (col("value") + 0.5)))
-      (table, vMerge, vDelete, vUpdate)
-    })
+    }
 
   /** Delta-protocol ROUNDTRIP table (round-11 VERDICT item 2 + import
     * half): a hive-partitioned graft table built from events, EXPORTED as
@@ -602,14 +499,8 @@ object TxQueries {
     * re-imported table; the DuckDB oracle recomputes from the source
     * parquet — any loss in either protocol direction (a dropped add, a
     * mangled partition value, a schema drift) flips the hash. */
-  private val builtDelta = new ConcurrentHashMap[String, String]()
   private def ensureDeltaRoundtrip(s: SparkSession, d: String): String =
-    builtDelta.computeIfAbsent(d, _ => {
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val pid = ProcessHandle.current().pid()
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_deltart_${tag}_$pid"
-      deleteRecursively(new java.io.File(base))
-      sys.addShutdownHook(deleteRecursively(new java.io.File(base)))
+    QueryMemo.scratch("deltart", s, d) { base =>
       val src = s"$base/src"
       val dst = s"$base/dst"
       CommitLog.commit(events(s, d).select("event_id", "event_type", "value"),
@@ -630,7 +521,7 @@ object TxQueries {
         dstDir.resolve("_delta_log").resolve(f"${0L}%020d.json"))
       CommitLog.convert(s, dst)
       dst
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // Delta-protocol roundtrip: export → foreign-style copy → log-aware
@@ -746,10 +637,10 @@ object TxQueries {
     // DuckDB twin pins both the counts and the all-match boolean.
     "tx_incr_agg" -> ((s, d) => {
       val (table, _, _, _) = ensureMutTable(s, d)
-      val aggTable = ensureScratchAgg(s, builtIncrAgg, d, table, "_agg",
+      val aggTable = QueryMemo.scratch("txincragg", s, d)(foldedRollup(s, _, table,
         Seq(("n", org.apache.spark.sql.types.LongType)),
         (agg, feed) => graft.tx.ChangeApply.applyCounts(s, agg, feed,
-          Seq("event_type")): Unit)
+          Seq("event_type")): Unit))
       val maintained = CommitLog.read(s, aggTable)
       val recomputed = CommitLog.read(s, table)
         .groupBy("event_type").agg(count(lit(1)).as("n_direct"))
@@ -770,12 +661,12 @@ object TxQueries {
     // mutated table.
     "tx_incr_sums" -> ((s, d) => {
       val (table, _, _, _) = ensureMutTable(s, d)
-      val aggTable = ensureScratchAgg(s, builtIncrSums, d, table, "_sums",
+      val aggTable = QueryMemo.scratch("txincrsums", s, d)(foldedRollup(s, _, table,
         Seq(("n", org.apache.spark.sql.types.LongType),
           ("sum_value", graft.tx.ChangeApply.SumType),
           ("cnt_value", org.apache.spark.sql.types.LongType)),
         (agg, feed) => graft.tx.ChangeApply.applyAggregates(s, agg, feed,
-          Seq("event_type"), Seq("value")): Unit)
+          Seq("event_type"), Seq("value")): Unit))
       val maintained = CommitLog.read(s, aggTable)
       // the SERVING rule the rollup's docstring requires: a group whose
       // values are all NULL stores sum 0 / cnt 0 and must serve SQL's

@@ -170,38 +170,33 @@ object VectorQueries {
       IvfPqMinRecall)),
   )
 
-  /** sf dir → root of the persisted IVF index, built once per session over
-    * a commit-log base table: commit 90% of embeddings → build → append the
-    * held-out tenth → change-feed refresh. Pid-unique paths (two JVMs in
-    * one round never race each other's files). */
-  private val builtPersist = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Root of the persisted IVF index over a commit-log base table: commit
+    * 90% of embeddings → build → append the held-out tenth → change-feed
+    * refresh. */
   private def ensurePersistIndex(s: SparkSession, d: String): String =
-    builtPersist.computeIfAbsent(d, _ => {
-      val (base, index) = persistRoots(s, d, "ivfstore")
+    QueryMemo.scratch("ivfstore", s, d) { root =>
+      val (base, index) = seedStore(s, d, root)
       graft.ext.IvfStore.build(s, base, index, nCells = 16)
       graft.tx.CommitLog.commit(
         embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) === 7),
         base, "append")
       graft.ext.IvfStore.refresh(s, base, index)
       index
-    })
+    }
 
-  /** sf dir → (base, index) roots of the persisted PQ index, same
-    * 90%-build / 10%-append / refresh harness as the IVF one. topK needs
-    * BOTH roots: the refine fetch point-reads the base. */
-  private val builtPqPersist = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
+  /** (base, index) roots of the persisted PQ index, same 90%-build /
+    * 10%-append / refresh harness as the IVF one. topK needs BOTH roots:
+    * the refine fetch point-reads the base. */
   private def ensurePqPersistIndex(s: SparkSession, d: String): (String, String) =
-    builtPqPersist.computeIfAbsent(d, _ => {
-      val (base, index) = persistRoots(s, d, "pqstore")
+    QueryMemo.scratch("pqstore", s, d) { root =>
+      val (base, index) = seedStore(s, d, root)
       graft.ext.PqStore.build(s, base, index)
       graft.tx.CommitLog.commit(
         embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) === 7),
         base, "append")
       graft.ext.PqStore.refresh(s, base, index)
       (base, index)
-    })
+    }
 
   private def pqPersistTopK(s: SparkSession, d: String): DataFrame = {
     val (base, index) = ensurePqPersistIndex(s, d)
@@ -211,18 +206,16 @@ object VectorQueries {
 
   /** The IVF-PQ composite harness: same 90%-build / 10%-append / refresh
     * shape, with the coarse quantizer fitted at build. */
-  private val builtIvfPqPersist = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def ensureIvfPqPersistIndex(s: SparkSession, d: String): (String, String) =
-    builtIvfPqPersist.computeIfAbsent(d, _ => {
-      val (base, index) = persistRoots(s, d, "ivfpq")
+    QueryMemo.scratch("ivfpq", s, d) { root =>
+      val (base, index) = seedStore(s, d, root)
       graft.ext.PqStore.build(s, base, index, nCells = 16)
       graft.tx.CommitLog.commit(
         embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) === 7),
         base, "append")
       graft.ext.PqStore.refresh(s, base, index)
       (base, index)
-    })
+    }
 
   private def ivfPqPersistTopK(s: SparkSession, d: String): DataFrame = {
     val (base, index) = ensureIvfPqPersistIndex(s, d)
@@ -230,11 +223,10 @@ object VectorQueries {
       embeddings(s, d).filter(col("vec_id") < 20), k = 5, nProbe = 8)
   }
 
-  /** Pid-unique commit-log base (seeded with 90% of the embeddings) and
-    * an empty index root under tmp (two JVMs in one round never race each
-    * other's files); cleaned at JVM exit. */
-  private def persistRoots(s: SparkSession, d: String, flavor: String): (String, String) = {
-    val (base, index) = Tables.storeRoots(d, flavor)
+  /** A store's (base, index) paths under its scratch root, the commit-log
+    * base seeded with 90% of the embeddings. */
+  private def seedStore(s: SparkSession, d: String, root: String): (String, String) = {
+    val (base, index) = (s"$root/base", s"$root/index")
     graft.tx.CommitLog.commit(
       embeddings(s, d).filter(pmod(col("vec_id"), lit(10)) =!= 7),
       base, "append")

@@ -325,4 +325,14 @@ class QueriesSpec extends SparkSpec {
     // distinct dirs and names resolve to distinct frames
     assert(!(Tables.table(spark, sf, "events") eq a))
   }
+
+  test("tx_sql_catalog_v2 serves a second session the same rows as the first") {
+    // the build registers its v2 catalog in the building session's conf, so
+    // a session must never be handed another session's catalog name
+    def rows(s: org.apache.spark.sql.SparkSession) =
+      TxQueries.queries("tx_sql_catalog_v2")(s, sf).collect().toSeq
+    val first = rows(spark)
+    assert(first.nonEmpty)
+    assert(rows(spark.newSession()) === first)
+  }
 }
