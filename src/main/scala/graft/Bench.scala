@@ -228,13 +228,10 @@ object Bench {
       System.err.println(s"[bench] FAILED $name: $e")
     case _ => ()
     }
-    // Pipeline teardown: unpin the operator caches (band/shingle tables,
-    // IVF assignments) the queries left persisted — the release hook the
-    // round-2 advice asked for, exercised where a real run ends.
-    graft.ext.Dedup.releaseCaches()
-    graft.ext.IvfIndex.releaseCaches()
-    graft.ext.PqIndex.releaseCaches()
-    graft.queries.QueryMemo.release()
+    // Pipeline teardown: unpin what the queries left persisted (band/shingle
+    // tables, IVF assignments, the query layer's frames), where a real run
+    // ends.
+    Memo.releaseAll()
     // Cross-round comparability (round-5 VERDICT item 8): record this run
     // in the per-sf history and report per-query medians over every
     // recorded run — the drift-resistant number a judge should read.

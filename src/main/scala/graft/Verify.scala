@@ -43,10 +43,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.ext.Dedup.releaseCaches()
-    graft.ext.IvfIndex.releaseCaches()
-    graft.ext.PqIndex.releaseCaches()
-    graft.queries.QueryMemo.release()
+    Memo.releaseAll()
     spark.stop()
   }
 }

@@ -30,8 +30,8 @@ object Bucketing {
     (if (sorted) w.sortBy(bucketCol) else w).saveAsTable(name)
   }
 
-  /** Bucketed tables are session-catalog entries; re-register only if absent
-    * (Verify/Bench call each query twice in one session). */
+  /** Bucketed tables are session-catalog entries; write and register one
+    * only if the name is absent. */
   def ensureBucketed(spark: SparkSession, df: => DataFrame, name: String,
       path: String, bucketCol: String, numBuckets: Int): DataFrame = {
     if (!spark.catalog.tableExists(name))

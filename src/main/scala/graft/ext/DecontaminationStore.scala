@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.Memo
 import graft.functions.BloomColumns
 import graft.tx.CommitLog
 
@@ -534,30 +535,24 @@ object DecontaminationStore {
     // Broadcasts of a PARTICULAR SparkContext — after a context restart in
     // the same JVM the handles are dead, and serving them would fail every
     // probe until eviction
-    val key = (spark.sparkContext.applicationId,
-      CommitLog.normalizeRoot(table), version)
-    val (w, probeOf) = servingCache.synchronized(
-      Option(servingCache.get(key))) match {
-      case Some(hit) => hit
-      case None =>
-        val rows = readShardRows(spark, table, version)
-        val w0 = rows.head.w
-        val bits = bitsOf(rows.head.shards)
-        val probe: Column => Column =
-          if (rows.size == 1 &&
-              rows.head.bytes.length <= BloomColumns.LiteralSketchMaxBytes) {
-            val bf = BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(rows.head.bytes))
-            c => BloomColumns.mightContain(bf, c)
-          } else {
-            // one broadcast PER SHARD: executors pull and parse shards
-            // lazily as probes touch them; a refresh re-broadcasts only
-            // changed shards on its next memoized probe build
-            val bcasts = rows.map(r => spark.sparkContext.broadcast(r.bytes))
-            c => BloomColumns.mightContainSharded(bcasts, bits, c)
-          }
-        servingCache.synchronized(servingCache.put(key, (w0, probe)): Unit)
-        (w0, probe)
+    val (w, probeOf) = servingProbes.stamped(CommitLog.stamp(table, version)
+        .map((spark.sparkContext.applicationId, CommitLog.normalizeRoot(table), _))) {
+      val rows = readShardRows(spark, table, version)
+      val bits = bitsOf(rows.head.shards)
+      val probe: Column => Column =
+        if (rows.size == 1 &&
+            rows.head.bytes.length <= BloomColumns.LiteralSketchMaxBytes) {
+          val bf = BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(rows.head.bytes))
+          c => BloomColumns.mightContain(bf, c)
+        } else {
+          // one broadcast PER SHARD: executors pull and parse shards
+          // lazily as probes touch them; a refresh re-broadcasts only
+          // changed shards on its next memoized probe build
+          val bcasts = rows.map(r => spark.sparkContext.broadcast(r.bytes))
+          c => BloomColumns.mightContainSharded(bcasts, bits, c)
+        }
+      (rows.head.w, probe)
     }
     batch.select(col(idCol), explode(graft.functions.ShingleHashes
         .shingleHashes(TextStats.tokens(col(textCol)), w)).as("__sh"))
@@ -565,23 +560,16 @@ object DecontaminationStore {
       .select(idCol).distinct()
   }
 
-  /** Serving-probe state memoized per (root, sketch version): the probe
-    * COLUMN builder plus the shingle width. Memoizing means a steady
-    * stream of serving probes pays the sketch read and the per-shard
-    * broadcasts ONCE per version ([[DedupStore]]'s `checkedConfig`
-    * pattern — version resolution is a file-metadata read, zero Spark
-    * jobs per cached probe), and re-broadcasting per call would LEAK
-    * bitmap-sized broadcasts per probe until session end. Evicted or
-    * superseded entries just drop the handles; Spark's ContextCleaner
-    * reclaims the broadcasts once live plans release them. */
-  private val servingCache =
-    new java.util.LinkedHashMap[(String, String, Long),
-        (Int, Column => Column)](4, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Long),
-            (Int, Column => Column)]): Boolean =
-        size() > 4
-    }
+  /** Serving-probe state per (application, root, sketch stamp): the probe
+    * COLUMN builder plus the shingle width. A steady stream of serving
+    * probes pays the sketch read and the per-shard broadcasts ONCE per
+    * version (stamp resolution is a file-metadata read, zero Spark jobs per
+    * cached probe), and re-broadcasting per call would LEAK bitmap-sized
+    * broadcasts per probe until session end. Dropped entries just release
+    * the handles; Spark's ContextCleaner reclaims the broadcasts once live
+    * plans release them. */
+  private val servingProbes =
+    new Memo[(String, String, CommitLog.Stamp), (Int, Column => Column)](maxEntries = 4)
 
   /** Per-slice distinct shingle-hash rows of a document frame. */
   private def shingleFrame(docs: DataFrame, w: Int, textCol: String): DataFrame =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Deduplication operators for large-scale corpus curation: exact,
   * latest-revision, MinHash+LSH near-dup, SimHash, n-gram Jaccard.
   *
@@ -14,20 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // One live cache per operator (see LastCache): band/shingle tables are
-  // released when the next call replaces them, not leaked per call.
-  private val minhashBandCache = new LastCache
-  private val jaccardShingleCache = new LastCache
-  private val simhashBandCache = new LastCache
-
-  /** Release the band/shingle caches held from the last calls — call at
-    * pipeline end so storage isn't pinned for the JVM lifetime (round-2
-    * ADVICE). Already-returned frames recompute from lineage if re-read. */
-  def releaseCaches(): Unit = {
-    minhashBandCache.release()
-    jaccardShingleCache.release()
-    simhashBandCache.release()
-  }
+  // One live band/shingle table per operator: the next call on other
+  // inputs releases the previous one instead of leaking it per call.
+  private val minhashBands = new Memo.Frames
+  private val jaccardShingles = new Memo.Frames
+  private val simhashBands = new Memo.Frames
 
   /** Keep one row per exact-duplicate group (lowest id wins) — hash-groupBy,
     * one shuffle on the 128-bit fingerprint. `min_by(struct, id)` instead
@@ -238,9 +231,8 @@ object Dedup {
     * scale the same role is played by checkpointing the bands table. */
   def minhashCandidates(df: DataFrame, text: Column, id: Column,
       w: Int = 5, bands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
-    // materialize before fan-out so both join sides reuse it; previous
-    // call's band table is released (LastCache)
-    val bd = minhashBandCache.swap(
+    // materialize before fan-out so both join sides reuse it
+    val bd = minhashBands.persist(
       lshBands(minhashSignature(df, text, id, w, bands * rowsPerBand), bands, rowsPerBand))
     val a = bd.select(col("__band").as("band_a"), col("__bandkey").as("key_a"), col("__id").as("a"))
     val b = bd.select(col("__band").as("band_b"), col("__bandkey").as("key_b"), col("__id").as("b"))
@@ -281,7 +273,7 @@ object Dedup {
     val shArr0 = spreadBase.select(id.as("__id"),
       graft.functions.ShingleHashes.shingleHashes(TextStats.tokens(text), w)
         .as("__arr"))
-    val shArr = if (candidates.isDefined) jaccardShingleCache.swap(shArr0) else shArr0
+    val shArr = if (candidates.isDefined) jaccardShingles.persist(shArr0) else shArr0
     val sh = shArr.select(col("__id"), explode(col("__arr")).as("__shingle"))
     // Per-doc DISTINCT shingle counts are the ARRAY LENGTH of the fused
     // ShingleHashes set — a map-side size() per row (optimization round 17,
@@ -732,9 +724,8 @@ object Dedup {
   def simhashCandidates(df: DataFrame, text: Column, id: Column, maxHamming: Int = 3): DataFrame = {
     val spread = Spread.toCores(df)
     val withSh = spread.select(id.as("__id"), simhash(text).as("__sh"))
-    // both self-join sides read it; avoid recomputing simhash 2x (previous
-    // call's band table released via LastCache)
-    val banded = simhashBandCache.swap(withSh.select(col("__id"), col("__sh"),
+    // both self-join sides read it; avoid recomputing simhash 2x
+    val banded = simhashBands.persist(withSh.select(col("__id"), col("__sh"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), shiftright(col("__sh"), b * 8).bitwiseAND(0xff).as("key"))): _*)).as("bk")))
     val a = banded.select(col("bk.band").as("band_a"), col("bk.key").as("key_a"),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.tx.CommitLog
 
 /** MinHash-LSH band table PERSISTED as a commit-log table and maintained
@@ -275,23 +276,16 @@ object DedupStore {
       .select("query_id", "match_id").distinct()
   }
 
-  /** Checked configs memoized per index root, keyed by the (config,
-    * bands) table versions the check ran against (round-13 VERDICT item
-    * 7): the verified result is a function of immutable versioned
-    * storage, so a hot serving loop of [[pairs]]/[[candidates]] calls
-    * pays two driver-side version listings (no Spark actions) per probe
-    * instead of two jobs, and ANY commit to either table — a re-build, a
-    * refresh merge — changes a version and forces a re-check. One entry
-    * per root (latest wins), so the cache is bounded by live roots. */
-  private val configCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, (Int, Int, Int, String))]()
-
-  /** Drop memoized config checks — tests and long-lived drivers. */
-  def invalidateConfigCache(): Unit = configCache.clear()
-
-  /** Count of config checks that actually ran jobs (cache misses) —
-    * exposed for the serving-path spec; monotonic per JVM. */
-  @volatile private[ext] var configCheckCount: Long = 0L
+  /** Checked configs, keyed by the (config, bands) table stamps the check
+    * ran against: the verified result is a function of immutable versioned
+    * storage, so a hot serving loop of [[pairs]]/[[candidates]] calls pays
+    * two driver-side listings (no Spark actions) per probe instead of two
+    * jobs, and ANY commit to either table — a re-build, a refresh merge —
+    * changes a stamp and forces a re-check. Its miss counter counts the
+    * checks that ran jobs. */
+  private[ext] val checkedConfigs =
+    new Memo[(String, CommitLog.Stamp, CommitLog.Stamp), (Int, Int, Int, String)](
+      maxEntries = 16)
 
   /** Load the banding config AND verify the bands table carries the same
     * parameter fingerprint — a torn re-build (config overwritten, bands
@@ -303,29 +297,25 @@ object DedupStore {
     * table has nothing to mismatch and passes. */
   private def checkedConfig(spark: SparkSession,
       indexRoot: String): (Int, Int, Int, String) = {
-    val cv = CommitLog.latestVersion(configTable(indexRoot)).getOrElse(
+    val cs = CommitLog.latestStamp(configTable(indexRoot)).getOrElse(
       throw new IllegalStateException(s"$indexRoot has no built index; run build first"))
-    val bv = CommitLog.latestVersion(bandsTable(indexRoot)).getOrElse(
+    val bs = CommitLog.latestStamp(bandsTable(indexRoot)).getOrElse(
       throw new IllegalStateException(
         s"$indexRoot: config exists but bands table has no versions — a " +
           "first build crashed before its bands overwrite; run build again"))
-    Option(configCache.get(indexRoot)) match {
-      case Some((`cv`, `bv`, cfg)) => return cfg
-      case _ => ()
+    checkedConfigs((indexRoot, cs, bs)) {
+      val row = CommitLog.readAt(spark, configTable(indexRoot), cs.version)
+        .select("w", "bands", "rows_per_band", "build_id").head()
+      val cfg = (row.getInt(0), row.getInt(1), row.getInt(2), row.getString(3))
+      val ids = CommitLog.readAt(spark, bandsTable(indexRoot), bs.version)
+        .select("build_id").distinct().limit(3)
+        .collect().map(_.getString(0)).sorted.toSeq
+      require(ids.isEmpty || ids == Seq(cfg._4),
+        s"$indexRoot: bands table carries builds [${ids.mkString(", ")}] but " +
+          s"config says ${cfg._4} — a re-build crashed between its config " +
+          "and bands overwrites, or raced an in-flight refresh; run build again")
+      cfg
     }
-    configCheckCount += 1
-    val row = CommitLog.readAt(spark, configTable(indexRoot), cv)
-      .select("w", "bands", "rows_per_band", "build_id").head()
-    val cfg = (row.getInt(0), row.getInt(1), row.getInt(2), row.getString(3))
-    val ids = CommitLog.readAt(spark, bandsTable(indexRoot), bv)
-      .select("build_id").distinct().limit(3)
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(ids.isEmpty || ids == Seq(cfg._4),
-      s"$indexRoot: bands table carries builds [${ids.mkString(", ")}] but " +
-        s"config says ${cfg._4} — a re-build crashed between its config " +
-        "and bands overwrites, or raced an in-flight refresh; run build again")
-    configCache.put(indexRoot, (cv, bv, cfg))
-    cfg
   }
 
   /** (idCol, band, bandkey, build_id) rows of a document frame — the

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** IVF (inverted-file) approximate nearest neighbor: partition the corpus
   * into `nCells` k-means cells, then answer queries by scoring only the
   * vectors in the `nProbe` cells nearest to the query — the other standard
@@ -22,22 +24,15 @@ object IvfIndex {
 
   final case class Index(model: KMeansModel, assigned: DataFrame, centroids: Seq[(Int, Array[Float])])
 
-  /** Memoized per (corpus path hint) so repeated query invocations in one
-    * session don't refit — the index is the reusable artifact. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Index]()
+  /** Indexes memoized per caller key AND every parameter that shapes the
+    * index, so repeated query invocations in one session don't refit (the
+    * index is the reusable artifact) and a call with other cells or columns
+    * never gets another call's index. */
+  private val indexes = new Memo[(String, Int, String, String), Index](
+    onDrop = _.assigned.unpersist(blocking = false))
 
-  /** Un-keyed builds hold at most one live assignment cache (round-1 ADVICE:
-    * repeated uncached builds leaked persisted RDDs). */
-  private val unkeyedCache = new LastCache
-
-  /** Drop all memoized indexes and the un-keyed assignment cache — call at
-    * pipeline end to unpin storage (round-2 ADVICE). */
-  def releaseCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.values.asScala.foreach(_.assigned.unpersist(blocking = false))
-    cache.clear()
-    unkeyedCache.release()
-  }
+  /** Un-keyed builds hold at most one live assignment table. */
+  private val unkeyedAssigned = new Memo.Frames
 
   def build(corpus: DataFrame, nCells: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -63,13 +58,13 @@ object IvfIndex {
       val raw = model.transform(withVec)
         .select(col(idCol), col(vecCol), col("__cell"))
       val assigned = if (keyed) { val p = raw.persist(); p.count(); p }
-        else unkeyedCache.swap(raw)
+        else unkeyedAssigned.persist(raw)
       val centroids = model.clusterCenters.zipWithIndex
         .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }.toSeq
       Index(model, assigned, centroids)
     }
     cacheKey match {
-      case Some(k) => cache.computeIfAbsent(k, _ => make(keyed = true))
+      case Some(k) => indexes((k, nCells, idCol, vecCol))(make(keyed = true))
       case None => make(keyed = false)
     }
   }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.tx.CommitLog
 
 /** IVF index PERSISTED as commit-log tables and maintained from the base
@@ -213,14 +214,12 @@ object IvfStore {
   def staleFraction(indexRoot: String): Double =
     IndexUpkeep.mergeDriftFraction(assignedTable(indexRoot))
 
-  /** Frozen-centroid memo (optimization round 16): centroids are frozen
-    * between builds, so collecting the centroid table on EVERY query call
-    * is a driver-blocking job for bytes that cannot have changed while the
-    * centroid table's version is unchanged. Keyed by index root, validated
-    * against `latestVersion(centroids)` per use (driver-side log listing,
-    * no job). Bounded: nCells × dim floats per index root. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Option[Long], Seq[(Int, Array[Float])])]()
+  /** Frozen centroids: centroids are frozen between builds, so collecting
+    * the centroid table on EVERY query call is a driver-blocking job for
+    * bytes that cannot have changed under the same centroid-table stamp
+    * (a driver-side log listing and stat, no job). */
+  private val frozenCentroids =
+    new Memo[(String, CommitLog.Stamp), Seq[(Int, Array[Float])]](maxEntries = 16)
 
   /** Answer queries from the PERSISTED index — no fit, no session cache;
     * any process with the storage answers immediately. Same probe/rerank
@@ -229,23 +228,16 @@ object IvfStore {
       nProbe: Int = 4, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val assigned = CommitLog.read(spark, assignedTable(indexRoot))
       .withColumnRenamed("cell", "__cell")
-    val v = CommitLog.latestVersion(centroidsTable(indexRoot))
-    // a deleted/never-created centroids table reads as v = None — that must
-    // MISS (evict + fall through so CommitLog.read fails loudly), or a stale
-    // entry cached before the deletion would match None == None and silently
-    // serve centroids for an index that no longer exists (round-16 ADVICE)
-    if (v.isEmpty) centroidCache.remove(indexRoot): Unit
-    val cached = centroidCache.get(indexRoot)
-    val centroids =
-      if (v.isDefined && cached != null && cached._1 == v) cached._2
-      else {
-        val c = CommitLog.read(spark, centroidsTable(indexRoot))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-          .toSeq.sortBy(_._1)
-        centroidCache.put(indexRoot, (v, c))
-        c
-      }
-    IvfIndex.probeTopK(assigned, centroids, queries, k, nProbe, idCol, vecCol)
+    // a deleted/never-created centroids table has no stamp: it builds
+    // uncached, so CommitLog.read fails loudly instead of serving centroids
+    // for an index that no longer exists
+    val frozen = frozenCentroids.stamped(
+        CommitLog.latestStamp(centroidsTable(indexRoot)).map((indexRoot, _))) {
+      CommitLog.read(spark, centroidsTable(indexRoot))
+        .collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+        .toSeq.sortBy(_._1)
+    }
+    IvfIndex.probeTopK(assigned, frozen, queries, k, nProbe, idCol, vecCol)
   }
 }

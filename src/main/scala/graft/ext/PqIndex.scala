@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** Product quantization (PQ) ANN — the embedding-COMPRESSION scale path
   * beside IVF ([[IvfIndex]]) and LSH ([[Similarity.topKLsh]]): each
   * vector is split into `m` subvectors, each subvector is quantized to
@@ -41,18 +43,16 @@ object PqIndex {
   final case class Codebooks(m: Int, subDim: Int,
       centers: Array[Array[Array[Double]]])
 
-  /** (codebooks, encoded corpus) memoized per cacheKey so repeated query
-    * invocations in one session don't refit/re-encode. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Codebooks, DataFrame)]()
-  private val unkeyedCache = new LastCache
+  /** (codebooks, encoded corpus) memoized per caller key so repeated query
+    * invocations in one session don't refit/re-encode. Every
+    * result-shaping parameter is part of the key — a hit on the bare caller
+    * key with different m/nCodes/columns would silently serve the first
+    * call's trade-off. */
+  private val indexes = new Memo[(String, Int, Int, String, String), (Codebooks, DataFrame)](
+    onDrop = _._2.unpersist(blocking = false))
 
-  def releaseCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.values.asScala.foreach(_._2.unpersist(blocking = false))
-    cache.clear()
-    unkeyedCache.release()
-  }
+  /** Un-keyed calls hold at most one live code table. */
+  private val unkeyedCodes = new Memo.Frames
 
   private def normalized(vec: Column): Column =
     // bind both the cast array and its norm: naming the O(d) norm
@@ -289,16 +289,11 @@ object PqIndex {
       val books = fit(corpus, m, nCodes, vecCol)
       val raw = encode(corpus, books, idCol, vecCol)
       val codes = if (keyed) { val p = raw.persist(); p.count(); p }
-        else unkeyedCache.swap(raw)
+        else unkeyedCodes.persist(raw)
       (books, codes)
     }
-    // Every result-shaping parameter participates in the memo key — a hit
-    // on the bare caller key with different m/nCodes/columns would
-    // silently serve the first call's trade-off.
     val (books, codes) = cacheKey match {
-      case Some(key) =>
-        cache.computeIfAbsent(s"$key|$m|$nCodes|$idCol|$vecCol",
-          _ => make(keyed = true))
+      case Some(key) => indexes((key, m, nCodes, idCol, vecCol))(make(keyed = true))
       case None => make(keyed = false)
     }
     // ONE queries scan per call (optimization round 17): the collected

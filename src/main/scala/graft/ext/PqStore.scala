@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.tx.CommitLog
 
 /** PQ index PERSISTED as commit-log tables and maintained from the base
@@ -215,53 +216,40 @@ object PqStore {
   def coveredVersion(indexRoot: String): Option[Long] =
     CommitLog.txnVersion(codesTable(indexRoot), AppId)
 
-  /** Frozen-index metadata memo (optimization round 16): codebooks and
-    * cells are FROZEN between mutations of the codes table — every build
-    * overwrites it and every refresh merges into it or pins its watermark
-    * — so reloading and structurally re-validating them on EVERY query
-    * call costs 4-6 driver-blocking collect jobs for bytes that cannot
-    * have changed while the codes version is unchanged. Entries are keyed
-    * by index root and validated against `latestVersion(codes)` on every
-    * use (a driver-side log listing, no job); a version change reloads.
-    * Bounded: one entry per index root per JVM, ~a few hundred KB each
-    * (m × nCodes × subDim doubles + nCells centroids). Same per-version
-    * pattern as [[graft.functions.BloomColumns]]' broadcast memo. A build
-    * that crashes BETWEEN its codebooks and codes commits leaves the codes
-    * version unchanged, so in-JVM callers keep serving the old CONSISTENT
-    * (books, codes) pair; a fresh process sees the torn state and
-    * [[requireWidthAgreement]] refuses loudly as before. */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Option[Long], PqIndex.Codebooks,
-      Option[(Array[Array[Double]], Boolean)])]()
+  /** Frozen index metadata: codebooks and cells are FROZEN between
+    * mutations of the codes table — every build overwrites it and every
+    * refresh merges into it or pins its watermark — so reloading and
+    * structurally re-validating them on EVERY query call costs 4-6
+    * driver-blocking collect jobs for bytes that cannot have changed under
+    * the same codes-table stamp. A build that crashes BETWEEN its
+    * codebooks and codes commits leaves the codes stamp unchanged, so
+    * in-JVM callers keep serving the old CONSISTENT (books, codes) pair; a
+    * fresh process sees the torn state and [[requireWidthAgreement]]
+    * refuses loudly. */
+  private val frozenMeta = new Memo[(String, CommitLog.Stamp),
+    (Long, PqIndex.Codebooks, Option[(Array[Array[Double]], Boolean)])](maxEntries = 16)
 
-  /** Load + validate (books, cells) for the CURRENT codes version, through
-    * [[metaCache]]. The structural guards ([[requireWidthAgreement]],
-    * [[requireCellAgreement]]) run once per observed version — their
-    * subjects are immutable for a given version by construction. */
-  /** Returns the validated (codesVersion, books, cells) triple: callers
-    * PIN their codes reads at the returned version so a concurrent build
-    * committing mid-call can never pair these books with newer codes
-    * (round-16 ADVICE). A missing codes table (v = None) is always a cache
-    * MISS — evict and fall through so the read fails loudly, instead of a
-    * stale pre-deletion entry matching None == None. */
+  /** The validated (codesVersion, books, cells) triple of the CURRENT codes
+    * version. The structural guards ([[requireWidthAgreement]],
+    * [[requireCellAgreement]]) run once per stamp — their subjects are
+    * immutable for a given version by construction. Callers PIN their
+    * codes reads at the returned version so a concurrent build committing
+    * mid-call can never pair these books with newer codes. A missing codes
+    * table has no stamp, so it is never served from the memo: the read
+    * fails loudly. */
   private def loadMeta(spark: SparkSession, indexRoot: String):
       (Long, PqIndex.Codebooks, Option[(Array[Array[Double]], Boolean)]) = {
-    val v = CommitLog.latestVersion(codesTable(indexRoot))
-    if (v.isEmpty) metaCache.remove(indexRoot): Unit
-    val cached = metaCache.get(indexRoot)
-    if (v.isDefined && cached != null && cached._1 == v)
-      (v.get, cached._2, cached._3)
-    else {
+    val stamp = CommitLog.latestStamp(codesTable(indexRoot))
+    frozenMeta.stamped(stamp.map((indexRoot, _))) {
       val books = loadBooks(spark, indexRoot)
-      val vv = v.getOrElse(throw new IllegalStateException(
+      val v = stamp.map(_.version).getOrElse(throw new IllegalStateException(
         s"$indexRoot has no committed codes; run build first"))
-      val codes = CommitLog.readAt(spark, codesTable(indexRoot), vv)
+      val codes = CommitLog.readAt(spark, codesTable(indexRoot), v)
       requireWidthAgreement(codes, books, indexRoot)
       val cells = loadCells(spark, indexRoot)
       cells.foreach { case (cs, _) =>
         requireCellAgreement(codes, indexRoot, cs.length) }
-      metaCache.put(indexRoot, (v, books, cells))
-      (vv, books, cells)
+      (v, books, cells)
     }
   }
 

@@ -3,6 +3,9 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+import graft.Memo
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -124,35 +127,22 @@ object Similarity {
     * single-row job). An empty corpus yields a harmless default instead of
     * NoSuchElementException — every caller returns an empty frame anyway.
     *
-    * Memoized per (application, canonical corpus plan, column)
-    * (optimization round 17, guide §5 driver): every LSH call re-ran this
-    * single-row probe job for a value that is a pure function of the
-    * corpus schema-in-use — a serving loop pays it once. Bounded LRU; the
-    * application id keys out dead contexts after a restart. Dims only
+    * Memoized per (application, canonical corpus plan, column): every LSH
+    * call re-ran this single-row probe job for a value that is a pure
+    * function of the corpus schema-in-use — a serving loop pays it once.
+    * The application id keys out dead contexts after a restart. Dims only
     * gate LSH bucketing (recall, never correctness), so a stale entry on
     * a re-written corpus of DIFFERENT dimensionality — not a case any
     * caller produces — could only perturb candidate recall, exactly like
     * passing `dims` explicitly. */
-  private val dimsCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), java.lang.Integer](8, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), java.lang.Integer]): Boolean =
-          size() > 32
-      })
+  private val inferredDims = new Memo[(String, LogicalPlan, String), Int](maxEntries = 32)
 
-  private def inferDims(corpus: DataFrame, vecCol: String): Int = {
-    val key = (corpus.sparkSession.sparkContext.applicationId,
-      corpus.queryExecution.analyzed.canonicalized, vecCol)
-    val hit = dimsCache.get(key)
-    if (hit != null) hit.intValue()
-    else {
-      val d = corpus.select(size(col(vecCol))).head(1).headOption
+  private def inferDims(corpus: DataFrame, vecCol: String): Int =
+    inferredDims((corpus.sparkSession.sparkContext.applicationId,
+        corpus.queryExecution.analyzed.canonicalized, vecCol)) {
+      corpus.select(size(col(vecCol))).head(1).headOption
         .map(_.getInt(0)).getOrElse(64)
-      dimsCache.put(key, d)
-      d
     }
-  }
 
   /** Random-hyperplane LSH bucket id for one hash table: `planes` sign-bits
     * of dot products with deterministic ±1 hyperplanes (table t, plane j,

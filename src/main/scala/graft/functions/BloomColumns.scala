@@ -74,50 +74,12 @@ object BloomColumns {
     ColumnBridge.column(BloomBroadcastMightContain(
       ColumnBridge.expression(value), bcast))
 
-  /** Per-JVM deserialization cache for broadcast sketches: one
-    * `BloomFilter.readFrom` per executor per broadcast, not per task —
-    * at 130 MB the parse is the probe's whole cost otherwise. Small LRU
-    * of SOFT references: an executor touches few distinct sketches per
-    * job, but 8 strong 230 MB bitmaps would pin ~1.8 GB of heap for the
-    * JVM's lifetime even after their broadcasts are destroyed (round-15
-    * ADVICE) — soft refs let the GC reclaim an idle sketch under memory
-    * pressure, and a reclaimed entry just re-parses on next probe. */
-  private val filterCache =
-    new java.util.LinkedHashMap[(String, Long), java.lang.ref.SoftReference[BloomFilter]](
-        8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long),
-            java.lang.ref.SoftReference[BloomFilter]]): Boolean = size() > 8
-    }
+  /** Per-JVM parse of broadcast sketches: one `BloomFilter.readFrom` per
+    * executor per broadcast, not per task — at 130 MB the parse is the
+    * probe's whole cost otherwise. */
+  private[functions] val cachedFilter = new graft.BroadcastDecodeCache[Array[Byte], BloomFilter](
+    bytes => BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
 
-  /** Cache key scoped by APPLICATION id, not just broadcast id: broadcast
-    * ids are a per-SparkContext counter, so after a context restart in the
-    * same JVM a fresh broadcast could collide with a stale entry and
-    * silently answer membership from the WRONG sketch (false negatives
-    * included). SparkEnv is present on driver and executors alike. */
-  private[functions] def cachedFilter(bcast: Broadcast[Array[Byte]]): BloomFilter = {
-    val key = (org.apache.spark.SparkEnv.get.conf.getAppId, bcast.id)
-    filterCache.synchronized {
-      val got = filterCache.get(key)
-      if (got != null) {
-        val f = got.get()
-        if (f != null) return f
-        filterCache.remove(key): Unit // GC-cleared: fall through and re-parse
-      }
-    }
-    // deserialize OUTSIDE the lock (a 130 MB parse must not serialize
-    // every task's first probe behind one thread)
-    val f = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bcast.value))
-    filterCache.synchronized {
-      val raced = Option(filterCache.get(key)).flatMap(r => Option(r.get()))
-      raced match {
-        case Some(r) => r
-        case None =>
-          filterCache.put(key, new java.lang.ref.SoftReference(f)): Unit
-          f
-      }
-    }
-  }
   /** Distributed Bloom build over a LONG column, sized HONESTLY for
     * `expectedItems` at `fpp` — the round-15 replacement for
     * `df.stat.bloomFilter`, which (Spark 4 routes it through

@@ -322,41 +322,11 @@ case class BpeEncodeBroadcast(child: Expression,
 }
 
 object BpeEncodeBroadcast {
-  /** Per-JVM coder cache: one 50k-entry rank-map build per executor per
-    * broadcast, not per task. Keyed by application id + broadcast id
-    * (broadcast ids are a per-SparkContext counter — a context restart in
-    * the same JVM must not serve a stale table). Soft references: an idle
-    * vocabulary's map is GC-reclaimable, a reclaimed entry re-builds from
-    * the still-broadcast pairs. */
-  private val coderCache =
-    new java.util.LinkedHashMap[(String, Long),
-        java.lang.ref.SoftReference[BpeCoder]](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long),
-            java.lang.ref.SoftReference[BpeCoder]]): Boolean = size() > 8
-    }
-
-  private[functions] def cachedCoder(
-      bcast: org.apache.spark.broadcast.Broadcast[Array[(String, String)]]): BpeCoder = {
-    val key = (org.apache.spark.SparkEnv.get.conf.getAppId, bcast.id)
-    coderCache.synchronized {
-      val got = coderCache.get(key)
-      if (got != null) {
-        val c = got.get()
-        if (c != null) return c
-        coderCache.remove(key): Unit
-      }
-    }
-    val c = new BpeCoder(bcast.value.toSeq)
-    coderCache.synchronized {
-      Option(coderCache.get(key)).flatMap(r => Option(r.get())) match {
-        case Some(r) => r
-        case None =>
-          coderCache.put(key, new java.lang.ref.SoftReference(c)): Unit
-          c
-      }
-    }
-  }
+  /** Per-JVM coder: one 50k-entry rank-map build per executor per
+    * broadcast, not per task. */
+  private[functions] val cachedCoder =
+    new graft.BroadcastDecodeCache[Array[(String, String)], BpeCoder](
+      pairs => new BpeCoder(pairs.toSeq))
 }
 
 object BpeEncode {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.Memo
 import graft.sources.{GraftDvRelation, GraftFileIndex}
 import graft.tx.CommitLog
 
@@ -98,20 +99,11 @@ object MetaAggregateRewrite extends Rule[LogicalPlan] {
     * I/O, and the optimizer's fixed-point batches would re-run it on
     * every iteration whenever the rewrite DECLINES (a success replaces
     * the subtree and never re-fires) — memoize per (table, pinned
-    * version, requested columns), which is immutable state (round-8
-    * review finding). Unpinned relations (version = None: the latest
-    * could move between iterations) skip the cache. Size-bounded.
-    *
-    * The key carries the version's COMMIT-FILE IDENTITY (mtime, size) on
-    * top of (path, version): a table directory deleted and re-created at
-    * the same path restarts version numbering, and a bare (path, version)
-    * key would silently serve the OLD table's cached aggregate to a query
-    * over the new one (round-8 ADVICE, medium). A re-created commit file
-    * never stats identical, so the stale entry simply stops matching and
-    * ages out. Identity unreadable (file vacuumed/racing) → skip the
-    * cache. */
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Seq[String], Seq[String], (Long, Long)), Option[CommitLog.MetaAgg]]()
+    * version's stamp, requested columns), which is immutable state.
+    * Unpinned relations (version = None: the latest could move between
+    * iterations) skip the memo, and so does a version with no stamp. */
+  private val metaAggs = new Memo[(String, CommitLog.Stamp, Seq[String], Seq[String]),
+    Option[CommitLog.MetaAgg]](maxEntries = 512)
 
   private def cachedMetaAggregate(table: String, version: Option[Long],
       boundsCols: Seq[String], countCols: Seq[String]): Option[CommitLog.MetaAgg] = {
@@ -119,10 +111,9 @@ object MetaAggregateRewrite extends Rule[LogicalPlan] {
       try CommitLog.metaAggregate(table, boundsCols, version,
         countOnlyColumns = countCols)
       catch { case scala.util.control.NonFatal(_) => None }
-    version.zip(version.flatMap(CommitLog.manifestIdentity(table, _))).headOption match {
-      case Some((v, id)) =>
-        if (metaCache.size > 512) metaCache.clear()
-        metaCache.computeIfAbsent((table, v, boundsCols, countCols, id), _ => call())
+    version match {
+      case Some(v) =>
+        metaAggs.stamped(CommitLog.stamp(table, v).map((table, _, boundsCols, countCols)))(call())
       case None => call()
     }
   }

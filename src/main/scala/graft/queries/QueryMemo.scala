@@ -1,14 +1,17 @@
 package graft.queries
 
 import java.io.File
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The query layer's one memo: everything a named query builds once and then
-  * reuses — resolved base reads, persisted subplans, scratch tables and
-  * stores — lives in ONE JVM-wide map, behind three entry points.
+import graft.Memo
+
+/** The query layer's face of [[graft.Memo]]: everything a named query builds
+  * once and then reuses — resolved base reads, persisted subplans, scratch
+  * tables and stores — lives in ONE unbounded memo, behind three entry
+  * points.
   *
   *  - [[value]]: a lazy value (a resolved `spark.read`, a sizing statistic).
   *  - [[apply]] / [[countOf]]: a frame persisted and counted once, handed
@@ -28,39 +31,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (conf-registered catalogs, temp views, memory sinks) always belongs to
   * the session that reads it. Names are unique across the layer.
   *
-  * '''Reentrancy.''' A hit is one lock-free `ConcurrentHashMap.get`. A miss
-  * takes ONE reentrant lock, re-checks, builds and publishes — never
-  * `computeIfAbsent`: builds nest (a build may consume another entry), and a
-  * mapping function that writes its own map throws "Recursive update". A
-  * build that throws publishes nothing; the next call builds again.
+  * Hits, nested builds and failed builds follow [[graft.Memo]]'s contract.
   *
-  * '''Release.''' [[release]] unpersists every persisted frame and forgets
-  * every entry, so the next call rebuilds. Already-returned frames still
-  * recompute from lineage, and scratch roots stay on disk until exit. */
+  * '''Release.''' [[release]] (and [[graft.Memo.releaseAll]]) unpersists
+  * every persisted frame and forgets every entry, so the next call
+  * rebuilds. Scratch roots stay on disk until exit. */
 object QueryMemo {
   private final case class Persisted(df: DataFrame, rows: Long)
 
-  private val entries = new ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-  private val persisted = new ConcurrentLinkedQueue[DataFrame]()
+  private val entries = new Memo[(SparkSession, String, String), Any](onDrop = {
+    case Persisted(df, _) => df.unpersist(): Unit
+    case _ => ()
+  })
   private val roots = new ConcurrentLinkedQueue[File]()
   private val rootSeq = new AtomicLong()
 
   sys.addShutdownHook(roots.forEach(r => deleteRecursively(r))): Unit
 
-  def value[T](name: String, s: SparkSession, d: String)(build: => T): T = {
-    val key = (s, d, name)
-    val hit = entries.get(key)
-    if (hit != null) return hit.asInstanceOf[T]
-    entries.synchronized {
-      val again = entries.get(key)
-      if (again != null) again.asInstanceOf[T]
-      else {
-        val v = build
-        entries.put(key, v.asInstanceOf[AnyRef])
-        v
-      }
-    }
-  }
+  def value[T](name: String, s: SparkSession, d: String)(build: => T): T =
+    entries((s, d, name))(build).asInstanceOf[T]
 
   def apply(name: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
     persistedFrame(name, s, d)(build).df
@@ -75,7 +64,6 @@ object QueryMemo {
       build: => DataFrame): Persisted =
     value(name, s, d) {
       val df = build.persist()
-      persisted.add(df)
       // materialize before fan-out: concurrent broadcast + shuffle consumers
       // of an unmaterialized cache would each recompute
       Persisted(df, df.count())
@@ -97,12 +85,5 @@ object QueryMemo {
     f.delete(): Unit
   }
 
-  def release(): Unit = {
-    entries.clear()
-    var df = persisted.poll()
-    while (df != null) {
-      df.unpersist()
-      df = persisted.poll()
-    }
-  }
+  def release(): Unit = entries.release()
 }

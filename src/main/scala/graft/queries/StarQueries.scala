@@ -380,13 +380,16 @@ object StarQueries {
     // side (asserted in BucketingSpec; the oracle is the plain join).
     "join_bucketed" -> ((s, d) => {
       import graft.cluster.Bucketing
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$tag"
-      val l = Bucketing.ensureBucketed(s, lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount"),
-        s"lineitem_bkt_$tag", s"$base/lineitem", "l_orderkey", 16)
-      val o = Bucketing.ensureBucketed(s, orders(s, d).select("o_orderkey", "o_orderpriority"),
-        s"orders_bkt_$tag", s"$base/orders", "o_orderkey", 16)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
+      // catalog names unique per scratch root, so no two roots share a table
+      val (l, o) = QueryMemo.scratch("bucketed", s, d) { root =>
+        val tag = new java.io.File(root).getName
+        Bucketing.writeBucketed(lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount"),
+          s"${tag}_lineitem", s"$root/lineitem", "l_orderkey", 16)
+        Bucketing.writeBucketed(orders(s, d).select("o_orderkey", "o_orderpriority"),
+          s"${tag}_orders", s"$root/orders", "o_orderkey", 16)
+        (s"${tag}_lineitem", s"${tag}_orders")
+      }
+      s.table(l).join(s.table(o), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_items"),
           dsum4(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))

@@ -27,7 +27,7 @@ import graft.tx.CommitLog
   * resolution/refusal.
   *
   * `TIMESTAMP AS OF` resolves to the LATEST version whose commit time
-  * (the commit file's mtime — [[CommitLog.manifestIdentity]]) is ≤ the
+  * (the commit file's mtime — [[CommitLog.stamp]]) is ≤ the
   * requested instant, Delta's contract; an instant before the first
   * commit refuses. The timestamp expression must fold to a constant
   * (Spark's own v2 time travel requires the same). */
@@ -85,7 +85,7 @@ object GraftTimeTravel {
   private def versionAt(root: String, micros: Long): Long = {
     val wall = Math.floorDiv(micros, 1000L)
     val at = CommitLog.versions(root).reverse.find(v =>
-      CommitLog.manifestIdentity(root, v).exists(_._1 <= wall))
+      CommitLog.stamp(root, v).exists(_.mtime <= wall))
     at.getOrElse(throw new IllegalArgumentException(
       s"$root has no version committed at or before " +
         s"${java.time.Instant.ofEpochMilli(wall)} (earliest commit is later)"))

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
+import graft.Memo
+
 /** Minimal transactional commit log over parquet — the Delta-Lake-shaped
   * capability gap the reference relies on (`save_to_raw_delta_dev.py:63-87`
   * atomic appends/overwrites, `usgs_earthquake_write_object_storage.py:106`
@@ -29,7 +31,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * [[CheckpointEvery]]-th version — and any version whose delta would be
   * LARGER than its snapshot, e.g. an overwrite — is a checkpoint, so a
   * cold read replays at most CheckpointEvery−1 deltas above one checkpoint
-  * and a warm read (the [[manifestCache]] holds the predecessor) applies
+  * and a warm read (the [[manifests]] memo holds the predecessor) applies
   * exactly one. This is the delta-rs `_delta_log` shape (per-commit deltas
   * + periodic checkpoints, the storage layer the reference writes through,
   * `save_to_raw_delta_dev.py:63-80`): without it, a paged hourly ingest
@@ -2812,23 +2814,15 @@ object CommitLog {
     * position cannot exist. Pinned by TxDvSpec's death-disjointness
     * property. Powers both the exact COUNT(*) correction (sum of set
     * sizes) and the per-file live re-aggregation of column stats. */
-  /** Identity-validated cache of [[liveDvDeathMap]]'s parse: DV parquet
-    * files are immutable once published, so the parsed death map for a
-    * (table, version) can be reused while every underlying DV file's
-    * (path, mtime, size) identity still matches — a repeated
-    * metadata-only COUNT/MIN/MAX over an unchanged DV snapshot was
-    * otherwise re-reading the same driver-side parquet on every call
-    * (the dominant cost of the metadata fast path under DVs). Entries
-    * are bounded by the caller's `maxDvRows` cap; small LRU. */
-  private val dvDeathCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        (Seq[(String, Long, Long)], Option[Map[String, Set[Long]]])](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long),
-            (Seq[(String, Long, Long)], Option[Map[String, Set[Long]]])]): Boolean =
-        size() > 16
-    }
+  /** Parsed death maps: DV parquet files are immutable once published, so
+    * the parsed death map for a (table, version) is reused while every
+    * underlying DV file's (path, mtime, size) identity — part of the key —
+    * still matches. A repeated metadata-only COUNT/MIN/MAX over an
+    * unchanged DV snapshot otherwise re-read the same driver-side parquet
+    * on every call (the dominant cost of the metadata fast path under
+    * DVs). Entries are bounded by the caller's `maxDvRows` cap. */
+  private val dvDeaths = new Memo[(String, Long, Long, Seq[(String, Long, Long)]),
+    Option[Map[String, Set[Long]]]](maxEntries = 16)
 
   private def liveDvDeathMap(table: String, m: Manifest,
       maxDvRows: Long): Option[Map[String, Set[Long]]] = {
@@ -2838,12 +2832,7 @@ object CommitLog {
       try (p.toString, Files.getLastModifiedTime(p).toMillis, Files.size(p))
       catch { case _: java.io.IOException => (p.toString, -1L, -1L) }
     }
-    val key = (table, m.version, maxDvRows)
-    dvDeathCache.synchronized(Option(dvDeathCache.get(key))) match {
-      case Some((cachedId, cached)) if cachedId == identity => return cached
-      case _ =>
-    }
-    val result: Option[Map[String, Set[Long]]] = {
+    dvDeaths((table, m.version, maxDvRows, identity)) {
       if (files.map(FileStats.footerRowCount(_, conf)).sum > maxDvRows) None
       else {
         val live = m.files.map(fileNameOf).toSet
@@ -2852,8 +2841,6 @@ object CommitLog {
           .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toSet })
       }
     }
-    dvDeathCache.synchronized(dvDeathCache.put(key, (identity, result)): Unit)
-    result
   }
 
   private def metaColAgg(files: Seq[Map[String, FileStats.ColStats]], c: String,
@@ -3833,112 +3820,60 @@ object CommitLog {
     }
   }
 
-  /** Stable identity of a version's commit FILE — (mtime millis, byte
-    * size) — for caches keyed on (table path, version): a table directory
-    * deleted and re-created at the same path restarts version numbering,
-    * so a bare (path, version) key would serve the OLD table's cached
-    * state to a query over the new one (round-8 ADVICE, medium). The
-    * commit timestamp half doubles as the version's commit TIME for
-    * `TIMESTAMP AS OF` resolution. None when the commit file is absent or
-    * unreadable (vacuumed, racing a re-create) — callers must then skip
-    * their cache / refuse. */
-  def manifestIdentity(table: String, version: Long): Option[(Long, Long)] = {
-    val p = Paths.get(table).resolve(LogDir).resolve(f"$version%020d$Suffix")
-    try Some((Files.getLastModifiedTime(p).toMillis, Files.size(p)))
-    catch { case _: java.io.IOException => None }
-  }
+  /** A version's commit stamp: the version plus its commit FILE's identity
+    * (mtime millis, byte size, fileKey). Every cache of state derived from
+    * a table version keys on it: a table directory deleted and re-created
+    * at the same path restarts version numbering, so a bare (path,
+    * version) key would serve the OLD table's state to a query over the
+    * new one, and a same-size commit file rewritten within the
+    * filesystem's timestamp granularity would pass an (mtime, size) check
+    * — the fileKey (device+inode on POSIX) changes with every re-created
+    * file. The mtime doubles as the version's commit TIME for `TIMESTAMP
+    * AS OF` resolution. */
+  final case class Stamp(version: Long, mtime: Long, size: Long, fileKey: String)
 
-  /** Identity-validated manifest cache: commit files are immutable once
-    * linked, so a parsed [[Manifest]] can be reused as long as the file's
-    * identity still matches — one `stat` per consult instead of a full
-    * read+parse. Constraints enforcement, layout resolution, and snapshot
-    * planning all consult manifests on the write hot path (round-11
-    * review finding: a mutation re-parsed the same multi-MB manifest 3+
-    * times); a vacuumed or re-created commit file fails the identity
-    * check and re-reads. The identity is (mtime, size, fileKey): DROP
-    * TABLE + re-CREATE at the same root restarts version numbering, and
-    * a same-size manifest rewritten within the filesystem's timestamp
-    * granularity would pass a bare (mtime, size) check — the fileKey
-    * (device+inode on POSIX) changes with every re-created file, closing
-    * that hole without needing an invalidation hook on every delete path
-    * (round-11 ADVICE, low). Bounded LRU. */
-  private val manifestCache =
-    new java.util.LinkedHashMap[(String, Long), ((Long, Long, String), Manifest)](
-      64, 0.75f, true)
-  /** Sum of `files.size` across cached manifests — the cache's real
-    * weight is file-path strings, not entry count: 256 manifests of a
-    * 10⁶-file table would pin tens of GB, so eviction is SIZE-aware (by
-    * total cached file entries) on top of the 256-entry bound. ~4M
-    * entries ≈ a few hundred MB — generous locally, bounded at scale. */
-  private var manifestCacheEntries: Long = 0L
-  private val MaxManifestCacheEntries: Long = 4_000_000L
-
-  private def manifestCachePut(key: (String, Long),
-      value: ((Long, Long, String), Manifest)): Unit =
-    manifestCache.synchronized {
-      Option(manifestCache.put(key, value))
-        .foreach(old => manifestCacheEntries -= math.max(1, old._2.files.size))
-      manifestCacheEntries += math.max(1, value._2.files.size)
-      val it = manifestCache.entrySet().iterator()
-      while ((manifestCache.size() > 256 ||
-          manifestCacheEntries > MaxManifestCacheEntries) && it.hasNext) {
-        val eldest = it.next()
-        if (eldest.getKey != key) { // never evict what we just inserted
-          manifestCacheEntries -= math.max(1, eldest.getValue._2.files.size)
-          it.remove()
-        }
-      }
-    }
-
-  /** Full cache identity of a version's commit file — see
-    * [[manifestCache]]. None when absent/unreadable. */
-  private def cacheIdentity(table: String, version: Long): Option[(Long, Long, String)] = {
+  /** The stamp of `version`'s commit file; None when the file is absent or
+    * unreadable (vacuumed, racing a re-create) — callers then build
+    * uncached ([[graft.Memo.stamped]]) or refuse. */
+  def stamp(table: String, version: Long): Option[Stamp] = {
     val p = Paths.get(table).resolve(LogDir).resolve(f"$version%020d$Suffix")
     try {
       val a = Files.readAttributes(p,
         classOf[java.nio.file.attribute.BasicFileAttributes])
-      Some((a.lastModifiedTime.toMillis, a.size,
+      Some(Stamp(version, a.lastModifiedTime.toMillis, a.size,
         Option(a.fileKey).map(_.toString).getOrElse("")))
     } catch { case _: java.io.IOException => None }
   }
 
-  /** Drop every cached manifest of `table`: DROP TABLE / delete-tree
-    * hygiene (the fileKey identity already defends correctness against
+  /** The stamp of the latest version; None for a deleted or never-created
+    * table. */
+  def latestStamp(table: String): Option[Stamp] =
+    latestVersion(table).flatMap(stamp(table, _))
+
+  /** Parsed manifests: commit files are immutable once linked, so a parsed
+    * [[Manifest]] is reused under its stamp — one `stat` per consult
+    * instead of a full read+parse. Constraints enforcement, layout
+    * resolution, and snapshot planning all consult manifests on the write
+    * hot path (a mutation used to re-parse the same multi-MB manifest 3+
+    * times). Weighed by file entries, not manifests: 256 manifests of a
+    * 10⁶-file table would pin tens of GB, so past ~4M cached file entries
+    * (a few hundred MB) the eldest go, on top of the 256-entry bound. */
+  private val manifests = new Memo[(String, Stamp), Manifest](maxEntries = 256,
+    maxWeight = 4_000_000L, weight = m => math.max(1, m.files.size))
+
+  /** Drop every cached manifest and snapshot read of `table`: DROP TABLE /
+    * delete-tree hygiene (the stamp already defends correctness against
     * re-creation; this frees the memory immediately) and the hook cold-
     * reader simulations use — a live cache legitimately serves a parsed
     * chain even after external damage to its files. */
   def invalidateCachedManifests(table: String): Unit = {
-    manifestCache.synchronized {
-      val it = manifestCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 == table) {
-          manifestCacheEntries -= math.max(1, e.getValue._2.files.size)
-          it.remove()
-        }
-      }
-    }
-    snapshotReadCache.synchronized {
-      val it = snapshotReadCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey._2 == table) it.remove()
-    }
+    manifests.removeIf(_._1 == table)
+    snapshotReads.removeIf(_._2 == table)
   }
 
   /** The manifest at `version` (throws if absent). */
-  def manifest(table: String, version: Long): Manifest = {
-    val key = (table, version)
-    val id = cacheIdentity(table, version)
-    if (id.isDefined) {
-      val hit = manifestCache.synchronized(Option(manifestCache.get(key)))
-      hit match {
-        case Some((cachedId, m)) if cachedId == id.get => return m
-        case _ =>
-      }
-    }
-    val m = parseManifest(table, version)
-    id.foreach(i => manifestCachePut(key, (i, m)))
-    m
-  }
+  def manifest(table: String, version: Long): Manifest =
+    manifests.stamped(stamp(table, version).map((table, _)))(parseManifest(table, version))
 
   private def parseManifest(table: String, version: Long): Manifest = {
     val p = Paths.get(table).resolve(LogDir).resolve(f"$version%020d$Suffix")
@@ -4063,40 +3998,25 @@ object CommitLog {
     latestManifest(table).getOrElse(
       throw new IllegalArgumentException(s"$table has no committed versions"))
 
-  /** Resolved snapshot-read memo (optimization round 17, guide §5 driver —
-    * same catalog rationale as [[graft.queries.Tables]]'s base-table memo):
-    * a snapshot read's inputs are FULLY determined by (table, manifest) —
-    * data files and DV dirs are uuid-named per commit and never mutated in
-    * place — yet every call re-resolved one source per commit dir and, on
-    * DV tables, re-ran the DV footer probe and collect. The memo holds the
-    * LAZY resolved frame only (plus the bounded collected DV rows a fresh
-    * call would collect identically); every action still recomputes from
-    * the files. Keyed on the full Manifest VALUE, so a modified-files call
-    * (delete/merge touched-set reads) or a re-created table at the same
-    * version can never conflate. LRU-bounded; [[invalidateCachedManifests]]
-    * clears a table's entries (DROP TABLE / damage-simulation hygiene, the
-    * same contract as [[manifestCache]]). */
-  private val snapshotReadCache =
-    new java.util.LinkedHashMap[(SparkSession, String, Manifest, Long), DataFrame](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Manifest, Long), DataFrame]): Boolean =
-        size() > 128
-    }
+  /** Resolved snapshot reads: a snapshot read's inputs are FULLY
+    * determined by (table, manifest) — data files and DV dirs are
+    * uuid-named per commit and never mutated in place — yet every call
+    * re-resolved one source per commit dir and, on DV tables, re-ran the DV
+    * footer probe and collect. The memo holds the LAZY resolved frame only
+    * (plus the bounded collected DV rows a fresh call would collect
+    * identically); every action still recomputes from the files. Keyed on
+    * the full Manifest VALUE, so a modified-files call (delete/merge
+    * touched-set reads) or a re-created table at the same version can
+    * never conflate. */
+  private val snapshotReads =
+    new Memo[(SparkSession, String, Manifest, Long), DataFrame](maxEntries = 128)
 
   private[tx] def readManifest(spark: SparkSession, table: String, m: Manifest): DataFrame = {
     // the DV join shape depends on the session's broadcast cap (collected
     // LocalRelation vs distributed scan) — a DV-carrying manifest keys on
     // the cap in force so a conf change resolves fresh
     val dvCap = if (m.dvDirs.isEmpty) 0L else dvBroadcastCap(spark)
-    val key = (spark, table, m, dvCap)
-    snapshotReadCache.synchronized(Option(snapshotReadCache.get(key))) match {
-      case Some(df) => df
-      case None =>
-        val df = buildManifestRead(spark, table, m)
-        snapshotReadCache.synchronized(snapshotReadCache.put(key, df): Unit)
-        df
-    }
+    snapshotReads((spark, table, m, dvCap))(buildManifestRead(spark, table, m))
   }
 
   private def buildManifestRead(spark: SparkSession, table: String, m: Manifest): DataFrame = {
@@ -4195,7 +4115,7 @@ object CommitLog {
     * distributed parquet scan; only the distinct dead file NAMES are
     * collected (bounded by the dead-FILE count, never the death count). */
   /** The session's effective DV collect-and-broadcast cap — shared by
-    * [[loadDvs]] and the [[snapshotReadCache]] key (the resolved read's
+    * [[loadDvs]] and the [[snapshotReads]] key (the resolved read's
     * shape depends on it). */
   private def dvBroadcastCap(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.dv.broadcastMaxRows")

@@ -179,8 +179,8 @@ object DeltaExport {
     val partCols = m.partitionBy
     // commit time = the manifest file's mtime (the same clock TIMESTAMP AS
     // OF resolves against), so repeated exports of one version are stable
-    val createdTime = CommitLog.manifestIdentity(root.toString, v)
-      .map(_._1).getOrElse(0L)
+    val createdTime = CommitLog.stamp(root.toString, v)
+      .map(_.mtime).getOrElse(0L)
     // one add action per file; partition values parsed from the hive
     // `k=v` dirs graft wrote them into (Delta readers rebuild partition
     // columns from this map, typed by schemaString)

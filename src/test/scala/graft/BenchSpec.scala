@@ -59,7 +59,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("cross-run medians aggregate per query over the history file") {
-    val hist = java.nio.file.Files.createTempDirectory("graft_bench")
+    val hist = graft.SparkSpec.tmpPath("graft_bench")
       .resolve("hist.jsonl").toString
     def t(sec: Double) = Bench.Timing(Some(sec), None)
     // three runs with a drifty q1 and a stable q2; q3 fails in run 2
@@ -102,7 +102,7 @@ class BenchSpec extends SparkSpec {
   test("the headline median is WINDOWED: a real fix shows within " +
       "MedianWindow runs instead of being buried by stale history " +
       "(round-12 VERDICT item 3)") {
-    val hist = java.nio.file.Files.createTempDirectory("graft_bench3")
+    val hist = graft.SparkSpec.tmpPath("graft_bench3")
       .resolve("hist.jsonl").toString
     def t(sec: Double) = Bench.Timing(Some(sec), None)
     // 20 slow historical runs, then MedianWindow fast runs after a fix
@@ -121,7 +121,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("medians are restricted to the current run's query set (like-for-like)") {
-    val hist = java.nio.file.Files.createTempDirectory("graft_bench2")
+    val hist = graft.SparkSpec.tmpPath("graft_bench2")
       .resolve("hist.jsonl").toString
     def t(sec: Double) = Bench.Timing(Some(sec), None)
     // two historical runs carry q_old; the current run renamed it to q_new

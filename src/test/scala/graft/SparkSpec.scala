@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +23,29 @@ object SparkSpec {
     // already-built session
     .withExtensions(new graft.functions.GraftExtensions)
     .getOrCreate()
+
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]()
+
+  sys.addShutdownHook(tmpDirs.forEach(deleteTree)): Unit
+
+  def deleteTree(p: Path): Unit = {
+    if (Files.isDirectory(p) && !Files.isSymbolicLink(p)) {
+      val children = Files.list(p)
+      try children.toArray(n => new Array[Path](n)).foreach(deleteTree)
+      finally children.close()
+    }
+    Files.deleteIfExists(p): Unit
+  }
+
+  /** A fresh temp dir, deleted recursively when the test JVM exits. Every
+    * spec's temp dir comes from here, so a test run leaves none behind. */
+  def tmpPath(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
+    tmpDirs.add(p)
+    p
+  }
+
+  def tmpDir(prefix: String): String = tmpPath(prefix).toString
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -28,6 +54,6 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
+  def tmpPath(prefix: String): Path = SparkSpec.tmpPath(prefix)
 }

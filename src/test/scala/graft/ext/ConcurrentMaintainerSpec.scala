@@ -24,7 +24,7 @@ class ConcurrentMaintainerSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_race").toString
+    graft.SparkSpec.tmpPath("graft_race").toString
 
   /** Run `f` in two simultaneously-released threads, each retrying the
     * documented-loud conflicts; returns total retry count. Any OTHER

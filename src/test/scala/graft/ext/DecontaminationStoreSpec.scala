@@ -15,7 +15,7 @@ class DecontaminationStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_deconstore").toString
+    graft.SparkSpec.tmpPath("graft_deconstore").toString
 
   // train docs share an 8-token passage with some test docs (planted
   // contamination); others are clean

@@ -103,7 +103,7 @@ class DedupSpec extends SparkSpec {
         .filter { case (a, b) => a != b }.toDF("a", "b")
       val viaLocal = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
       val starLocal = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
-      val ckDir = java.nio.file.Files.createTempDirectory("graft_ccck")
+      val ckDir = graft.SparkSpec.tmpPath("graft_ccck")
       spark.sparkContext.setCheckpointDir(ckDir.toString)
       try {
         assert(Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap === viaLocal)

@@ -14,7 +14,7 @@ class DedupStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_dedupstore").toString
+    graft.SparkSpec.tmpPath("graft_dedupstore").toString
 
   // two planted near-dup clusters + singletons; texts long enough to shingle
   private def corpus(ids: Long*): Seq[(Long, String)] = ids.map { i =>
@@ -189,19 +189,19 @@ class DedupStoreSpec extends SparkSpec {
     val all = corpus(0L to 11L: _*)
     CommitLog.commit(all.toDF("doc_id", "text"), base, "append")
     DedupStore.build(spark, base, index)
-    DedupStore.invalidateConfigCache()
-    val c0 = DedupStore.configCheckCount
+    DedupStore.checkedConfigs.release()
+    val c0 = DedupStore.checkedConfigs.misses
     DedupStore.pairs(spark, index).count()
     DedupStore.candidates(spark, index,
       corpus(100L).toDF("doc_id", "text")).count()
     DedupStore.pairs(spark, index).count()
-    assert(DedupStore.configCheckCount === c0 + 1,
+    assert(DedupStore.checkedConfigs.misses === c0 + 1,
       "repeated probes of an unchanged store must not re-run the check")
     // any commit to either table invalidates: a re-build bumps versions
     // and the NEXT probe re-checks (and still refuses a planted tear)
     DedupStore.build(spark, base, index, bands = 8)
     DedupStore.pairs(spark, index).count()
-    assert(DedupStore.configCheckCount === c0 + 2)
+    assert(DedupStore.checkedConfigs.misses === c0 + 2)
   }
 
   test("small-batch candidates gate the stored scan through bandkey blooms") {

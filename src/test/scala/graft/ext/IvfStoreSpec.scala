@@ -15,7 +15,7 @@ class IvfStoreSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_ivfstore").toString
+    graft.SparkSpec.tmpPath("graft_ivfstore").toString
 
   private def emb = graft.queries.Tables.embeddings(spark, sf)
 
@@ -32,7 +32,7 @@ class IvfStoreSpec extends SparkSpec {
 
     // restart simulation: drop every in-memory index cache — the persisted
     // index must answer with NOTHING in this process but the storage
-    IvfIndex.releaseCaches()
+    graft.Memo.releaseAll()
     val queries = emb.filter(col("vec_id") < 20)
     val exact = Similarity.topKExact(emb, queries, k = 5)
     val approx = IvfStore.topK(spark, index, queries, k = 5)

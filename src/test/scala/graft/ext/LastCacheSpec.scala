@@ -1,11 +1,12 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
+import org.apache.spark.storage.StorageLevel
 
-/** Optimization round 17: [[LastCache.swap]] short-circuits a repeated
-  * call on a canonically identical plan — the held, already-materialized
-  * frame is returned with NO re-persist and NO re-count job (previously
-  * every call paid one driver-blocking count over cached blocks). */
+/** The one-entry [[Memo.Frames]] that holds Dedup's band/shingle tables and
+  * the un-keyed IVF/PQ builds: a repeated call on a canonically identical
+  * plan gets the held, already-materialized frame back with NO re-persist
+  * and NO re-count job; a new plan replaces (and unpersists) the old one. */
 class LastCacheSpec extends SparkSpec {
 
   private def jobsDuring(body: => Unit): Seq[Int] = {
@@ -18,11 +19,11 @@ class LastCacheSpec extends SparkSpec {
 
   test("same-plan swap returns the held frame and runs no job") {
     import spark.implicits._
-    val cache = new LastCache
+    val cache = new Memo.Frames
     def make() = (1 to 50).toDF("x").filter("x % 2 = 0")
-    val first = cache.swap(make())
+    val first = cache.persist(make())
     var second: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsDuring { second = cache.swap(make()) }
+    val jobs = jobsDuring { second = cache.persist(make()) }
     assert(second eq first, "same canonical plan must return the held cache")
     assert(jobs.isEmpty, s"same-plan swap ran jobs $jobs")
     assert(second.count() == 25L)
@@ -31,11 +32,13 @@ class LastCacheSpec extends SparkSpec {
 
   test("different-plan swap materializes the new frame and releases the old") {
     import spark.implicits._
-    val cache = new LastCache
-    val a = cache.swap((1 to 10).toDF("x"))
-    val b = cache.swap((1 to 20).toDF("x"))
+    val cache = new Memo.Frames
+    val a = cache.persist((1 to 10).toDF("x"))
+    val b = cache.persist((1 to 20).toDF("x"))
     assert(!(b eq a))
     assert(b.count() == 20L)
+    assert(a.storageLevel === StorageLevel.NONE, "the replaced frame is unpersisted")
+    assert(cache.evictions === 1L)
     // the old frame recomputes from lineage after release — still correct
     assert(a.count() == 10L)
     cache.release()

@@ -45,6 +45,6 @@ class PqIndexSpec extends SparkSpec {
     val top1 = PqIndex.topK(emb, queries, k = 1)
     assert(top1.count() === 20)
     // the unkeyed path pins a persisted codes frame in the shared session
-    PqIndex.releaseCaches()
+    graft.Memo.releaseAll()
   }
 }

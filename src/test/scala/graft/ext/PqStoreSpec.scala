@@ -16,7 +16,7 @@ class PqStoreSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_pqstore").toString
+    graft.SparkSpec.tmpPath("graft_pqstore").toString
 
   private def emb = graft.queries.Tables.embeddings(spark, sf)
 
@@ -43,7 +43,7 @@ class PqStoreSpec extends SparkSpec {
 
     // restart simulation: the persisted index must answer with NOTHING in
     // this process but the storage (PqIndex session caches dropped)
-    PqIndex.releaseCaches()
+    graft.Memo.releaseAll()
     val queries = emb.filter(col("vec_id") < 20)
     val exact = Similarity.topKExact(emb, queries, k = 5)
     // floor vs the FULL corpus exact even though the index covers 90% yet
@@ -203,7 +203,7 @@ class PqStoreSpec extends SparkSpec {
 
     // gated answers clear the compound (cell miss × PQ error) floor over
     // the FULL corpus, held-out tenth included
-    PqIndex.releaseCaches()
+    graft.Memo.releaseAll()
     val queries = emb.filter(col("vec_id") < 20)
     val exact = Similarity.topKExact(emb, queries, k = 5)
     val r = recall(exact,

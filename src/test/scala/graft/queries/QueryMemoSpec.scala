@@ -77,16 +77,27 @@ class QueryMemoSpec extends SparkSpec {
   }
 
   test("no query file but QueryMemo keeps a private memo or reap hook") {
-    val dir = Paths.get("src/main/scala/graft/queries")
-    val files = Files.list(dir).iterator().asScala.toSeq
+    // engine-wide: every cache in src/main is a graft.Memo, except the
+    // exceptions its scaladoc names — the executor-side
+    // BroadcastDecodeCache (in Memo.scala) and QueryMemo's reap hook — and
+    // AnnProbe's job-start bookkeeping, a listener's local map, not a cache
+    val main = Paths.get("src/main")
+    val files = Files.walk(main).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
+    assert(files.exists(_.getFileName.toString == "Memo.scala"))
     assert(files.exists(_.getFileName.toString == "QueryMemo.scala"))
-    val banned = Seq("ConcurrentHashMap", "computeIfAbsent", "TrieMap", "addShutdownHook")
+    val banned = Seq("ConcurrentHashMap", "java.util.LinkedHashMap", "removeEldestEntry",
+      "computeIfAbsent", "TrieMap", "addShutdownHook")
+    val allowed = Map(
+      "Memo.scala" -> banned.toSet,
+      "QueryMemo.scala" -> Set("addShutdownHook"),
+      "AnnProbe.scala" -> Set("ConcurrentHashMap"))
     val offenders = for {
-      f <- files if f.getFileName.toString != "QueryMemo.scala"
+      f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      word <- banned if line.contains(word)
-    } yield s"${f.getFileName}:${i + 1}: $word"
+      word <- banned if line.contains(word) &&
+        !allowed.getOrElse(f.getFileName.toString, Set.empty[String])(word)
+    } yield s"${main.relativize(f)}:${i + 1}: $word"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

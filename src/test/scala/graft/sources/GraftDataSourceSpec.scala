@@ -17,7 +17,7 @@ class GraftDataSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_dsv").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_dsv").resolve("t").toString
 
   /** id-range-clustered commits so footer stats genuinely prune. */
   private def seedClustered(t: String): Unit = {

@@ -14,9 +14,9 @@ class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   test("a full cycle on a mutated table: nothing live lost, feed intact, width bounded, audit clean") {
-    val t = Files.createTempDirectory("graft_maint").resolve("t").toString
-    val ck = Files.createTempDirectory("graft_maint_ck").toString
-    val out = Files.createTempDirectory("graft_maint_out").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint").resolve("t").toString
+    val ck = graft.SparkSpec.tmpPath("graft_maint_ck").toString
+    val out = graft.SparkSpec.tmpPath("graft_maint_out").toString
     // 16 mirrored single-row appends (auto-compaction off so the WIDTH is
     // really there for the cycle to fix), then the full mutation family
     (0 until 16).foreach { i =>
@@ -77,7 +77,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("the cycle upgrades legacy stats sidecars so grandfathered " +
       "coverage becomes measured (round-15 ADVICE on FileStats)") {
-    val t = Files.createTempDirectory("graft_maint_sc").resolve("t").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint_sc").resolve("t").toString
     CommitLog.commit((0L until 50L).toDF("id").coalesce(1), t, "append")
     val m = CommitLog.manifest(t, 1L)
     val dir = Paths.get(t).resolve(CommitLog.commitDirOf(m.files.head))
@@ -99,7 +99,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("the cycle re-sizes SATURATED decon shards alone — per-shard " +
       "capacity decisions (round-15 VERDICT item 1)") {
-    val root = Files.createTempDirectory("graft_maint_decon").toString
+    val root = graft.SparkSpec.tmpPath("graft_maint_decon").toString
     val base = s"$root/base"
     val index = s"$root/index"
     def docs(ids: Range) = ids.map(i =>
@@ -138,7 +138,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("accumulated deletion vectors trigger the cycle's compact — merge-on-read debt repaid") {
-    val t = Files.createTempDirectory("graft_maint_dv").resolve("t").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint_dv").resolve("t").toString
     CommitLog.commit((0 until 200).map(i => (i.toLong, s"s$i")).toDF("id", "s")
       .repartition(2), t, "append")
     // a trickle of DV deletes: few commit dirs (width trigger stays cold),
@@ -160,7 +160,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("the cycle refreshes a registered IVF index, replay-safe, and flags drift-staleness") {
-    val root = Files.createTempDirectory("graft_maint_ivf").toString
+    val root = graft.SparkSpec.tmpPath("graft_maint_ivf").toString
     val base = s"$root/base"
     val index = s"$root/index"
     val emb = graft.queries.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -210,7 +210,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("the cycle refreshes a registered PQ index through the same IndexRef contract") {
-    val root = Files.createTempDirectory("graft_maint_pq").toString
+    val root = graft.SparkSpec.tmpPath("graft_maint_pq").toString
     val base = s"$root/base"
     val index = s"$root/index"
     val emb = graft.queries.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -233,7 +233,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(r2.refreshedIndexes === Seq(index -> CommitLog.latestVersion(base).get))
     assert(CommitLog.latestVersion(s"$index/codes") === Some(cV))
     // the maintained index keeps answering from storage
-    graft.ext.PqIndex.releaseCaches()
+    graft.Memo.releaseAll()
     val res = graft.ext.PqStore.topK(spark, base, index,
       emb.filter(col("vec_id") < 10), k = 3)
     assert(res.groupBy("query_id").count().count() === 10L)
@@ -243,7 +243,7 @@ class MaintenanceSpec extends SparkSpec {
     // round-13 VERDICT item 2: the band table has the identical watermark
     // contract as the ANN stores, so the hourly cron analogue must drive
     // all three from one Policy — no separate dedup cron.
-    val root = Files.createTempDirectory("graft_maint_dedup").toString
+    val root = graft.SparkSpec.tmpPath("graft_maint_dedup").toString
     val base = s"$root/base"
     val (ivf, pq, ddp) = (s"$root/ivf", s"$root/pq", s"$root/dedup")
     val dir = "/root/testdata/sf0.001"
@@ -288,7 +288,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("the cycle re-clusters a gated index's codes once refresh merges widen it") {
-    val root = Files.createTempDirectory("graft_maint_ivfpq").toString
+    val root = graft.SparkSpec.tmpPath("graft_maint_ivfpq").toString
     val base = s"$root/base"
     val index = s"$root/index"
     val emb = graft.queries.Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -329,14 +329,14 @@ class MaintenanceSpec extends SparkSpec {
     assert(kept.size < m.files.size,
       s"cell gate prunes nothing: ${kept.size} of ${m.files.size}")
     // and the gated query still answers
-    graft.ext.PqIndex.releaseCaches()
+    graft.Memo.releaseAll()
     val res = graft.ext.PqStore.topK(spark, base, index,
       emb.filter(col("vec_id") < 10), k = 3, nProbe = 4)
     assert(res.groupBy("query_id").count().count() === 10L)
   }
 
   test("an abandoned reader cursor pinning vacuum is surfaced, and the override drops it") {
-    val t = Files.createTempDirectory("graft_maint4").resolve("t").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint4").resolve("t").toString
     (0 until 3).foreach { i =>
       CommitLog.commit(Seq((i.toLong, s"s$i")).toDF("id", "s"), t, "append",
         autoCompactEvery = 0)
@@ -362,7 +362,7 @@ class MaintenanceSpec extends SparkSpec {
     // millisecond publish window returned healthy=false — a spurious page.
     // The cycle now re-heals and re-audits once before declaring unhealthy
     // (safe because repairCdc is publish-race-free as of this round).
-    val t = Files.createTempDirectory("graft_maint3").resolve("t").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint3").resolve("t").toString
     CommitLog.commit((0 until 200).map(i => (i.toLong, s"s$i"))
       .toDF("id", "s").repartition(4), t, "append")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
@@ -393,7 +393,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("the cycle heals a crashed cdc publish before auditing") {
-    val t = Files.createTempDirectory("graft_maint2").resolve("t").toString
+    val t = graft.SparkSpec.tmpPath("graft_maint2").resolve("t").toString
     CommitLog.commit((0 until 10).map(i => (i.toLong, s"s$i")).toDF("id", "s"),
       t, "append")
     val v = CommitLog.delete(spark, t, col("id") === 1L)

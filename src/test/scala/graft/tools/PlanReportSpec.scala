@@ -46,7 +46,7 @@ class PlanReportSpec extends SparkSpec {
 
   test("pushed_filters is three-state: yes when a scan carries pushdown, " +
       "none on an unpushable residual filter, n/a with no predicate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_planrep")
+    val dir = graft.SparkSpec.tmpPath("graft_planrep")
     (0L until 100L).toDF("id").write.mode("overwrite")
       .parquet(s"$dir/t")
     val t = spark.read.parquet(s"$dir/t")

@@ -15,7 +15,7 @@ class CommitLogSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txspec").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_txspec").resolve("t").toString
 
   test("append/read roundtrip and version history") {
     val t = freshTable()
@@ -138,7 +138,7 @@ class CommitLogSpec extends SparkSpec {
     val q = CommitLog.readStream(spark, t)
       .writeStream.format("memory").queryName("empty_feed")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_emptyfeed").toString)
+        graft.SparkSpec.tmpPath("graft_emptyfeed").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     assert(spark.table("empty_feed").count() === 0L)
@@ -482,8 +482,8 @@ class CommitLogSpec extends SparkSpec {
 
   test("pruneMirrorConsumed prunes exactly the subscriber's committed progress") {
     val t = freshTable()
-    val ck = Files.createTempDirectory("graft_ckprune").toString
-    val out = Files.createTempDirectory("graft_ckout").toString
+    val ck = graft.SparkSpec.tmpPath("graft_ckprune").toString
+    val out = graft.SparkSpec.tmpPath("graft_ckout").toString
     CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true)
     CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true)
     // a checkpoint-recoverable subscriber (parquet sink, append mode)

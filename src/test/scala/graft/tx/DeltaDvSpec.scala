@@ -63,7 +63,7 @@ class DeltaDvSpec extends AnyFunSuite {
 
   test("DV file: multiple vectors pack into one file; descriptors " +
       "round-trip; CRC and cardinality corruption refuse") {
-    val root = Files.createTempDirectory("graft_dv")
+    val root = graft.SparkSpec.tmpPath("graft_dv")
     val uuid = UUID.randomUUID()
     val v1 = Array(1L, 3L, 5L)
     val v2 = Array.tabulate(7000)(_.toLong)
@@ -96,7 +96,7 @@ class DeltaDvSpec extends AnyFunSuite {
 
   test("storageType p resolves table-relative paths from a RELATIVE root " +
       "too, and refuses escapes") {
-    val abs = Files.createTempDirectory("graft_dvp")
+    val abs = graft.SparkSpec.tmpPath("graft_dvp")
     val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs)
     val uuid = UUID.randomUUID()
     val rows = Array(1L, 2L)
@@ -113,7 +113,7 @@ class DeltaDvSpec extends AnyFunSuite {
 
   test("writeDvFile is idempotent: re-writing the same uuid atomically " +
       "replaces the prior file") {
-    val root = Files.createTempDirectory("graft_dvw")
+    val root = graft.SparkSpec.tmpPath("graft_dvw")
     val uuid = UUID.randomUUID()
     val d1 = DeltaDv.writeDvFile(root, uuid, Seq(Array(1L, 2L))).head
     val d2 = DeltaDv.writeDvFile(root, uuid, Seq(Array(1L, 2L, 3L))).head
@@ -129,7 +129,7 @@ class DeltaDvSpec extends AnyFunSuite {
     // inline payloads are base85 of the raw bitmap (4-aligned already:
     // magic+count+cookie words keep it aligned for array containers of
     // even cardinality; this fixture is)
-    assert(DeltaDv.readDescriptor(Files.createTempDirectory("x"), inline).toSeq
+    assert(DeltaDv.readDescriptor(graft.SparkSpec.tmpPath("x"), inline).toSeq
       === rows.toSeq)
   }
 

@@ -19,7 +19,7 @@ class DeltaExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_dexp").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_dexp").resolve("t").toString
 
   private def logFile(t: String): String =
     Paths.get(t).resolve("_delta_log").resolve(f"${0L}%020d.json").toString
@@ -186,7 +186,7 @@ class DeltaExportSpec extends SparkSpec {
     CommitLog.delete(spark, src, col("id") === 2L) // copy-on-write rewrite
     val v = DeltaExport.writeDeltaLog(src)
     // foreign-style copy: live files + the whole multi-version log
-    val dst = Files.createTempDirectory("graft_dexp_inc").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dexp_inc").resolve("t")
     val srcDir = Paths.get(src)
     CommitLog.manifest(src, v).files.foreach { rel =>
       val d = dst.resolve(rel)
@@ -229,7 +229,7 @@ class DeltaExportSpec extends SparkSpec {
     // foreign-style copy WITHOUT the pre-checkpoint JSON commits: the
     // import must reconstruct from checkpoint alone (a Delta reader's
     // cold load does exactly this after log cleanup)
-    val dst = Files.createTempDirectory("graft_dexp_ck").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dexp_ck").resolve("t")
     val srcDir = Paths.get(src)
     val latest = CommitLog.latestVersion(src).get
     CommitLog.manifest(src, latest).files.foreach { rel =>
@@ -278,7 +278,7 @@ class DeltaExportSpec extends SparkSpec {
         s"decoded add.path does not resolve on disk: $p")
     }
     // and the full import roundtrip preserves the values byte-for-byte
-    val dst = Files.createTempDirectory("graft_dexp_esc").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dexp_esc").resolve("t")
     val srcDir = Paths.get(t)
     CommitLog.manifest(t, 1L).files.foreach { rel =>
       val d = dst.resolve(rel)
@@ -448,7 +448,7 @@ class DeltaExportSpec extends SparkSpec {
     // ROUND-TRIP through the engine's own importer: copy the exported
     // view (data files + _delta_log + the DV file — NOT _graft_log) to a
     // fresh directory and CONVERT it
-    val dst = Files.createTempDirectory("graft_dvrt").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dvrt").resolve("t")
     Files.createDirectories(dst)
     m.files.foreach { f =>
       val to = dst.resolve(f)
@@ -616,7 +616,7 @@ class DeltaExportSpec extends SparkSpec {
 
     // ROUNDTRIP: a foreign-style copy of the exported mapped table
     // re-imports through our own name-mode import, logical names intact
-    val dst = Files.createTempDirectory("graft_dexp_cm").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dexp_cm").resolve("t")
     val srcDir = Paths.get(t)
     val latestM = CommitLog.manifest(t, CommitLog.latestVersion(t).get)
     latestM.files.foreach { rel =>
@@ -777,7 +777,7 @@ class DeltaExportSpec extends SparkSpec {
       assert(new String(Files.readAllBytes(logDir.resolve("_last_checkpoint")),
         "UTF-8").contains("\"version\":0"))
       // a foreign-style copy with ONLY the checkpoint (no JSON) imports
-      val dst = Files.createTempDirectory("graft_dexp_fullck").resolve("t")
+      val dst = graft.SparkSpec.tmpPath("graft_dexp_fullck").resolve("t")
       val srcDir = Paths.get(t)
       CommitLog.manifest(t, 3L).files.foreach { rel =>
         val d = dst.resolve(rel)
@@ -978,7 +978,7 @@ class DeltaExportSpec extends SparkSpec {
     // foreign: CONVERT marks its strings inexact, but the ts unit proof
     // is per-chunk and writer-independent)
     val t = freshTable()
-    val tmp = Files.createTempDirectory("graft_dexp_fts")
+    val tmp = graft.SparkSpec.tmpPath("graft_dexp_fts")
     Seq((1L, java.time.Instant.parse("2024-01-01T00:00:00Z")))
       .toDF("id", "ets").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     import scala.jdk.CollectionConverters._
@@ -1078,7 +1078,7 @@ class DeltaExportSpec extends SparkSpec {
     assert(parsed.fields.find(_.name == "value").get.metadata
       .getString("delta.columnMapping.physicalName") === "v")
     // roundtrip: our own import accepts identity-stamped nested fields
-    val dst = Files.createTempDirectory("graft_dexp_nest").resolve("t")
+    val dst = graft.SparkSpec.tmpPath("graft_dexp_nest").resolve("t")
     val srcDir = Paths.get(t)
     CommitLog.manifest(t, CommitLog.latestVersion(t).get).files.foreach { rel =>
       val d = dst.resolve(rel)

@@ -17,12 +17,12 @@ import org.apache.spark.sql.functions._
 class DeltaImportSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(): Path = Files.createTempDirectory("graft_dimp").resolve("t")
+  private def freshDir(): Path = graft.SparkSpec.tmpPath("graft_dimp").resolve("t")
 
   /** Write `rows` as ONE parquet file at tableDir/relPath; returns size. */
   private def writeFile(tableDir: Path, relPath: String,
       rows: Seq[(Long, Double)]): Long = {
-    val tmp = Files.createTempDirectory("dimp_part")
+    val tmp = graft.SparkSpec.tmpPath("dimp_part")
     rows.toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator()
     val src = {
@@ -225,7 +225,7 @@ class DeltaImportSpec extends SparkSpec {
     // foreign writer laid down a renamed table: files store physical
     // column `val_phys`, the logical schema calls it `value`
     val t = freshDir()
-    val tmp = Files.createTempDirectory("dimp_cm")
+    val tmp = graft.SparkSpec.tmpPath("dimp_cm")
     Seq((1L, 1.5), (2L, 2.5)).toDF("id", "val_phys")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val src = Files.list(tmp).iterator().asScala
@@ -317,7 +317,7 @@ class DeltaImportSpec extends SparkSpec {
   private def writeFileWithIds(tableDir: Path, relPath: String,
       cols: Seq[(String, Int)], rows: Seq[(Long, Double)]): Long = {
     import org.apache.spark.sql.types._
-    val tmp = Files.createTempDirectory("dimp_fid")
+    val tmp = graft.SparkSpec.tmpPath("dimp_fid")
     val df0 = rows.toDF(cols.map(_._1): _*)
     val withIds = spark.createDataFrame(df0.rdd,
       StructType(df0.schema.fields.zip(cols).map { case (f, (_, fid)) =>
@@ -412,7 +412,7 @@ class DeltaImportSpec extends SparkSpec {
     // 'id' carries its parquet field id; 'val_phys' carries NONE — the
     // per-column fallback would accept it by name, but a footer that DOES
     // carry ids makes name resolution a binding disagreement
-    val tmp = Files.createTempDirectory("dimp_mixed")
+    val tmp = graft.SparkSpec.tmpPath("dimp_mixed")
     val df0 = Seq((1L, 1.5)).toDF("id", "val_phys")
     val mixed = spark.createDataFrame(df0.rdd,
       StructType(df0.schema.fields.map { f =>
@@ -454,7 +454,7 @@ class DeltaImportSpec extends SparkSpec {
       "(delta-spark's own id-mode fallback)") {
     val t = freshDir()
     // a plain Spark-written file: physical names, NO parquet field ids
-    val tmp = Files.createTempDirectory("dimp_noid")
+    val tmp = graft.SparkSpec.tmpPath("dimp_noid")
     Seq((1L, 1.5)).toDF("id", "val_phys").coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
     val src = Files.list(tmp).iterator().asScala

@@ -18,7 +18,7 @@ class DeltaManifestSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_deltaman").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_deltaman").resolve("t").toString
 
   private def rawLines(t: String, v: Long): Seq[String] =
     new String(Files.readAllBytes(
@@ -102,12 +102,12 @@ class DeltaManifestSpec extends SparkSpec {
     (1 to 6).foreach(i => CommitLog.commit(Seq(i).toDF("id"), t, "append",
       autoCompactEvery = 0))
     assert(isDelta(t, 5))
-    val mtimeBefore = CommitLog.manifestIdentity(t, 5L).get._1
+    val mtimeBefore = CommitLog.stamp(t, 5L).get.mtime
     CommitLog.vacuum(t, keepVersions = 2, minAgeMillis = 0, force = true)
     assert(CommitLog.versions(t) === Seq(5L, 6L))
     // v5 was a delta whose bases are gone — it must now be a checkpoint
     assert(!isDelta(t, 5))
-    assert(CommitLog.manifestIdentity(t, 5L).get._1 === mtimeBefore,
+    assert(CommitLog.stamp(t, 5L).get.mtime === mtimeBefore,
       "promotion must not move the version's commit time")
     // and both survivors still read exactly
     assert(CommitLog.readAt(spark, t, 5L).count() === 5L)

@@ -14,7 +14,7 @@ class FileStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_fstats").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_fstats").resolve("t").toString
 
   /** 4 single-file commits with EXACT disjoint id ranges [0,25), [25,50),
     * [50,75), [75,100) — deterministic stats bounds (a hash repartition

@@ -12,7 +12,7 @@ class FsckSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_fsck").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_fsck").resolve("t").toString
 
   private def seed(t: String): Unit = {
     CommitLog.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t, "append")

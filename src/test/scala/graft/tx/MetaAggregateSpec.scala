@@ -13,7 +13,7 @@ class MetaAggregateSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_meta").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_meta").resolve("t").toString
 
   private def events = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
 

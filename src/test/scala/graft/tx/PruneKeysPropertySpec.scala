@@ -50,7 +50,7 @@ class PruneKeysPropertySpec extends SparkSpec {
 
   test("property: pruned file set is a superset of files containing matched keys") {
     val prop = Prop.forAllNoShrink(genTrial) { trial =>
-      val t = Files.createTempDirectory("graft_prune_prop").resolve("t").toString
+      val t = graft.SparkSpec.tmpPath("graft_prune_prop").resolve("t").toString
       trial.commits.foreach { case (rows, parts, byRange) =>
         val df = rows.toDF("id", "g")
         val laid =

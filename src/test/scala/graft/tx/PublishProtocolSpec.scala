@@ -16,11 +16,11 @@ class PublishProtocolSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_pub").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_pub").resolve("t").toString
 
   test("POSIX contract: first claim wins; a second claim of the same slot " +
       "throws FileAlreadyExistsException and never modifies the winner") {
-    val dir = Files.createTempDirectory("graft_pub_unit")
+    val dir = graft.SparkSpec.tmpPath("graft_pub_unit")
     val target = dir.resolve("00000000000000000001.commit")
     val src1 = dir.resolve("tmp-1")
     val src2 = dir.resolve("tmp-2")

@@ -14,7 +14,7 @@ class TxDvSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_dv").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_dv").resolve("t").toString
 
   /** 400 rows, 4 id-clustered files. */
   private def seed(t: String): Unit =
@@ -249,7 +249,7 @@ class TxDvSpec extends SparkSpec {
     CommitLog.deleteDv(spark, t, col("id") === 2L)                        // v2
     CommitLog.mergeDv(spark, t, Seq((3L, "UP", 9)).toDF("id", "s", "grp"),
       Seq("id"))                                                          // v3
-    val root = Files.createTempDirectory("graft_dvstream")
+    val root = graft.SparkSpec.tmpPath("graft_dvstream")
     val q = CommitLog.changeFeedStream(spark, t)
       .writeStream.format("parquet").option("path", root.resolve("out").toString)
       .option("checkpointLocation", root.resolve("ck").toString)

@@ -13,7 +13,7 @@ class TxMutationSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txmut").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_txmut").resolve("t").toString
 
   /** 100 rows in 4 range-partitioned files: ids 0-24 / 25-49 / 50-74 / 75-99,
     * one file per range, so a predicate on one range touches exactly one
@@ -224,7 +224,7 @@ class TxMutationSpec extends SparkSpec {
     val t = freshTable()
     CommitLog.commit((0 until 50).map(i => (i.toLong, s"s$i")).toDF("id", "s"), t, "append")
     CommitLog.commit((50 until 100).map(i => (i.toLong, s"s$i")).toDF("id", "s"), t, "append")
-    val srcPath = Files.createTempDirectory("graft_txmut_src").resolve("src").toString
+    val srcPath = graft.SparkSpec.tmpPath("graft_txmut_src").resolve("src").toString
     Seq((7L, "UPD7"), (63L, "UPD63"), (1000L, "NEW")).toDF("id", "s")
       .write.parquet(srcPath)
     val v = CommitLog.merge(spark, t, spark.read.parquet(srcPath), Seq("id"))
@@ -314,7 +314,7 @@ class TxMutationSpec extends SparkSpec {
     CommitLog.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), t, "append")
     CommitLog.delete(spark, t, col("id") === 2L)                                    // v2
     CommitLog.update(spark, t, col("id") === 3L, Map("s" -> lit("C")))              // v3
-    val root = Files.createTempDirectory("graft_cdcstream")
+    val root = graft.SparkSpec.tmpPath("graft_cdcstream")
     val ck = root.resolve("ck").toString
     val out = root.resolve("out").toString
     // parquet sink (append) recovers from its checkpoint, so the second

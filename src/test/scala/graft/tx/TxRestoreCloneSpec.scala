@@ -15,7 +15,7 @@ class TxRestoreCloneSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_txrc").resolve("t").toString
+    graft.SparkSpec.tmpPath("graft_txrc").resolve("t").toString
 
   /** 100 rows in 4 bucket-partitioned files (ids 0-24 / 25-49 / 50-74 /
     * 75-99 via bucket = id/25), one file per bucket. */
