@@ -130,16 +130,9 @@ object PqStore {
     // codes, which the ungated scan would have ADC'd in the wrong space
     // silently; with this order the window is cells-over-cell-less-codes,
     // which requireCellAgreement refuses LOUDLY and a re-run repairs.
-    if (nCells <= 0) deleteTree(java.nio.file.Paths.get(cellsTable(indexRoot)))
+    if (nCells <= 0) graft.tx.TxIO.io.deleteTree(java.nio.file.Paths.get(cellsTable(indexRoot)))
     baseVersion
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
 
   /** Coarse cell quantizer for the IVF-PQ composite: seeded Lloyd's over
     * a pruned-reservoir sample of RAW vectors (squared-L2 on raw —

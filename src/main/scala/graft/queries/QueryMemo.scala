@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Memo
+import graft.tx.TxIO
 
 /** The query layer's face of [[graft.Memo]]: everything a named query builds
   * once and then reuses — resolved base reads, persisted subplans, scratch
@@ -46,7 +47,7 @@ object QueryMemo {
   private val roots = new ConcurrentLinkedQueue[File]()
   private val rootSeq = new AtomicLong()
 
-  sys.addShutdownHook(roots.forEach(r => deleteRecursively(r))): Unit
+  sys.addShutdownHook(roots.forEach(r => TxIO.io.deleteTree(r.toPath))): Unit
 
   def value[T](name: String, s: SparkSession, d: String)(build: => T): T =
     entries((s, d, name))(build).asInstanceOf[T]
@@ -75,15 +76,10 @@ object QueryMemo {
       val root = new File(System.getProperty("java.io.tmpdir"),
         s"graft_${name}_${Integer.toHexString(d.hashCode)}_" +
           s"${ProcessHandle.current().pid()}_${rootSeq.incrementAndGet()}")
-      deleteRecursively(root)
+      TxIO.io.deleteTree(root.toPath)
       roots.add(root)
       build(root.getPath)
     }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   def release(): Unit = entries.release()
 }

@@ -177,23 +177,24 @@ final class GraftSourceProvider extends RelationProvider
     import java.nio.file.{Files, Paths}
     val dir = Paths.get(new org.apache.hadoop.fs.Path(metadataPath).toUri.getPath)
     val anchor = dir.resolve("graft-start")
-    if (Files.isRegularFile(anchor))
-      return new String(Files.readAllBytes(anchor),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+    if (Files.isRegularFile(anchor)) return readAnchor(anchor)
     val v = parameters.get("startingversion").orElse(parameters.get("startingVersion"))
       .map(_.trim.toLowerCase) match {
       case None | Some("latest") => CommitLog.latestVersion(table).getOrElse(0L)
       case Some("earliest") => 0L
       case Some(n) => n.toLong
     }
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".graft-start-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try Files.move(tmp, anchor, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.deleteIfExists(tmp): Unit }
-    v
+    // first writer wins: a starter that lost the claim adopts the
+    // winner's anchor, so two starters never tail different ranges
+    val io = graft.tx.TxIO.io
+    io.createDirectories(dir)
+    if (io.claim(anchor, v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))) v
+    else readAnchor(anchor)
   }
+
+  private def readAnchor(anchor: java.nio.file.Path): Long =
+    new String(java.nio.file.Files.readAllBytes(anchor),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
 
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,

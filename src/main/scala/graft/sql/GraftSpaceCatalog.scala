@@ -234,7 +234,7 @@ class GraftSpaceCatalog extends TableCatalog with StagingTableCatalog
     val dir = tableDir(ident)
     if (!isTable(dir)) return false
     // external: only the registration goes; managed: the data too
-    deleteTree(dir)
+    removeDir(dir)
     true
   }
 
@@ -335,12 +335,8 @@ class GraftSpaceCatalog extends TableCatalog with StagingTableCatalog
   private def fullName(ident: Identifier): String =
     (catalogName +: ident.namespace.toSeq :+ ident.name).mkString(".")
 
-  private def deleteTree(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val st = Files.walk(p)
-    try st.sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(Files.delete)
-    finally st.close()
+  private def removeDir(p: Path): Unit = {
+    graft.tx.TxIO.io.deleteTree(p)
     // drop the deleted table's cached manifests eagerly — the fileKey
     // identity already defends a re-CREATE at the same root, this just
     // releases the memory (round-11 ADVICE, low)
@@ -403,7 +399,7 @@ class GraftSpaceCatalog extends TableCatalog with StagingTableCatalog
       require(empty, s"namespace ${namespace.mkString(".")} is not empty " +
         "(use DROP NAMESPACE ... CASCADE)")
     }
-    deleteTree(d)
+    removeDir(d)
     true
   }
 }

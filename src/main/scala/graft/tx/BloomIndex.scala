@@ -2,7 +2,7 @@ package graft.tx
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path}
 import java.util.Base64
 
 import scala.collection.mutable
@@ -74,13 +74,8 @@ object BloomIndex {
       }
     }
     val dir = java.nio.file.Paths.get(table)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s"$ConfigName.tmp${ProcessHandle.current().pid()}")
-    Files.write(tmp, cols.mkString("\n").getBytes(UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-    Files.move(tmp, dir.resolve(ConfigName),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    TxIO.io.createDirectories(dir)
+    TxIO.io.replace(dir.resolve(ConfigName), cols.mkString("\n").getBytes(UTF_8))
   }
 
   /** Registered columns; empty for unregistered tables. */
@@ -182,10 +177,8 @@ object BloomIndex {
         }
       }
       if (lines.nonEmpty)
-        Files.write(dataDir.resolve(SidecarName),
-          lines.mkString("\n").getBytes(UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-          StandardOpenOption.WRITE)
+        TxIO.io.write(dataDir.resolve(SidecarName),
+          lines.mkString("\n").getBytes(UTF_8))
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 

@@ -1,14 +1,14 @@
 package graft.tx
 
-import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException}
 import java.util.UUID
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.Memo
+import graft.tx.TxIO.io
 
 /** Minimal transactional commit log over parquet — the Delta-Lake-shaped
   * capability gap the reference relies on (`save_to_raw_delta_dev.py:63-87`
@@ -43,16 +43,15 @@ import graft.Memo
   *
   * Commit protocol (optimistic concurrency, same shape as Delta's):
   *  1. write data files under `data/<uuid>/` — readers can't see them yet;
-  *  2. write the manifest to a temp name in `_graft_log/`;
-  *  3. claim version N through the pluggable [[PublishProtocol]] (the ONE
-  *     storage-dependent step — see that trait for the exact contract and
-  *     the per-storage implementations). The default,
-  *     [[PosixHardLinkPublish]], claims via `Files.createLink(N.commit,
-  *     tmp)` — link(2) fails atomically if N is already claimed (POSIX
-  *     rename would silently REPLACE a concurrent winner's manifest, so
-  *     hard-link-exclusive is the correct local-fs primitive; on HDFS the
-  *     no-overwrite rename gives the same guarantee, on S3 a conditional
-  *     PUT or a DynamoDB lock table implements the same contract);
+  *  2. render the manifest ([[renderBody]], the one writer of commit
+  *     files);
+  *  3. claim version N with it through [[TxIO.claim]]
+  *     (the ONE storage-dependent step — see it for the exact contract and
+  *     the per-storage implementations). On a local fs the claim is
+  *     `link(2)` from an attempt-unique tmp, which fails atomically if N is
+  *     already claimed (POSIX rename would silently REPLACE a concurrent
+  *     winner's manifest; on HDFS the no-overwrite rename gives the same
+  *     guarantee, on S3 a conditional PUT or a DynamoDB lock table);
   *  4. on collision, re-read the latest snapshot (appends re-merge their
   *     file list against the winner) and retry at N+1. Appends therefore
   *     serialize without lost updates; concurrent overwrites are
@@ -64,16 +63,6 @@ import graft.Memo
   * also time-travels the schema.
   */
 object CommitLog {
-
-  /** The active version-claim mechanism — process-wide (a deployment
-    * chooses ONE exclusivity primitive for its storage; mixing two on the
-    * same table would void first-writer-wins). Defaults to POSIX
-    * hard-link exclusivity; see [[PublishProtocol]] for the contract and
-    * the object-store designs. `private[tx]` + volatile so a test (or a
-    * future object-store module) can install an alternative
-    * implementation through the one seam every commit path uses. */
-  @volatile private[tx] var publishProtocol: PublishProtocol =
-    PosixHardLinkPublish
 
   /** `txns` carries per-writer transaction watermarks (appId → highest
     * committed batchId), inherited version-to-version — Delta's
@@ -300,8 +289,7 @@ object CommitLog {
     val newFiles = writeDataDir(df, tableDir, layout, colMap0)
     if (newFiles.isEmpty && !publishEmpty) return None
 
-    val logDir = tableDir.resolve(LogDir)
-    Files.createDirectories(logDir)
+    io.createDirectories(tableDir.resolve(LogDir))
     var attempt = 0
     while (attempt < maxRetries) {
       val prev = latestManifest(table)
@@ -383,8 +371,6 @@ object CommitLog {
       // checkpoints): truncating data must not resurrect replayed batches
       val txns = prev.map(_.txns).getOrElse(Map.empty) ++
         txn.map { case (app, batch) => app -> batch }
-      val txnLine = txns.toSeq.sorted
-        .map { case (a, b) => s"$a=$b" }.mkString(";")
       // journal the overwrite diff INSIDE the loop: the diff is only valid
       // against the exact predecessor this attempt beats, so a lost race
       // discards and recomputes it against the new winner
@@ -397,9 +383,6 @@ object CommitLog {
           val oldBase = prev.map(readManifest(spark, table, _))
           writeCdcTmp(overwriteDiffRows(spark, newDf, oldBase, df.schema), tableDir)
         }
-      val tmp = logDir.resolve(s".tmp-${UUID.randomUUID().toString}")
-      val modeLine = mode + (if (mirror) " mirror" else "") +
-        cdcTmp.map(t => s" cdc=${t.getFileName}").getOrElse("")
       // the declared layout is sticky across appends (adopted from the
       // first explicitly-partitioned append when nothing was declared);
       // an overwrite re-declares to whatever layout it actually wrote
@@ -411,30 +394,14 @@ object CommitLog {
       // exactly this commit's files — O(delta) manifest write, the 100-TB
       // page-append posture); overwrites replace the file set, so their
       // full snapshot IS the smaller encoding and they checkpoint
-      val body = renderBody(modeLine, schema, txnLine, files, dvDirs,
-        metaLines(prev.map(_.constraints).getOrElse(Nil), recordedSpec, colMap0),
-        version, prev.filter(_ => mode == "append"),
+      val won = publish(tableDir,
+        Manifest(version, mode, schema, files, txns, mirror,
+          cdcTmp.map(_.getFileName.toString), dvDirs,
+          prev.map(_.constraints).getOrElse(Nil), recordedSpec, colMap0),
+        base = prev.filter(_ => mode == "append"),
         appendAdds = if (mode == "append") Some(newFiles) else None)
-      Files.write(tmp, body.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      try {
-        publishProtocol.publishExclusive(
-          logDir.resolve(f"$version%020d$Suffix"), tmp)
-        Files.delete(tmp)
-        // publish the journaled diff at the version slot (the streaming
-        // glob's surface) — same post-link move as publishRewrite, same
-        // crash story: the manifest's cdc= token keeps pending rows
-        // readable, fsck reports pendingCdc, repairCdc completes the move
-        cdcTmp.foreach { t =>
-          val dst = tableDir.resolve(CdcDir).resolve(f"$version%020d")
-          try Files.move(t, dst)
-          catch { case scala.util.control.NonFatal(e) =>
-            log.warn(s"v$version of $table committed but its change rows still " +
-              s"live at ${t.getFileName}; changeFeed reads them from the manifest, " +
-              "run repairCdc to publish them to the streaming feed", e)
-          }
-        }
-        // the version is DURABLE once the link lands: a mirror failure
+      if (won) {
+        // the version is DURABLE once the claim lands: a mirror failure
         // (ENOSPC mid-hard-link, ledger write error) must not surface as a
         // failed commit — a non-txn caller's retry would double-append.
         // The gap self-heals: txn replays call repairMirror, and the
@@ -467,12 +434,8 @@ object CommitLog {
           catch { case scala.util.control.NonFatal(_) => () }
         }
         return Some(version)
-      } catch {
-        case _: FileAlreadyExistsException =>
-          Files.delete(tmp) // lost the race; re-merge against the winner
-          cdcTmp.foreach(deleteTree) // stale diff — recomputed next attempt
-          attempt += 1
       }
+      attempt += 1 // lost the race; re-merge against the winner
     }
     throw new IllegalStateException(
       s"commit to $table lost the version race $maxRetries times; contention too high")
@@ -532,17 +495,15 @@ object CommitLog {
         if (slash < 0) ("", rel) else (rel.substring(0, slash + 1), rel.substring(slash + 1))
       val mirrorRel = s"$dirs$uuid-$name"
       val target = tableDir.resolve(s"$StreamDir/$mirrorRel")
-      Files.createDirectories(target.getParent)
-      try Files.createLink(target, tableDir.resolve(f))
+      io.createDirectories(target.getParent)
+      try io.createLink(target, tableDir.resolve(f))
       catch { case _: FileAlreadyExistsException => () }
       mirrorRel
     }
     val ledgerDir = tableDir.resolve(StreamDir).resolve(LedgerDir)
-    Files.createDirectories(ledgerDir)
-    Files.write(ledgerDir.resolve(f"$version%020d"),
-      linked.mkString("\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    io.createDirectories(ledgerDir)
+    io.write(ledgerDir.resolve(f"$version%020d"),
+      linked.mkString("\n").getBytes("UTF-8"))
   }
 
   /** Re-mirror the file DELTA of every `mirrored`-flagged version up to `m`
@@ -617,7 +578,7 @@ object CommitLog {
     val streamDir = tableDir.resolve(StreamDir)
     val ledgerDir = streamDir.resolve(LedgerDir)
     if (!Files.isDirectory(ledgerDir)) return 0L
-    val candidates = withStream(Files.list(ledgerDir))(_.iterator().asScala.toSeq)
+    val candidates = io.list(ledgerDir)
       .filter { p =>
         val n = p.getFileName.toString
         n.nonEmpty && n.forall(_.isDigit) && n.toLong <= throughVersion
@@ -634,33 +595,19 @@ object CommitLog {
     val target = candidates.lastOption
       .map(_.getFileName.toString.toLong).getOrElse(0L)
     if (target > prunedThrough(tableDir))
-      Files.write(ledgerDir.resolve(PrunedThroughFile),
-        target.toString.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
+      io.write(ledgerDir.resolve(PrunedThroughFile),
+        target.toString.getBytes("UTF-8"))
     var removed = 0L
     candidates.foreach { lp =>
       new String(Files.readAllBytes(lp), "UTF-8").split("\n")
         .filter(_.nonEmpty).foreach { rel =>
-          if (Files.deleteIfExists(streamDir.resolve(rel))) removed += 1
+          if (io.deleteIfExists(streamDir.resolve(rel))) removed += 1
         }
-      Files.delete(lp)
+      io.delete(lp)
     }
-    // Prune now-empty partition dirs under _stream/ (deepest first). The
-    // emptiness check races a concurrent commit mirroring into the same
-    // partition dir — losing that race is fine (the dir stays), so the
-    // delete tolerates it instead of failing the maintenance call.
-    if (Files.isDirectory(streamDir))
-      withStream(Files.walk(streamDir))(_.iterator().asScala.toSeq).reverse
-        .filter(p => Files.isDirectory(p) && p != streamDir && p != ledgerDir)
-        .foreach { p =>
-          try {
-            if (withStream(Files.list(p))(!_.iterator().hasNext)) Files.delete(p)
-          } catch {
-            case _: java.nio.file.DirectoryNotEmptyException |
-                 _: java.nio.file.NoSuchFileException => ()
-          }
-        }
+    // Prune now-empty partition dirs under _stream/. A concurrent commit
+    // mirroring into the same partition dir keeps it (the dir stays).
+    io.pruneEmptyDirs(streamDir, keep = Set(ledgerDir))
     removed
   }
 
@@ -681,18 +628,16 @@ object CommitLog {
     val commitsDir = ckDir.resolve("commits")
     val srcDir = ckDir.resolve("sources").resolve("0")
     if (!Files.isDirectory(commitsDir) || !Files.isDirectory(srcDir)) return 0L
-    val committed = withStream(Files.list(commitsDir)) {
-      _.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit))
-        .map(_.toLong).foldLeft(-1L)(math.max)
-    }
+    val committed = io.list(commitsDir)
+      .map(_.getFileName.toString)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit))
+      .map(_.toLong).foldLeft(-1L)(math.max)
     if (committed < 0) return 0L
     val streamRoot =
       Paths.get(table).toAbsolutePath.normalize.resolve(StreamDir).toString
     val pathRe = """"path":"((?:[^"\\]|\\.)*)"""".r
     val consumed = scala.collection.mutable.HashSet.empty[String]
-    withStream(Files.list(srcDir))(_.iterator().asScala.toSeq)
+    io.list(srcDir)
       .filter { p =>
         val n = p.getFileName.toString.stripSuffix(".compact")
         n.nonEmpty && n.forall(_.isDigit) && n.toLong <= committed
@@ -711,7 +656,7 @@ object CommitLog {
     if (!Files.isDirectory(ledgerDir)) return 0L
     var through = 0L
     var contiguous = true
-    withStream(Files.list(ledgerDir))(_.iterator().asScala.toSeq)
+    io.list(ledgerDir)
       .filter { p =>
         val n = p.getFileName.toString
         n.nonEmpty && n.forall(_.isDigit)
@@ -738,7 +683,7 @@ object CommitLog {
     val m = latestOrThrow(table)
     // a table with no mirrored commit yet has no _stream/ dir; the file
     // source throws at query START on a missing path, so pre-create it
-    Files.createDirectories(Paths.get(table).resolve(StreamDir))
+    io.createDirectories(Paths.get(table).resolve(StreamDir))
     spark.readStream.schema(m.schema).parquet(s"$table/$StreamDir")
   }
 
@@ -762,7 +707,7 @@ object CommitLog {
   def changeFeedStream(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
     val m = latestOrThrow(table)
-    Files.createDirectories(Paths.get(table).resolve(CdcDir))
+    io.createDirectories(Paths.get(table).resolve(CdcDir))
     spark.readStream
       .schema(m.schema.add(ChangeTypeCol, org.apache.spark.sql.types.StringType))
       .parquet(s"$table/$CdcDir/*")
@@ -1896,10 +1841,10 @@ object CommitLog {
           s"${m.files.size + m.dvDirs.size} data/DV files were vacuumed " +
           s"(first: ${gone.head}); pick a version still " +
           "inside the vacuum retention window")
-    Files.createDirectories(dstDir.resolve(LogDir))
+    io.createDirectories(dstDir.resolve(LogDir))
     def linkOrCopy(s: Path, d: Path): Unit = {
-      Files.createDirectories(d.getParent)
-      try Files.createLink(d, s)
+      io.createDirectories(d.getParent)
+      try io.createLink(d, s)
       catch {
         case _: FileAlreadyExistsException => () // idempotent re-clone attempt
         // a source file that vanished AFTER the up-front check means a
@@ -1911,7 +1856,7 @@ object CommitLog {
             s"clone of $src lost source file $s to a concurrent vacuum " +
               s"mid-clone; the partial clone at $dst should be deleted", e)
         case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          try Files.copy(s, d)
+          try io.copy(s, d)
           catch { case _: FileAlreadyExistsException => () }
       }
     }
@@ -1930,7 +1875,7 @@ object CommitLog {
     Seq(BloomIndex.ConfigName, Constraints.ConfigName).foreach { cfg =>
       val p = srcDir.resolve(cfg)
       if (Files.isRegularFile(p))
-        try Files.copy(p, dstDir.resolve(cfg))
+        try io.copy(p, dstDir.resolve(cfg))
         catch { case _: FileAlreadyExistsException => () }
     }
     // deletion vectors travel with the snapshot: link each DV dir's files
@@ -1987,12 +1932,7 @@ object CommitLog {
     require(latestVersion(table).isEmpty,
       s"$table already has a commit log (v${latestVersion(table).get}) — nothing to convert")
     val ownConfig = Set(BloomIndex.ConfigName, Constraints.ConfigName)
-    import scala.jdk.CollectionConverters._
-    val all = {
-      val st = Files.walk(tableDir)
-      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList
-      finally st.close()
-    }
+    val all = io.walk(tableDir).filter(Files.isRegularFile(_))
     // PARQUET ONLY on the resume side too: a crashed attempt's sidecar
     // (or any junk) under data/ must never publish as a data file
     val (inData, outside) = all.partition(_.startsWith(tableDir.resolve("data")))
@@ -2028,8 +1968,8 @@ object CommitLog {
     val moved = parquet.map { p =>
       val rel = tableDir.relativize(p)
       val dst = dataDir.resolve(rel)
-      Files.createDirectories(dst.getParent)
-      Files.move(p, dst)
+      io.createDirectories(dst.getParent)
+      io.move(p, dst)
       dst
     }
     val files = moved ++ resumed
@@ -2057,7 +1997,7 @@ object CommitLog {
     val schema = spark.read.option("basePath", tableDir.toString)
       .option("mergeSchema", "true")
       .parquet(files.map(_.toString): _*).schema
-    Files.createDirectories(tableDir.resolve(LogDir))
+    io.createDirectories(tableDir.resolve(LogDir))
     publishRewrite(table, Manifest(0L, "overwrite", schema, Nil, Map.empty),
       files.map(f => tableDir.relativize(f).toString.replace('\\', '/')),
       mode = "overwrite", schema = Some(schema),
@@ -2334,9 +2274,9 @@ object CommitLog {
       try FileStats.footerRowCount(p, conf) > 0
       catch { case scala.util.control.NonFatal(_) => true }
     }
-    empties.foreach(Files.delete)
+    empties.foreach(io.delete)
     if (files.isEmpty) { // nothing survived: no files, no dir, no orphan
-      deleteTree(dataDir)
+      io.deleteTree(dataDir)
       return Nil
     }
     // engine-written just now: Spark's writer at the default (untruncating)
@@ -3038,20 +2978,17 @@ object CommitLog {
     if (!dryRun) refreshExportedDeltaLog(table, tableDir, keep)
     var deleted = 0L
     if (Files.isDirectory(dataRoot)) {
-      val candidates = withStream(Files.walk(dataRoot)) {
-        _.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .filter(p => !referenced.contains(tableDir.relativize(p).toString))
-          .filter(p => !liveDvDirs.contains(commitDirOf(tableDir.relativize(p).toString)))
-          .filter { p =>
-            val rel = tableDir.relativize(p).toString
-            val name = p.getFileName.toString
-            !((name == FileStats.SidecarName || name == BloomIndex.SidecarName) &&
-              liveDirs.contains(commitDirOf(rel)))
-          }
-          .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-          .toSeq
-      }
+      val candidates = io.walk(dataRoot)
+        .filter(Files.isRegularFile(_))
+        .filter(p => !referenced.contains(tableDir.relativize(p).toString))
+        .filter(p => !liveDvDirs.contains(commitDirOf(tableDir.relativize(p).toString)))
+        .filter { p =>
+          val rel = tableDir.relativize(p).toString
+          val name = p.getFileName.toString
+          !((name == FileStats.SidecarName || name == BloomIndex.SidecarName) &&
+            liveDirs.contains(commitDirOf(rel)))
+        }
+        .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
       // DRY RUN (Delta's `VACUUM … DRY RUN`): report what WOULD fall —
       // same selection, same retention gates — and touch nothing (no
       // file deletes, no manifest drops). Deliberately SKIPS the
@@ -3060,19 +2997,10 @@ object CommitLog {
       // commits, column mapping) the real run may refuse where the dry
       // run reported a count — preview of the sweep, not of the guard.
       if (dryRun) return candidates.size.toLong
-      candidates.foreach { p => Files.delete(p); deleted += 1 }
-      // prune now-empty commit dirs (deepest first); tolerate a concurrent
-      // writer creating files between the emptiness check and the delete
-      withStream(Files.walk(dataRoot))(_.iterator().asScala.toSeq).reverse
-        .filter(p => Files.isDirectory(p) && p != dataRoot)
-        .foreach { p =>
-          try {
-            if (withStream(Files.list(p))(!_.iterator().hasNext)) Files.delete(p)
-          } catch {
-            case _: java.nio.file.DirectoryNotEmptyException |
-                 _: java.nio.file.NoSuchFileException => ()
-          }
-        }
+      candidates.foreach { p => io.delete(p); deleted += 1 }
+      // prune now-empty commit dirs; a dir a concurrent writer just
+      // created files in stays
+      io.pruneEmptyDirs(dataRoot)
     }
     if (dryRun) return 0L // no data root: nothing would fall; drop no manifests
     val logDir = tableDir.resolve(LogDir)
@@ -3095,9 +3023,9 @@ object CommitLog {
     // re-validates by fileKey, so the replaced file is never served stale.
     keep.headOption.foreach(v => checkpointManifestInPlace(table, v))
     dropCdcTmp.foreach { case (v, cdcTmpName) =>
-      Files.deleteIfExists(logDir.resolve(f"$v%020d$Suffix"))
-      deleteTree(tableDir.resolve(CdcDir).resolve(f"$v%020d"))
-      cdcTmpName.foreach(n => deleteTree(tableDir.resolve(CdcDir).resolve(n)))
+      io.deleteIfExists(logDir.resolve(f"$v%020d$Suffix"))
+      io.deleteTree(tableDir.resolve(CdcDir).resolve(f"$v%020d"))
+      cdcTmpName.foreach(n => io.deleteTree(tableDir.resolve(CdcDir).resolve(n)))
     }
     deleted
   }
@@ -3148,25 +3076,15 @@ object CommitLog {
     }
     if (firstLine == null || !firstLine.split(" ").drop(1).exists(_.startsWith("delta=")))
       return
-    val m = manifest(table, v)
-    val modeLine = m.mode + (if (m.mirrored) " mirror" else "") +
-      m.cdcName.map(n => s" cdc=$n").getOrElse("")
-    val txnLine = m.txns.toSeq.sorted.map { case (a, b) => s"$a=$b" }.mkString(";")
-    val body = (Seq(modeLine, m.schema.json, txnLine) ++ m.files ++
-      m.dvDirs.map("dv:" + _) ++
-      metaLines(m.constraints, m.partitionBy, m.colMap)).mkString("\n")
     val mtime = Files.getLastModifiedTime(p)
-    val tmp = p.getParent.resolve(s".tmp-${UUID.randomUUID().toString}")
-    Files.write(tmp, body.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    io.replace(p, renderBody(manifest(table, v), base = None).getBytes("UTF-8"))
     // restore the original commit time AFTER the move: backdating the
     // .tmp- first would make it instantly eligible for a concurrent
     // fsckClean's age-gated tmp sweep, which would delete it out from
     // under the move (round-12 self-review). The brief fresh-mtime window
     // on the destination is harmless: TIMESTAMP AS OF resolution re-reads
     // mtimes per query, and the manifest cache keys on fileKey.
-    Files.setLastModifiedTime(p, mtime)
+    io.setLastModifiedTime(p, mtime)
   }
 
   /** Publish a rewrite as the next version, keeping txn watermarks (and,
@@ -3199,76 +3117,77 @@ object CommitLog {
       constraints: Option[Seq[(String, String)]] = None,
       partitionSpec: Option[Seq[String]] = None,
       colMapSpec: Option[Map[String, String]] = None): Long = {
-    val logDir = Paths.get(table).resolve(LogDir)
+    val tableDir = Paths.get(table)
     // a LOSING attempt owns its freshly written commit dirs outright (no
     // manifest ever referenced them) — reclaim them eagerly instead of
     // leaving orphan rewrite-sized garbage per retry for fsckClean's age
     // gate to find days later (a contended mutation retry loop would
     // otherwise strand one full rewrite of the touched files per loss)
-    def dropFresh(): Unit = dropCommitDirs(Paths.get(table), freshFiles)
+    def dropFresh(): Unit = dropCommitDirs(tableDir, freshFiles)
     val prev = latestManifest(table).getOrElse(base)
     if (prev.version != base.version) {
-      cdcTmp.foreach(deleteTree)
+      cdcTmp.foreach(io.deleteTree)
       dropFresh()
       throw new IllegalStateException(
         s"table advanced to v${prev.version} during rewrite of v${base.version}; rerun")
     }
     val version = prev.version + 1
-    val txns = (prev.txns -- dropTxn) ++ addTxn.map { case (a, b) => a -> b }
-    val txnLine = txns.toSeq.sorted.map { case (a, b) => s"$a=$b" }.mkString(";")
-    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID().toString}")
     // the manifest records the ATTEMPT-UNIQUE cdc dir name, so readers can
     // resolve this version's change rows without any shared version-named
     // slot existing yet — the primitive that removes the old protocol's
     // evict-then-move race (round-5 ADVICE, medium: a losing concurrent
     // rewrite's unconditional eviction could delete the winner's published
-    // change rows, silently and permanently breaking its changeFeed slice)
-    val modeLine = mode + cdcTmp.map(t => s" cdc=${t.getFileName}").getOrElse("")
-    // constraints and the declared partition layout carry forward by
+    // change rows, silently and permanently breaking its changeFeed slice).
+    // Constraints and the declared partition layout carry forward by
     // default; restore/clone pass their TARGET version's values (both are
     // versioned table metadata). Delta-encoded when smaller than the
     // snapshot: a trickle DV delete or a schema/constraint-only commit
     // writes O(1) lines, an incremental fold writes O(folded), while a
     // full compact/restore/truncate auto-selects the checkpoint encoding
-    val body = renderBody(modeLine, schema.getOrElse(prev.schema), txnLine,
-      newFiles, dvDirs,
-      metaLines(constraints.getOrElse(prev.constraints),
-        partitionSpec.getOrElse(prev.partitionBy),
-        colMapSpec.getOrElse(prev.colMap)),
-      version, Some(prev))
-    Files.write(tmp, body.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    try {
-      publishProtocol.publishExclusive(
-        logDir.resolve(f"$version%020d$Suffix"), tmp)
-      Files.delete(tmp)
-      // move the cdc rows into the version-named slot only AFTER winning
-      // the link (the slot is what [[changeFeedStream]]'s glob publishes —
-      // dot-prefixed attempt dirs are invisible to Spark's file listing, so
-      // the stream can no longer observe a not-yet-committed mutation's
-      // rows). A crash or failure in this window loses nothing: the
-      // manifest's `cdc=` token keeps the rows readable by [[changeFeed]],
-      // fsck reports the version as pendingCdc, and [[repairCdc]]
-      // completes the move. The version is claimed forever once linked, so
-      // no other attempt can ever target this slot — the move is race-free.
-      cdcTmp.foreach { t =>
-        val dst = Paths.get(table).resolve(CdcDir).resolve(f"$version%020d")
-        try Files.move(t, dst)
-        catch { case scala.util.control.NonFatal(e) =>
-          log.warn(s"v$version of $table committed but its change rows still " +
-            s"live at ${t.getFileName}; changeFeed reads them from the manifest, " +
-            "run repairCdc to publish them to the streaming feed", e)
-        }
-      }
-      version
-    } catch {
-      case _: FileAlreadyExistsException =>
-        Files.delete(tmp)
-        cdcTmp.foreach(deleteTree) // only this attempt's own dir — never a slot
-        dropFresh()
-        throw new IllegalStateException(
-          s"a concurrent commit claimed v$version during rewrite of ${base.version}; rerun")
+    val m = Manifest(version, mode, schema.getOrElse(prev.schema), newFiles,
+      (prev.txns -- dropTxn) ++ addTxn.map { case (a, b) => a -> b },
+      cdcName = cdcTmp.map(_.getFileName.toString), dvDirs = dvDirs,
+      constraints = constraints.getOrElse(prev.constraints),
+      partitionBy = partitionSpec.getOrElse(prev.partitionBy),
+      colMap = colMapSpec.getOrElse(prev.colMap))
+    if (publish(tableDir, m, Some(prev))) version
+    else {
+      dropFresh()
+      throw new IllegalStateException(
+        s"a concurrent commit claimed v$version during rewrite of ${base.version}; rerun")
     }
+  }
+
+  /** The one publish tail of [[commit]] and [[publishRewrite]]: claim
+    * `m.version` with `m` rendered against `base`, then move the change
+    * rows journaled under `_cdc/<m.cdcName>` into the version slot. True
+    * when the claim won. A lost claim deletes this attempt's own cdc dir
+    * (never a slot) and returns false: [[commit]] re-merges against the
+    * winner, [[publishRewrite]] invalidates the rewrite. */
+  private def publish(tableDir: Path, m: Manifest, base: Option[Manifest],
+      appendAdds: Option[Seq[String]] = None): Boolean = {
+    val cdcTmp = m.cdcName.map(tableDir.resolve(CdcDir).resolve(_))
+    val won = io.claim(tableDir.resolve(LogDir).resolve(f"${m.version}%020d$Suffix"),
+      renderBody(m, base, appendAdds).getBytes("UTF-8"))
+    if (!won) cdcTmp.foreach(io.deleteTree)
+    // move the cdc rows into the version-named slot only AFTER winning
+    // the claim (the slot is what [[changeFeedStream]]'s glob publishes —
+    // dot-prefixed attempt dirs are invisible to Spark's file listing, so
+    // the stream can no longer observe a not-yet-committed version's
+    // rows). A crash or failure in this window loses nothing: the
+    // manifest's `cdc=` token keeps the rows readable by [[changeFeed]],
+    // fsck reports the version as pendingCdc, and [[repairCdc]]
+    // completes the move. The version is claimed forever once linked, so
+    // no other attempt can ever target this slot — the move is race-free.
+    else cdcTmp.foreach { t =>
+      try io.move(t, tableDir.resolve(CdcDir).resolve(f"${m.version}%020d"))
+      catch { case scala.util.control.NonFatal(e) =>
+        log.warn(s"v${m.version} of $tableDir committed but its change rows still " +
+          s"live at ${t.getFileName}; changeFeed reads them from the manifest, " +
+          "run repairCdc to publish them to the streaming feed", e)
+      }
+    }
+    won
   }
 
   /** Write change rows for a mutation to a temp dir under `_cdc/`;
@@ -3279,17 +3198,10 @@ object CommitLog {
     Some(tmp)
   }
 
-  private[tx] def deleteTree(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      withStream(Files.walk(p))(_.iterator().asScala.toSeq).reverse
-        .foreach(f => Files.deleteIfExists(f))
-    else Files.deleteIfExists(p): Unit
-  }
-
   /** Delete the commit dirs holding `files` — an attempt reclaiming its
     * own fresh, never-published writes. */
   private def dropCommitDirs(tableDir: Path, files: Seq[String]): Unit =
-    files.map(commitDirOf).distinct.foreach(d => deleteTree(tableDir.resolve(d)))
+    files.map(commitDirOf).distinct.foreach(d => io.deleteTree(tableDir.resolve(d)))
 
   /** Change data feed (Delta CDF): every row-level change after
     * `fromVersion` (exclusive) up to `toVersion` (inclusive), typed by
@@ -3488,7 +3400,7 @@ object CommitLog {
     val dataRoot = tableDir.resolve("data")
     val orphans =
       if (!Files.isDirectory(dataRoot)) Nil
-      else withStream(Files.list(dataRoot))(_.iterator().asScala.toSeq)
+      else io.list(dataRoot)
         .filter(Files.isDirectory(_))
         .filter(oldEnough)
         .map(d => s"data/${d.getFileName}")
@@ -3506,7 +3418,7 @@ object CommitLog {
     val cdcRoot = tableDir.resolve(CdcDir)
     val orphanCdc =
       if (!Files.isDirectory(cdcRoot)) Nil
-      else withStream(Files.list(cdcRoot))(_.iterator().asScala.toSeq)
+      else io.list(cdcRoot)
         .filter(oldEnough)
         .map(_.getFileName.toString)
         .filter(n => n.nonEmpty && n.forall(_.isDigit))
@@ -3516,7 +3428,7 @@ object CommitLog {
     val logDir = tableDir.resolve(LogDir)
     val tmps =
       if (!Files.isDirectory(logDir)) Nil
-      else withStream(Files.list(logDir))(_.iterator().asScala.toSeq)
+      else io.list(logDir)
         .filter(oldEnough)
         .map(_.getFileName.toString)
         .filter(_.startsWith(".tmp-"))
@@ -3538,7 +3450,7 @@ object CommitLog {
     val referencedCdcTmp = manifests.flatMap(_.cdcName).toSet
     val orphanCdcTmp =
       if (!Files.isDirectory(cdcRoot)) Nil
-      else withStream(Files.list(cdcRoot))(_.iterator().asScala.toSeq)
+      else io.list(cdcRoot)
         .filter(Files.isDirectory(_))
         .filter(oldEnough)
         .map(_.getFileName.toString)
@@ -3582,9 +3494,9 @@ object CommitLog {
     *
     * SAFE ALONGSIDE LIVE WRITERS (round-6 ADVICE): Maintenance invokes this
     * every cycle, so it races the writer's own post-link slot move. Never
-    * delete-then-move — the earlier shape (`deleteTree(dst)` when dst
+    * delete-then-move — the earlier shape (`io.deleteTree(dst)` when dst
     * exists, then move) could observe the attempt dir, lose the race to the
-    * writer's `Files.move(attempt, dst)`, destroy the JUST-PUBLISHED rows,
+    * writer's `io.move(attempt, dst)`, destroy the JUST-PUBLISHED rows,
     * and then throw on the vanished attempt: permanent CDC loss, the exact
     * damage class the attempt-dir protocol exists to prevent. Instead,
     * attempt one atomic move and treat every contended failure as
@@ -3611,7 +3523,7 @@ object CommitLog {
         val dst = tableDir.resolve(CdcDir).resolve(f"$v%020d")
         if (Files.isDirectory(attempt)) {
           try {
-            Files.move(attempt, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            io.move(attempt, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
             repaired += 1
           } catch {
             // NoSuchFile (attempt vanished), FileAlreadyExists, and the
@@ -3635,14 +3547,14 @@ object CommitLog {
                 // delete+move critical section.
                 val leaseMillis = 10L * 60 * 1000
                 def tryClaim(): Boolean =
-                  try { Files.createDirectory(lock); true }
+                  try { io.createDirectory(lock); true }
                   catch { case _: FileAlreadyExistsException => false }
                 val claimed = tryClaim() || {
                   val expired =
                     try Files.getLastModifiedTime(lock).toMillis <
                       System.currentTimeMillis() - leaseMillis
                     catch { case _: java.nio.file.NoSuchFileException => false }
-                  expired && { Files.deleteIfExists(lock); tryClaim() }
+                  expired && { io.deleteIfExists(lock); tryClaim() }
                 }
                 if (claimed) {
                   try {
@@ -3656,8 +3568,8 @@ object CommitLog {
                         // the slot (rename replaces an EMPTY dir), making
                         // the delete of the re-filled dir throw — that is
                         // "publisher won", not damage
-                        deleteTree(dst)
-                        Files.move(attempt, dst,
+                        io.deleteTree(dst)
+                        io.move(attempt, dst,
                           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
                         repaired += 1
                       } catch {
@@ -3665,7 +3577,7 @@ object CommitLog {
                           if (Files.isDirectory(attempt)) throw e
                       }
                     }
-                  } finally Files.deleteIfExists(lock): Unit
+                  } finally io.deleteIfExists(lock): Unit
                 }
                 // not claimed: another repair owns this slot — leave it
               }
@@ -3724,15 +3636,15 @@ object CommitLog {
         "— skipping orphan-dir and orphan-CDC deletion until the log is repaired")
     if (orphansSafe) {
       report.orphanDirs.map(tableDir.resolve).filter(oldEnough).foreach { d =>
-        deleteTree(d); removed += 1
+        io.deleteTree(d); removed += 1
       }
       report.orphanCdc.map(v => tableDir.resolve(CdcDir).resolve(f"$v%020d"))
-        .filter(oldEnough).foreach { d => deleteTree(d); removed += 1 }
+        .filter(oldEnough).foreach { d => io.deleteTree(d); removed += 1 }
     }
     report.orphanCdcTmp.map(tableDir.resolve(CdcDir).resolve(_))
-      .filter(oldEnough).foreach { d => deleteTree(d); removed += 1 }
+      .filter(oldEnough).foreach { d => io.deleteTree(d); removed += 1 }
     report.tmpManifests.map(tableDir.resolve(LogDir).resolve(_))
-      .filter(oldEnough).foreach { p => Files.deleteIfExists(p); removed += 1 }
+      .filter(oldEnough).foreach { p => io.deleteIfExists(p); removed += 1 }
     removed
   }
 
@@ -3750,20 +3662,12 @@ object CommitLog {
   def versions(table: String): Seq[Long] = {
     val logDir = Paths.get(table).resolve(LogDir)
     if (!Files.isDirectory(logDir)) return Nil
-    withStream(Files.list(logDir)) {
-      _.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(Suffix) && !n.startsWith("."))
-        .map(n => n.stripSuffix(Suffix).toLong)
-        .toSeq.sorted
-    }
+    io.list(logDir)
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith(Suffix) && !n.startsWith("."))
+      .map(n => n.stripSuffix(Suffix).toLong)
+      .sorted
   }
-
-  /** NIO Files.list/Files.walk hold a directory handle until closed; every
-    * call site funnels through here so a long-lived driver never leaks
-    * descriptors across thousands of commits. */
-  private def withStream[A, T](s: java.util.stream.Stream[A])(f: java.util.stream.Stream[A] => T): T =
-    try f(s) finally s.close()
 
   /** Read the latest snapshot (empty table → empty frame is an error only if
     * no version was ever committed). */
@@ -3937,42 +3841,41 @@ object CommitLog {
       checkpointVersion = ckptV)
   }
 
-  /** The manifest-body lines encoding `constraints`/`partitionBy`/
-    * `colMap` — shared by both manifest writers so they stay in
-    * lockstep. */
-  private def metaLines(constraints: Seq[(String, String)],
-      partitionBy: Seq[String],
-      colMap: Map[String, String] = Map.empty): Seq[String] =
-    constraints.map { case (n, e) => s"check:$n\t$e" } ++
-      (if (partitionBy.isEmpty) Nil
-       else Seq("partition:" + partitionBy.mkString(","))) ++
-      colMap.toSeq.sorted.map { case (l, p) => s"rename:$l\t$p" }
-
-  /** Render the on-disk commit-file body for version `version` holding
-    * snapshot (`files`, `dvDirs`): DELTA-encoded against `base` when that
-    * is legal — `base` is the immediate predecessor, was itself PARSED
-    * (carries a real checkpointVersion), and the chain above the last
-    * checkpoint stays shorter than [[CheckpointEvery]] — and the delta is
-    * strictly SMALLER than the full snapshot (an overwrite's or truncate's
+  /** Render `m` as its on-disk commit-file body — the ONE writer of
+    * commit files ([[commit]], [[publishRewrite]] and [[vacuum]]'s
+    * in-place checkpoint all come through here, so the encodings cannot
+    * drift apart). DELTA-encoded against `base` when that is legal —
+    * `base` is the immediate predecessor, was itself PARSED (carries a
+    * real checkpointVersion), and the chain above the last checkpoint
+    * stays shorter than [[CheckpointEvery]] — and the delta is strictly
+    * SMALLER than the full snapshot (an overwrite's or truncate's
     * remove-everything delta would be larger than the checkpoint, so the
     * size test auto-selects the right encoding per commit shape with no
-    * mode special-casing). Header (mode line, schema JSON, txn map) and
-    * metadata lines (check/partition/rename — O(schema), never O(files))
-    * are always written in full, so a delta version still time-travels its
-    * schema, constraints, and layout from its own file.
+    * mode special-casing); `base = None` always renders the full
+    * checkpoint. Header (mode line, schema JSON, txn map) and metadata
+    * lines (check/partition/rename — O(schema), never O(files)) are always
+    * written in full, so a delta version still time-travels its schema,
+    * constraints, and layout from its own file.
     *
     * `appendAdds`: the append fast path's known added files — skips the
     * O(total-files) set diff, keeping the commit hot path's driver work
     * O(delta) end to end. */
-  private def renderBody(modeLine: String, schema: StructType, txnLine: String,
-      files: Seq[String], dvDirs: Seq[String], meta: Seq[String],
-      version: Long, base: Option[Manifest],
+  private def renderBody(m: Manifest, base: Option[Manifest],
       appendAdds: Option[Seq[String]] = None): String = {
-    def full: String = (Seq(modeLine, schema.json, txnLine) ++ files ++
+    val modeLine = m.mode + (if (m.mirrored) " mirror" else "") +
+      m.cdcName.map(n => s" cdc=$n").getOrElse("")
+    val header = Seq(m.schema.json,
+      m.txns.toSeq.sorted.map { case (a, b) => s"$a=$b" }.mkString(";"))
+    val meta = m.constraints.map { case (n, e) => s"check:$n\t$e" } ++
+      (if (m.partitionBy.isEmpty) Nil
+       else Seq("partition:" + m.partitionBy.mkString(","))) ++
+      m.colMap.toSeq.sorted.map { case (l, p) => s"rename:$l\t$p" }
+    val (files, dvDirs) = (m.files, m.dvDirs)
+    def full: String = ((modeLine +: header) ++ files ++
       dvDirs.map("dv:" + _) ++ meta).mkString("\n")
     base match {
-      case Some(b) if b.version == version - 1 && b.checkpointVersion >= 0 &&
-          version - b.checkpointVersion < CheckpointEvery =>
+      case Some(b) if b.version == m.version - 1 && b.checkpointVersion >= 0 &&
+          m.version - b.checkpointVersion < CheckpointEvery =>
         val (adds, removes, dvAdds, dvRemoves) = appendAdds match {
           case Some(a) => (a, Nil, Nil, Nil) // append: nothing ever removed
           case None =>
@@ -3983,7 +3886,7 @@ object CommitLog {
         }
         if (adds.size + removes.size + dvAdds.size + dvRemoves.size >=
             files.size + dvDirs.size) full
-        else (Seq(s"$modeLine delta=${b.version}", schema.json, txnLine) ++
+        else ((s"$modeLine delta=${b.version}" +: header) ++
           adds.map("add:" + _) ++ removes.map("remove:" + _) ++
           dvAdds.map("dvadd:" + _) ++ dvRemoves.map("dvremove:" + _) ++
           meta).mkString("\n")
@@ -4202,13 +4105,11 @@ object CommitLog {
     }
 
   private def listParquet(dir: Path): Seq[Path] =
-    withStream(Files.walk(dir)) {
-      _.iterator().asScala
-        .filter(p => Files.isRegularFile(p))
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-        }
-        .toSeq.sortBy(_.toString)
-    }
+    io.walk(dir)
+      .filter(p => Files.isRegularFile(p))
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }
+      .sortBy(_.toString)
 }

@@ -1,7 +1,7 @@
 package graft.tx
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, concat, expr, lit, raise_error}
@@ -108,7 +108,7 @@ object Constraints {
       try {
         CommitLog.commitConstraints(table, version, effective :+ (name -> exprSql))
         // every legacy entry is folded into the manifest now
-        Files.deleteIfExists(Paths.get(table).resolve(ConfigName))
+        TxIO.io.deleteIfExists(Paths.get(table).resolve(ConfigName))
         return
       } catch {
         case e: IllegalStateException if attempt < 8 => attempt += 1
@@ -135,7 +135,7 @@ object Constraints {
       try {
         CommitLog.commitConstraints(table, version,
           effective.filterNot(_._1.equalsIgnoreCase(name)))
-        Files.deleteIfExists(Paths.get(table).resolve(ConfigName))
+        TxIO.io.deleteIfExists(Paths.get(table).resolve(ConfigName))
         return
       } catch {
         case e: IllegalStateException if attempt < 8 => attempt += 1
@@ -189,12 +189,8 @@ object Constraints {
 
   private def writeAll(table: String, cs: Seq[(String, String)]): Unit = {
     val dir = Paths.get(table)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$ConfigName.tmp${ProcessHandle.current().pid()}")
-    Files.write(tmp, cs.map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes(UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-    Files.move(tmp, dir.resolve(ConfigName),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    TxIO.io.createDirectories(dir)
+    TxIO.io.replace(dir.resolve(ConfigName),
+      cs.map { case (n, e) => s"$n\t$e" }.mkString("\n").getBytes(UTF_8))
   }
 }

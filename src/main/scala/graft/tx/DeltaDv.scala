@@ -269,13 +269,10 @@ object DeltaDv {
       Descriptor("u", encodeUuid(uuid), Some(offset.toLong), blob.length,
         rows.distinct.length.toLong)
     }
-    val tmp = tableRoot.resolve(s".tmp-dv-${UUID.randomUUID()}")
-    Files.write(tmp, bos.toByteArray)
-    // REPLACE_EXISTING: a re-export of the same version derives the same
-    // uuid and must atomically replace its prior identical file, not throw
-    Files.move(tmp, tableRoot.resolve(dvFileName(uuid)),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // a re-export of the same version derives the same uuid and must
+    // atomically replace its prior identical file, not throw
+    TxIO.io.replace(tableRoot.resolve(dvFileName(uuid)), bos.toByteArray,
+      tmpPrefix = ".tmp-dv-")
     descs
   }
 

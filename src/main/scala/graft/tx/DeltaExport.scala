@@ -1,9 +1,9 @@
 package graft.tx
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
+import graft.tx.TxIO.io
 
 /** `_delta_log` EXPORT for foreign readers (round-11 VERDICT item 2): the
   * reference's own consumers read the lake through the Delta protocol —
@@ -97,7 +97,7 @@ object DeltaExport {
       throw new IllegalArgumentException(s"$table has no committed versions"))
     val m = CommitLog.manifest(root.toString, v)
     val logDir = root.resolve("_delta_log")
-    Files.createDirectories(logDir)
+    io.createDirectories(logDir)
     val marker = logDir.resolve("_graft_export")
     // (last exported graft version, last written delta version,
     //  whether that export wrote a DV-fold COW snapshot)
@@ -131,19 +131,16 @@ object DeltaExport {
     // it routes to a full re-export instead of refusing (a crashed
     // export must not lock the surface behind a false diagnosis).
     val (logJsonVersions: Seq[Long], logCkptVersions: Seq[Long]) = {
-      val st = Files.list(logDir)
-      try {
-        val names = st.iterator().asScala.map(_.getFileName.toString).toList
-        val js = names.collect {
-          case n if n.length == 25 && n.endsWith(".json") &&
-            n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong
-        }
-        val cks = names.collect {
-          case n if n.length > 20 && n.take(20).forall(_.isDigit) &&
-            n.drop(20).startsWith(".checkpoint.") => n.take(20).toLong
-        }
-        (js.sorted, cks.sorted)
-      } finally st.close()
+      val names = io.list(logDir).map(_.getFileName.toString)
+      val js = names.collect {
+        case n if n.length == 25 && n.endsWith(".json") &&
+          n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong
+      }
+      val cks = names.collect {
+        case n if n.length > 20 && n.take(20).forall(_.isDigit) &&
+          n.drop(20).startsWith(".checkpoint.") => n.take(20).toLong
+      }
+      (js.sorted, cks.sorted)
     }
     def graftStamped(dv: Long): Boolean =
       try new String(Files.readAllBytes(
@@ -431,13 +428,9 @@ object DeltaExport {
     // later export tells our own crashed commit apart from a foreign
     // writer's (commitInfo is a no-op to conforming readers)
     val exportStamp = """{"commitInfo":{"operation":"GRAFT EXPORT"}}"""
-    def writeVersion(deltaV: Long, lines: Seq[String]): Unit = {
-      val tmp = logDir.resolve(s".tmp-${UUID.randomUUID().toString}")
-      Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      Files.move(tmp, logDir.resolve(f"$deltaV%020d.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    def writeVersion(deltaV: Long, lines: Seq[String]): Unit =
+      io.replace(logDir.resolve(f"$deltaV%020d.json"),
+        (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     // re-export of the already-exported version: the log is current
     if (prior.exists(_._1 == v) &&
         Files.isRegularFile(logDir.resolve(f"${0L}%020d.json")))
@@ -495,26 +488,22 @@ object DeltaExport {
             val w = df.write.mode("overwrite")
             (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
               .parquet(tmp.toString)
-            Files.createDirectories(cowDir.getParent)
-            Files.move(tmp, cowDir, StandardCopyOption.ATOMIC_MOVE)
+            io.createDirectories(cowDir.getParent)
+            io.move(tmp, cowDir, StandardCopyOption.ATOMIC_MOVE)
           }
           val hconf = new org.apache.hadoop.conf.Configuration()
-          val cowFiles = {
-            val st = Files.walk(cowDir)
-            try st.iterator().asScala
-              .filter(Files.isRegularFile(_))
-              .filter { p =>
-                val n = p.getFileName.toString
-                n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-              }
-              // a FULLY-dead dirty file folds to a zero-row part — a
-              // pointless add action a foreign reader would still open;
-              // drop it (footer-only row-count read, O(dirty files))
-              .filter(p => FileStats.footerRowCount(p, hconf) > 0L)
-              .map(p => root.relativize(p).toString.replace('\\', '/'))
-              .toSeq.sorted
-            finally st.close()
-          }
+          val cowFiles = io.walk(cowDir)
+            .filter(Files.isRegularFile(_))
+            .filter { p =>
+              val n = p.getFileName.toString
+              n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+            }
+            // a FULLY-dead dirty file folds to a zero-row part — a
+            // pointless add action a foreign reader would still open;
+            // drop it (footer-only row-count read, O(dirty files))
+            .filter(p => FileStats.footerRowCount(p, hconf) > 0L)
+            .map(p => root.relativize(p).toString.replace('\\', '/'))
+            .sorted
           // stats sidecar for the fold's rewrites (engine-written: the
           // untruncating Spark writer, MICROS timestamps — exact), so the
           // dirty subset skips like the shared clean files do. Idempotent
@@ -527,7 +516,7 @@ object DeltaExport {
       }
 
     def writeMarker(deltaV: Long): Unit =
-      Files.write(marker,
+      io.write(marker,
         (s"graft_version=$v\ndelta_version=$deltaV\n" +
           s"cow=${if (cowUsed) "1" else "0"}\n" +
           s"dv=${if (dvUsed) "1" else "0"}\n").getBytes("UTF-8"))
@@ -608,23 +597,18 @@ object DeltaExport {
       // FULL: fresh single-version log; stale higher versions AND stale
       // checkpoints must not linger (a Delta reader takes the max version
       // as latest, and `_last_checkpoint` would point above the fresh v0)
-      val stale = {
-        val st = Files.list(logDir)
-        try st.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          (n.length == 25 && n.endsWith(".json") &&
-            n.dropRight(5).forall(_.isDigit)) ||
-            // EVERY checkpoint form must fall — classic, multi-part
-            // (.checkpoint.i.n.parquet), and v2 UUID-named: a survivor
-            // above the fresh v0 would make a Delta reader reconstruct
-            // the deliberately-discarded stale snapshot
-            (n.length > 20 && n.take(20).forall(_.isDigit) &&
-              n.drop(20).startsWith(".checkpoint.")) ||
-            n == "_last_checkpoint"
-        }.toList
-        finally st.close()
-      }
-      stale.foreach(Files.deleteIfExists(_))
+      io.list(logDir).filter { p =>
+        val n = p.getFileName.toString
+        (n.length == 25 && n.endsWith(".json") &&
+          n.dropRight(5).forall(_.isDigit)) ||
+          // EVERY checkpoint form must fall — classic, multi-part
+          // (.checkpoint.i.n.parquet), and v2 UUID-named: a survivor
+          // above the fresh v0 would make a Delta reader reconstruct
+          // the deliberately-discarded stale snapshot
+          (n.length > 20 && n.take(20).forall(_.isDigit) &&
+            n.drop(20).startsWith(".checkpoint.")) ||
+          n == "_last_checkpoint"
+      }.foreach(io.deleteIfExists)
       writeVersion(0L,
         exportStamp +: (Seq(protocolLine(mappedNow), metaAction(mappedNow)) ++
           exportFiles.map(addAction)))
@@ -653,14 +637,10 @@ object DeltaExport {
       // own VACUUM does; the latest view is whole.
       val cowRoot = root.resolve("_graft_export_cow")
       if (Files.isDirectory(cowRoot)) {
-        val st = Files.list(cowRoot)
-        val staleCow =
-          try st.iterator().asScala
-            .filter(_.getFileName.toString != s"v$v").toList
-          finally st.close()
-        staleCow.foreach(CommitLog.deleteTree(_))
+        io.list(cowRoot).filter(_.getFileName.toString != s"v$v")
+          .foreach(io.deleteTree)
         // drop the dir itself when the fresh export needed no COW
-        if (!cowUsed) Files.deleteIfExists(cowRoot)
+        if (!cowUsed) io.deleteIfExists(cowRoot)
       }
       // superseded DV files from earlier native-DV exports (uuid is a
       // deterministic function of the exported graft version, so the
@@ -670,16 +650,13 @@ object DeltaExport {
         if (dvUsed) Some(DeltaDv.dvFileName(UUID.nameUUIDFromBytes(
           s"graft-dv:${root.toString}:v$v".getBytes("UTF-8"))))
         else None
-      val rootLs = Files.list(root)
-      try rootLs.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          (n.startsWith("deletion_vector_") && n.endsWith(".bin") &&
-            !keepDv.contains(n)) ||
-            // crashed DV writes never published — reclaim their temps
-            n.startsWith(".tmp-dv-")
-        }.toList.foreach(Files.deleteIfExists(_))
-      finally rootLs.close()
+      io.list(root).filter { p =>
+        val n = p.getFileName.toString
+        (n.startsWith("deletion_vector_") && n.endsWith(".bin") &&
+          !keepDv.contains(n)) ||
+          // crashed DV writes never published — reclaim their temps
+          n.startsWith(".tmp-dv-")
+      }.foreach(io.deleteIfExists)
       v
     }
   }
@@ -728,22 +705,14 @@ object DeltaExport {
       .json(spark.createDataset(actionLines))
     val tmpDir = logDir.resolve(s".tmp-ckpt-${UUID.randomUUID().toString}")
     df.coalesce(1).write.parquet(tmpDir.toString)
-    val part = {
-      val st = Files.list(tmpDir)
-      try st.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet"))
-      finally st.close()
-    }
-    Files.move(part, logDir.resolve(f"$deltaV%020d.checkpoint.parquet"),
+    val part = io.list(tmpDir)
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet"))
+    io.move(part, logDir.resolve(f"$deltaV%020d.checkpoint.parquet"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    CommitLog.deleteTree(tmpDir)
-    val tmp = logDir.resolve(s".tmp-${UUID.randomUUID().toString}")
-    Files.write(tmp,
-      s"""{"version":$deltaV,"size":${actionLines.size}}""".getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    Files.move(tmp, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    io.deleteTree(tmpDir)
+    io.replace(logDir.resolve("_last_checkpoint"),
+      s"""{"version":$deltaV,"size":${actionLines.size}}""".getBytes("UTF-8"))
   }
 
   /** Hive `k=v` dir segments of a table-relative file path (the segments

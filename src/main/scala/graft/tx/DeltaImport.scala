@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
+import graft.tx.TxIO.io
+
 /** `CONVERT TO GRAFT` over an existing DELTA table (the import half of the
   * round-11 interop gap; [[DeltaExport]] is the export half): the
   * reference's writers produce Delta via delta-rs
@@ -82,7 +84,7 @@ object DeltaImport {
           if Files.isRegularFile(tableDir.resolve("_graft_import_plan")) =>
         // crash AFTER the publish, before the plan cleanup: the import
         // completed — finish the cleanup and report it, idempotently
-        Files.deleteIfExists(tableDir.resolve("_graft_import_plan"))
+        io.deleteIfExists(tableDir.resolve("_graft_import_plan"))
         return v
       case Some(v) => throw new IllegalArgumentException(
         s"$table already has a commit log (v$v) — nothing to convert")
@@ -196,11 +198,8 @@ object DeltaImport {
               snap.idVerify)
           }
         }
-        val tmp = tableDir.resolve(s".tmp-plan-${UUID.randomUUID().toString}")
-        Files.write(tmp, fresh.map { case (s, d) => s"$s\t$d" }
-          .mkString("\n").getBytes("UTF-8"))
-        Files.move(tmp, planFile,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        io.replace(planFile, fresh.map { case (s, d) => s"$s\t$d" }
+          .mkString("\n").getBytes("UTF-8"), tmpPrefix = ".tmp-plan-")
         fresh
       }
     val moved = plan.map { case (srcRel, dstRel) =>
@@ -211,8 +210,8 @@ object DeltaImport {
           s"cannot convert $table: planned file $srcRel is at neither its " +
             "source nor its destination — the directory changed under a " +
             "resumed import")
-        Files.createDirectories(dst.getParent)
-        Files.move(src, dst)
+        io.createDirectories(dst.getParent)
+        io.move(src, dst)
       }
       dst
     }
@@ -251,42 +250,34 @@ object DeltaImport {
     // dead files: anything parquet outside data/ the snapshot did not
     // claim — preserved under an invisible (_-prefixed) dir, never
     // resurrected, reclaimable by the operator
-    val dead = {
-      val st = Files.walk(tableDir)
-      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList
-      finally st.close()
-    }.filter { p =>
+    val dead = io.walk(tableDir).filter { p =>
       val rel = tableDir.relativize(p).toString
-      p.getFileName.toString.endsWith(".parquet") &&
+      Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet") &&
         !rel.startsWith("data/") && !rel.startsWith("_delta_log") &&
         !rel.startsWith("_graft_import_dead")
     }
     dead.foreach { p =>
       val dst = tableDir.resolve("_graft_import_dead")
         .resolve(tableDir.relativize(p).toString)
-      Files.createDirectories(dst.getParent)
-      Files.move(p, dst)
+      io.createDirectories(dst.getParent)
+      io.move(p, dst)
     }
     // the old log must stop serving: its adds now point at moved files
     if (Files.isDirectory(tableDir.resolve("_delta_log")))
-      Files.move(tableDir.resolve("_delta_log"),
+      io.move(tableDir.resolve("_delta_log"),
         tableDir.resolve("_delta_log_imported"))
-    Files.createDirectories(tableDir.resolve("_graft_log"))
+    io.createDirectories(tableDir.resolve("_graft_log"))
     val v = CommitLog.publishImport(table,
       moved.map(f => tableDir.relativize(f).toString.replace('\\', '/')),
       snap.schema, snap.partitionColumns, snap.txns, snap.colMap, dvDirs)
-    Files.deleteIfExists(planFile)
+    io.deleteIfExists(planFile)
     v
   }
 
   /** Latest snapshot from `_delta_log`: newest checkpoint (if any) + JSON
     * commit replay above it. */
   private def readSnapshot(spark: SparkSession, logDir: Path): DeltaSnapshot = {
-    val entries = {
-      val st = Files.list(logDir)
-      try st.iterator().asScala.map(_.getFileName.toString).toList
-      finally st.close()
-    }
+    val entries = io.list(logDir).map(_.getFileName.toString)
     val jsonVersions = entries.collect {
       case n if n.length == 25 && n.endsWith(".json") &&
         n.dropRight(5).forall(_.isDigit) => n.dropRight(5).toLong
@@ -811,7 +802,7 @@ object DeltaImport {
     * medium): `%2Fetc%2F…` decodes to an ABSOLUTE path (`Path.resolve`
     * ignores the base for absolute arguments) and `../x` escapes the root
     * outright — either would make the import plan MOVE files from outside
-    * the table directory into it (`Files.move` relocates the source).
+    * the table directory into it (the move relocates the source).
     * Returns the decoded, proven-relative path. */
   private def safeRelPath(logDir: Path, raw: String): String = {
     require(!raw.contains("://"),

@@ -1,7 +1,7 @@
 package graft.tx
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardOpenOption}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -95,10 +95,8 @@ object FileStats {
       } catch { case scala.util.control.NonFatal(_) => Nil }
     }
     if (lines.nonEmpty)
-      Files.write(dataDir.resolve(SidecarName),
-        lines.mkString("\n").getBytes(UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
+      TxIO.io.write(dataDir.resolve(SidecarName),
+        lines.mkString("\n").getBytes(UTF_8))
   }
 
   /** Footer stats of one parquet file: leaf-column dotted name → stats,
@@ -562,10 +560,8 @@ object FileStats {
           if (s.exact) "x" else "-", s.rows.toString).mkString("\t")
       }
     }
-    Files.write(dataDir.resolve(SidecarName),
-      lines.mkString("\n").getBytes(UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    TxIO.io.write(dataDir.resolve(SidecarName),
+      lines.mkString("\n").getBytes(UTF_8))
     upgraded.size
   }
 

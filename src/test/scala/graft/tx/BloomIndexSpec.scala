@@ -176,4 +176,27 @@ class BloomIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unsupported"))
   }
+
+  test("setColumns from two threads on one table never collide: no call " +
+      "throws, and the config holds one caller's columns whole") {
+    val table = tmpDir("graft_bloom_race")
+    val inputs = Seq(Seq("id"), Seq("nm", "grp"))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = inputs.map { cols =>
+      new Thread(() => {
+        start.await()
+        (1 to 200).foreach { _ =>
+          try BloomIndex.setColumns(table, cols)
+          catch { case e: Throwable => failures.add(e) }
+        }
+      })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(failures.isEmpty,
+      s"${failures.size} of 400 calls threw; first: ${failures.peek()}")
+    assert(inputs.contains(BloomIndex.columns(table)))
+  }
 }

@@ -165,7 +165,7 @@ class DeltaImportSpec extends SparkSpec {
       if (c.getFileName.toString.endsWith(".parquet")) src = c
     }
     Files.move(src, logDir.resolve(f"${1L}%020d.checkpoint.parquet"))
-    CommitLog.deleteTree(t.resolve("_ckpt_tmp"))
+    TxIO.io.deleteTree(t.resolve("_ckpt_tmp"))
     Files.write(logDir.resolve("_last_checkpoint"),
       """{"version":1,"size":5}""".getBytes("UTF-8"))
     writeCommit(t, 2L, Seq(addAction("part-0003.parquet", s3)))
@@ -660,7 +660,7 @@ class DeltaImportSpec extends SparkSpec {
       Files.move(p, logDir.resolve(
         f"${4L}%020d.checkpoint.${i + 1}%010d.${2L}%010d.parquet"))
     }
-    CommitLog.deleteTree(tmp)
+    TxIO.io.deleteTree(tmp)
     // one JSON commit above the checkpoint proves the replay stitches on
     val s7 = writeFile(t, "part-00007.parquet", Seq((7L, 7.0)))
     writeCommit(t, 5L, Seq(addAction("part-00007.parquet", s7)))
@@ -696,7 +696,7 @@ class DeltaImportSpec extends SparkSpec {
       finally st.close()
     }
     Files.move(part, logDir.resolve(f"${0L}%020d.checkpoint.parquet"))
-    CommitLog.deleteTree(tmp)
+    TxIO.io.deleteTree(tmp)
     Files.write(logDir.resolve("_last_checkpoint"),
       s"""{"version":0,"size":${actions.size}}""".getBytes("UTF-8"))
     val v = CommitLog.convert(spark, t.toString)
@@ -719,7 +719,7 @@ class DeltaImportSpec extends SparkSpec {
     }
     Files.createDirectories(dest.getParent)
     Files.move(part, dest)
-    CommitLog.deleteTree(tmp)
+    TxIO.io.deleteTree(tmp)
   }
 
   private val protocolV2Ckpt =

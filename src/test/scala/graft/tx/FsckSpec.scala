@@ -101,7 +101,7 @@ class FsckSpec extends SparkSpec {
     assert(CommitLog.fsck(t, leftoverMinAgeMillis = 3600000L).clean)
     // manifest-referenced damage is reported regardless of age
     val v = CommitLog.delete(spark, t, col("id") === 1L)
-    CommitLog.deleteTree(Paths.get(t).resolve("_cdc").resolve(f"$v%020d"))
+    TxIO.io.deleteTree(Paths.get(t).resolve("_cdc").resolve(f"$v%020d"))
     assert(CommitLog.fsck(t, leftoverMinAgeMillis = 3600000L).missingCdc === Seq(v))
   }
 
@@ -283,7 +283,7 @@ class FsckSpec extends SparkSpec {
     val t = freshTable()
     seed(t)
     val v = CommitLog.delete(spark, t, col("id") === 1L)
-    CommitLog.deleteTree(Paths.get(t).resolve("_cdc").resolve(f"$v%020d"))
+    TxIO.io.deleteTree(Paths.get(t).resolve("_cdc").resolve(f"$v%020d"))
     val report = CommitLog.fsck(t)
     assert(report.missingCdc === Seq(v))
     intercept[IllegalStateException] {

@@ -148,7 +148,7 @@ class TxDvSpec extends SparkSpec {
     assert(CommitLog.read(spark, t).count() === 397L)
     assert(CommitLog.fsck(t).clean)
     // a vanished LIVE DV dir is manifest-referenced damage
-    CommitLog.deleteTree(Paths.get(t).resolve(dv3))
+    TxIO.io.deleteTree(Paths.get(t).resolve(dv3))
     val report = CommitLog.fsck(t)
     assert(report.missingFiles.exists(_._2 == dv3), report.toString)
   }
