@@ -2,9 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated `SparkSession` factory for this engine — one place that
-  * encodes the settings every deployment of these operators wants, sized
-  * from the actual parallelism instead of Spark's one-size defaults:
+/** The engine's two `SparkSession` factories. Their confs differ on
+  * purpose: [[builder]] is the deployment session, tuned for throughput at
+  * any size; [[harness]] is the fixed session every measurement and
+  * verification main (Bench, Verify, the plan tools, RecallProbe) and the
+  * test suite run under, so their numbers and plans stay comparable across
+  * rounds.
+  *
+  * [[builder]] encodes the settings every deployment of these operators
+  * wants, sized from the actual parallelism instead of Spark's one-size
+  * defaults:
   *
   *  - `shuffle.partitions` = a small multiple of the core count (the
   *    200-partition default is wrong in both directions: far too many for a
@@ -55,4 +62,24 @@ object GraftSession {
     * defaults. */
   def local(appName: String, cores: Int): SparkSession =
     builder(appName, cores).master(s"local[$cores]").getOrCreate()
+
+  /** The bench session: `local[cpus]` with one shuffle partition per core,
+    * AQE on at Spark's own settings, Spark's default scan split size, UTC,
+    * nanos-as-long and TIMESTAMP_MICROS parquet, no UI, and the extensions
+    * (injected with `withExtensions`, not by conf). Its confs are the
+    * bench contract — every recorded timing and the 160-query oracle run
+    * were made under exactly these — so they do not follow [[builder]]'s
+    * deployment defaults. */
+  def harness(appName: String, cpus: Int): SparkSession =
+    SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .getOrCreate()
 }

@@ -12,7 +12,7 @@ object Tables {
     * driver / §6 listing): a schema-less `spark.read.parquet` runs parquet
     * schema INFERENCE on every call — a footer-reading Spark job plus a
     * fresh source resolution, measured at 70-160 ms per call
-    * (tools/OverheadProbe) vs ~0 for reusing the resolved plan — and the
+    * (OPTIMIZATION_r17.md §12) vs ~0 for reusing the resolved plan — and the
     * bench pays it once per table per rep across all 160 queries. A real
     * engine resolves `FROM events` through its catalog ONCE (schema +
     * location are table metadata, not per-query work); the memoized read is

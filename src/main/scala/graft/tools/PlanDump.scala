@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a set of SparkEntry queries to files —
   * the before/after plan evidence for optimization rounds.
   *
   * Usage: PlanDump <outDir> <suffix> [queryName ...]
   * Writes <outDir>/<query>_<suffix>.txt for each named query (all queries
-  * when none are named). The session mirrors Bench's configuration so the
-  * dumped plan is the plan the bench actually runs. Each query is EXECUTED
+  * when none are named). The session is Bench's ([[graft.GraftSession.harness]]),
+  * so the dumped plan is the plan the bench actually runs. Each query is EXECUTED
   * once first (count) so AQE-finalized artifacts (persisted stores, memoized
   * index builds) exist before the plan is captured, then the plan printed is
   * the pre-execution formatted plan of a fresh invocation — the same thing
@@ -19,17 +17,8 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.harness("graft-plandump", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val all = graft.SparkEntry.queries

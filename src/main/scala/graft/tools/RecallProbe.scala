@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.{IvfIndex, Similarity}
 import graft.queries.Tables
@@ -12,13 +11,8 @@ import graft.queries.Tables
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = graft.GraftSession.harness("graft-recallprobe", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     dirs.foreach { d =>
       val emb = Tables.embeddings(spark, d)
@@ -38,16 +32,18 @@ object RecallProbe {
       // IVF-PQ composite (residual codes): the query harness's 90%-build /
       // 10%-append / refresh shape, swept over nProbe — the evidence
       // behind IvfPqMinRecall and the monotone-in-nProbe property
-      val root = java.nio.file.Files.createTempDirectory("graft_recallprobe").toString
-      val (base, index) = (s"$root/base", s"$root/index")
-      graft.tx.CommitLog.commit(emb.filter(pmod(col("vec_id"), lit(10)) =!= 7), base, "append")
-      graft.ext.PqStore.build(spark, base, index, nCells = 16)
-      graft.tx.CommitLog.commit(emb.filter(pmod(col("vec_id"), lit(10)) === 7), base, "append")
-      graft.ext.PqStore.refresh(spark, base, index)
-      val sweep = Seq(1, 2, 4, 8, 16).map { p =>
-        f"$p=${recall(graft.ext.PqStore.topK(spark, base, index, q, 5, nProbe = p))}%.3f"
-      }
-      println(s"[$d] ivfpq recall@5 by nProbe: ${sweep.mkString(" ")}")
+      val root = java.nio.file.Files.createTempDirectory("graft_recallprobe")
+      try {
+        val (base, index) = (s"$root/base", s"$root/index")
+        graft.tx.CommitLog.commit(emb.filter(pmod(col("vec_id"), lit(10)) =!= 7), base, "append")
+        graft.ext.PqStore.build(spark, base, index, nCells = 16)
+        graft.tx.CommitLog.commit(emb.filter(pmod(col("vec_id"), lit(10)) === 7), base, "append")
+        graft.ext.PqStore.refresh(spark, base, index)
+        val sweep = Seq(1, 2, 4, 8, 16).map { p =>
+          f"$p=${recall(graft.ext.PqStore.topK(spark, base, index, q, 5, nProbe = p))}%.3f"
+        }
+        println(s"[$d] ivfpq recall@5 by nProbe: ${sweep.mkString(" ")}")
+      } finally graft.tx.TxIO.io.deleteTree(root)
     }
     spark.stop()
   }

@@ -23,6 +23,10 @@ object ScaleSmoke {
       println(s"[scale] WARNING: $out exists — warm run; PLANS_SCALE.md " +
         "will omit build-time stanzas. Delete the dir for a committable doc.")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Bench's confs WITHOUT the extensions, so not GraftSession.harness: the
+    // "window row_number top3" stanza is the un-rewritten baseline for
+    // "custom TopKPerKey top3", and the extensions' RewriteRankFilterToTopK
+    // would turn it into the operator it is measured against.
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

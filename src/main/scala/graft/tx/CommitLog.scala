@@ -1048,7 +1048,7 @@ object CommitLog {
     val cdc = writeCdcTmp(changes, tableDir)
     val added =
       if (!adds) None
-      else Some(spark.read.schema(changes.schema).parquet(cdc.get.toString)
+      else Some(readCdc(spark, cdc.get, changes.schema)
         .filter(col(ChangeTypeCol).isin("update_postimage", "insert"))
         .select(schema.fieldNames.toSeq.map(col): _*))
     (cdc, added)
@@ -1056,6 +1056,20 @@ object CommitLog {
 
   private def noRows(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** Read a `_cdc/` attempt or slot dir through its part files. An
+    * attempt's `.tmp-<uuid>` name is dot-prefixed (fsck and fsckClean match
+    * it), and Spark handed a dot-prefixed dir logs "All paths were ignored"
+    * although it reads the rows. The parts read as `schema`, or with their
+    * own schema when `inferred`; a dir of no parts reads as zero rows of
+    * `schema`. */
+  private def readCdc(spark: SparkSession, dir: Path, schema: StructType,
+      inferred: Boolean = false): DataFrame =
+    listParquet(dir).map(_.toString) match {
+      case Seq() => noRows(spark, schema)
+      case parts if inferred => spark.read.parquet(parts: _*)
+      case parts => spark.read.schema(schema).parquet(parts: _*)
+    }
 
   /** The snapshot files of `candidates` holding at least one probe hit. */
   private def touchedBy(spark: SparkSession, table: String, candidates: Manifest,
@@ -3270,7 +3284,7 @@ object CommitLog {
                     "expressible as row changes"
                 else "predates the change feed") +
                 "; rebuild from the snapshot")
-          Some(alignedTo(spark.read.parquet(src.toString))
+          Some(alignedTo(readCdc(spark, src, outSchema, inferred = true))
             .withColumn(CommitVersionCol, clit(v)))
         case "overwrite" =>
           // a journaled overwrite (commit(cdc = true)) stored its diff at
@@ -3282,7 +3296,7 @@ object CommitLog {
               man.cdcName.isDefined && Files.isDirectory(p)))
           stored match {
             case Some(src) =>
-              Some(alignedTo(spark.read.parquet(src.toString))
+              Some(alignedTo(readCdc(spark, src, outSchema, inferred = true))
                 .withColumn(CommitVersionCol, clit(v)))
             case None if overwriteDiff =>
               // snapshot diff on the OVERWRITTEN version's schema, then up

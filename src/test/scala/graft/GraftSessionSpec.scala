@@ -1,11 +1,39 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftSession: engine defaults land in the session and the extensions are
   * live (functions callable, TopK strategy injected). Uses its own session
   * app name; getOrCreate reuses the shared test SparkContext. */
 class GraftSessionSpec extends AnyFunSuite {
+
+  test("the shared test session is the bench harness: its confs and extensions") {
+    val s = SparkSpec.spark
+    assert(s.sparkContext.master === "local[4]")
+    Seq("spark.sql.shuffle.partitions" -> "4", "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true", "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.ui.enabled" -> "false").foreach { case (k, v) =>
+      assert(s.conf.get(k) === v, k)
+    }
+    // the extensions: an injected function, planner strategy and DML rule
+    assert(s.catalog.functionExists("cosine_similarity"))
+    val state = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    assert(state.planner.extraPlanningStrategies.contains(graft.plans.TopKStrategy))
+    assert(state.analyzer.extendedResolutionRules.contains(graft.sql.GraftDmlRule))
+  }
+
+  test("src/main builds a SparkSession only in GraftSession and ScaleSmoke") {
+    val builders = Files.walk(Paths.get("src/main")).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => Files.readString(f).contains("SparkSession.builder()"))
+      .map(_.getFileName.toString).sorted
+    assert(builders === Seq("GraftSession.scala", "ScaleSmoke.scala"))
+  }
 
   test("defaults + extensions are active in a GraftSession") {
     // Force the shared context first so getOrCreate attaches to it rather

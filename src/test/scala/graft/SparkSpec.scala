@@ -8,21 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .config("spark.ui.enabled", "false")
-    // the production session (GraftSession) injects these via
-    // spark.sql.extensions; tests exercise the same analyzer surface —
-    // notably the SQL DML rule (GraftDmlRule), which cannot be added to an
-    // already-built session
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  /** The bench session at 4 cores: tests exercise the bench's analyzer
+    * surface — notably the SQL DML rule (GraftDmlRule), which cannot be
+    * added to an already-built session. */
+  lazy val spark: SparkSession = GraftSession.harness("graft-test", 4)
 
   private val tmpDirs = new ConcurrentLinkedQueue[Path]()
 

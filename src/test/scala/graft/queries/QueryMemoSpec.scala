@@ -79,8 +79,7 @@ class QueryMemoSpec extends SparkSpec {
   test("no query file but QueryMemo keeps a private memo or reap hook") {
     // engine-wide: every cache in src/main is a graft.Memo, except the
     // exceptions its scaladoc names — the executor-side
-    // BroadcastDecodeCache (in Memo.scala) and QueryMemo's reap hook — and
-    // AnnProbe's job-start bookkeeping, a listener's local map, not a cache
+    // BroadcastDecodeCache (in Memo.scala) and QueryMemo's reap hook
     val main = Paths.get("src/main")
     val files = Files.walk(main).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
@@ -90,8 +89,7 @@ class QueryMemoSpec extends SparkSpec {
       "computeIfAbsent", "TrieMap", "addShutdownHook")
     val allowed = Map(
       "Memo.scala" -> banned.toSet,
-      "QueryMemo.scala" -> Set("addShutdownHook"),
-      "AnnProbe.scala" -> Set("ConcurrentHashMap"))
+      "QueryMemo.scala" -> Set("addShutdownHook"))
     val offenders = for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex

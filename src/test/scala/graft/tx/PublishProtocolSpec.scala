@@ -20,7 +20,7 @@ class PublishProtocolSpec extends SparkSpec {
     graft.SparkSpec.tmpPath("graft_pub").resolve("t").toString
 
   test("POSIX contract: first claim wins; a second claim of the same slot " +
-      "throws FileAlreadyExistsException and never modifies the winner") {
+      "returns false and never modifies the winner") {
     val dir = graft.SparkSpec.tmpPath("graft_pub_unit")
     val target = dir.resolve("00000000000000000001.commit")
     val posix = new TxIO

@@ -1,8 +1,13 @@
 package graft.tx
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.SparkSpec
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions._
 
 /** Copy-on-write DELETE and MERGE on the commit log: only files containing
@@ -730,5 +735,43 @@ class TxMutationSpec extends SparkSpec {
       CommitLog.changesSince(spark, t, 1L)
     }
     assert(e.getMessage.contains("not an append"))
+  }
+
+  test("a journaled update, and a change feed over its pending attempt, read " +
+      "the .tmp- attempt dir without Spark's hidden-path warning") {
+    // Spark's DataSource warns "All paths were ignored" when handed a
+    // dot-prefixed dir, although it reads the rows
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-hidden-path", null, null, true, null) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == classOf[DataSource].getName)
+          seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    // attach to the config the DataSource logger logs through right now
+    // (LoggerContext.updateLoggers would re-point every logger of the JVM),
+    // and make sure it logs warnings while the test runs
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger(classOf[DataSource].getName)
+    val (logConfig, level) = (logger.get(), logger.getLevel)
+    appender.start()
+    logConfig.addAppender(appender, Level.WARN, null)
+    logger.setLevel(Level.WARN)
+    try {
+      val t = freshTable()
+      CommitLog.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t, "append")
+      val v = CommitLog.update(spark, t, col("id") === 2L, Map("s" -> lit("B")))
+      assert(CommitLog.read(spark, t).filter(col("s") === "B").count() === 1L)
+      // the crash window: the manifest is published, the slot move pending
+      val cdcRoot = Paths.get(t).resolve("_cdc")
+      Files.move(cdcRoot.resolve(f"$v%020d"),
+        cdcRoot.resolve(CommitLog.manifest(t, v).cdcName.get))
+      assert(CommitLog.changeFeed(spark, t, v - 1).count() === 2L)
+    } finally {
+      logger.setLevel(level)
+      logConfig.removeAppender(appender.getName)
+      appender.stop()
+    }
+    assert(!seen.toArray.exists(_.toString.contains("paths were ignored")),
+      seen.toArray.mkString("\n"))
   }
 }
