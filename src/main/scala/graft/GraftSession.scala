@@ -25,7 +25,17 @@ import org.apache.spark.sql.SparkSession
   *    and nanos-as-long parquet reads (the events table's NANOS timestamps);
   *  - [[graft.functions.GraftExtensions]] injected: native functions
   *    (`cosine_similarity`, `minhash_sig`, …), the TopK planner strategy,
-  *    and the rank-filter rewrite rule are present from the first query.
+  *    and the rank-filter rewrite rule are present from the first query;
+  *  - `file:` served by [[graft.fs.NioLocalFileSystem]] and
+  *    [[graft.fs.NioLocalFs]] ([[graft.fs.LocalFs.hadoopKeys]]). Without a
+  *    native libhadoop, stock local `file:` forks `chmod` for every file,
+  *    `.crc` sidecar and directory Spark writes, and `readlink` on every
+  *    rename: 588 process starts in one medbench `pipeline` run (577
+  *    `chmod`) and 439 in `suite` (264 `chmod`, 168 `readlink`), 10.9 ms per
+  *    created file, on a 4-core x86 VM. `FileSystem.get` caches the first `file:` instance a
+  *    JVM looks up whatever a later conf says, so these keys also switch
+  *    that cache off for `file:` (~20 µs a lookup). [[harness]] keeps the
+  *    stock classes: its confs are the bench contract.
   */
 object GraftSession {
 
@@ -47,6 +57,7 @@ object GraftSession {
       // predicates — the reference's dominant filter shape
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
+      .config(graft.fs.LocalFs.hadoopKeys.map { case (k, v) => s"spark.hadoop.$k" -> v })
 
   /** Register a v2 graft catalog ([[graft.sql.GraftSpaceCatalog]]) on the
     * builder: tables address as `<name>.ns….tbl` with multi-part

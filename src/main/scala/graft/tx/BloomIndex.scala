@@ -94,7 +94,6 @@ object BloomIndex {
       cols: Seq[String]): Unit = {
     if (cols.isEmpty || files.isEmpty) return
     try {
-      val conf = new org.apache.hadoop.conf.Configuration()
       // per-file identity is the dataDir-RELATIVE path, keyed by the
       // file's URI as `_metadata.file_path` reports it — basenames
       // collide across hive partition dirs (one write task emits the
@@ -109,7 +108,7 @@ object BloomIndex {
         files.map(p => p.toAbsolutePath.toString -> dataDir.relativize(p).toString).toMap
       // per-file expected sizes from the footers (metadata-only)
       val expected: Map[String, Long] = files.map { p =>
-        p.toAbsolutePath.toString -> math.max(1L, FileStats.footerRowCount(p, conf))
+        p.toAbsolutePath.toString -> math.max(1L, FileStats.footerRowCount(p))
       }.toMap
       val schema = spark.read.parquet(files.head.toString).schema
       // hive partition columns live in directory names, not pages — they

@@ -2070,11 +2070,10 @@ object CommitLog {
     // with column-mapping ids; schema-only logs must refuse instead).
     // One footer read per live file, driver-side; OPTIMIZE rewrites the
     // files without the dropped column and clears the refusal.
-    val conf = new org.apache.hadoop.conf.Configuration()
     val tableDir = Paths.get(table)
     cols.fieldNames.foreach { c =>
       val ghost = m.files.find(f =>
-        FileStats.fileHasColumn(tableDir.resolve(f), conf, c))
+        FileStats.fileHasColumn(tableDir.resolve(f), c))
       require(ghost.isEmpty,
         s"cannot re-add column '$c' to $table: a live data file still " +
           s"carries a dropped column of that name (${ghost.get}) and its " +
@@ -2283,9 +2282,8 @@ object CommitLog {
     // file-coverage invariant [[metaAggregate]] relies on — and at 100 TB
     // each is a wasted footer fetch on every read. Footer probe only
     // (metadata); an unreadable footer keeps the file, staying safe.
-    val conf = new org.apache.hadoop.conf.Configuration()
     val (files, empties) = listParquet(dataDir).partition { p =>
-      try FileStats.footerRowCount(p, conf) > 0
+      try FileStats.footerRowCount(p) > 0
       catch { case scala.util.control.NonFatal(_) => true }
     }
     empties.foreach(io.delete)
@@ -2628,7 +2626,6 @@ object CommitLog {
         case None => return None // DV side past the driver-read cap
       }
     val rows = stored - deathMap.valuesIterator.map(_.size.toLong).sum
-    val conf = new org.apache.hadoop.conf.Configuration()
     val tableDir = Paths.get(table)
     val (dirty, clean) = perFile.partition(pf => deathMap.contains(fileNameOf(pf._1)))
     // the per-column kind gates below (and [[FileStats.liveColumnStats]]'
@@ -2646,7 +2643,7 @@ object CommitLog {
     val revName: Map[String, String] = m.colMap.map(_.swap)
     lazy val dirtyLive: Seq[Map[String, FileStats.ColStats]] =
       dirty.map { pf =>
-        FileStats.liveColumnStats(tableDir.resolve(pf._1), conf, liveCols,
+        FileStats.liveColumnStats(tableDir.resolve(pf._1), liveCols,
           deathMap(fileNameOf(pf._1)))
           .map { case (k, v) => revName.getOrElse(k, k) -> v }
       }
@@ -2669,7 +2666,7 @@ object CommitLog {
         // alike — the live-stats projection also skips INT96) must prove
         // physical absence (the footer stores the PHYSICAL name)
         perFile.filter(pf => !pf._3.contains(name)).forall { pf =>
-          !FileStats.fileHasColumn(tableDir.resolve(pf._1), conf, physName(name))
+          !FileStats.fileHasColumn(tableDir.resolve(pf._1), physName(name))
         })
     def exactKindOf(dt: org.apache.spark.sql.types.DataType): Option[String] =
       dt match {
@@ -2780,17 +2777,16 @@ object CommitLog {
 
   private def liveDvDeathMap(table: String, m: Manifest,
       maxDvRows: Long): Option[Map[String, Set[Long]]] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val files = dvParquetFiles(table, m)
     val identity = files.map { p =>
       try (p.toString, Files.getLastModifiedTime(p).toMillis, Files.size(p))
       catch { case _: java.io.IOException => (p.toString, -1L, -1L) }
     }
     dvDeaths((table, m.version, maxDvRows, identity)) {
-      if (files.map(FileStats.footerRowCount(_, conf)).sum > maxDvRows) None
+      if (files.map(FileStats.footerRowCount).sum > maxDvRows) None
       else {
         val live = m.files.map(fileNameOf).toSet
-        Some(files.iterator.flatMap(p => FileStats.readDvPairs(p, conf))
+        Some(files.iterator.flatMap(FileStats.readDvPairs)
           .filter(t => live(t._1)).toSeq
           .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toSet })
       }
@@ -4042,9 +4038,8 @@ object CommitLog {
       m: Manifest): DvSide = {
     import org.apache.spark.sql.functions.col
     val cap = dvBroadcastCap(spark)
-    val conf = new org.apache.hadoop.conf.Configuration()
     val footerRows = dvParquetFiles(table, m)
-      .map(FileStats.footerRowCount(_, conf)).sum
+      .map(FileStats.footerRowCount).sum
     if (footerRows > cap) {
       val dv = spark.read.parquet(m.dvDirs.map(d => s"$table/$d"): _*)
         .select(col("file").cast("string").as("__dv_file"),

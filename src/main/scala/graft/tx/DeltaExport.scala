@@ -491,7 +491,6 @@ object DeltaExport {
             io.createDirectories(cowDir.getParent)
             io.move(tmp, cowDir, StandardCopyOption.ATOMIC_MOVE)
           }
-          val hconf = new org.apache.hadoop.conf.Configuration()
           val cowFiles = io.walk(cowDir)
             .filter(Files.isRegularFile(_))
             .filter { p =>
@@ -501,7 +500,7 @@ object DeltaExport {
             // a FULLY-dead dirty file folds to a zero-row part — a
             // pointless add action a foreign reader would still open;
             // drop it (footer-only row-count read, O(dirty files))
-            .filter(p => FileStats.footerRowCount(p, hconf) > 0L)
+            .filter(p => FileStats.footerRowCount(p) > 0L)
             .map(p => root.relativize(p).toString.replace('\\', '/'))
             .sorted
           // stats sidecar for the fold's rewrites (engine-written: the

@@ -191,10 +191,9 @@ object DeltaImport {
         // leaves the directory exactly as found. O(files) footer reads,
         // the same cost class as the stats-sidecar build below.
         if (snap.idVerify.nonEmpty) {
-          val conf = new org.apache.hadoop.conf.Configuration()
           fresh.map(_._1).foreach { rel =>
             verifyIdModeFile(rel,
-              FileStats.topLevelFieldIds(tableDir.resolve(rel), conf),
+              FileStats.topLevelFieldIds(tableDir.resolve(rel)),
               snap.idVerify)
           }
         }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
+import graft.fs.LocalFs
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -79,10 +80,9 @@ object FileStats {
     * `exactStrings` = the caller PROVES these files were written by this
     * engine's untruncating writer (the commit path); CONVERT passes false. */
   def writeSidecar(dataDir: Path, files: Seq[Path], exactStrings: Boolean): Unit = {
-    val conf = new Configuration()
     val lines = files.flatMap { p =>
       val rel = dataDir.relativize(p).toString
-      try collect(p, conf).map { case (col, s) =>
+      try collect(p).map { case (col, s) =>
         // the exact flag's proof differs by kind: strings need the
         // WRITER proven untruncating (the engine's own commit path);
         // timestamps carry a per-chunk UNIT proof collect() already made
@@ -111,9 +111,9 @@ object FileStats {
     * the [[graft.GraftSession]] default); decimals are skipped
     * (conservative); strings longer than 64 bytes drop min/max so a
     * truncated prefix can never masquerade as a real bound. */
-  private def collect(p: Path, conf: Configuration): Seq[(String, ColStats)] = {
+  private def collect(p: Path): Seq[(String, ColStats)] = {
     val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), conf)
+      new org.apache.hadoop.fs.Path(p.toUri), LocalFs.conf)
     val reader = ParquetFileReader.open(in)
     try {
       val footer = reader.getFooter
@@ -202,8 +202,8 @@ object FileStats {
     * small enough to collect/broadcast ([[CommitLog]]'s DV read path) and
     * to bound the driver-side DV row read behind
     * [[CommitLog.metaAggregate]]. */
-  private[tx] def footerRowCount(p: Path, conf: Configuration): Long = {
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
+  private[tx] def footerRowCount(p: Path): Long = {
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), LocalFs.conf)
     val reader = ParquetFileReader.open(in)
     try reader.getFooter.getBlocks.asScala.map(_.getRowCount.longValue).sum
     finally reader.close()
@@ -214,11 +214,11 @@ object FileStats {
     * parquet example reader. Only called on DV files the footer row-count
     * probe has already bounded, so the materialized Seq stays small by
     * construction. */
-  private[tx] def readDvPairs(p: Path, conf: Configuration): Seq[(String, Long)] = {
+  private[tx] def readDvPairs(p: Path): Seq[(String, Long)] = {
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
         new org.apache.hadoop.fs.Path(p.toUri))
-      .withConf(conf).build()
+      .withConf(LocalFs.conf).build()
     try {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
       var g = reader.read()
@@ -263,9 +263,8 @@ object FileStats {
     * read, no data pages — [[DeltaImport]]'s id-mode column-mapping
     * verification proves name-resolution and id-resolution agree file by
     * file before adopting the table. */
-  private[tx] def topLevelFieldIds(p: Path,
-      conf: Configuration): Seq[(String, Option[Int])] = {
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
+  private[tx] def topLevelFieldIds(p: Path): Seq[(String, Option[Int])] = {
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), LocalFs.conf)
     val reader = ParquetFileReader.open(in)
     try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
       .map(f => f.getName -> Option(f.getId).map(_.intValue))
@@ -279,8 +278,8 @@ object FileStats {
     * a foreign-configured writer) — the masquerade
     * [[CommitLog.metaAggregate]]'s timestamp gate must refuse. One footer
     * read, no data pages. */
-  private[tx] def fileHasColumn(p: Path, conf: Configuration, dotted: String): Boolean = {
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
+  private[tx] def fileHasColumn(p: Path, dotted: String): Boolean = {
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), LocalFs.conf)
     val reader = ParquetFileReader.open(in)
     try reader.getFooter.getFileMetaData.getSchema.getColumns.asScala
       .exists(_.getPath.toSeq.mkString(".") == dotted)
@@ -298,12 +297,12 @@ object FileStats {
     * read NULL). Values render in the sidecar normal form (ts unit-
     * normalized to micros), so the results merge with sidecar
     * [[ColStats]] through the same compare/parse path. */
-  private[tx] def liveColumnStats(p: Path, conf: Configuration,
+  private[tx] def liveColumnStats(p: Path,
       columns: Seq[String], dead: Long => Boolean): Map[String, ColStats] = {
     import org.apache.parquet.schema.{MessageType, Type}
     val hp = new org.apache.hadoop.fs.Path(p.toUri)
     val schema: MessageType = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(hp, conf))
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(hp, LocalFs.conf))
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
     val wanted: Seq[(String, Type, String)] = columns.flatMap { c =>
@@ -316,7 +315,7 @@ object FileStats {
     }
     if (wanted.isEmpty) return Map.empty
     val projection = new MessageType(schema.getName, wanted.map(_._2): _*)
-    val readConf = new Configuration(conf)
+    val readConf = new Configuration(LocalFs.conf)
     readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
       projection.toString)
     val reader = org.apache.parquet.hadoop.ParquetReader
@@ -539,10 +538,9 @@ object FileStats {
       case (f, cols) if cols.values.exists(_.rows < 0L) => f
     }.toSeq
     if (legacy.isEmpty) return 0
-    val conf = new Configuration()
     val upgraded: Map[String, Map[String, ColStats]] = legacy.flatMap { rel =>
       try {
-        val fresh = collect(dataDir.resolve(rel), conf).toMap
+        val fresh = collect(dataDir.resolve(rel)).toMap
         val old = cur(rel)
         Some(rel -> fresh.map { case (c, s) =>
           val ex = s.min.isDefined &&

@@ -45,7 +45,8 @@ class GraftSessionSpec extends AnyFunSuite {
     val touched = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone",
       "spark.sql.adaptive.enabled", "spark.sql.adaptive.skewJoin.enabled",
       "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.files.maxPartitionBytes", "spark.sql.legacy.parquet.nanosAsLong")
+      "spark.sql.files.maxPartitionBytes", "spark.sql.legacy.parquet.nanosAsLong") ++
+      graft.fs.LocalFs.hadoopKeys.keys.map("spark.hadoop." + _)
     val before = touched.map(k => k -> shared.conf.getOption(k)).toMap
     val s = GraftSession.builder("graft-session-spec", 4)
       .master("local[4]").getOrCreate()
@@ -54,6 +55,11 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
       assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
       assert(s.conf.get("spark.sql.shuffle.partitions") === "8")
+      // the fork-free local file system, for both Hadoop file APIs
+      assert(s.conf.get("spark.hadoop.fs.file.impl") ===
+        classOf[graft.fs.NioLocalFileSystem].getName)
+      assert(s.conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+        classOf[graft.fs.NioLocalFs].getName)
       // extensions: registered function + planner strategy usable end-to-end
       graft.functions.GraftFunctions.register(s)
       val one = s.sql(

@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
   * the un-keyed IVF/PQ builds: a repeated call on a canonically identical
   * plan gets the held, already-materialized frame back with NO re-persist
   * and NO re-count job; a new plan replaces (and unpersists) the old one. */
-class LastCacheSpec extends SparkSpec {
+class MemoFramesSpec extends SparkSpec {
 
   private def jobsDuring(body: => Unit): Seq[Int] = {
     val group = s"lastcache-${java.util.UUID.randomUUID()}"

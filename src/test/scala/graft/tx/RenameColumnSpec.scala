@@ -78,10 +78,9 @@ class RenameColumnSpec extends SparkSpec {
     assert(m.colMap.isEmpty)
     assert(m.schema.fieldNames.toSeq === Seq("id", "typ", "amount"))
     // the rewritten files physically carry the new name
-    val conf = new org.apache.hadoop.conf.Configuration()
     val dir = java.nio.file.Paths.get(t)
     assert(m.files.forall(f =>
-      FileStats.fileHasColumn(dir.resolve(f), conf, "amount")))
+      FileStats.fileHasColumn(dir.resolve(f), "amount")))
     assert(CommitLog.read(spark, t).agg(sum("amount")).head.getDouble(0) === 60.0)
     // the fast HadoopFsRelation path resumes (no colMap, no DVs)
     val plan = spark.read.format("graft").load(t).queryExecution.analyzed
