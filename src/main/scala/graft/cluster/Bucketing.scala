@@ -1,6 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table writes for exchange-free joins — the storage-layout lever
   * the reference reaches for with its pre-write sorts (SURVEY.md O3,
@@ -28,14 +28,5 @@ object Bucketing {
       .option("path", path)
       .mode("overwrite")
     (if (sorted) w.sortBy(bucketCol) else w).saveAsTable(name)
-  }
-
-  /** Bucketed tables are session-catalog entries; write and register one
-    * only if the name is absent. */
-  def ensureBucketed(spark: SparkSession, df: => DataFrame, name: String,
-      path: String, bucketCol: String, numBuckets: Int): DataFrame = {
-    if (!spark.catalog.tableExists(name))
-      writeBucketed(df, name, path, bucketCol, numBuckets)
-    spark.table(name)
   }
 }

@@ -13,8 +13,8 @@ import graft.tx.CommitLog
   * form is two chained Structured Streaming jobs:
   *
   *   landing files → [[StreamingJobs.commitLogSink]] (exactly-once
-  *   transactional bronze, mirrored) → [[CommitLog.readStream]] (committed
-  *   insertions feed) → streaming silver aggregate.
+  *   transactional bronze) → `readStream.format("graft")` (the committed
+  *   versions' inserts) → streaming silver aggregate.
   *
   * The chain is BUILT by the query itself from the `events` table — split
   * into many landing files so several micro-batches actually run — and the
@@ -50,19 +50,23 @@ object StreamQueries {
       val landing = s"$root/landing"
       ev.repartition(16).write.parquet(landing)
 
-      // stage 1: exactly-once transactional bronze, mirrored for subscribers
+      // stage 1: exactly-once transactional bronze
       val table = s"$root/bronze"
       val in = StreamingJobs.commitLogSink(
         s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "8")
           .parquet(landing),
-        table, s"$root/ck_bronze", appId = "graft-medallion", mirror = true)
+        table, s"$root/ck_bronze", appId = "graft-medallion")
         .start()
       drain(in)
 
-      // stage 2: an independent streaming job subscribes to the committed
-      // insertions feed and maintains the silver aggregate
+      // stage 2: an independent streaming job tails bronze's committed
+      // versions, keeps their inserted rows and maintains the silver
+      // aggregate
       val silverName = s"med_silver_$tag"
-      val out = CommitLog.readStream(s, table)
+      val out = s.readStream.format("graft")
+        .option("startingVersion", "earliest").load(table)
+        .filter(col(CommitLog.ChangeTypeCol) === "insert")
+        .drop(CommitLog.ChangeTypeCol, CommitLog.CommitVersionCol)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_stream"), dsum(col("value")).as("sum_stream"))
         .writeStream.format("memory").queryName(silverName)
@@ -185,28 +189,28 @@ object StreamQueries {
     }
 
   /** sfDir → parquet path of the unified-CDC rollup. The table lives one
-    * full lifecycle — two mirrored appends, a mutation delete, a JOURNALED
+    * full lifecycle — two appends, a copy-on-write delete, a JOURNALED
     * overwrite (`cdc = true`, the round-7 write-time CDC) — and ONE
-    * [[CommitLog.changeStreamUnified]] subscription must observe all of
-    * it: mirror insertions (version NULL → coalesced to 0) plus the
-    * `_cdc` feed's typed rows. Counts per (version, change_type) are
-    * arrival-order-invariant, which is what an engine-diff gate can pin
-    * (cross-source ordering is explicitly not guaranteed). */
+    * `readStream.format("graft")` subscription must observe all of it:
+    * each append's inserts at its own version, plus the stored change
+    * rows of the delete and the overwrite. The gate pins the count per
+    * (version, change_type). */
   private def runUnified(s: SparkSession, d: String): String =
     QueryMemo.scratch("scdcu", s, d) { root =>
       val tag = java.lang.Integer.toHexString(root.hashCode)
       val ev = events(s, d).select("event_id", "event_type", "value")
       val table = s"$root/bronze"
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 0),
-        table, "append", mirror = true)                                  // v1
+        table, "append")                                                 // v1
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(2)) === 1),
-        table, "append", mirror = true)                                  // v2
+        table, "append")                                                 // v2
       CommitLog.delete(s, table, col("event_type") === "error")          // v3
       CommitLog.commit(ev.filter(pmod(col("event_id"), lit(3)) === 0),
         table, "overwrite", cdc = true)                                  // v4
       val outName = s"scdcu_$tag"
-      val q = CommitLog.changeStreamUnified(s, table)
-        .groupBy(coalesce(col(CommitLog.CommitVersionCol), lit(0L)).as("v"),
+      val q = s.readStream.format("graft")
+        .option("startingVersion", "earliest").load(table)
+        .groupBy(col(CommitLog.CommitVersionCol).as("v"),
           col(CommitLog.ChangeTypeCol).as("ct"))
         .agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName(outName)
@@ -222,10 +226,9 @@ object StreamQueries {
   /** Version-tailing CDF stream (`spark.readStream.format("graft")`,
     * round 8): a commit-log lifecycle — two appends, a DV delete, a DV
     * merge — tailed from `startingVersion = earliest` through the
-    * registered streaming source. Unlike the file-source subscriptions,
-    * rows arrive exactly once with a REAL `_commit_version` on every row
-    * (appends included), so the gate pins (version, change_type) counts
-    * for the entire history. */
+    * registered streaming source. Rows arrive exactly once with a REAL
+    * `_commit_version` on every row (appends included), so the gate pins
+    * (version, change_type) counts for the entire history. */
   private def runTail(s: SparkSession, d: String): String =
     QueryMemo.scratch("stail", s, d) { root =>
       val tag = java.lang.Integer.toHexString(root.hashCode)
@@ -316,12 +319,12 @@ object StreamQueries {
     "stream_graft_tail" -> ((s, d) =>
       sinkRead(s, runTail(s, d)).filter(col("n") > 0).orderBy("v", "ct")),
 
-    // One unified subscription over a full table lifecycle: mirror
-    // insertions (v coalesced to 0), the delete's change rows (v3), and
-    // the journaled overwrite's stored diff (v4) — the oracle recomputes
-    // every (version, change_type) count from the source parquet, so a
-    // missed journal row, a double-reported mirror row, or an over-wide
-    // diff flips the hash.
+    // One subscription over a full table lifecycle: each append's inserts
+    // (v1, v2), the copy-on-write delete's change rows (v3), and the
+    // journaled overwrite's stored diff (v4) — the oracle recomputes every
+    // (version, change_type) count from the source parquet, so a missed
+    // journal row, an insert at the wrong version, or an over-wide diff
+    // flips the hash.
     "stream_cdc_unified" -> ((s, d) =>
       sinkRead(s, runUnified(s, d)).orderBy("v", "ct")),
 
@@ -469,7 +472,10 @@ object StreamQueries {
          WHERE n > 0 ORDER BY v, ct""",
     "stream_cdc_unified" ->
       """SELECT CAST(v AS BIGINT) AS v, ct, n FROM (
-           SELECT 0 AS v, 'insert' AS ct, count(*) AS n FROM events
+           SELECT 1 AS v, 'insert' AS ct, count(*) AS n
+             FROM events WHERE event_id % 2 = 0
+           UNION ALL
+           SELECT 2, 'insert', count(*) FROM events WHERE event_id % 2 = 1
            UNION ALL
            SELECT 3, 'delete', count(*) FROM events WHERE event_type = 'error'
            UNION ALL

@@ -90,13 +90,14 @@ final class GraftSourceProvider extends RelationProvider
   // per batch (the aggregation-sink shape); `.option("mergeKeys",
   // "k1,k2")` switches every batch to a merge-on-read upsert-by-key
   // ([[CommitLog.mergeDv]]) — the CDC-apply sink, REQUIRED for Update
-  // mode. `partitionBy` lays out hive dirs; mirror/cdc options forward to
+  // mode. `partitionBy` lays out hive dirs; the cdc option forwards to
   // commit.
   override def createSink(sqlContext: SQLContext,
       parameters: Map[String, String], partitionColumns: Seq[String],
       outputMode: org.apache.spark.sql.streaming.OutputMode): org.apache.spark.sql.execution.streaming.Sink = {
     val table = GraftSourceProvider.rootOf(parameters,
       "graft sink needs a table root: .start(<path>)")
+    GraftSourceProvider.refuseMirror(parameters)
     val mergeKeys = parameters.get("mergekeys").orElse(parameters.get("mergeKeys"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     // exactly-once identity must follow the CHECKPOINT (a new checkpoint
@@ -137,33 +138,32 @@ final class GraftSourceProvider extends RelationProvider
     require(!(complete && mergeKeys.nonEmpty),
       "Complete mode replaces the snapshot per batch; mergeKeys would " +
         "leave keys absent from the latest result behind — drop one of the two")
-    val mirror = parameters.get("mirror").exists(_.toBoolean)
     val cdc = parameters.get("cdc").exists(_.toBoolean)
-    require(!(mergeKeys.nonEmpty && (mirror || cdc)),
-      "mirror/cdc options don't compose with mergeKeys: a merge journals " +
+    require(!(mergeKeys.nonEmpty && cdc),
+      "the cdc option doesn't compose with mergeKeys: a merge journals " +
         "its typed change rows itself (changeFeed serves them)")
     require(!cdc || complete,
       "cdc journaling applies to overwrites: use Complete mode (the " +
         "append path's inserts stream from the manifest delta already)")
     new GraftStreamSink(table, mergeKeys, partitionColumns,
-      complete, appId, mirror, cdc)
+      complete, appId, cdc)
   }
 
   // ---- streaming: spark.readStream.format("graft").load(root) ----------
   //
   // A VERSION-TAILING source over the commit log — offsets ARE commit
-  // versions, batches ARE changeFeed slices. Unlike the `_stream`/`_cdc`
-  // file-source subscriptions (CommitLog.readStream/changeFeedStream,
-  // which interleave arbitrarily), this source serves every row-level
-  // change exactly once, version-ordered, with `_change_type` and
-  // `_commit_version` attached — Delta's CDF streaming contract. Appends
-  // derive inserts from the manifest delta (zero extra storage, no
-  // mirror = true needed); mutations and journaled overwrites serve their
-  // stored change rows; a PLAIN overwrite inside the tailed range fails
-  // the stream loudly (journal overwrites with cdc = true on streamed
-  // tables). `.option("startingVersion", "latest" (default) | "earliest"
-  // | <n>)` picks where the tail begins; checkpoints persist progress as
-  // plain long offsets.
+  // versions, batches ARE changeFeed slices — and the one streaming read
+  // of a commit-log table. It serves every row-level change exactly once,
+  // version-ordered, with `_change_type` and `_commit_version` attached —
+  // Delta's CDF streaming contract. Appends derive inserts from the
+  // manifest delta (zero extra storage); a reader that wants the inserted
+  // rows alone keeps `_change_type = 'insert'` and drops the two stamps.
+  // Mutations and journaled overwrites serve their stored change rows; a
+  // PLAIN overwrite inside the tailed range fails the stream loudly
+  // (journal overwrites with cdc = true on streamed tables).
+  // `.option("startingVersion", "latest" (default) | "earliest" | <n>)`
+  // picks where the tail begins; checkpoints persist progress as plain
+  // long offsets.
 
   /** The stream's start anchor, PERSISTED under the source's metadata dir
     * on first creation and read back on every restart — under the default
@@ -230,16 +230,14 @@ final class GraftSourceProvider extends RelationProvider
     require(appOpt.isDefined == verOpt.isDefined,
       "txnAppId and txnVersion must be set together (or neither)")
     val txn = appOpt.zip(verOpt).map { case (a, v) => (a, v.toLong) }.headOption
-    // mirror = feed the _stream insertion mirror (readStream subscribers);
-    // cdc = journal an overwrite's row diff at write time (changeFeed /
-    // changeFeedStream serve it with no opt-in) — the same knobs the
-    // Scala commit() surface has
-    val mirror = parameters.get("mirror").exists(_.toBoolean)
+    GraftSourceProvider.refuseMirror(parameters)
+    // cdc = journal an overwrite's row diff at write time (changeFeed and
+    // the graft stream serve it with no opt-in) — the same knob the Scala
+    // commit() surface has
     val cdc = parameters.get("cdc").exists(_.toBoolean)
     val exists = CommitLog.latestVersion(table).isDefined
     def commit(m: String): Unit =
-      CommitLog.commit(data, table, m, partitionBy, txn = txn,
-        mirror = mirror, cdc = cdc): Unit
+      CommitLog.commit(data, table, m, partitionBy, txn = txn, cdc = cdc): Unit
     // Delta's replaceWhere write option: `.option("replaceWhere", "pred")`
     // with mode overwrite swaps EXACTLY the predicate's region in one
     // atomic version (CommitLog.replaceWhere — untouched files carry by
@@ -254,9 +252,6 @@ final class GraftSourceProvider extends RelationProvider
           "replaceWhere requires SaveMode.Overwrite (Delta's contract)")
         require(!cdc, "replaceWhere journals its own change rows; cdc=true " +
           "applies to plain overwrites only")
-        require(!mirror, "replaceWhere does not feed the _stream insertion " +
-          "mirror (mutations never do) — dropping the option silently " +
-          "would hide the backfill from readStream subscribers")
         val cond = org.apache.spark.sql.graftbridge.ColumnBridge.column(
           sqlContext.sparkSession.sessionState.sqlParser.parseExpression(pred))
         CommitLog.replaceWhere(sqlContext.sparkSession, table, data, cond,
@@ -344,6 +339,16 @@ private[graft] object GraftSourceProvider {
   def rootOf(parameters: Map[String, String], err: String): String =
     CommitLog.normalizeRoot(
       parameters.getOrElse("path", throw new IllegalArgumentException(err)))
+
+  /** Refuse the retired `mirror` write option. It fed a `_stream/` side
+    * copy that no longer exists, and Spark passes an unknown option
+    * through in silence, so a writer counting on it would lose its feed
+    * without a word. */
+  def refuseMirror(parameters: Map[String, String]): Unit =
+    if (parameters.keys.exists(_.equalsIgnoreCase("mirror")))
+      throw new IllegalArgumentException("the mirror option is gone: " +
+        "subscribe to the table's changes with " +
+        "spark.readStream.format(\"graft\").load(<path>) instead")
 
   /** Refuse to create a graft table over a NON-EMPTY directory that is
     * not a graft table: committing an empty v1 would make SELECT return 0
@@ -485,7 +490,7 @@ private[sources] object GraftStreamSource {
   * [[GraftSourceProvider.createSink]] for the mode/merge contract. */
 private[sources] final class GraftStreamSink(table: String,
     mergeKeys: Seq[String], partitionBy: Seq[String], complete: Boolean,
-    appId: String, mirror: Boolean, cdc: Boolean)
+    appId: String, cdc: Boolean)
     extends org.apache.spark.sql.execution.streaming.Sink {
 
   override def addBatch(batchId: Long, data: org.apache.spark.sql.DataFrame): Unit = {
@@ -498,13 +503,13 @@ private[sources] final class GraftStreamSink(table: String,
       // first batch may create the table: merge needs an existing snapshot
       if (CommitLog.latestVersion(table).isEmpty)
         CommitLog.commit(batch, table, "append", partitionBy,
-          txn = Some((appId, batchId)), mirror = mirror, cdc = cdc)
+          txn = Some((appId, batchId)), cdc = cdc)
       else
         CommitLog.mergeDv(spark, table, batch, mergeKeys, partitionBy,
           txn = Some((appId, batchId)))
     } else {
       CommitLog.commit(batch, table, if (complete) "overwrite" else "append",
-        partitionBy, txn = Some((appId, batchId)), mirror = mirror, cdc = cdc)
+        partitionBy, txn = Some((appId, batchId)), cdc = cdc)
     }
     (): Unit
   }

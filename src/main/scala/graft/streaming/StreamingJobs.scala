@@ -97,25 +97,24 @@ object StreamingJobs {
     * cron→Delta-append loop (`deploy.yml:53` + `save_to_raw_delta_dev.py:63`)
     * in its semantically complete form. */
   def commitLogSink(events: DataFrame, table: String, checkpointDir: String,
-      appId: String, partitionBy: Seq[String] = Seq("year", "month"),
-      mirror: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
+      appId: String,
+      partitionBy: Seq[String] = Seq("year", "month")): DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(commitBatch(table, appId, partitionBy, mirror))
+      .foreachBatch(commitBatch(table, appId, partitionBy))
 
   /** The foreachBatch body of [[commitLogSink]], exposed for direct testing
-    * and for composing into custom writers. `mirror = true` republishes
-    * each committed batch to the table's `_stream/` feed, chaining the full
-    * streaming medallion: landing → transactional bronze → downstream
-    * streaming silver subscribed via [[graft.tx.CommitLog.readStream]]. */
+    * and for composing into custom writers. A downstream streaming job
+    * subscribes to the committed batches with
+    * `spark.readStream.format("graft")`, chaining the full streaming
+    * medallion: landing → transactional bronze → streaming silver. */
   def commitBatch(table: String, appId: String,
-      partitionBy: Seq[String] = Seq("year", "month"),
-      mirror: Boolean = false): (DataFrame, Long) => Unit =
+      partitionBy: Seq[String] = Seq("year", "month")): (DataFrame, Long) => Unit =
     (batch, batchId) =>
       if (!batch.isEmpty) {
         graft.tx.CommitLog.commit(batch, table, "append", partitionBy,
-          txn = Some((appId, batchId)), mirror = mirror): Unit
+          txn = Some((appId, batchId))): Unit
       }
 
   /** Streaming CDC apply — the foreachBatch MERGE pattern (Delta's

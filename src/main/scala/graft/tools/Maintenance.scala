@@ -10,9 +10,8 @@ import graft.tx.CommitLog
   * otherwise relies on a caller remembering, run in dependency order under
   * one policy object.
   *
-  *  1. heal — [[CommitLog.repairMirror]] (insertion-feed gaps) and
-  *     [[CommitLog.repairCdc]] (crashed change-row publishes); both
-  *     idempotent, so running them every cycle costs nothing when healthy;
+  *  1. heal — [[CommitLog.repairCdc]] (crashed change-row publishes);
+  *     idempotent, so running it every cycle costs nothing when healthy;
   *  2. compact — full [[CommitLog.compact]] (optionally Z-ordering) once
   *     the snapshot spans more commit dirs than the policy width; the
   *     inline auto-compaction bounds width between cycles, this resets it
@@ -24,12 +23,12 @@ import graft.tx.CommitLog
   *     index's artifact table on its gate column (refresh merges land
   *     unclustered and would otherwise erode cell-gated file skipping),
   *     and a drift-staleness flag when only a re-`build` will do;
-  *  4. reclaim — [[CommitLog.pruneMirrorConsumed]] against the slowest
-  *     subscriber's own checkpoint, releasing consumed feed bytes;
-  *  5. vacuum — retention GC of unreachable versions (the explicit
+  *  4. vacuum — retention GC of unreachable versions (the explicit
   *     disk-vs-time-travel trade, Delta's VACUUM), stopping at any
-  *     registered change-feed reader's cursor;
-  *  6. sweep — [[CommitLog.fsckClean]] for crash leftovers, then a final
+  *     registered change-feed reader's cursor — the retention handshake a
+  *     `readStream.format("graft")` subscriber makes with
+  *     [[CommitLog.registerCdcReader]];
+  *  5. sweep — [[CommitLog.fsckClean]] for crash leftovers, then a final
   *     read-only [[CommitLog.fsck]] audit returned to the operator —
   *     re-healed and re-audited once if it overlaps a live writer's
   *     publish window, so a cron never pages on a healthy mid-commit
@@ -62,7 +61,6 @@ object Maintenance {
       vacuumKeepVersions: Int = 2,
       minAgeMillis: Long = CommitLog.DefaultVacuumRetentionMillis,
       force: Boolean = false,
-      subscriberCheckpoint: Option[String] = None,
       indexes: Seq[IndexRef] = Nil,
       indexStaleThreshold: Double = 0.5,
       dropLaggingReaders: Boolean = false,
@@ -141,7 +139,6 @@ object Maintenance {
   final case class Report(
       repairedCdc: Long,
       compactedTo: Option[Long],
-      prunedMirrorLinks: Long,
       vacuumedFiles: Long,
       cleanedLeftovers: Long,
       fsck: CommitLog.FsckReport,
@@ -155,7 +152,6 @@ object Maintenance {
 
   def run(spark: SparkSession, table: String, policy: Policy = Policy()): Report = {
     // 1. heal (before anything widens the damage window)
-    CommitLog.repairMirror(table)
     var repairedCdc = CommitLog.repairCdc(table)
     // 2. threshold-gated full compaction — triggered by commit-dir WIDTH
     // (plan-width debt) or accumulated DELETION VECTORS (merge-on-read
@@ -228,10 +224,7 @@ object Maintenance {
     val stale = policy.indexes
       .filter(_.staleFraction() > policy.indexStaleThreshold)
       .map(_.indexRoot)
-    // 4. subscriber-driven feed retention
-    val pruned = policy.subscriberCheckpoint
-      .map(CommitLog.pruneMirrorConsumed(table, _)).getOrElse(0L)
-    // 5. version retention GC. A registered reader cursor that pins
+    // 4. version retention GC. A registered reader cursor that pins
     // retention below the policy's keepVersions is SURFACED in the report
     // (an abandoned reader would otherwise silently disable vacuum
     // forever — disk grows with healthy=true and no operator signal);
@@ -245,41 +238,40 @@ object Maintenance {
         latestNow - c + 1 > policy.vacuumKeepVersions)
     val vacuumed = CommitLog.vacuum(table, policy.vacuumKeepVersions,
       policy.minAgeMillis, policy.force, policy.dropLaggingReaders)
-    // 6. crash-leftover sweep + final audit; the audit ignores leftovers
+    // 5. crash-leftover sweep + final audit; the audit ignores leftovers
     // younger than the retention window — they are indistinguishable from
     // a concurrent writer's in-flight files, and an hourly cron must not
     // page on a healthy table mid-commit
     val cleaned = CommitLog.fsckClean(table, policy.minAgeMillis, policy.force)
     var audit = CommitLog.fsck(table, policy.minAgeMillis)
-    if (audit.pendingCdc.nonEmpty || audit.unmirrored.nonEmpty) {
+    if (audit.pendingCdc.nonEmpty) {
       // manifest-referenced damage is reported regardless of age, but a
       // LIVE writer's millisecond publish window (manifest linked, slot
-      // move or mirror not yet run) can overlap the audit — that exact
-      // state is what heal repairs, so re-heal and re-audit once instead
-      // of paging the cron on a healthy mid-publish table (round-6
-      // ADVICE, low; repairCdc is publish-race-safe as of this round)
-      CommitLog.repairMirror(table)
+      // move not yet run) can overlap the audit — that exact state is
+      // what heal repairs, so re-heal and re-audit once instead of paging
+      // the cron on a healthy mid-publish table (round-6 ADVICE, low;
+      // repairCdc is publish-race-safe as of this round)
       repairedCdc += CommitLog.repairCdc(table)
       audit = CommitLog.fsck(table, policy.minAgeMillis)
     }
-    Report(repairedCdc, compactedTo, pruned, vacuumed, cleaned, audit,
+    Report(repairedCdc, compactedTo, vacuumed, cleaned, audit,
       refreshed, stale, laggingCursor, rebuilt.toSeq, upgradedSidecars)
   }
 
-  /** CLI: `Maintenance <table> [zorderCol,...] [subscriberCheckpoint]
-    * [indexRoot,...]` — the shape a cron wires up (prefix a root with
-    * `pq:` for a [[graft.ext.PqStore]] index, `dedup:` for a
-    * [[graft.ext.DedupStore]] over (doc_id, text); bare roots are IVF).
-    * Prints one summary line; exits non-zero when the final audit is not
-    * clean. */
+  /** CLI: `Maintenance <table> [zorderCol,...] [indexRoot,...]` — the
+    * shape a cron wires up (prefix a root with `pq:` for a
+    * [[graft.ext.PqStore]] index, `dedup:` for a [[graft.ext.DedupStore]]
+    * over (doc_id, text); bare roots are IVF). More arguments, such as the
+    * subscriber checkpoint an older release took third, fail with the
+    * usage line. Prints one summary line; exits non-zero when the final
+    * audit is not clean. */
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: Maintenance <table> [zorderCols] [subscriberCheckpoint] [indexRoots]")
+    require(args.nonEmpty && args.length <= 3,
+      "usage: Maintenance <table> [zorderCols] [indexRoots]")
     val table = args(0)
     val zorder = if (args.length > 1) args(1).split(",").toSeq.filter(_.nonEmpty) else Nil
-    val ck = if (args.length > 2) Some(args(2)).filter(_.nonEmpty) else None
-    val ixs = if (args.length > 3)
-      args(3).split(",").toSeq.filter(_.nonEmpty).map {
+    val ixs = if (args.length > 2)
+      args(2).split(",").toSeq.filter(_.nonEmpty).map {
         case r if r.startsWith("pq:") => IndexRef(r.stripPrefix("pq:"), kind = "pq")
         case r if r.startsWith("dedup:") =>
           IndexRef(r.stripPrefix("dedup:"), idCol = "doc_id", kind = "dedup")
@@ -292,9 +284,9 @@ object Maintenance {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val r = run(spark, table,
-        Policy(zorderBy = zorder, subscriberCheckpoint = ck, indexes = ixs))
+        Policy(zorderBy = zorder, indexes = ixs))
       println(s"maintenance $table: repairedCdc=${r.repairedCdc} " +
-        s"compactedTo=${r.compactedTo.getOrElse(-1L)} prunedMirror=${r.prunedMirrorLinks} " +
+        s"compactedTo=${r.compactedTo.getOrElse(-1L)} " +
         s"vacuumed=${r.vacuumedFiles} cleaned=${r.cleanedLeftovers} " +
         s"refreshedIndexes=${r.refreshedIndexes.map { case (p, v) => s"$p@$v" }.mkString(",")} " +
         s"staleIndexes=${r.staleIndexes.mkString(",")} " +

@@ -118,12 +118,12 @@ class TxIO {
     else deleteIfExists(p): Unit
 
   /** Delete the empty directories under `root`, deepest first, sparing
-    * `root` itself and `keep`. A directory a concurrent writer fills (or
-    * removes) first is left alone: rmdir refuses a non-empty one. */
-  def pruneEmptyDirs(root: Path, keep: Set[Path] = Set.empty): Unit =
+    * `root` itself. A directory a concurrent writer fills (or removes)
+    * first is left alone: rmdir refuses a non-empty one. */
+  def pruneEmptyDirs(root: Path): Unit =
     if (Files.isDirectory(root))
       walk(root).reverse
-        .filter(p => p != root && !keep(p) && Files.isDirectory(p))
+        .filter(p => p != root && Files.isDirectory(p))
         .foreach { p =>
           try delete(p)
           catch { case _: DirectoryNotEmptyException | _: NoSuchFileException => () }

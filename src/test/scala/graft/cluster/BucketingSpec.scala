@@ -42,8 +42,8 @@ class BucketingSpec extends SparkSpec {
     val dir = tmpDir("bucketing_once")
     var builds = 0
     def df = { builds += 1; spark.range(100).select(col("id").as("k")) }
-    Bucketing.ensureBucketed(spark, df, "bspec_once", s"$dir/t", "k", 4)
-    Bucketing.ensureBucketed(spark, df, "bspec_once", s"$dir/t", "k", 4)
+    graft.tools.ScaleSmoke.ensureBucketed(spark, df, "bspec_once", s"$dir/t", "k", 4)
+    graft.tools.ScaleSmoke.ensureBucketed(spark, df, "bspec_once", s"$dir/t", "k", 4)
     assert(builds === 1)
     assert(spark.table("bspec_once").count() === 100)
   }

@@ -186,12 +186,17 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(CommitLog.read(spark, t).count() === n)
     // and the round-trip reads back through the same source
     assert(spark.read.format("graft").load(t).count() === n)
-    // mirror and cdc knobs plumb through: a mirrored write feeds the
-    // _stream insertion mirror, a cdc overwrite journals its diff so the
-    // change feed serves it with no opt-in
+    // the retired mirror option refuses loudly (Spark would pass it
+    // through in silence) and names the stream that replaced it; a cdc
+    // overwrite journals its diff so the change feed serves it with no
+    // opt-in
     val t2 = freshTable()
-    df1.write.format("graft").mode("append").option("mirror", "true").save(t2)
-    assert(CommitLog.manifest(t2, 1L).mirrored)
+    val e = intercept[IllegalArgumentException] {
+      df1.write.format("graft").mode("append").option("mirror", "true").save(t2)
+    }
+    assert(e.getMessage.contains("readStream.format(\"graft\")"))
+    assert(CommitLog.latestVersion(t2).isEmpty)
+    df1.write.format("graft").mode("append").save(t2)
     df1.filter(col("id") < 10L).write.format("graft").mode("overwrite")
       .option("cdc", "true").save(t2)
     val feed = CommitLog.changeFeed(spark, t2, fromVersion = 1L)

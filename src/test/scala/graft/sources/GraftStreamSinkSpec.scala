@@ -83,10 +83,10 @@ class GraftStreamSinkSpec extends SparkSpec {
     // cdc journaling needs the overwrite (Complete) shape
     val e1 = intercept[Exception](start(Map("cdc" -> "true"), "append"))
     assert(e1.getMessage.contains("cdc"))
-    // mirror/cdc don't compose with mergeKeys
-    val e2 = intercept[Exception](
+    // the retired mirror option refuses, naming the stream that replaced it
+    val e2 = intercept[IllegalArgumentException](
       start(Map("mergeKeys" -> "id", "mirror" -> "true"), "append"))
-    assert(e2.getMessage.contains("mergeKeys"))
+    assert(e2.getMessage.contains("readStream.format(\"graft\")"))
     // Complete + mergeKeys would strand vanished keys
     val e3 = intercept[Exception](start(Map("mergeKeys" -> "id"), "complete"))
     assert(e3.getMessage.contains("Complete"))

@@ -2,14 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.ext.{Dedup, DedupStore}
 import graft.tx.CommitLog
 import org.apache.spark.sql.functions._
 
-/** The maintenance driver: one cycle over a mutated, mirrored, subscribed
-  * table must heal, compact, reclaim, vacuum, and sweep WITHOUT losing a
-  * live row, breaking the subscriber, or leaving the audit dirty. */
+/** The maintenance driver: one cycle over a mutated, subscribed table
+  * must heal, compact, vacuum, and sweep WITHOUT losing a live row,
+  * breaking the subscriber, or leaving the audit dirty. */
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,31 +19,57 @@ class MaintenanceSpec extends SparkSpec {
     val t = graft.SparkSpec.tmpPath("graft_maint").resolve("t").toString
     val ck = graft.SparkSpec.tmpPath("graft_maint_ck").toString
     val out = graft.SparkSpec.tmpPath("graft_maint_out").toString
-    // 16 mirrored single-row appends (auto-compaction off so the WIDTH is
-    // really there for the cycle to fix), then the full mutation family
+    // 16 single-row appends (auto-compaction off so the WIDTH is really
+    // there for the cycle to fix), then the full mutation family
     (0 until 16).foreach { i =>
       CommitLog.commit(Seq((i.toLong, s"s$i")).toDF("id", "s"), t, "append",
-        mirror = true, autoCompactEvery = 0)
+        autoCompactEvery = 0)
     }
     CommitLog.merge(spark, t,
       Seq((3L, "UPD3"), (100L, "NEW100")).toDF("id", "s"), Seq("id"))
     CommitLog.delete(spark, t, col("id") === 5L)
     CommitLog.update(spark, t, col("id") === 7L, Map("s" -> lit("s7!")))
-    // a checkpointed subscriber consumes the whole insertion feed
-    def drain(): Seq[Long] = {
-      val q = CommitLog.readStream(spark, t)
+    // a checkpointed graft-stream subscriber consumes every change
+    def drain(): Seq[(Long, String, Long, String)] = {
+      val q = spark.readStream.format("graft")
+        .option("startingVersion", "earliest").load(t)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ck)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination(60000)
-      spark.read.parquet(out).select("id").as[Long].collect().sorted.toSeq
+      assert(q.exception.isEmpty)
+      spark.read.parquet(out).select(CommitLog.CommitVersionCol,
+        CommitLog.ChangeTypeCol, "id", "s")
+        .as[(Long, String, Long, String)].collect().toSeq
     }
-    assert(drain().size === 16)
+    // the table the subscriber rebuilds by folding its rows in version
+    // order, removals first within a version
+    def replica(rows: Seq[(Long, String, Long, String)]): Set[(Long, String)] = {
+      val removal = Set("delete", "update_preimage")
+      val acc = scala.collection.mutable.Buffer.empty[(Long, String)]
+      rows.sortBy(r => (r._1, !removal(r._2))).foreach {
+        case (_, ct, id, s) if removal(ct) => acc -= ((id, s))
+        case (_, _, id, s) => acc += ((id, s))
+      }
+      acc.toSet
+    }
+    val first = drain()
+    assert(first.count(_._2 == "insert") === 17) // 16 appends + merge's new key
+    CommitLog.commit(Seq((150L, "mid")).toDF("id", "s"), t, "append",
+      autoCompactEvery = 0)
+    val second = drain()
+    assert(second.size === first.size + 1)
     val before = CommitLog.read(spark, t).as[(Long, String)].collect().toSet
+    assert(replica(second) === before)
+    // the subscriber registers its cursor so retention never outruns it:
+    // the START of its last committed batch, because a restart re-plans
+    // that batch before asking for new versions
+    val cursor = first.map(_._1).max
+    CommitLog.registerCdcReader(spark, t, "maint-sub", cursor)
 
     val report = Maintenance.run(spark, t, Maintenance.Policy(
       compactWhenDirsExceed = 4, zorderBy = Seq("id"),
-      minAgeMillis = 0, force = true, subscriberCheckpoint = Some(ck)))
+      minAgeMillis = 0, force = true))
 
     // compaction fired and bounded the plan width to one commit dir
     assert(report.compactedTo.isDefined)
@@ -49,30 +77,61 @@ class MaintenanceSpec extends SparkSpec {
     val dirs = CommitLog.manifest(t, latest).files
       .map(_.split("/").take(2).mkString("/")).distinct
     assert(dirs.size === 1)
-    // consumed feed history reclaimed, old versions vacuumed, audit clean
-    assert(report.prunedMirrorLinks > 0L)
+    // old versions vacuumed up to the reader's cursor and no further;
+    // audit clean
     assert(report.vacuumedFiles > 0L)
+    assert(report.laggingReaderCursor === Some(cursor))
+    assert(CommitLog.versions(t).head === cursor)
     assert(report.healthy, s"fsck: ${report.fsck}")
     // nothing live lost (merge/delete/update results intact post-compact)
     val after = CommitLog.read(spark, t).as[(Long, String)].collect().toSet
     assert(after === before)
     assert(after.contains((3L, "UPD3")) && after.contains((7L, "s7!")))
     assert(!after.exists(_._1 == 5L))
-    // the subscriber's checkpoint survives pruning: a restart sees no
-    // duplicates and no losses, and a post-maintenance mirrored commit
-    // still flows through the feed
-    CommitLog.commit(Seq((200L, "late")).toDF("id", "s"), t, "append", mirror = true)
+    // the restarted subscriber sees every committed row exactly once: the
+    // compaction is not replayed, and a post-maintenance commit flows
+    // through the feed
+    CommitLog.commit(Seq((200L, "late")).toDF("id", "s"), t, "append")
     val drained = drain()
-    assert(drained.count(_ == 200L) === 1)
-    assert(drained.size === 17)
+    assert(drained.count(r => r._2 == "insert" && r._3 == 200L) === 1)
+    assert(drained.size === second.size + 1)
+    assert(replica(drained) ===
+      CommitLog.read(spark, t).as[(Long, String)].collect().toSet)
 
     // a second cycle is an idempotent no-op on a healthy table
+    CommitLog.registerCdcReader(spark, t, "maint-sub", second.map(_._1).max)
     val again = Maintenance.run(spark, t, Maintenance.Policy(
-      compactWhenDirsExceed = 4, minAgeMillis = 0, force = true,
-      subscriberCheckpoint = Some(ck)))
+      compactWhenDirsExceed = 4, minAgeMillis = 0, force = true))
     assert(again.repairedCdc === 0L)
     assert(again.compactedTo.isEmpty)
     assert(again.healthy)
+  }
+
+  test("the CLI takes <table> [zorderCols] [indexRoots]; a subscriber checkpoint is no index root") {
+    // the 4-argument shape of older releases fails with the usage line
+    val e = intercept[IllegalArgumentException](
+      Maintenance.main(Array("t", "id", "ck", "ix")))
+    assert(e.getMessage.contains("usage: Maintenance <table> [zorderCols] [indexRoots]"))
+    // in the 3-argument shape a checkpoint lands in the index slot as a
+    // bare (IVF) root: refresh refuses it before writing anything
+    val t = graft.SparkSpec.tmpPath("graft_maint_cli").resolve("t").toString
+    val ck = graft.SparkSpec.tmpPath("graft_maint_cli_ck").toString
+    CommitLog.commit(Seq((1L, "a")).toDF("id", "s"), t, "append")
+    val q = spark.readStream.format("graft").option("startingVersion", "earliest").load(t)
+      .writeStream.format("noop").option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    def listing(): Seq[(String, Long)] = {
+      val walk = Files.walk(Paths.get(ck))
+      try walk.iterator().asScala.map(p => (p.toString, Files.getLastModifiedTime(p).toMillis))
+        .toSeq.sorted
+      finally walk.close()
+    }
+    val before = listing()
+    assert(before.exists(_._1.endsWith("commits")))
+    val e2 = intercept[IllegalStateException](Maintenance.IndexRef(ck).refresh(spark, t))
+    assert(e2.getMessage.contains("no built index"))
+    assert(listing() === before)
   }
 
   test("the cycle upgrades legacy stats sidecars so grandfathered " +
@@ -357,8 +416,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("cycles overlapping live writers never page on a healthy table") {
-    // round-6 ADVICE (low): the final audit always reported pendingCdc /
-    // unmirrored regardless of age, so a cron overlapping a writer's
+    // round-6 ADVICE (low): the final audit always reported pendingCdc
+    // regardless of age, so a cron overlapping a writer's
     // millisecond publish window returned healthy=false — a spurious page.
     // The cycle now re-heals and re-audits once before declaring unhealthy
     // (safe because repairCdc is publish-race-free as of this round).

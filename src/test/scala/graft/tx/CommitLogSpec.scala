@@ -17,6 +17,12 @@ class CommitLogSpec extends SparkSpec {
   private def freshTable(): String =
     graft.SparkSpec.tmpPath("graft_txspec").resolve("t").toString
 
+  /** The table's inserted rows as a stream from its first version. */
+  private def insertStream(t: String) =
+    spark.readStream.format("graft").option("startingVersion", "earliest").load(t)
+      .filter(col(CommitLog.ChangeTypeCol) === "insert")
+      .drop(CommitLog.ChangeTypeCol, CommitLog.CommitVersionCol)
+
   test("append/read roundtrip and version history") {
     val t = freshTable()
     val v1 = CommitLog.commit(Seq((1, "a"), (2, "b")).toDF("id", "s"), t, "append")
@@ -132,10 +138,10 @@ class CommitLogSpec extends SparkSpec {
 
   test("readStream starts on a table with no mirrored commit yet (empty feed)") {
     val t = freshTable()
-    CommitLog.commit(Seq((1, "a")).toDF("id", "s"), t, "append") // no mirror
-    // regression: _stream/ didn't exist and the file source threw at
-    // query start; now it pre-creates and drains an empty feed cleanly
-    val q = CommitLog.readStream(spark, t)
+    CommitLog.commit(Seq((1, "a")).toDF("id", "s"), t, "append")
+    // the default start is the latest version: a live table with nothing
+    // committed since drains an empty feed cleanly
+    val q = spark.readStream.format("graft").load(t)
       .writeStream.format("memory").queryName("empty_feed")
       .option("checkpointLocation",
         graft.SparkSpec.tmpPath("graft_emptyfeed").toString)
@@ -298,13 +304,13 @@ class CommitLogSpec extends SparkSpec {
   test("mirrored commits are consumable as a streaming source; torn writes never appear") {
     val t = freshTable()
     CommitLog.commit(Seq((1L, 2024), (2L, 2025)).toDF("id", "year"), t, "append",
-      partitionBy = Seq("year"), mirror = true)
+      partitionBy = Seq("year"))
     CommitLog.commit(Seq((3L, 2024)).toDF("id", "year"), t, "append",
-      partitionBy = Seq("year"), mirror = true)
-    // a dead writer's files: in data/, never mirrored, never visible
+      partitionBy = Seq("year"))
+    // a dead writer's files: in data/, never committed, never visible
     Seq((99L, 2024)).toDF("id", "year").write
       .parquet(s"$t/data/orphan-${java.util.UUID.randomUUID()}")
-    val q = CommitLog.readStream(spark, t)
+    val q = insertStream(t)
       .writeStream.format("memory").queryName("txstream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -315,70 +321,83 @@ class CommitLogSpec extends SparkSpec {
 
   test("replayed txn commit after compaction never re-mirrors the rewrite (exactly-once feed)") {
     val t = freshTable()
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 0L)))
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 1L)))
-    CommitLog.compact(spark, t) // v3: full-table rewrite, never mirrored
-    CommitLog.commit(Seq(3L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 2L)))
-    // streaming restart: the last batch replays through the txn fast path,
-    // which runs the mirror repair over the whole chain
-    CommitLog.commit(Seq(3L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 2L)))
+    CommitLog.commit(Seq(1L).toDF("id"), t, "append", txn = Some(("app", 0L)))
+    CommitLog.commit(Seq(2L).toDF("id"), t, "append", txn = Some(("app", 1L)))
+    CommitLog.compact(spark, t) // v3: full-table rewrite of rows 1..2
+    CommitLog.commit(Seq(3L).toDF("id"), t, "append", txn = Some(("app", 2L)))
+    // streaming restart: the last batch replays through the txn fast path
+    CommitLog.commit(Seq(3L).toDF("id"), t, "append", txn = Some(("app", 2L)))
     // the feed holds exactly the three inserted rows — the compacted
-    // rewrite (which lists rows 1..2 again) must NOT have been mirrored
-    val q = CommitLog.readStream(spark, t)
+    // rewrite (which lists rows 1..2 again) must NOT be served as inserts
+    val q = insertStream(t)
       .writeStream.format("memory").queryName("txrepair")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     assert(spark.sql("SELECT id FROM txrepair").as[Long].collect().sorted === Seq(1L, 2L, 3L))
   }
 
-  test("repairMirror heals a lost mirror step from the version's file delta") {
+  test("a manifest whose mode line carries an older writer's mirror flag reads and tails normally") {
     val t = freshTable()
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 0L)))
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 1L)))
-    // simulate a crash between v2's manifest publish and its mirror step
-    val stream = java.nio.file.Paths.get(t, "_stream")
-    val v2Ledger = stream.resolve("_ledger").resolve(f"${2L}%020d")
-    new String(Files.readAllBytes(v2Ledger), "UTF-8").split("\n").foreach { rel =>
-      Files.delete(stream.resolve(rel))
+    CommitLog.commit(Seq(1L).toDF("id"), t, "append")
+    CommitLog.commit(Seq(2L).toDF("id"), t, "append") // a delta manifest
+    // older writers put " mirror" right after the mode word
+    (1L to 2L).foreach { v =>
+      val p = java.nio.file.Paths.get(t, "_graft_log", f"$v%020d.commit")
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      Files.write(p, text.replaceFirst("^append", "append mirror").getBytes("UTF-8"))
+      assert(new String(Files.readAllBytes(p), "UTF-8").startsWith("append mirror"))
     }
-    Files.delete(v2Ledger)
-    // replaying v2's txn repairs exactly the missing delta
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 1L)))
-    val q = CommitLog.readStream(spark, t)
-      .writeStream.format("memory").queryName("txheal")
+    assert(CommitLog.manifest(t, 2L).mode === "append")
+    assert(CommitLog.read(spark, t).as[Long].collect().sorted === Seq(1L, 2L))
+    val q = spark.readStream.format("graft").option("startingVersion", "earliest").load(t)
+      .writeStream.format("memory").queryName("txoldflag")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    assert(spark.sql("SELECT id FROM txheal").as[Long].collect().sorted === Seq(1L, 2L))
+    assert(spark.sql(s"SELECT ${CommitLog.CommitVersionCol}, ${CommitLog.ChangeTypeCol}, id " +
+      "FROM txoldflag").as[(Long, String, Long)].collect().sorted.toSeq
+      === Seq((1L, "insert", 1L), (2L, "insert", 2L)))
   }
 
-  test("pruneMirror reclaims consumed feed history up to the subscriber watermark") {
+  test("an older release's _stream/ dir is inert: fsck clean, kept by fsckClean and vacuum") {
     val t = freshTable()
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true)
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true)
-    val stream = java.nio.file.Paths.get(t, "_stream")
-    def mirrorFiles() = {
+    CommitLog.commit(Seq(1L).toDF("id"), t, "append")
+    CommitLog.commit(Seq(2L).toDF("id"), t, "append")
+    val tdir = java.nio.file.Paths.get(t)
+    // the mirror an older writer left: a hard link per committed data
+    // file, a ledger entry per version and the prune watermark
+    val stream = tdir.resolve("_stream")
+    val ledger = stream.resolve("_ledger")
+    Files.createDirectories(ledger)
+    (1L to 2L).foreach { v =>
+      val f = CommitLog.manifest(t, v).files.last
+      val rel = s"${f.split("/")(1)}-${tdir.resolve(f).getFileName}"
+      Files.createLink(stream.resolve(rel), tdir.resolve(f))
+      Files.write(ledger.resolve(f"$v%020d"), rel.getBytes("UTF-8"))
+    }
+    Files.write(ledger.resolve("_pruned_through"), "0".getBytes("UTF-8"))
+    def streamFiles(): Seq[String] = {
       val walk = Files.walk(stream)
-      try walk.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-        .size
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(stream.relativize(_).toString).toSeq.sorted
       finally walk.close()
     }
-    assert(mirrorFiles() === 2)
-    // slowest subscriber has committed through v1 → v1's history is reclaimable
-    assert(CommitLog.pruneMirror(t, throughVersion = 1L) === 1L)
-    assert(mirrorFiles() === 1)
-    // a new subscriber starting now sees only the unpruned suffix
-    val q = CommitLog.readStream(spark, t)
-      .writeStream.format("memory").queryName("txpruned")
+    val left = streamFiles()
+    assert(left.size === 5)
+    val v3 = CommitLog.commit(Seq(3L).toDF("id"), t, "overwrite")
+    assert(CommitLog.fsck(t).clean)
+    assert(CommitLog.fsckClean(t, minAgeMillis = 0, force = true) === 0L)
+    assert(CommitLog.vacuum(t, keepVersions = 1, minAgeMillis = 0, force = true) > 0L)
+    assert(CommitLog.fsck(t).clean)
+    assert(streamFiles() === left)
+    CommitLog.commit(Seq(4L).toDF("id"), t, "append")
+    assert(spark.read.format("graft").load(t).as[Long].collect().sorted === Seq(3L, 4L))
+    val q = spark.readStream.format("graft").option("startingVersion", v3.toString).load(t)
+      .writeStream.format("memory").queryName("txinertdir")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    assert(spark.sql("SELECT id FROM txpruned").as[Long].collect().toSeq === Seq(2L))
-    // prune + vacuum together actually release the bytes: both names of the
-    // inode are gone once the table is truncated and history dropped
-    CommitLog.commit(Seq(9L).toDF("id"), t, "overwrite")
-    CommitLog.vacuum(t, keepVersions = 1, minAgeMillis = 0, force = true)
-    assert(CommitLog.pruneMirror(t, throughVersion = Long.MaxValue) === 1L)
-    assert(mirrorFiles() === 0)
+    assert(spark.sql(s"SELECT ${CommitLog.CommitVersionCol}, ${CommitLog.ChangeTypeCol}, id " +
+      "FROM txinertdir").as[(Long, String, Long)].collect().toSeq
+      === Seq((v3 + 1, "insert", 4L)))
   }
 
   test("incremental compaction rewrites only the small-dir delta, never the big base") {
@@ -428,86 +447,6 @@ class CommitLogSpec extends SparkSpec {
     val v = CommitLog.commit(Seq(4).toDF("id"), t, "append", autoCompactEvery = 4)
     assert(v === 4L)
     assert(CommitLog.versions(t).contains(4L))
-  }
-
-  test("pruned feed history is never resurrected by a later mirror repair") {
-    val t = freshTable()
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 0L)))
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 1L)))
-    CommitLog.commit(Seq(3L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 2L)))
-    val stream = java.nio.file.Paths.get(t, "_stream")
-    def mirrorFiles() = {
-      val walk = Files.walk(stream)
-      try walk.iterator().asScala
-        .count(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      finally walk.close()
-    }
-    assert(CommitLog.pruneMirror(t, throughVersion = 2L) === 2L)
-    assert(mirrorFiles() === 1)
-    // a streaming restart replays the last batch through the txn fast path,
-    // which runs repairMirror over the whole chain — versions 1..2 are
-    // PRUNED, not crashed, and must stay reclaimed (round-4 ADVICE, high)
-    CommitLog.commit(Seq(3L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 2L)))
-    assert(mirrorFiles() === 1)
-    // a new subscriber sees only the unpruned suffix
-    val q = CommitLog.readStream(spark, t)
-      .writeStream.format("memory").queryName("txnoresurrect")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(spark.sql("SELECT id FROM txnoresurrect").as[Long].collect().toSeq === Seq(3L))
-  }
-
-  test("repairMirror heals a crashed overwrite mirror step (feed completeness)") {
-    val t = freshTable()
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true, txn = Some(("app", 0L)))
-    CommitLog.commit(Seq(7L, 8L).toDF("id"), t, "overwrite", mirror = true,
-      txn = Some(("app", 1L)))
-    // simulate a crash between the overwrite's manifest publish and mirror
-    val stream = java.nio.file.Paths.get(t, "_stream")
-    val v2Ledger = stream.resolve("_ledger").resolve(f"${2L}%020d")
-    new String(Files.readAllBytes(v2Ledger), "UTF-8").split("\n").filter(_.nonEmpty)
-      .foreach(rel => Files.delete(stream.resolve(rel)))
-    Files.delete(v2Ledger)
-    // replaying the txn heals exactly the overwrite's own new rows — an
-    // overwrite manifest lists only its new files, so no predecessor needed
-    CommitLog.commit(Seq(7L, 8L).toDF("id"), t, "overwrite", mirror = true,
-      txn = Some(("app", 1L)))
-    val q = CommitLog.readStream(spark, t)
-      .writeStream.format("memory").queryName("txowrepair")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(spark.sql("SELECT id FROM txowrepair").as[Long].collect().sorted
-      === Seq(1L, 7L, 8L))
-  }
-
-  test("pruneMirrorConsumed prunes exactly the subscriber's committed progress") {
-    val t = freshTable()
-    val ck = graft.SparkSpec.tmpPath("graft_ckprune").toString
-    val out = graft.SparkSpec.tmpPath("graft_ckout").toString
-    CommitLog.commit(Seq(1L).toDF("id"), t, "append", mirror = true)
-    CommitLog.commit(Seq(2L).toDF("id"), t, "append", mirror = true)
-    // a checkpoint-recoverable subscriber (parquet sink, append mode)
-    def drain(): Seq[Long] = {
-      val q = CommitLog.readStream(spark, t)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
-      spark.read.parquet(out).as[Long].collect().sorted.toSeq
-    }
-    assert(drain() === Seq(1L, 2L))
-    // v3 lands after the subscriber's last committed batch — not consumed
-    CommitLog.commit(Seq(3L).toDF("id"), t, "append", mirror = true)
-    assert(CommitLog.pruneMirrorConsumed(t, ck) === 2L)
-    val ledger = java.nio.file.Paths.get(t, "_stream", "_ledger")
-    assert(!Files.exists(ledger.resolve(f"${1L}%020d")))
-    assert(!Files.exists(ledger.resolve(f"${2L}%020d")))
-    assert(Files.exists(ledger.resolve(f"${3L}%020d")))
-    // the same subscriber restarts cleanly: v3 appended exactly once, the
-    // pruned (already-consumed) files neither reprocessed nor missed
-    assert(drain() === Seq(1L, 2L, 3L))
-    // the restart consumed v3, so a second pass reclaims it too
-    assert(CommitLog.pruneMirrorConsumed(t, ck) === 1L)
   }
 
   test("a DV-free single-layout snapshot reads as one file relation, partition columns last") {

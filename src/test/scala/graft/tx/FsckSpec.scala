@@ -291,36 +291,6 @@ class FsckSpec extends SparkSpec {
     }
   }
 
-  test("a lost mirror step is flagged unmirrored; repairMirror clears it") {
-    val t = freshTable()
-    CommitLog.commit(Seq((1L, "a")).toDF("id", "s"), t, "append", mirror = true)
-    val v2 = CommitLog.commit(Seq((2L, "b")).toDF("id", "s"), t, "append", mirror = true)
-    assert(CommitLog.fsck(t).unmirrored.isEmpty)
-    // simulate the swallowed mirror failure: v2's ledger entry never landed
-    Files.delete(Paths.get(t).resolve("_stream/_ledger").resolve(f"$v2%020d"))
-    assert(CommitLog.fsck(t).unmirrored === Seq(v2))
-    CommitLog.repairMirror(t)
-    assert(CommitLog.fsck(t).unmirrored.isEmpty)
-  }
-
-  test("an un-ledgered append past a vacuumed predecessor is counted unknowable") {
-    val t = freshTable()
-    CommitLog.commit(Seq((1L, "a")).toDF("id", "s"), t, "append", mirror = true)
-    val v2 = CommitLog.commit(Seq((2L, "b")).toDF("id", "s"), t, "append", mirror = true)
-    CommitLog.commit(Seq((3L, "c")).toDF("id", "s"), t, "append", mirror = true)
-    // v2's mirror step was lost AND its predecessor manifest is vacuumed:
-    // the file delta is permanently underivable — before round 7 fsck
-    // silently excluded the version; now it must COUNT it
-    Files.delete(Paths.get(t).resolve("_stream/_ledger").resolve(f"$v2%020d"))
-    CommitLog.vacuum(t, keepVersions = 2, minAgeMillis = 0, force = true)
-    val report = CommitLog.fsck(t)
-    assert(report.unknowable === 1L)
-    assert(report.unmirrored.isEmpty) // not listed as repairable
-    assert(report.clean) // permanent history, not actionable damage
-    CommitLog.repairMirror(t) // must still no-op, not throw
-    assert(CommitLog.fsck(t).unknowable === 1L)
-  }
-
   test("an externally damaged delta chain is REPORTED, not thrown") {
     val t = freshTable()
     (1 to 5).foreach(i => CommitLog.commit(Seq((i.toLong, "x")).toDF("id", "s"),

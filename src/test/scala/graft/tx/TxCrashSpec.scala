@@ -10,20 +10,19 @@ import graft.SparkSpec
   * once per mutating op it makes, on a fresh copy of one 2-commit table,
   * with a [[CrashingIO]] that dies at that op. Whatever the crash point,
   * the table must be recoverable: the latest snapshot holds the pre-op or
-  * the post-op rows, fsckClean leaves no missing file, the mirror and
-  * change-feed repairs converge to a clean fsck, and a crash that left
-  * the pre-op snapshot retries to the post-op rows. */
+  * the post-op rows, fsckClean leaves no missing file, the change-feed
+  * repair converges to a clean fsck, and a crash that left the pre-op
+  * snapshot retries to the post-op rows. */
 class TxCrashSpec extends SparkSpec {
   import spark.implicits._
 
   private val io = new TxIO
 
-  /** A 2-commit table (both mirrored appends) built once per spec. */
+  /** A 2-commit table (both appends) built once per spec. */
   private lazy val base: Path = {
     val t = tmpPath("graft_crash_base").resolve("t")
     Seq((1L, "a"), (2L, "b")).foreach { r =>
-      CommitLog.commit(Seq(r).toDF("id", "s").coalesce(1), t.toString, "append",
-        mirror = true)
+      CommitLog.commit(Seq(r).toDF("id", "s").coalesce(1), t.toString, "append")
     }
     t
   }
@@ -59,7 +58,6 @@ class TxCrashSpec extends SparkSpec {
       assert(after === pre || after === post, s"crash at op $n")
       CommitLog.fsckClean(t.toString, minAgeMillis = 0, force = true)
       assert(CommitLog.fsck(t.toString).missingFiles.isEmpty, s"crash at op $n")
-      CommitLog.repairMirror(t.toString)
       CommitLog.repairCdc(t.toString)
       val report = CommitLog.fsck(t.toString)
       assert(report.clean, s"crash at op $n: $report")
@@ -72,7 +70,7 @@ class TxCrashSpec extends SparkSpec {
 
   test("every crash point of a mirrored append recovers") {
     enumerate(t => CommitLog.commit(Seq((3L, "c")).toDF("id", "s").coalesce(1),
-      t, "append", mirror = true))
+      t, "append"))
   }
 
   test("every crash point of a journaled overwrite recovers") {

@@ -308,7 +308,7 @@ class TxMutationSpec extends SparkSpec {
     // that bricks read-time overwrite-diff) leaves the stored rows served
     CommitLog.vacuum(t, keepVersions = 1, minAgeMillis = 0, force = true)
     assert(slice().size === 4)
-    // appends never journal — they stream through the _stream mirror
+    // appends never journal — their inserts derive from the manifest delta
     intercept[IllegalArgumentException] {
       CommitLog.commit(Seq((9L, "z")).toDF("id", "s"), t, "append", cdc = true)
     }
@@ -323,9 +323,10 @@ class TxMutationSpec extends SparkSpec {
     val ck = root.resolve("ck").toString
     val out = root.resolve("out").toString
     // parquet sink (append) recovers from its checkpoint, so the second
-    // drain on the SAME checkpoint reads only the files it hasn't seen
+    // drain on the SAME checkpoint reads only the versions it hasn't seen
     def drain(): Seq[(Long, String, Long, String)] = {
-      val q = CommitLog.changeFeedStream(spark, t)
+      // from v1: the mutations' change rows, not the seeding append's inserts
+      val q = spark.readStream.format("graft").option("startingVersion", "1").load(t)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ck)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
